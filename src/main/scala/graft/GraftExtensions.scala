@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{ChiSquarePValue, DotProduct, FPValue, PearsonPValue, RollingFingerprint, TTestPValue, VaderCompound}
+import graft.functions.{DotProduct, PearsonPValue, RollingFingerprint, VaderCompound}
 
 /** SparkSessionExtensions entry point for the engine's native
   * functions — the registration path for custom Catalyst expressions:
@@ -59,26 +59,5 @@ object GraftExtensions {
         require(children.size == 2,
           s"vec_dot expects (a ARRAY, b ARRAY), got ${children.size} args")
         DotProduct(children.head, children(1))
-      }),
-    (FunctionIdentifier("chisq_pvalue"),
-      new ExpressionInfo(classOf[ChiSquarePValue].getName, "chisq_pvalue"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"chisq_pvalue expects (x DOUBLE, k DOUBLE), got ${children.size} args")
-        ChiSquarePValue(children.head, children(1))
-      }),
-    (FunctionIdentifier("t_pvalue"),
-      new ExpressionInfo(classOf[TTestPValue].getName, "t_pvalue"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"t_pvalue expects (t DOUBLE, df DOUBLE), got ${children.size} args")
-        TTestPValue(children.head, children(1))
-      }),
-    (FunctionIdentifier("f_pvalue"),
-      new ExpressionInfo(classOf[FPValue].getName, "f_pvalue"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          s"f_pvalue expects (f DOUBLE, d1 DOUBLE, d2 DOUBLE), got ${children.size} args")
-        FPValue(children.head, children(1), children(2))
       }))
 }

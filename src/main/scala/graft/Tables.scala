@@ -1,6 +1,9 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Lazy loaders for the harness tables (TESTDATA.md / FIXTURES.md §A).
   *
@@ -9,6 +12,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * prunes columns from and pushes predicates into — callers should
   * `select`/`filter` early so the parquet reader sees it
   * (`PushedFilters`/`ReadSchema` in explain output).
+  *
+  * Schema catalog: every engine-owned parquet read of immutable data
+  * ([[table]] and the write-once dump read-backs, `Dumps.writeOnce`) goes
+  * through [[parquet]], which infers a path's schema once and then
+  * reads with `.schema(...)`. Without it Spark launches a separate
+  * footer-reading job on every load, even on a warm JVM. It caches
+  * schemas only, never results: every call still lists and scans the
+  * data. Lifecycle contract (the [[MaterializedTable]] one):
+  *   - an entry is valid for as long as the data under its path is
+  *     immutable — true for the read-only sf dirs and for write-once
+  *     dumps; a caller that rewrites a path in-session with a
+  *     different schema MUST call [[invalidate]] first;
+  *   - entries are keyed per session and per value of the parquet
+  *     inference confs ([[InferenceConfs]]), so a new session infers
+  *     again and a schema inferred before [[events]] flips the NTZ
+  *     conf is never served after it.
   */
 object Tables {
   private val InferFromGenerate =
@@ -40,9 +59,38 @@ object Tables {
         (cur.toSeq :+ InferFromGenerate).mkString(","))
   }
 
+  /** The confs parquet schema inference reads; part of every catalog
+    * key. */
+  private val InferenceConfs = Seq(
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  private val schemas =
+    TrieMap.empty[(SparkSession, String, Seq[Option[String]]), StructType]
+
+  /** Parquet scan of the immutable `path` with its schema inferred once
+    * per (session, path, inference confs) — see the catalog contract
+    * above. A racing first use infers twice and keeps one (equal)
+    * schema, so no lock is needed. */
+  def parquet(s: SparkSession, path: String): DataFrame = {
+    val key = (s, path, InferenceConfs.map(s.conf.getOption))
+    s.read.schema(schemas.getOrElseUpdate(key, s.read.parquet(path).schema))
+      .parquet(path)
+  }
+
+  /** Drop the session's catalog entries for `dir` and every path under
+    * it; the next read infers the current files' schema again. */
+  def invalidate(s: SparkSession, dir: String): Unit =
+    schemas.keys.foreach { case k @ (ks, p, _) =>
+      if ((ks eq s) && (p == dir || p.startsWith(s"$dir/"))) schemas.remove(k)
+    }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     excludeInferFiltersFromGenerate(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
   }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")

@@ -189,26 +189,17 @@ object Backtest {
     * O(days × keys) rows — tiny at any fact-table scale. */
   private[operators] def T7InDump(d: String) = Dumps.path("t7_in", d)
 
-  // Write-once per (session, dir): all five t7 queries share the
-  // input dump, and the fold oracles read it at end-of-run compare
-  // time — a rewrite per query would make the hash check depend on
-  // the float avg(value) agg reproducing bit-identically across
-  // re-executions (the clobbered-pending-read class the sf-keyed
-  // Dumps refactor exists to kill), and wastes four corpus passes.
-  private val inDumpWritten =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Boolean]
-
-  private def inputsDumped(s: SparkSession, d: String): DataFrame = {
-    synchronized {
-      inDumpWritten.getOrElseUpdate((s, d), {
-        dayInputs(s, d)
-          .select(col("day"), col("key"), col("signal"), col("price"))
-          .write.mode("overwrite").parquet(T7InDump(d))
-        true
-      })
+  // Write-once (Dumps.writeOnce): all five t7 queries share the input
+  // dump, and the fold oracles read it at end-of-run compare time — a
+  // rewrite per query would make the hash check depend on the float
+  // avg(value) agg reproducing bit-identically across re-executions
+  // (the clobbered-pending-read class the sf-keyed Dumps refactor
+  // exists to kill), and wastes four corpus passes.
+  private def inputsDumped(s: SparkSession, d: String): DataFrame =
+    Dumps.writeOnce(s, T7InDump(d)) {
+      dayInputs(s, d)
+        .select(col("day"), col("key"), col("signal"), col("price"))
     }
-    s.read.parquet(T7InDump(d))
-  }
 
   /** The full fold as a DataFrame query (single deliberate partition
     * over the already-aggregated day rows only), reading the dumped
@@ -227,16 +218,11 @@ object Backtest {
     * back — the shared input of the three hash-checked metric queries
     * and their DuckDB oracles. The dump doubles as the materialize-once
     * point (replacing the earlier localCheckpoint): the fold runs one
-    * job, and every downstream subtree scans the parquet. */
-  private def foldDump(s: SparkSession, d: String): DataFrame = {
-    // write-once per (session, dir) — deterministic bytes (the fold is
-    // one ordered partition over the write-once input dump), and all
-    // three metric queries share it (see Dumps.writeOnce)
-    Dumps.writeOnce(s, T7FoldDump(d)) {
-      run(s, d).write.mode("overwrite").parquet(T7FoldDump(d))
-    }
-    s.read.parquet(T7FoldDump(d))
-  }
+    * job, and every downstream subtree scans the parquet. Written once
+    * (deterministic bytes: the fold is one ordered partition over the
+    * write-once input dump), and all three metric queries share it. */
+  private def foldDump(s: SparkSession, d: String): DataFrame =
+    Dumps.writeOnce(s, T7FoldDump(d))(run(s, d))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // T7: the fold itself — trades + equity curve.

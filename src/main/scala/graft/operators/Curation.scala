@@ -131,12 +131,7 @@ object Curation {
     // flipped from rows-only in round 12 (the precision/recall
     // anchors vs decon1 stay in CurationSpec).
     "decon2_fuzzy_overlap" -> ((s, d) => {
-      Dumps.writeOnce(s, Dedup.D3SigDump(d)) {
-        Dedup.signatures(s, d).write.mode("overwrite")
-          .parquet(Dedup.D3SigDump(d))
-      }
-      val crossings = Dedup
-        .minhashPairs(s.read.parquet(Dedup.D3SigDump(d)), 0.5)
+      val crossings = Dedup.minhashPairs(Dedup.sigDump(s, d), 0.5)
         .filter((col("da") % 5 === 0) =!= (col("db") % 5 === 0))
       Dedup.verifyPairs(s, d, crossings)
         .filter(col("true_jaccard") >= 0.5)

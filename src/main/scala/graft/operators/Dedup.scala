@@ -54,6 +54,14 @@ object Dedup {
   private[operators] def D3SigDump(d: String) = Dumps.path("d3_sigs", d)
   private[operators] def D8SumsDump(d: String) = Dumps.path("d8_sums", d)
 
+  /** The write-once [[D3SigDump]] read back (d3, d6, decon2). */
+  private[operators] def sigDump(s: SparkSession, d: String): DataFrame =
+    Dumps.writeOnce(s, D3SigDump(d))(signatures(s, d))
+
+  /** The write-once [[D8SumsDump]] read back (d4, d8, d29). */
+  private def sumsDump(s: SparkSession, d: String): DataFrame =
+    Dumps.writeOnce(s, D8SumsDump(d))(simhashBitSums(s, d))
+
   private def toks: Column = TextAnalysis.toks
 
   /** Distinct 3-token shingles per doc. */
@@ -858,10 +866,7 @@ object Dedup {
     // engines band/estimate the identical artifact (see D3SigDump) —
     // flipped from rows-only in round 12.
     "d3_minhash_lsh" -> ((s, d) => {
-      Dumps.writeOnce(s, D3SigDump(d)) {
-        signatures(s, d).write.mode("overwrite").parquet(D3SigDump(d))
-      }
-      minhashPairs(s.read.parquet(D3SigDump(d)), 0.5).orderBy("da", "db")
+      minhashPairs(sigDump(s, d), 0.5).orderBy("da", "db")
     }),
 
     // D6: the complete scale-dedup pipeline — LSH candidates verified
@@ -874,10 +879,7 @@ object Dedup {
     // Signature dump as in D3; the oracle replays banding + estimate
     // AND the exact shingle verify (the D2 SQL) over the candidates.
     "d6_lsh_verified" -> ((s, d) => {
-      Dumps.writeOnce(s, D3SigDump(d)) {
-        signatures(s, d).write.mode("overwrite").parquet(D3SigDump(d))
-      }
-      verifyPairs(s, d, minhashPairs(s.read.parquet(D3SigDump(d)), 0.5))
+      verifyPairs(s, d, minhashPairs(sigDump(s, d), 0.5))
         .orderBy("da", "db")
     }),
 
@@ -1300,10 +1302,7 @@ object Dedup {
     // thresholding and bitstring render — flipped from rows-only in
     // round 12.
     "d4_simhash" -> ((s, d) => {
-      Dumps.writeOnce(s, D8SumsDump(d)) {
-        simhashBitSums(s, d).write.mode("overwrite").parquet(D8SumsDump(d))
-      }
-      s.read.parquet(D8SumsDump(d))
+      sumsDump(s, d)
         .select(col("doc_id"),
           concat((63 to 0 by -1).map(i =>
             when(col(s"s$i") > 0, "1").otherwise("0")): _*).as("simhash"))
@@ -1323,10 +1322,7 @@ object Dedup {
     // banding, the bucket join, and the 64-bit disagreement count —
     // flipped from rows-only in round 12.
     "d8_simhash_pairs" -> ((s, d) => {
-      Dumps.writeOnce(s, D8SumsDump(d)) {
-        simhashBitSums(s, d).write.mode("overwrite").parquet(D8SumsDump(d))
-      }
-      val sig = s.read.parquet(D8SumsDump(d))
+      val sig = sumsDump(s, d)
         .select(col("doc_id"),
           (0 until 64).map(i =>
             when(col(s"s$i") > 0, lit(1L << i)).otherwise(lit(0L)))
@@ -1346,10 +1342,7 @@ object Dedup {
     // min-propagation closure — the hash certifies the composed
     // pipeline end to end.
     "d29_simhash_clusters" -> ((s, d) => {
-      Dumps.writeOnce(s, D8SumsDump(d)) {
-        simhashBitSums(s, d).write.mode("overwrite").parquet(D8SumsDump(d))
-      }
-      val sig = s.read.parquet(D8SumsDump(d))
+      val sig = sumsDump(s, d)
         .select(col("doc_id"),
           (0 until 64).map(i =>
             when(col(s"s$i") > 0, lit(1L << i)).otherwise(lit(0L)))

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Materialized-intermediate dump paths (the D3SigDump pattern: a
   * query writes its non-SQL-expressible seed to /tmp parquet and the
   * DuckDB oracle replays everything downstream of it).
@@ -38,8 +40,12 @@ object Dumps {
   def oraclePath(name: String): String =
     s"/tmp/graft_${name}_$SfTag.parquet"
 
-  /** Write a dump ONCE per (session, path) — the Backtest.T7InDump
-    * convention generalized (round 14). Every dump is deterministic
+  private val written =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Boolean]
+
+  /** Write `df` to dump path `p` ONCE per (session, path) and read
+    * the dump back — the engine's one write-once memo (every dump, the
+    * t7 fold input included). Every dump is deterministic
     * bytes-for-bytes given the (immutable) sf dir, but a REWRITE per
     * consuming query (a) re-runs the whole upstream job at every
     * DataFrame construction — D8's token-explode bit-sum corpus pass
@@ -52,18 +58,30 @@ object Dumps {
     * same bytes back. Keyed (session, path): a new session (fresh
     * /tmp contract) rewrites, tests with planted dirs under one
     * session key by dir via the path's sf tag.
+    *
+    * The read-back goes through the schema catalog
+    * ([[graft.Tables.parquet]]), so only the first one pays a
+    * footer-reading job. Its schema is inferred from the file, never
+    * taken from `df`: the written frame's NTZ and nullability
+    * semantics can differ from what a parquet read of the same bytes
+    * yields.
     */
-  private val written = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), Boolean]
-
-  def writeOnce(s: org.apache.spark.sql.SparkSession, p: String)(
-      write: => Unit): Unit = synchronized {
-    written.getOrElseUpdate((s, p), { write; true })
+  def writeOnce(s: SparkSession, p: String)(df: => DataFrame): DataFrame = {
+    synchronized {
+      written.getOrElseUpdate((s, p), {
+        df.write.mode("overwrite").parquet(p)
+        true
+      })
+    }
+    graft.Tables.parquet(s, p)
   }
 
-  /** Test hook: forget every (session, path) so the next writeOnce
-    * re-executes (suites that rewrite planted corpora in place). */
+  /** Test hook: forget every (session, path), and the catalog's
+    * schemas for those paths, so the next writeOnce re-executes and
+    * its read-back infers afresh (suites that rewrite planted corpora
+    * in place). */
   private[graft] def resetWriteOnce(): Unit = synchronized {
+    written.keys.foreach { case (s, p) => graft.Tables.invalidate(s, p) }
     written.clear()
   }
 }

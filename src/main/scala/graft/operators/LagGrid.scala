@@ -153,9 +153,7 @@ object LagGrid {
           (pv + lit(0.0d)).as("p_value"), col("n"),
           (r6(col("mr")) + lit(0.0d)).as("mr"),
           (r6(col("ms")) + lit(0.0d)).as("ms"))
-        .write.mode("overwrite").parquet(CellDump(d))
     }
-    s.read.parquet(CellDump(d))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -80,7 +80,10 @@ object Signals {
         .when(col("sent") < -cfg.tau, when(inverse, "BUY").otherwise("SELL"))
         .otherwise("HOLD")
     dailyAgg.join(broadcast(keyCfg), Seq("event_type"))
-      .select(col("event_type"), col("day"), r6(col("sent")).as("sent"),
+      // + 0.0 collapses IEEE -0.0 (a tiny negative sent rounds to
+      // -0.0, which the other engine may print as 0.0); oracle likewise
+      .select(col("event_type"), col("day"),
+        (r6(col("sent")) + 0.0).as("sent"),
         col("n"), signal.as("signal"),
         when(inverse, "inverse").otherwise("direct").as("signal_type"))
       .orderBy("event_type", "day")
@@ -237,7 +240,7 @@ object Signals {
            SELECT event_type, date_trunc('day', ts) AS day,
                   avg(value) / 100.0 - 1 AS sent, count(*) AS n
            FROM events GROUP BY 1, 2)
-         SELECT d.event_type, d.day, round(d.sent, 6) AS sent, d.n,
+         SELECT d.event_type, d.day, round(d.sent, 6) + 0.0 AS sent, d.n,
                 CASE WHEN d.n < ${cfg.minNews} THEN 'HOLD'
                      WHEN d.sent > ${cfg.tau} THEN
                        CASE WHEN c.r < 0 THEN 'SELL' ELSE 'BUY' END

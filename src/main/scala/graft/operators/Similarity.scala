@@ -392,6 +392,15 @@ object Similarity {
     * the identical bucket artifact. Keyed by sf dir (see [[Dumps]]). */
   private[operators] def Sim2BandDump(d: String) = Dumps.path("sim2_bands", d)
 
+  /** The write-once [[Sim2BandDump]] read back (sim2, d9). */
+  private def bandDump(s: SparkSession, d: String): DataFrame =
+    Dumps.writeOnce(s, Sim2BandDump(d)) {
+      Tables.embeddings(s, d)
+        .select(col("vec_id"), banded(col("embedding")).as("bb"))
+        .select(col("vec_id"), col("bb.band").as("band"),
+          col("bb.bkt").as("bkt"))
+    }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // SIM11: per-dimension feature statistics — the normalization
     // constants every embedding pipeline precomputes before indexing
@@ -875,17 +884,10 @@ object Similarity {
     // flipping the query from rows-only to full hash in round 12
     // (recall vs brute force stays asserted in SimilaritySpec).
     "sim2_lsh_ann" -> ((s, d) => {
-      Dumps.writeOnce(s, Sim2BandDump(d)) {
-        Tables.embeddings(s, d)
-          .select(col("vec_id"), banded(col("embedding")).as("bb"))
-          .select(col("vec_id"), col("bb.band").as("band"),
-            col("bb.bkt").as("bkt"))
-          .write.mode("overwrite").parquet(Sim2BandDump(d))
-      }
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"))
         .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
-        .join(s.read.parquet(Sim2BandDump(d)), Seq("vec_id"))
+        .join(bandDump(s, d), Seq("vec_id"))
       val q = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
           col("nrm").as("qn"), col("band"), col("bkt"))
@@ -1358,13 +1360,7 @@ object Similarity {
     // from rows-only in round 12; SimilaritySpec's recall/precision
     // anchors vs the d5 exact baseline stay.
     "d9_embedding_neardup_lsh" -> ((s, d) => {
-      Dumps.writeOnce(s, Sim2BandDump(d)) {
-        Tables.embeddings(s, d)
-          .select(col("vec_id"), banded(col("embedding")).as("bb"))
-          .select(col("vec_id"), col("bb.band").as("band"),
-            col("bb.bkt").as("bkt"))
-          .write.mode("overwrite").parquet(Sim2BandDump(d))
-      }
+      bandDump(s, d) // written for the oracle; the plan reads embPairs
       embPairs(s, d).orderBy("va", "vb")
     }),
 
@@ -1399,14 +1395,13 @@ object Similarity {
     "d16_emb_clusters" -> ((s, d) => {
       // read the dump back so the CC consumes byte-for-byte the same
       // edge artifact the oracle closes over
-      Dumps.writeOnce(s, D16EdgeDump(d)) {
+      val edges = Dumps.writeOnce(s, D16EdgeDump(d)) {
         embPairs(s, d).filter(col("cosine") >= EmbDupTau)
           .select(col("va").as("da"), col("vb").as("db"))
-          .write.mode("overwrite").parquet(D16EdgeDump(d))
       }
       val verts = Tables.embeddings(s, d)
         .select(col("vec_id").as("doc_id"))
-      Dedup.connectedComponents(s.read.parquet(D16EdgeDump(d)), verts,
+      Dedup.connectedComponents(edges, verts,
         atScale = graft.ScaleGuard.atScale(s, d, "embeddings"))
         .select(col("doc_id").as("vec_id"), col("comp").as("canonical_id"))
         .orderBy("vec_id")

@@ -241,13 +241,8 @@ object Stats {
     * oracle replays. */
   private[operators] def PValDump(d: String) = Dumps.path("a3_pvalues", d)
 
-  private def corrPValuesDumped(s: SparkSession, d: String): DataFrame = {
-    Dumps.writeOnce(s, PValDump(d)) {
-      queries("a3_corr_pvalue")(s, d)
-        .write.mode("overwrite").parquet(PValDump(d))
-    }
-    s.read.parquet(PValDump(d))
-  }
+  private def corrPValuesDumped(s: SparkSession, d: String): DataFrame =
+    Dumps.writeOnce(s, PValDump(d))(queries("a3_corr_pvalue")(s, d))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A2: Pearson correlation per group (value vs the json-extracted k).

@@ -254,7 +254,7 @@ object TextAnalysis {
     // from the same bytes. Rule semantics stay golden-tested in
     // VaderSpec, the codegen path in VaderCompoundSpec.
     "f7_vader_rules" -> ((s, d) => {
-      Dumps.writeOnce(s, F7VaderDump(d)) {
+      val dumped = Dumps.writeOnce(s, F7VaderDump(d)) {
         Tables.documents(s, d)
           .select(col("doc_id"),
             graft.functions.VaderTokenScores.tokenScores(col("text"))
@@ -263,9 +263,7 @@ object TextAnalysis {
               length(translate(col("text"), "!", "")),
               lit(graft.functions.Vader.BangCap))
               .cast("int").as("bangs"))
-          .write.mode("overwrite").parquet(F7VaderDump(d))
       }
-      val dumped = s.read.parquet(F7VaderDump(d))
       val sRaw = aggregate(col("vals"), lit(0.0), (acc, x) => acc + x)
       val sAdj = when(sRaw =!= 0.0,
         sRaw + signum(sRaw) * col("bangs").cast("double") *
@@ -904,7 +902,7 @@ object TextAnalysis {
             (col("m") * col("sxx") - col("sx") * col("sx")))
         .select(col("pct"), col("cp").as("n_docs"), col("n_tokens"),
           col("vocab"),
-          r6(col("beta")).as("heaps_beta"),
+          (r6(col("beta")) + 0.0).as("heaps_beta"), // + 0.0: no -0.0
           r6(exp((col("sy") - col("beta") * col("sx")) / col("m")))
             .as("heaps_k"))
         .orderBy("pct")
@@ -1693,7 +1691,7 @@ object TextAnalysis {
                   (m * sxy - sx * sy) / (m * sxx - sx * sx) AS beta
            FROM reg)
          SELECT pct, cp AS n_docs, n_tokens, vocab,
-                round(beta, 6) AS heaps_beta,
+                round(beta, 6) + 0.0 AS heaps_beta,
                 round(exp((sy - beta * sx) / m), 6) AS heaps_k
          FROM fit ORDER BY pct""",
     // in-row segment slices, exact integer distinct counts, one

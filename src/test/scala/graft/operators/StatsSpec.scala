@@ -2183,10 +2183,9 @@ class StatsSpec extends AnyFunSuite {
     // p twin anchors to the oracle-checked W through the F kernel
     val p = Stats.queries("a74_levene_pvalue")(spark, sf).head()
     assert(p.getDouble(0) == wq)
-    val pRef = spark.range(1).select(
-      round(graft.functions.FPValue.pValue(lit(wq),
-        lit((k - 1).toDouble), lit((n - k).toDouble)), 6))
-      .head().getDouble(0)
+    val pRef = BigDecimal(graft.functions.StudentT.fPValue(wq,
+        (k - 1).toDouble, (n - k).toDouble))
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     // pinned chain vs early-exit kernel: ≤ ~1e-14 raw, one 6-dp grid
     // step after rounding (PinnedBetaSpec)
     assert(math.abs(p.getDouble(3) - pRef) <= 1e-6 &&
