@@ -6,7 +6,10 @@ Usage: python3 scripts/local_check.py /tmp/vout /root/testdata/sf0.01 [query ...
 Expects `sbt "runMain graft.Verify <sfDir> <outDir>"` to have been run
 first. Compares each <outDir>/<name> parquet against the DuckDB oracle
 in <outDir>/oracle_sql.json: row count, sorted-column schema, and
-value hash (columns sorted by name, rows sorted by all columns).
+value hash (columns sorted by name, rows sorted by all columns). Every
+query Verify lists in <outDir>/failures.json (it threw, so it wrote no
+output) is a FAIL; an output dir a failed query left from an earlier
+run is not compared.
 """
 import sys, json, glob, os
 import duckdb, pandas as pd
@@ -23,6 +26,10 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
 oracles = json.load(open(f"{outdir}/oracle_sql.json"))
+# Verify's manifest of queries that threw; other writers of an outdir
+# (perfbench's gates) have none
+manifest = f"{outdir}/failures.json"
+failed = json.load(open(manifest)) if os.path.exists(manifest) else {}
 
 def canon(df):
     df = df.reindex(sorted(df.columns), axis=1)
@@ -33,9 +40,13 @@ def canon(df):
     return df
 
 fails, passes, rows_only = [], [], []
+for name, e in sorted(failed.items()):
+    if not only or name in only:
+        msg = " ".join(str(e["message"]).split())[:300]
+        fails.append((name, f"verify: {e['class']}: {msg}"))
 for name in sorted(os.listdir(outdir)):
     path = os.path.join(outdir, name)
-    if not os.path.isdir(path):
+    if not os.path.isdir(path) or name in failed:
         continue
     if only and name not in only:
         continue

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main: runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -34,15 +33,20 @@ object Bench {
   val Reps = 3
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Forcing the query map initializes every operator object, and with
+    // it every shared build (MaterializedTable registers on construction).
+    val queries = SparkEntry.queries
+    val builds = MaterializedTable.registry
+    // Local-iteration filter: SPARK_GRAFT_ONLY=q1,q2 times just those
+    // queries and builds. The driver never sets the filter, so round
+    // artifacts always carry the full map.
+    val only: Option[Set[String]] =
+      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    only.foreach(SparkEntry.checkFilter("bench", _,
+      queries.keySet ++ builds.map(_.name)))
+    def keep(name: String): Boolean = only.forall(_.contains(name))
+    val spark = GraftExtensions.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Warm up the JVM (codegen, parquet reader, shuffle machinery)
     // before the timed loop, so startup cost isn't attributed to
     // whichever query the Map happens to iterate first.
@@ -68,101 +72,20 @@ object Bench {
       }
       if (times.exists(_ < 0)) -1.0 else times.sorted.apply(Reps / 2)
     }
-    // The shared materialized tables (MinHash signatures for D3/D6, the
-    // lag grid for the three lag_grid selections) are built once per
-    // session, so median-of-3 would discard their one-time cost from
-    // every consuming query's timing. Time the builds as their own
-    // entries — invalidate before each rep so every rep pays the full
-    // corpus pass; the final rep leaves a warm cache for the query loop
-    // (which then times post-build consumption, as in production).
-    val buildDefs: Seq[(String, () => Unit, () => Unit)] = Seq(
-      ("sig_build",
-        () => graft.operators.Dedup.signatures.invalidate(spark, sfDir),
-        () => { graft.operators.Dedup.signatures(spark, sfDir); () }),
-      ("grid_build",
-        () => graft.operators.LagGrid.grid.invalidate(spark, sfDir),
-        () => { graft.operators.LagGrid.grid(spark, sfDir); () }),
-      ("s15_layout_build",
-        () => graft.operators.SourceSinks.invalidateBucketed(spark, sfDir),
-        () => { graft.operators.SourceSinks.bucketedTable(spark, sfDir); () }),
-      ("ivf_build",
-        () => graft.operators.Similarity.invalidateIvf(spark, sfDir),
-        () => { graft.operators.Similarity.ivfIndex(spark, sfDir); () }),
-      ("bloom_build",
-        () => graft.operators.Dedup.invalidateBloom(spark, sfDir),
-        () => { graft.operators.Dedup.bloomOf(spark, sfDir); () }),
-      ("phash_tight_build",
-        () => graft.operators.Multimodal.phashTight.invalidate(spark, sfDir),
-        () => { graft.operators.Multimodal.phashTight(spark, sfDir); () }),
-      ("s22_layout_build",
-        () => graft.operators.SourceSinks.invalidateZorder(spark, sfDir),
-        () => { graft.operators.SourceSinks.zorderDir(spark, sfDir); () }),
-      ("a55_base_build",
-        () => graft.operators.Stats.mkBase.invalidate(spark, sfDir),
-        () => { graft.operators.Stats.mkBase(spark, sfDir); () }),
-      ("corpus_pairs_build",
-        () => graft.operators.Dedup.corpusPairs.invalidate(spark, sfDir),
-        () => { graft.operators.Dedup.corpusPairs(spark, sfDir); () }),
-      ("emb_pairs_build",
-        () => graft.operators.Similarity.embPairs.invalidate(spark, sfDir),
-        () => { graft.operators.Similarity.embPairs(spark, sfDir); () }),
-      ("cc_labels_build",
-        () => graft.operators.Dedup.ccLabels.invalidate(spark, sfDir),
-        () => { graft.operators.Dedup.ccLabels(spark, sfDir); () }),
-      ("coreness_build",
-        () => graft.operators.Dedup.coreness.invalidate(spark, sfDir),
-        () => { graft.operators.Dedup.coreness(spark, sfDir); () }),
-      ("slice100_build",
-        () => graft.operators.TextAnalysis.slicePairs100
-          .invalidate(spark, sfDir),
-        () => { graft.operators.TextAnalysis.slicePairs100(spark, sfDir); () }),
-      ("slice200_build",
-        () => graft.operators.TextAnalysis.slicePairs200
-          .invalidate(spark, sfDir),
-        () => { graft.operators.TextAnalysis.slicePairs200(spark, sfDir); () }))
-    // Local-iteration filter: SPARK_GRAFT_ONLY=q1,q2 times just those
-    // queries. A named query that consumes a staged build artifact
-    // pulls that build in automatically (the caches are lazy, so the
-    // build would otherwise fold silently into the query's first-rep
-    // timing); builds can still be named directly. The driver never
-    // sets the filter, so round artifacts always carry the full map.
-    val buildDeps: Map[String, Set[String]] = Map(
-      "sig_build" -> Set("d3_minhash_lsh", "d6_lsh_verified",
-        "decon2_fuzzy_overlap", "d10_cc_corpus", "d12_tri_corpus",
-        "d11_pr_corpus", "d13_coeff_corpus", "d14_lpa_corpus",
-        "sql7_closure_corpus"),
-      "grid_build" -> Set("lag_grid_corr", "lag_grid_best",
-        "lag_grid_best_config", "lag_grid_artifact"),
-      "s15_layout_build" -> Set("s15_bucketed_join"),
-      "ivf_build" -> Set("sim3_ivf_ann"),
-      "bloom_build" -> Set("d7_bloom_new"),
-      "phash_tight_build" -> Set("mm5_phash_pairs_tight",
-        "mm9_image_clusters"),
-      "s22_layout_build" -> Set("s22_zorder_prune"),
-      "a55_base_build" -> Set("a55_mann_kendall", "a55_mk_pvalue"),
-      "corpus_pairs_build" -> Set("d10_cc_corpus", "d12_tri_corpus",
-        "d11_pr_corpus", "d13_coeff_corpus", "d14_lpa_corpus",
-        "sql7_closure_corpus"),
-      "emb_pairs_build" -> Set("d9_embedding_neardup_lsh",
-        "d16_emb_clusters"),
-      "cc_labels_build" -> Set("d10_cc_corpus", "pipe6_dedup_mix",
-        "pipe7_graph_triage", "pipe8_edge_audit", "pipe9_split_contrast",
-        "ds21_dedup_weights"),
-      "coreness_build" -> Set("d21_kcore", "pipe7_graph_triage"),
-      "slice100_build" -> Set("d10_dup_clusters", "d20_keep_best",
-        "d11_pagerank", "d14_label_prop", "ds13_cluster_split",
-        "sql7_recursive_closure"),
-      "slice200_build" -> Set("d12_triangle_count",
-        "d13_clustering_coeff"))
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    def keep(name: String): Boolean = only.forall(_.contains(name))
-    def keepBuild(name: String): Boolean = only.forall(o =>
-      o.contains(name) ||
-        buildDeps.getOrElse(name, Set.empty).exists(o.contains))
+    // The shared builds (MinHash signatures for D3/D6, the lag grid for
+    // the lag_grid selections, ...) run once per session, so median-of-3
+    // would discard their one-time cost from every consuming query's
+    // timing. Time each registered build as its own entry, in registry
+    // order (upstream builds first, so each times only itself) —
+    // invalidate before each rep so every rep pays the full build; the
+    // final rep leaves a warm cache for the query loop (which then
+    // times post-build consumption, as in production).
+    def buildDef(b: MaterializedTable[_]): (String, () => Unit, () => Unit) =
+      (b.name, () => b.invalidate(spark, sfDir),
+        () => { b(spark, sfDir); () })
     val defs: Seq[(String, () => Unit, () => Unit)] =
-      buildDefs.filter(b => keepBuild(b._1)) ++
-        SparkEntry.queries.toSeq.sortBy(_._1).filter(q => keep(q._1))
+      builds.filter(b => keep(b.name)).map(buildDef) ++
+        queries.toSeq.sortBy(_._1).filter(q => keep(q._1))
           .map { case (name, fn) =>
             (name, () => (), () => {
               fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -191,9 +114,15 @@ object Bench {
       if (prev.isEmpty) 1 else prev.max + 1
     }
     val loadStart = loadAvg
-    val firstPass: Seq[(String, Double)] = defs.map { case (n, su, r) =>
-      n -> medianOf(n, su)(r)
-    }
+    def time(d: (String, () => Unit, () => Unit)): (String, Double) =
+      d._1 -> medianOf(d._1, d._2)(d._3)
+    val timed = defs.map(time)
+    // A filtered run's kept queries may have built shared builds the
+    // filter did not name, folding them into their first rep; time
+    // each such build afterwards, in registry order, so it is reported.
+    val lateDefs = builds
+      .filter(b => !keep(b.name) && b.cached(spark, sfDir)).map(buildDef)
+    val firstPass = timed ++ lateDefs.map(time)
     // Load-poisoning guard (round 10): a full sweep shares one machine
     // with whatever else runs, and round 9's working-tree refresh
     // proved a noisy sweep can overwrite a clean artifact with 5-13x
@@ -297,7 +226,7 @@ object Bench {
         s"beyond the 15-rerun cap keep their possibly-poisoned first-pass " +
         s"times: ${suspectsDropped.mkString(", ")}")
     val rerun: Map[String, Double] = suspects.flatMap { n =>
-      defs.find(_._1 == n).map { case (_, su, r) => n -> medianOf(n, su)(r) }
+      (defs ++ lateDefs).find(_._1 == n).map(time)
     }.toMap
     val results = firstPass.map { case (n, t) =>
       n -> rerun.get(n).filter(t2 => t2 > 0 && t2 < t).getOrElse(t)

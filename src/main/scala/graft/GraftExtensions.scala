@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{DotProduct, PearsonPValue, RollingFingerprint, VaderCompound}
 
 /** SparkSessionExtensions entry point for the engine's native
-  * functions — the registration path for custom Catalyst expressions:
+  * functions and optimizer rule — the registration path for custom
+  * Catalyst expressions:
   *
   * {{{
   *   SparkSession.builder()
@@ -15,10 +16,10 @@ import graft.functions.{DotProduct, PearsonPValue, RollingFingerprint, VaderComp
   * }}}
   *
   * makes them SQL-callable (`SELECT pearson_pvalue(r, n) …`) in every
-  * session of the cluster. For an already-built session (notebooks,
-  * the shared test session) use
-  * [[org.apache.spark.sql.graftbridge.ColumnBridge.registerFunctions]]
-  * which applies the same injections to the live registry.
+  * session of the cluster. Extensions only apply when a session is
+  * built, so the engine's own drivers and the test suite all build
+  * through the one factory [[GraftExtensions.session]]; sessions
+  * derived with `newSession()` inherit them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -29,6 +30,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  /** The engine's session: `local[parallelism]` with as many shuffle
+    * partitions, UTC session time, no UI, these extensions, WARN logs.
+    * `getOrCreate` makes it idempotent: a second call in the same JVM
+    * returns the first session. */
+  def session(parallelism: Int): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$parallelism]")
+      .config("spark.sql.shuffle.partitions", parallelism.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   /** (identifier, info, builder) triples — one per native function. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(

@@ -1,13 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round tooling: dump `.explain("formatted")` for every
   * declared query to a directory (one file per query), so plan shape
   * (Exchange count, join strategy, PushedFilters/ReadSchema,
   * WholeStageCodegen spans) can be audited offline and before/after
-  * diffs committed under plans/. Mirrors the Bench session config so
-  * the captured plan is the one the bench actually times.
+  * diffs committed under plans/. Builds the Bench session so the
+  * captured plan is the one the bench actually times.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -15,15 +14,9 @@ object PlanDump {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = if (args.length > 1) args(1) else "plans/r14/all"
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    SparkEntry.checkFilter("plandump", only, SparkEntry.queries.keySet)
+    val spark = GraftExtensions.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling probe: measures how the corpus-heavy paths behave when the
@@ -26,15 +25,8 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftExtensions.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
 
     // v2: round 10 adds a 10× events replica (event_id offset far
     // above any real id; user_id/ts preserved, so per-user streaming

@@ -37,6 +37,21 @@ object SparkEntry {
       LagGrid.queries ++ DatasetOps.queries ++ Curation.queries ++
       graft.sources.SourceQueries.queries
 
+  /** Check a driver's name filter (Verify's extra args, Bench's
+    * `SPARK_GRAFT_ONLY`, PlanDump's extra args) against the names that
+    * driver knows. Unknown names go to stderr; a non-empty filter that
+    * names nothing known exits 2, since the run would do nothing and
+    * still look clean. */
+  def checkFilter(driver: String, only: Set[String],
+      known: Set[String]): Unit = {
+    val unknown = only.diff(known)
+    if (unknown.nonEmpty) {
+      System.err.println(
+        s"[$driver] unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      if (only.forall(unknown)) sys.exit(2)
+    }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
     * (custom UDF / fold / hash-based queries) → rows-only check. */

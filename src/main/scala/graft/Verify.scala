@@ -1,41 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * failures.json naming every query that threw (name → exception class
+  * and message; `{}` when none did). A failed query leaves no output
+  * dir, so the manifest is what tells a failure from a skipped query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args: restrict the dump to the named queries
     // (local iteration; the driver always passes exactly two args)
     val only = args.drop(2).toSet
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    if (unknown.nonEmpty) {
-      System.err.println(s"[verify] unknown queries: ${unknown.mkString(", ")}")
-      // all-typo'd filter → nothing would be dumped; exiting 0 there
-      // makes a local iteration run look green while producing an
-      // empty output dir
-      if (only.forall(unknown)) sys.exit(2)
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    SparkEntry.checkFilter("verify", only, SparkEntry.queries.keySet)
+    val spark = GraftExtensions.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failures = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> e)
+        }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -59,6 +50,12 @@ object Verify {
         s"${q(k)}: ${q(v.replace(graft.operators.Dumps.SfTag, sfTag))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val failed = failures.sortBy(_._1).map { case (name, e) =>
+      s"${q(name)}: {${q("class")}: ${q(e.getClass.getName)}, " +
+        s"${q("message")}: ${q(String.valueOf(e.getMessage))}}"
+    }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/failures.json"), failed)
+    println(s"[verify] ${failures.size} queries failed (failures.json)")
     spark.stop()
   }
 }

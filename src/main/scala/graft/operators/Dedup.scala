@@ -99,7 +99,7 @@ object Dedup {
     * dir is immutable, explicit invalidation, executor-loss recompute)
     * is [[graft.MaterializedTable]]'s contract; Bench times the build
     * as its own `sig_build` entry. */
-  val signatures = new graft.MaterializedTable(signaturesPlan)
+  val signatures = graft.MaterializedTable("sig_build")(signaturesPlan)
 
   /** LSH candidate pairs + signature-estimated Jaccard ≥ minEst. */
   def minhashPairs(sigs: DataFrame, minEst: Double): DataFrame = {
@@ -131,15 +131,12 @@ object Dedup {
     * and reused by every d7_bloom_new probe — the production shape is
     * one index build amortized over every incoming batch, same
     * lifecycle contract as [[signatures]] (valid while the dir is
-    * immutable; [[invalidateBloom]] releases/refreshes). ~200 KB on
-    * the driver (1.6 M bits), sized for ≲10⁵ existing hashes. */
-  private val bloomCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Option[Array[Byte]]]
-  // synchronized: TrieMap.getOrElseUpdate can race two builders on
-  // first use; the corpus-scan build should run once (same rationale
-  // as MaterializedTable, minus the block leak — bytes are plain heap)
-  private[graft] def bloomOf(s: SparkSession, d: String): Option[Array[Byte]] =
-    synchronized { bloomCache.getOrElseUpdate((s, d), {
+    * immutable; `invalidate` refreshes, and there is nothing to
+    * release — the bytes are plain driver heap). ~200 KB on the
+    * driver (1.6 M bits), sized for ≲10⁵ existing hashes. Bench times
+    * the build as `bloom_build`. */
+  private[graft] val bloom = graft.MaterializedTable.of("bloom_build") {
+    (s, d) =>
       val bf = new BloomFilterAggregate(
         ColumnBridge.expression(xxhash64(col("text"))),
         Literal(100000L), Literal(1600000L), 0, 0).toAggregateExpression()
@@ -149,11 +146,7 @@ object Dedup {
         .filter(col("doc_id") % 4 =!= 0)
         .select(ColumnBridge.column(bf).as("bf"))
         .head().getAs[Array[Byte]](0))
-    })}
-
-  /** Drop the cached Bloom binary for (session, dir). */
-  def invalidateBloom(s: SparkSession, d: String): Unit =
-    bloomCache.remove((s, d))
+  }((_, _) => ())
 
   /** Banded Hamming pair search over a 64-bit signature column — the
     * shared engine of D8 (simhash) and MM5 (perceptual hash): explode
@@ -749,8 +742,8 @@ object Dedup {
     * verify is their dominant shared cost (the a55/sig_build pattern);
     * Bench times it as `corpus_pairs_build`. The table is edge-count
     * sized (256 rows at sf0.1), so the persist overhead is nil. */
-  private[graft] val corpusPairs = new graft.MaterializedTable(
-    (s, d) => verifiedCorpusPairsPlan(s, d, 0.5))
+  private[graft] val corpusPairs = graft.MaterializedTable(
+    "corpus_pairs_build")((s, d) => verifiedCorpusPairsPlan(s, d, 0.5))
 
   private def verifiedCorpusPairs(s: SparkSession, d: String,
       minJ: Double): DataFrame = {
@@ -765,7 +758,8 @@ object Dedup {
     * of derived table production persists after the one graph pass
     * (the corpusPairs/signatures precedent). Bench times the build as
     * `cc_labels_build`. */
-  private[graft] val ccLabels = new graft.MaterializedTable((s, d) =>
+  private[graft] val ccLabels = graft.MaterializedTable(
+      "cc_labels_build")((s, d) =>
     connectedComponents(corpusPairs(s, d),
       Tables.documents(s, d).select(col("doc_id")),
       atScale = graft.ScaleGuard.atScale(s, d, "documents")))
@@ -777,7 +771,8 @@ object Dedup {
     * coreness ladder is exactly the kind of derived table production
     * persists after the one graph pass (the ccLabels precedent).
     * Bench times the build as `coreness_build`. */
-  private[graft] val coreness = new graft.MaterializedTable((s, d) => {
+  private[graft] val coreness = graft.MaterializedTable(
+      "coreness_build")((s, d) => {
     val e0 = verifiedCorpusPairs(s, d, 0.5).localCheckpoint()
     def peel(e: DataFrame, k: Int, rounds: Int): (DataFrame, DataFrame) = {
       var cur = e
@@ -916,7 +911,7 @@ object Dedup {
       val incoming = Tables.documents(s, d)
         .select(col("doc_id"), xxhash64(col("text")).as("h"))
         .filter(col("doc_id") % 4 === 0)
-      val probed = bloomOf(s, d) match {
+      val probed = bloom(s, d) match {
         case Some(bytes) =>
           incoming.filter(!ColumnBridge.column(BloomFilterMightContain(
             ColumnBridge.expression(lit(bytes)),

@@ -126,7 +126,7 @@ object LagGrid {
     * invalidation, executor-loss recompute) is
     * [[graft.MaterializedTable]]'s contract; Bench times the build as
     * its own `grid_build` entry. */
-  val grid = new graft.MaterializedTable(gridPlan)
+  val grid = graft.MaterializedTable("grid_build")(gridPlan)
 
   /** Per-cell dump with ENGINE-computed p-values — the
     * materialized-intermediate oracle pattern (round 12): the

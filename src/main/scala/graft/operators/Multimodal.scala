@@ -630,7 +630,7 @@ object Multimodal {
     * the same signatures), so production persists the hash table and
     * the bench times the build as its own `phash_tight_build` entry.
     * Lifecycle per [[graft.MaterializedTable]]. */
-  val phashTight = new graft.MaterializedTable(
+  val phashTight = graft.MaterializedTable("phash_tight_build")(
     (s, d) => perceptHashOf(s, plantedCorpus(s, d)))
 
   /** documents ∪ planted near-duplicates (the MM5c fixture): every

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -187,7 +185,7 @@ object Similarity {
     * SQL). */
   private def pqCodebook(s: SparkSession, d: String)
       : Array[Array[Array[Double]]] = {
-    val cents = centroids(s, d)
+    val cents = ivf(s, d).centroids
     Array.tabulate(PqM, PqK) { (j, c) =>
       cents(c)._2.slice(j * PqD, (j + 1) * PqD).toArray
     }
@@ -267,27 +265,19 @@ object Similarity {
 
   /** The IVF coarse quantizer: 16 deterministically sampled corpus
     * vectors (every 31st vec_id, first 16) as (id, components, norm),
-    * collected once per (session, dir) — the probe side needs them on
-    * the driver to rank lists, and re-collecting per invocation would
-    * re-scan the corpus. Valid while the dir is immutable (the
-    * [[graft.MaterializedTable]] contract); released by
-    * [[invalidateIvf]]. */
-  private val centCache =
-    TrieMap.empty[(SparkSession, String), Array[(Long, Seq[Double], Double)]]
-  // synchronized: getOrElseUpdate can race two corpus-scan collects
-  // on first use (same rationale as MaterializedTable)
-  private def centroids(s: SparkSession, d: String): Array[(Long, Seq[Double], Double)] =
-    synchronized { centCache.getOrElseUpdate((s, d), {
-      Tables.embeddings(s, d)
-        .filter(col("vec_id") % 31 === 0)
-        .orderBy("vec_id").limit(16)
-        .select(col("vec_id"), col("embedding"))
-        .collect()
-        .map { r =>
-          val v = r.getSeq[Float](1).map(_.toDouble)
-          (r.getLong(0), v, math.sqrt(v.map(x => x * x).sum))
-        }
-    })}
+    * collected once per (session, dir) as part of [[ivf]] — the probe
+    * side needs them on the driver to rank lists, and re-collecting per
+    * invocation would re-scan the corpus. */
+  private def centroidsOf(s: SparkSession, d: String): Array[(Long, Seq[Double], Double)] =
+    Tables.embeddings(s, d)
+      .filter(col("vec_id") % 31 === 0)
+      .orderBy("vec_id").limit(16)
+      .select(col("vec_id"), col("embedding"))
+      .collect()
+      .map { r =>
+        val v = r.getSeq[Float](1).map(_.toDouble)
+        (r.getLong(0), v, math.sqrt(v.map(x => x * x).sum))
+      }
 
   /** Centroid-cosine struct array for ranking/argmax against the 16
     * inlined centroid literals. */
@@ -302,11 +292,9 @@ object Similarity {
     * its nearest centroid's list — (c_id, ce, cn, lst). This is the
     * "index build" of an IVF system, and it is the dominant cost of
     * SIM3 (16 codegen dot products per corpus row); real ANN engines
-    * build it once and amortize it over every probe. Materialized once
-    * per (session, dir) ([[graft.MaterializedTable]] lifecycle); Bench
-    * times the build as its own `ivf_build` entry. */
-  private def ivfIndexPlan(s: SparkSession, d: String): DataFrame = {
-    val cents = centroids(s, d)
+    * build it once and amortize it over every probe. */
+  private def ivfIndexPlan(s: SparkSession, d: String,
+      cents: Array[(Long, Seq[Double], Double)]): DataFrame =
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"))
       .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
@@ -315,24 +303,23 @@ object Similarity {
           .getField("cid"))
       .select(col("vec_id").as("c_id"), col("embedding").as("ce"),
         col("nrm").as("cn"), col("lst"))
-  }
-  // private: the quantizer cache and the inverted-list table must be
-  // invalidated TOGETHER (a caller reaching the MaterializedTable's
-  // own invalidate would leave a stale quantizer feeding a rebuilt
-  // index) — ivfIndex/invalidateIvf below are the only surface
-  private val ivfIndexTable = new graft.MaterializedTable(ivfIndexPlan)
 
-  /** The materialized inverted lists for (session, dir) — the IVF
-    * index build, built on first use. */
-  def ivfIndex(s: SparkSession, d: String): DataFrame = ivfIndexTable(s, d)
+  /** A built IVF index: the coarse quantizer and the materialized
+    * inverted lists it assigned. */
+  final case class Ivf(centroids: Array[(Long, Seq[Double], Double)],
+      lists: DataFrame)
 
-  /** Drop the cached quantizer AND inverted lists for (session, dir) —
-    * required before re-probing if data under the dir was rewritten.
-    * The ONLY invalidation hook (quantizer and lists stay in sync). */
-  def invalidateIvf(s: SparkSession, d: String): Unit = {
-    centCache.remove((s, d))
-    ivfIndexTable.invalidate(s, d)
-  }
+  /** The IVF index for (session, dir), built once per (session, dir)
+    * ([[graft.MaterializedTable]] lifecycle). Quantizer and lists are
+    * ONE entry, so `invalidate` drops both and the next use rebuilds
+    * both — a stale quantizer can never feed rebuilt lists. The PQ
+    * codebooks slice the same quantizer. Bench times the build as
+    * `ivf_build`. */
+  val ivf = graft.MaterializedTable.of("ivf_build") {
+    (s, d) =>
+      val cents = centroidsOf(s, d)
+      Ivf(cents, graft.MaterializedTable.materialize(ivfIndexPlan(s, d, cents)))
+  }((_, v) => v.lists.unpersist(blocking = true))
 
   /** The verified embedding near-dup pair graph (D9's output):
     * 6 hyperplane-sign bands → candidate bucket-mates → exact-cosine
@@ -365,7 +352,8 @@ object Similarity {
       .dropDuplicates("va", "vb")
   }
 
-  private[graft] val embPairs = new graft.MaterializedTable(embPairsPlan)
+  private[graft] val embPairs =
+    graft.MaterializedTable("emb_pairs_build")(embPairsPlan)
 
   /** D16's duplicate-grade cosine cut over the D9 edge table: 0.45
     * separates duplicate FAMILIES (clusters ≤ 4, diameter ≤ 3 at
@@ -912,7 +900,7 @@ object Similarity {
     // banded LSH. The coarse quantizer (16 deterministically sampled
     // dataset vectors, collected once per (session, dir)) assigns
     // every vector to its nearest centroid's inverted list — the
-    // memoized `ivfIndex` table, built once and shared across probes,
+    // memoized `ivf` lists, built once and shared across probes,
     // exactly as a real IVF engine separates index build from query.
     // Queries probe their nprobe=2 closest lists; candidates co-locate
     // by an equi-join on the list id — at 100 TB the lists
@@ -923,9 +911,9 @@ object Similarity {
     // top-k end to end with no dump (recall vs brute force stays
     // asserted in SimilaritySpec).
     "sim3_ivf_ann" -> ((s, d) => {
-      val cents = centroids(s, d)
-      // corpus side: the prebuilt inverted lists (nearest list only)
-      val c = ivfIndex(s, d)
+      // the quantizer, and corpus side the prebuilt inverted lists
+      // (nearest list only)
+      val Ivf(cents, c) = ivf(s, d)
       // query side: top-nprobe lists, ranked against the same quantizer
       val q = Tables.embeddings(s, d).filter(col("vec_id") < 10)
         .select(col("vec_id"), col("embedding"))
@@ -1116,16 +1104,16 @@ object Similarity {
     // row (no float vector is touched on the corpus-sized stage),
     // the ADC top-100 shortlist re-ranks with the exact 64-d cosine.
     // At 100 TB: the corpus shuffles once into lists at index-build
-    // time (the shared memoized ivfIndex), each probe reads ~2/16 of
+    // time (the shared memoized `ivf` lists), each probe reads ~2/16 of
     // the CODES (16 bytes/vector, not 256), and exact math runs only
     // on the bounded shortlist. Fully hash-checked: routing,
     // codebook, ADC and re-rank are all deterministic SQL on both
     // engines; recall vs the exact SIM1 top-5 pinned in
     // SimilaritySpec.
     "sim22_ivfpq_topk" -> ((s, d) => {
-      val cents = centroids(s, d)
+      val Ivf(cents, lists) = ivf(s, d)
       val book = pqBook(s, d)
-      val inv = ivfIndex(s, d).select(col("c_id"), col("lst"))
+      val inv = lists.select(col("c_id"), col("lst"))
       val codes = pqEncoded(s, d).withColumnRenamed("vec_id", "c_id")
       val q = Tables.embeddings(s, d).filter(col("vec_id") < 10)
         .select(col("vec_id"), col("embedding"))

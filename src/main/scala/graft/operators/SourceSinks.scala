@@ -63,9 +63,6 @@ object SourceSinks {
   private def scale16(x: Column, mn: Column, mx: Column): Column =
     least(floor((x - mn) / (mx - mn + lit(1e-9)) * 65536), lit(65535L))
 
-  private val zCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
   /** S22's staged layout: events Z-ORDERED on (user_id, value) — the
     * multi-dimensional clustering a 100 TB lake runs as OPTIMIZE
     * ZORDER. A sort by one column makes that column's min/max file
@@ -76,9 +73,11 @@ object SourceSinks {
     * data: a 1-row bounds aggregate (broadcast onto the scan — the
     * a13 pattern), then rank → interleave → range-repartition by z →
     * sort-within-partitions. Same (session, dir) immutable-input
-    * lifecycle as the other staged layouts. */
-  def zorderDir(s: SparkSession, d: String): String =
-    zCache.synchronized { zCache.getOrElseUpdate((s, d), {
+    * lifecycle as the other staged layouts; `invalidate` deletes the
+    * dir and the next use re-stages. Bench times the staging as
+    * `s22_layout_build`. */
+  val zorderDir = graft.MaterializedTable.of("s22_layout_build") {
+    (s, d) =>
       val out = tmp("s22z")
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -98,14 +97,7 @@ object SourceSinks {
           col("value"))
         .write.mode("overwrite").parquet(out)
       out
-    })}
-
-  /** Drop the (session, dir) Z-ordered layout; next use re-stages. */
-  def invalidateZorder(s: SparkSession, d: String): Unit =
-    zCache.synchronized {
-      zCache.remove((s, d))
-        .foreach(p => graft.Fs.deleteRecursively(new java.io.File(p)))
-    }
+  }((_, p) => graft.Fs.deleteRecursively(new java.io.File(p)))
 
   /** Staged dirs removed at JVM exit. File.deleteOnExit is useless
     * here (it only removes EMPTY dirs, and these fill with part
@@ -436,8 +428,6 @@ object SourceSinks {
         .orderBy("event_id"))
   )
 
-  private val bucketedTables =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private val bucketedSeq = new java.util.concurrent.atomic.AtomicInteger
 
   /** Catalog name of the bucketed events layout for (session, dir),
@@ -446,29 +436,21 @@ object SourceSinks {
     * parallel suites) reuse the table instead of racing overwrites of
     * a shared name. Same lifecycle contract as
     * [[graft.MaterializedTable]]: valid while the data under `dir` is
-    * immutable; rewrites require [[invalidateBucketed]] first. */
-  def bucketedTable(s: SparkSession, d: String): String =
-    bucketedTables.synchronized {
-      bucketedTables.getOrElseUpdate((s, d), {
-        val tbl = s"graft_s15_events_bucketed_${bucketedSeq.incrementAndGet()}"
-        Tables.events(s, d)
-          .select(col("user_id"), col("event_type"), col("value"))
-          .write.mode("overwrite")
-          .option("path", tmp("s15"))  // external location: keep data
-          .bucketBy(8, "user_id")      // out of ./spark-warehouse
-          .sortBy("user_id")
-          .format("parquet")
-          .saveAsTable(tbl)
-        tbl
-      })
-    }
-
-  /** Drop the (session, dir) bucketed layout; next use re-ingests. */
-  def invalidateBucketed(s: SparkSession, d: String): Unit =
-    bucketedTables.synchronized {
-      bucketedTables.remove((s, d))
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-    }
+    * immutable; `invalidate` drops the table and the next use
+    * re-ingests. Bench times the ingest as `s15_layout_build`. */
+  val bucketedTable = graft.MaterializedTable.of("s15_layout_build") {
+    (s, d) =>
+      val tbl = s"graft_s15_events_bucketed_${bucketedSeq.incrementAndGet()}"
+      Tables.events(s, d)
+        .select(col("user_id"), col("event_type"), col("value"))
+        .write.mode("overwrite")
+        .option("path", tmp("s15"))  // external location: keep data
+        .bucketBy(8, "user_id")      // out of ./spark-warehouse
+        .sortBy("user_id")
+        .format("parquet")
+        .saveAsTable(tbl)
+      tbl
+  }((s, t) => s.sql(s"DROP TABLE IF EXISTS $t"))
 
   /** The S15 plan before the presentation sort: events are written
     * bucketed + sorted by `user_id` into the session catalog, and the

@@ -128,7 +128,8 @@ object Stats {
     * signatures; Bench times the build as its own `a55_base_build`
     * entry. The materialized table is tiny (|event types| rows), so
     * the persist overhead is nil. */
-  private[graft] val mkBase = new graft.MaterializedTable((s, d) => {
+  private[graft] val mkBase = graft.MaterializedTable(
+      "a55_base_build")((s, d) => {
     val dly = Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
       .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /

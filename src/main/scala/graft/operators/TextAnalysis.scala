@@ -71,9 +71,9 @@ object TextAnalysis {
     * re-running the exhaustive shingle self-join per construction.
     * Bench times the builds as `slice100_build` / `slice200_build`
     * (the corpusPairs convention). */
-  private[graft] val slicePairs100 = new graft.MaterializedTable(
+  private[graft] val slicePairs100 = graft.MaterializedTable("slice100_build")(
     (s, d) => ngramJaccardPairs(s, d, maxId = 100, minJ = 0.02))
-  private[graft] val slicePairs200 = new graft.MaterializedTable(
+  private[graft] val slicePairs200 = graft.MaterializedTable("slice200_build")(
     (s, d) => ngramJaccardPairs(s, d, maxId = 200, minJ = 0.01))
 
   private[operators] def ngramJaccardPairs(s: SparkSession, d: String,

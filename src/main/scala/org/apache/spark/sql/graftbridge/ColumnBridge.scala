@@ -15,14 +15,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Apply the engine's function injections to an ALREADY-BUILT
-    * session (the `spark.sql.extensions` config only takes effect at
-    * session construction). Same builders as graft.GraftExtensions. */
-  def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    graft.GraftExtensions.functions.foreach { case (ident, info, builder) =>
-      registry.registerFunction(ident, info, builder)
-    }
-  }
 }

@@ -191,7 +191,6 @@ class OracleLintSpec extends AnyFunSuite {
 
   test("no oracle leaves an integer sum uncast (HUGEINT hash-divergence class)") {
     val spark = SparkTestSession.spark
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunctions(spark)
     val sf = SparkTestSession.Sf0001
     val offenders = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap {
       case (name, sql) =>

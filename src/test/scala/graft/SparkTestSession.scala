@@ -2,21 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for the whole forked test JVM.
-  * Small parallelism keeps suite wall-clock low; tests that need the
+/** One shared local SparkSession for the whole forked test JVM, built
+  * by the drivers' factory (so it carries [[GraftExtensions]]: the
+  * native SQL functions and the date_trunc pushdown rule). Small
+  * parallelism keeps suite wall-clock low; tests that need the
   * harness tables read /root/testdata/sf0.001 (read-only).
   */
 object SparkTestSession {
   val Sf0001 = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftExtensions.session(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -44,7 +44,6 @@ class DotProductSpec extends AnyFunSuite {
       .head()
     assert(mism.isNullAt(0))
     // NULL element -> NULL, matching the HOF fold
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunctions(spark)
     assert(spark.sql(
       "SELECT vec_dot(array(1.0D, CAST(NULL AS DOUBLE)), array(1.0D, 1.0D))")
       .head().isNullAt(0))

@@ -43,7 +43,6 @@ class PearsonPValueSpec extends AnyFunSuite {
   }
 
   test("SQL-callable after extension registration") {
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunctions(spark)
     val p = spark.sql("SELECT pearson_pvalue(CAST(0.529 AS DOUBLE), 34L)")
       .head().getDouble(0)
     assert(math.abs(p - StudentT.pValue(0.529, 34)) < 1e-15)

@@ -61,7 +61,6 @@ class RollingFingerprintSpec extends AnyFunSuite {
   }
 
   test("SQL-callable after extension registration") {
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunctions(spark)
     val got = spark.sql("SELECT rolling_fp('abcdefghijk')")
       .head().getSeq[Long](0)
     assert(got == winnow("abcdefghijk"))

@@ -36,7 +36,6 @@ class VaderCompoundSpec extends AnyFunSuite {
   }
 
   test("SQL-callable after extension registration") {
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunctions(spark)
     val c = spark.sql("SELECT vader_compound('very good day!')")
       .head().getDouble(0)
     assert(c == Vader.compound("very good day!"))

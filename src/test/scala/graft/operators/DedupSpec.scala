@@ -160,7 +160,7 @@ class DedupSpec extends AnyFunSuite {
     val d = docs(1L -> wordsA, 2L -> wordsB, 3L -> wordsC,
       4L -> wordsA, 8L -> wordsB, 12L -> (0 until 40)
         .map(i => s"fresh$i").mkString(" "))
-    Dedup.invalidateBloom(spark, d)
+    Dedup.bloom.invalidate(spark, d)
     val exact = Dedup.queries("d7_incremental_new")(spark, d).collect()
       .map(_.getLong(0)).toSet
     val bloom = Dedup.queries("d7_bloom_new")(spark, d).collect()
@@ -187,7 +187,7 @@ class DedupSpec extends AnyFunSuite {
     // silently drop ALL rows (recall 0, undetectable by the subset
     // assertion). The operator must treat no-bloom as nothing-seen.
     val d = docs(0L -> wordsA, 4L -> wordsB, 8L -> wordsC)
-    Dedup.invalidateBloom(spark, d)
+    Dedup.bloom.invalidate(spark, d)
     val exact = Dedup.queries("d7_incremental_new")(spark, d).collect()
       .map(_.getLong(0)).toSet
     val bloom = Dedup.queries("d7_bloom_new")(spark, d).collect()

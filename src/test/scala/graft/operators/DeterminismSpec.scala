@@ -101,8 +101,8 @@ class DeterminismSpec extends AnyFunSuite {
   cases.foreach { case (name, qs) =>
     test(s"$name is identical across file layouts and shuffle widths") {
       if (name == "d7_bloom_new") {
-        Dedup.invalidateBloom(spark, oneFile)
-        Dedup.invalidateBloom(spark, sevenFiles)
+        Dedup.bloom.invalidate(spark, oneFile)
+        Dedup.bloom.invalidate(spark, sevenFiles)
       }
       val a = qs(name)(spark, oneFile).collect().map(_.toString).toSeq
       val b = qs(name)(spark, sevenFiles).collect().map(_.toString).toSeq

@@ -46,7 +46,7 @@ class PipelineIntegrationSpec extends AnyFunSuite {
 
     // 1. ingest increment: of the incoming batch (doc_id % 4 == 0),
     // keep only docs NEW against the existing corpus
-    Dedup.invalidateBloom(spark, d0)
+    Dedup.bloom.invalidate(spark, d0)
     val newIds = Dedup.queries("d7_incremental_new")(spark, d0)
       .collect().map(_.getLong(0)).toSet
     val incoming = rows.filter(_._1 % 4 == 0).map(_._1).toSet

@@ -747,9 +747,6 @@ class PlanShapeSpec extends AnyFunSuite {
     // query's single-partition frame is post-aggregation: its row
     // count is bounded by the group/grid cardinality, not the corpus.
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    // sql17 parses vader_compound through the SQL surface — the test
-    // session has no GraftExtensions, so bridge the live registry
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunctions(spark)
     val families = Relational.queries ++ Windows.queries ++
       Stats.queries ++ LagGrid.queries ++ DatasetOps.queries ++
       Curation.queries ++ TextAnalysis.queries ++

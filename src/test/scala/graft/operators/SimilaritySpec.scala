@@ -220,7 +220,7 @@ class SimilaritySpec extends AnyFunSuite {
     // the memoization would change answers across a session.
     val before = Similarity.queries("sim3_ivf_ann")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    Similarity.invalidateIvf(spark, sf)
+    Similarity.ivf.invalidate(spark, sf)
     val after = Similarity.queries("sim3_ivf_ann")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(before.nonEmpty)

@@ -195,9 +195,7 @@ class TextAnalysisSpec extends AnyFunSuite {
 
   test("sql17: SQL-registered functions equal their Column-API twins") {
     // the extension registration's whole point: the same expressions
-    // by name from spark.sql. The shared test session is built
-    // without GraftExtensions, so apply the live-registry bridge.
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunctions(spark)
+    // by name from spark.sql.
     val sf = SparkTestSession.Sf0001
     val viaSql = TextAnalysis.queries("sql17_native_fn")(spark, sf)
       .collect()

@@ -33,10 +33,6 @@ class TextDegenerateSpec extends AnyFunSuite {
   private val KnownTinyDocThrows: Set[String] = Set()
 
   test("tiny-doc crash set can only shrink (text-family ANSI ratchet)") {
-    // the shared test session is built without GraftExtensions —
-    // register the SQL-name surface so sql17 resolves (the
-    // TextAnalysisSpec bridge)
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunctions(spark)
     val failures = TextAnalysis.queries.keys.toSeq.sorted.flatMap { name =>
       try { TextAnalysis.queries(name)(spark, tinyDir).collect(); None }
       catch { case e: Throwable =>

@@ -9,18 +9,19 @@ import graft.{SparkTestSession, Tables}
   * return exactly the same rows); unaligned equality literals and
   * comparisons under OR must be left alone.
   *
-  * Runs on a separate `newSession()` so the shared test session's
-  * optimizer is untouched.
+  * The shared test session carries the rule (via GraftExtensions); the
+  * rule-less comparison session is a `newSession()` of it that
+  * excludes the rule by name, so the shared session is untouched.
   */
 class PushDateTruncFiltersSpec extends AnyFunSuite {
-  private lazy val base = SparkTestSession.spark
-  private val sf = SparkTestSession.Sf0001
-
-  private def ruled(): org.apache.spark.sql.SparkSession = {
-    val s = base.newSession()
-    s.experimental.extraOptimizations = Seq(PushDateTruncFilters)
+  private lazy val ruled = SparkTestSession.spark
+  private lazy val bare = {
+    val s = ruled.newSession()
+    s.conf.set("spark.sql.optimizer.excludedRules",
+      "graft.plans.PushDateTruncFilters")
     s
   }
+  private val sf = SparkTestSession.Sf0001
 
   private def dayEq(s: org.apache.spark.sql.SparkSession) =
     Tables.events(s, sf)
@@ -29,7 +30,7 @@ class PushDateTruncFiltersSpec extends AnyFunSuite {
       .select("event_id")
 
   test("day-equality on the truncated column gains pushed raw bounds") {
-    val s = ruled()
+    val s = ruled
     val scan = dayEq(s).queryExecution.executedPlan.toString
       .linesIterator.find(_.contains("PushedFilters")).get
     assert(scan.contains("GreaterThanOrEqual(ts") &&
@@ -37,13 +38,13 @@ class PushDateTruncFiltersSpec extends AnyFunSuite {
       s"rule did not push the bounds: $scan")
     // the rule-less session must NOT have them (the asymmetry the
     // rule exists to close)
-    val bare = dayEq(base).queryExecution.executedPlan.toString
+    val bareScan = dayEq(bare).queryExecution.executedPlan.toString
       .linesIterator.find(_.contains("PushedFilters")).get
-    assert(!bare.contains("GreaterThanOrEqual(ts"), bare)
+    assert(!bareScan.contains("GreaterThanOrEqual(ts"), bareScan)
   }
 
   test("rule preserves results exactly across all comparison shapes") {
-    val s = ruled()
+    val s = ruled
     def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
       df.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
     val shapes: Seq[org.apache.spark.sql.Column] = Seq(
@@ -61,14 +62,14 @@ class PushDateTruncFiltersSpec extends AnyFunSuite {
         date_trunc("day", col("ts")))
     for (p <- shapes) {
       val a = ids(Tables.events(s, sf).filter(p))
-      val b = ids(Tables.events(base, sf).filter(p))
+      val b = ids(Tables.events(bare, sf).filter(p))
       assert(a == b, s"rule changed results for $p")
       assert(a.nonEmpty || b.isEmpty)
     }
   }
 
   test("unaligned equality literal is left alone") {
-    val s = ruled()
+    val s = ruled
     // 10:30 is not day-aligned: the predicate is constant-false on
     // real data; the rule must not add bounds (and must not break it)
     val df = Tables.events(s, sf)
@@ -82,7 +83,7 @@ class PushDateTruncFiltersSpec extends AnyFunSuite {
   }
 
   test("comparisons under OR are left alone (no unsound conjuncts)") {
-    val s = ruled()
+    val s = ruled
     val p = (date_trunc("day", col("ts")) === lit("2024-01-10 00:00:00")
       .cast("timestamp")) || col("event_type") === "click"
     val df = Tables.events(s, sf).filter(p).select("event_id")
@@ -90,7 +91,7 @@ class PushDateTruncFiltersSpec extends AnyFunSuite {
       .linesIterator.find(_.contains("PushedFilters")).get
     assert(!scan.contains("GreaterThanOrEqual(ts,"), scan)
     val a = df.collect().map(_.getLong(0)).sorted.toSeq
-    val b = Tables.events(base, sf).filter(p)
+    val b = Tables.events(bare, sf).filter(p)
       .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(a == b && a.nonEmpty)
   }
