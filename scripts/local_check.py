@@ -9,7 +9,8 @@ in <outDir>/oracle_sql.json: row count, sorted-column schema, and
 value hash (columns sorted by name, rows sorted by all columns). Every
 query Verify lists in <outDir>/failures.json (it threw, so it wrote no
 output) is a FAIL; an output dir a failed query left from an earlier
-run is not compared.
+run is not compared. A query named on the command line that has no
+output dir and no failures.json entry is a FAIL too.
 """
 import sys, json, glob, os
 import duckdb, pandas as pd
@@ -44,6 +45,11 @@ for name, e in sorted(failed.items()):
     if not only or name in only:
         msg = " ".join(str(e["message"]).split())[:300]
         fails.append((name, f"verify: {e['class']}: {msg}"))
+# a named query with neither an output dir nor a failures entry (a typo,
+# or a query the writer never ran) must not pass by being skipped
+for name in sorted(only):
+    if name not in failed and not os.path.isdir(os.path.join(outdir, name)):
+        fails.append((name, "no spark output"))
 for name in sorted(os.listdir(outdir)):
     path = os.path.join(outdir, name)
     if not os.path.isdir(path) or name in failed:

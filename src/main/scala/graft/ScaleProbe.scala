@@ -313,10 +313,12 @@ object ScaleProbe {
           .queries("pipe6_dedup_mix")(spark, dd))
       })
 
-    // SPARK_GRAFT_PROBE_ONLY=a,b runs just the named probes (local
-    // iteration on a new entry; the full sweep stays the default)
-    val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
+    // SPARK_GRAFT_ONLY=a,b runs just the named probes (Bench's filter;
+    // the full sweep stays the default)
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
+    only.foreach(
+      SparkEntry.checkFilter("scaleprobe", _, probes.map(_._1).toSet))
     val out = probes.filter(p => only.forall(_.contains(p._1)))
       .map { case (name, run) =>
       // two reps, min: single-shot in a shared sandbox is

@@ -37,11 +37,11 @@ object SparkEntry {
       LagGrid.queries ++ DatasetOps.queries ++ Curation.queries ++
       graft.sources.SourceQueries.queries
 
-  /** Check a driver's name filter (Verify's extra args, Bench's
-    * `SPARK_GRAFT_ONLY`, PlanDump's extra args) against the names that
-    * driver knows. Unknown names go to stderr; a non-empty filter that
-    * names nothing known exits 2, since the run would do nothing and
-    * still look clean. */
+  /** Check a driver's name filter (Verify's extra args, Bench's and
+    * ScaleProbe's `SPARK_GRAFT_ONLY`, PlanDump's extra args) against
+    * the names that driver knows. Unknown names go to stderr; a
+    * non-empty filter that names nothing known exits 2, since the run
+    * would do nothing and still look clean. */
   def checkFilter(driver: String, only: Set[String],
       known: Set[String]): Unit = {
     val unknown = only.diff(known)

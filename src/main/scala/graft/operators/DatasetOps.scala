@@ -59,7 +59,7 @@ object DatasetOps {
       val docs = Tables.documents(s, d)
         .filter(col("doc_id") < 100).select(col("doc_id"))
       val pairs = TextAnalysis.slicePairs100(s, d)
-      Dedup.connectedComponents(pairs, docs)
+      Dedup.connectedComponents(pairs, docs)._1
         .select(col("doc_id"), col("comp").as("canonical_id"),
           split(col("comp")).as("split"))
         .orderBy("doc_id")

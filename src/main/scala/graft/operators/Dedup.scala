@@ -245,22 +245,12 @@ object Dedup {
     * @param pairs    (da, db) near-dup pairs (undirected edges)
     * @param vertices (doc_id) — every doc in scope; docs in no pair
     *                 come out as their own singleton component
+    * @return (labels (doc_id, comp), rounds to converge: propagation
+    *         rounds + the final fixpoint confirmation — the "rounds ≈
+    *         cluster diameter" claim, measured by DedupSpec)
     */
-  /** Rounds the most recent [[connectedComponents]] call took to
-    * converge (propagation rounds + the final fixpoint confirmation).
-    * Telemetry for specs/benchmarks: the scale claim is "rounds ≈
-    * cluster diameter", and this makes it MEASURED on the corpus
-    * graphs instead of argued (DedupSpec pins the corpus bound).
-    * Holds -1 while a call is in flight (and after a non-converged
-    * abort), so a spec can never read a PREVIOUS call's value and
-    * pass vacuously; only a converged run publishes a count. Like
-    * the shared caches, calls are effectively serialized per suite —
-    * a reader racing a concurrent call sees the -1 sentinel, not a
-    * stale count. */
-  private[graft] val lastCcRounds = new java.util.concurrent.atomic.AtomicLong(0)
-
   private[operators] def connectedComponents(pairs: DataFrame,
-      vertices: DataFrame, atScale: Boolean = false): DataFrame = {
+      vertices: DataFrame): (DataFrame, Long) = {
     import org.apache.spark.storage.StorageLevel
     // persisted PRE-PARTITIONED on the join key (round 15, the
     // pageRank treatment): the per-round offer join reuses the cached
@@ -270,29 +260,14 @@ object Dedup {
       .union(pairs.select(col("db").as("src"), col("da").as("dst")))
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // Active-vertex restriction, landed behind the caller's
-    // ScaleGuard decision (round 15, VERDICT item 6): iterate over
-    // EDGE ENDPOINTS only and left-join the isolated majority back
-    // once at the end. Round 14 implemented exactly this unguarded
-    // and MEASURED IT SLOWER at sf0.1 on local[32] (d24 1.4→2.2 s,
-    // d27 0.9→1.9 s, d11_pr_corpus 3.6→4.2 s): the upfront
-    // endpoint-distinct materialization plus the final assembly join
-    // cost more fixed jobs than the smaller per-round frames save —
-    // per-round cost there is job scheduling, not row count. At true
-    // corpus vertex counts the per-round frames DO dominate (dup
-    // graphs are sparse: endpoints ≪ vertices), so the restriction is
-    // the right shape exactly when the guard says the input is big.
-    // Exactness: a vertex in no edge never receives an offer and
-    // never changes its own-id label, so excluding it from the loop
-    // and restoring `comp = doc_id` at the end is the identical
-    // fixpoint.
+    // every vertex iterates, isolated ones included: round 14 measured
+    // iterating over edge endpoints only (plus a final left join for
+    // the isolated rest) slower at sf0.1 (d24 1.4 → 2.2 s, d27 0.9 →
+    // 1.9 s, d11_pr_corpus 3.6 → 4.2 s).
     // eager localCheckpoint per round: each `labels` is a flat scan of
     // materialized blocks, so every round's plan is O(1) regardless of
     // how many rounds the diameter demands
-    val iterVerts =
-      if (atScale) edges.select(col("src").as("doc_id")).distinct()
-      else vertices.select(col("doc_id"))
-    var labels = iterVerts.select(col("doc_id"), col("doc_id").as("comp"))
+    var labels = vertices.select(col("doc_id"), col("doc_id").as("comp"))
       .localCheckpoint()
     // convergence bound from the input itself: propagation needs at
     // most diameter rounds and diameter < |V| — a fixed literal cap
@@ -302,7 +277,6 @@ object Dedup {
     var cap = -1L
     var iter = 0L
     var result: DataFrame = null
-    lastCcRounds.set(-1L) // sentinel until THIS call converges
     while (result == null) {
       // change detection WITHOUT the per-round join (round 14, guide
       // §2.4): each label row carries its own comp as `prev` (offered
@@ -321,18 +295,8 @@ object Dedup {
         .localCheckpoint()
       val changed = next.filter(col("comp") =!= col("prev")).count()
       if (changed == 0) {
-        result =
-          if (atScale)
-            // restore the isolated majority once: vertices in no edge
-            // are their own singleton components
-            vertices.select(col("doc_id"))
-              .join(next.select(col("doc_id"), col("comp")),
-                Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                coalesce(col("comp"), col("doc_id")).as("comp"))
-          else next.select(col("doc_id"), col("comp"))
+        result = next.select(col("doc_id"), col("comp"))
         edges.unpersist()
-        lastCcRounds.set(iter + 1)
       } else {
         labels = next.select(col("doc_id"), col("comp"))
         iter += 1
@@ -342,7 +306,7 @@ object Dedup {
         }
       }
     }
-    result
+    (result, iter + 1)
   }
 
   /** D11 iterative kernel: damped PageRank by power iteration over the
@@ -672,10 +636,10 @@ object Dedup {
       when(col("n3") > 0, lit(3L)).when(col("n2") > 0, lit(2L))
         .otherwise(lit(1L)).as("ecc"),
       (col("n1") + col("n2") + col("n3")).as("reach"))
-    val comp = connectedComponents(p, vertices)
+    val comp = connectedComponents(p, vertices)._1
     // materialized once (round 14): the per-component stats agg and
     // the final join both consume mem, and both its inputs (the shell
-    // fold and the CC kernel's assembly join) are worth one pass each
+    // fold and the CC kernel's label loop) are worth one pass each
     val mem = ecc.join(comp, Seq("doc_id")).localCheckpoint()
     val stats = mem.groupBy("comp")
       .agg(min(col("ecc")).as("min_ecc"), max(col("ecc")).as("max_ecc"))
@@ -761,8 +725,7 @@ object Dedup {
   private[graft] val ccLabels = graft.MaterializedTable(
       "cc_labels_build")((s, d) =>
     connectedComponents(corpusPairs(s, d),
-      Tables.documents(s, d).select(col("doc_id")),
-      atScale = graft.ScaleGuard.atScale(s, d, "documents")))
+      Tables.documents(s, d).select(col("doc_id")))._1)
 
   /** Full-corpus k-core coreness (doc_id, coreness ∈ 0..3),
     * materialized once per (session, dir) — round 14 (optimization
@@ -935,7 +898,7 @@ object Dedup {
       val docs = Tables.documents(s, d)
         .filter(col("doc_id") < 100).select(col("doc_id"))
       val pairs = TextAnalysis.slicePairs100(s, d)
-      connectedComponents(pairs, docs)
+      connectedComponents(pairs, docs)._1
         .select(col("doc_id"), col("comp").as("canonical_id"))
         .orderBy("doc_id")
     }),
@@ -1345,8 +1308,7 @@ object Dedup {
       val pairs = hammingPairs(sig, "doc_id", "sh", bands = 4, maxDist = 3)
         .select(col("da"), col("db"))
       connectedComponents(pairs,
-        Tables.documents(s, d).select(col("doc_id")),
-        atScale = graft.ScaleGuard.atScale(s, d, "documents"))
+        Tables.documents(s, d).select(col("doc_id")))._1
         .select(col("doc_id"), col("comp").as("canonical_id"))
         .orderBy("doc_id")
     })

@@ -617,8 +617,7 @@ object Multimodal {
       val pairs = Dedup.hammingPairs(phashTight(s, d), "doc_id", "ph64",
         bands = 8, maxDist = 7).select(col("da"), col("db"))
       val verts = phashTight(s, d).select(col("doc_id"))
-      Dedup.connectedComponents(pairs, verts,
-        atScale = graft.ScaleGuard.atScale(s, d, "documents"))
+      Dedup.connectedComponents(pairs, verts)._1
         .select(col("doc_id"), col("comp").as("canonical_id"))
         .orderBy("doc_id")
     })

@@ -1389,8 +1389,7 @@ object Similarity {
       }
       val verts = Tables.embeddings(s, d)
         .select(col("vec_id").as("doc_id"))
-      Dedup.connectedComponents(edges, verts,
-        atScale = graft.ScaleGuard.atScale(s, d, "embeddings"))
+      Dedup.connectedComponents(edges, verts)._1
         .select(col("doc_id").as("vec_id"), col("comp").as("canonical_id"))
         .orderBy("vec_id")
     }),

@@ -176,34 +176,13 @@ object Stats {
       : (DataFrame, DataFrame) = {
     val ev = Tables.events(s, d).filter(col("value").isNotNull)
       .select(col("event_type"), col("value"))
-    // Round-14 optimization notes, both variants MEASURED and
-    // reverted at sf0.1: (1) an eager-checkpoint cut of vc/ranks/g/
-    // ties was SLOWER (a73 0.54 → 1.4-1.7 s isolated) — four
-    // serialized jobs cost more than the duplicated lazy subtrees,
-    // which one parallel job absorbs at this scale (the
-    // connectedComponents active-vertex lesson); (2) deriving rng
-    // from vc (min/max over the distinct frame ≡ corpus min/max —
-    // one less corpus scan) put a groupBy exchange inside the rng
-    // subtree, which a89's pair join duplicates 4-6×: the kw family
-    // regressed +1.6 s in-sweep (a89_dunn_pvalue 0.92 → 1.61).
-    // Round 15 lands the at-scale shape behind [[graft.ScaleGuard]]
-    // (VERDICT item 6): above the input-size threshold vc is
-    // PERSISTED once and rng derives from it — the duplicated
-    // subtrees are whole corpus passes there, and a persisted vc
-    // can't re-trigger the a89 exchange-duplication failure (every
-    // consumer reads the cached frame). Below the threshold the
-    // measured-faster lazy shape is unchanged. Exactness either way:
-    // min/max over the distinct-value frame ≡ corpus min/max, and vc
-    // is the same integer frame in both shapes.
-    val atScale = graft.ScaleGuard.atScale(s, d, "events")
-    val vcLazy = ev.groupBy(col("value"), col("event_type"))
+    // lazy on purpose: round 14 measured both an eager checkpoint of
+    // vc/ranks/g/ties and an rng derived from vc as slower at sf0.1
+    // (a73 0.54 → 1.4 s; a89_dunn_pvalue 0.92 → 1.61 s).
+    val vc = ev.groupBy(col("value"), col("event_type"))
       .agg(count(lit(1)).as("c"))
-    val vc = if (atScale)
-      vcLazy.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else vcLazy
-    val rng = if (atScale)
-      vc.agg(min(col("value")).as("vmin"), max(col("value")).as("vmax"))
-    else ev.agg(min(col("value")).as("vmin"), max(col("value")).as("vmax"))
+    val rng = ev.agg(min(col("value")).as("vmin"),
+      max(col("value")).as("vmax"))
     val vt = vc.groupBy(col("value")).agg(sum(col("c")).as("cnt"))
       .crossJoin(broadcast(rng))
       // vmax = vmin -> one bucket (degenerate-range guard; spec:

@@ -416,22 +416,11 @@ object TextAnalysis {
     "txt11_unigram_loglik" -> ((s, d) => {
       val tok = Tables.documents(s, d)
         .select(col("doc_id"), explode(toks).as("w"))
-      // At-scale shape behind ScaleGuard (round 15, VERDICT item 6):
-      // persist the finest (doc, w) count frame once and derive the
-      // model as its EXACT rollup (Σ per-doc counts ≡ vocab counts —
-      // same integers), so the corpus tokenize+explode runs once, not
-      // twice. Below the threshold the lazy two-pass shape stays: the
-      // round-14 isolated A/B measured the persist SLOWER at sf0.1
-      // (txt11 1.19/1.28 → 1.56/1.92 — block-store materialization of
-      // a ~0.5M-row frame costs more than re-running a cheap explode).
-      val atScale = graft.ScaleGuard.atScale(s, d, "documents")
-      val pdLazy = tok.groupBy("doc_id", "w").agg(count(lit(1)).as("n"))
-      val pd = if (atScale)
-        pdLazy.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else pdLazy
-      val vocab = if (atScale)
-        pd.groupBy("w").agg(sum(col("n")).as("cnt"))
-      else tok.groupBy("w").agg(count(lit(1)).as("cnt"))
+      // two lazy passes on purpose: round 14 measured persisting the
+      // per-doc frame and rolling the model up from it slower at sf0.1
+      // (txt11 1.19/1.28 → 1.56/1.92 s isolated).
+      val pd = tok.groupBy("doc_id", "w").agg(count(lit(1)).as("n"))
+      val vocab = tok.groupBy("w").agg(count(lit(1)).as("cnt"))
       val total = vocab.agg(sum(col("cnt")).as("tot"))
       val model = vocab.crossJoin(broadcast(total))
         .select(col("w"),
@@ -472,30 +461,18 @@ object TextAnalysis {
     "txt27_domain_fit" -> ((s, d) => {
       val tok = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), explode(toks).as("w"))
-      // ScaleGuard rollup (round 15, VERDICT item 6): at scale, the
-      // finest (doc, source, w) frame persists once and BOTH models
-      // (source and global) derive as its exact rollups — one corpus
-      // tokenize instead of four. Round 14 measured the persist
-      // slower at sf0.1 (txt27 1.63/1.87 → 2.33/2.48 isolated).
-      val atScale = graft.ScaleGuard.atScale(s, d, "documents")
-      val pdLazy = tok.groupBy("doc_id", "source", "w")
+      // lazy passes on purpose, as in TXT11: round 14 measured the
+      // persisted per-doc frame slower at sf0.1 (txt27 1.63/1.87 →
+      // 2.33/2.48 s isolated).
+      val pd = tok.groupBy("doc_id", "source", "w")
         .agg(count(lit(1)).as("n"))
-      val pd = if (atScale)
-        pdLazy.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else pdLazy
-      val srcTot = if (atScale)
-        pd.groupBy("source").agg(sum(col("n")).as("stot"))
-      else tok.groupBy("source").agg(count(lit(1)).as("stot"))
-      val srcModel = (if (atScale)
-        pd.groupBy("source", "w").agg(sum(col("n")).as("scnt"))
-      else tok.groupBy("source", "w").agg(count(lit(1)).as("scnt")))
+      val srcTot = tok.groupBy("source").agg(count(lit(1)).as("stot"))
+      val srcModel = tok.groupBy("source", "w").agg(count(lit(1)).as("scnt"))
         .join(broadcast(srcTot), Seq("source"))
         .select(col("source"), col("w"),
           log(col("scnt").cast("double") / col("stot").cast("double"))
             .as("logp_s"))
-      val vocab = if (atScale)
-        pd.groupBy("w").agg(sum(col("n")).as("cnt"))
-      else tok.groupBy("w").agg(count(lit(1)).as("cnt"))
+      val vocab = tok.groupBy("w").agg(count(lit(1)).as("cnt"))
       val total = vocab.agg(sum(col("cnt")).as("tot"))
       val glModel = vocab.crossJoin(broadcast(total))
         .select(col("w"),
@@ -551,17 +528,11 @@ object TextAnalysis {
           i => concat_ws(" ",
             element_at(col("t"), i + 1),
             element_at(col("t"), i + 2)))).as("bg"))
-      // same ScaleGuard rollup identity as txt11 (Σ per-doc bigram
-      // counts ≡ corpus bigram counts); round 14 measured the persist
-      // slower at sf0.1 (txt17 1.65/1.86 → 2.03/2.29 isolated)
-      val atScale = graft.ScaleGuard.atScale(s, d, "documents")
-      val pdLazy = bg.groupBy("doc_id", "bg").agg(count(lit(1)).as("n"))
-      val pd = if (atScale)
-        pdLazy.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else pdLazy
-      val counts = (if (atScale)
-        pd.groupBy("bg").agg(sum(col("n")).as("cnt"))
-      else bg.groupBy("bg").agg(count(lit(1)).as("cnt")))
+      // lazy passes on purpose, as in TXT11: round 14 measured the
+      // persisted per-doc frame slower at sf0.1 (txt17 1.65/1.86 →
+      // 2.03/2.29 s isolated).
+      val pd = bg.groupBy("doc_id", "bg").agg(count(lit(1)).as("n"))
+      val counts = bg.groupBy("bg").agg(count(lit(1)).as("cnt"))
         .withColumn("w1", split(col("bg"), " ").getItem(0))
       val ctx = counts.groupBy("w1").agg(sum(col("cnt")).as("ctx"))
       val model = counts.join(ctx, Seq("w1"))

@@ -416,7 +416,7 @@ class DedupSpec extends AnyFunSuite {
           (0 until nV).map(v => v.toLong -> v.toLong).toMap
         else Dedup.connectedComponents(
             edges.map { case (a, b) => (a, b) }.toDF("da", "db"),
-            (0 until nV).map(_.toLong).toDF("doc_id"))
+            (0 until nV).map(_.toLong).toDF("doc_id"))._1
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expected,
         s"trial $trial (nV=$nV, edges=$edges): $got vs $expected")
@@ -453,7 +453,7 @@ class DedupSpec extends AnyFunSuite {
       (30L, 31L), (31L, 32L), (32L, 33L), (33L, 34L)).toDF("da", "db")
     val verts = Seq(1L, 2L, 3L, 10L, 11L, 20L, 30L, 31L, 32L, 33L, 34L)
       .toDF("doc_id")
-    val got = Dedup.connectedComponents(pairs, verts).collect()
+    val got = Dedup.connectedComponents(pairs, verts)._1.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L,
       11L -> 10L, 20L -> 20L, 30L -> 30L, 31L -> 30L, 32L -> 30L,
@@ -607,15 +607,10 @@ class DedupSpec extends AnyFunSuite {
     val sf = SparkTestSession.Sf0001
     val (_, pairs) = corpusGraph
     val maxClusterDiameter = 3
-    // d10_cc_corpus serves the memoized ccLabels table (round 14) —
-    // invalidate so THIS collect runs the CC loop and lastCcRounds
-    // reflects it, not whichever CC call built the cache earlier
-    // (the invalidate-before-assert convention of the shared caches)
-    Dedup.ccLabels.invalidate(spark, sf)
-    Dedup.queries("d10_cc_corpus")(spark, sf).collect()
-    val rounds = Dedup.lastCcRounds.get()
-    assert(rounds != -1L,
-      "CC left its in-flight sentinel — the run never converged")
+    // the kernel behind d10_cc_corpus's ccLabels build, on the same
+    // inputs; it reports the rounds of THIS call with its labels
+    val (_, rounds) = Dedup.connectedComponents(Dedup.corpusPairs(spark, sf),
+      graft.Tables.documents(spark, sf).select("doc_id"))
     assert(rounds >= 1 && rounds <= maxClusterDiameter + 1,
       s"corpus CC took $rounds rounds (bound ${maxClusterDiameter + 1})")
     assert(pairs.nonEmpty)
