@@ -46,6 +46,17 @@ object GraftExtensions {
     s
   }
 
+  /** Run `body` with each `key -> value` set on `s`'s session conf,
+    * then restore every key's previous value (or unset it), so a
+    * session shared across queries sees no conf drift. */
+  def withConfs[T](s: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) =>
+      v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+  }
+
   /** (identifier, info, builder) triples — one per native function. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(

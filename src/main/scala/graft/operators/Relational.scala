@@ -2301,18 +2301,12 @@ object Relational {
     * keeps AQE from vetoing the split when it would add a shuffle —
     * at test scale every byte count is far below the planner's
     * economic cutoffs. */
-  private[operators] def withSkewJoinConfs[T](s: SparkSession)(body: => T): T = {
-    val keys = Seq(
+  private[operators] def withSkewJoinConfs[T](s: SparkSession)(body: => T): T =
+    graft.GraftExtensions.withConfs(s,
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB",
-      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")
-    val saved = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally saved.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-  }
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")(body)
 
   val oracles: Map[String, String] = Map(
     "j7_aqe_skew_join" ->

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress, Trigger}
+import graft.{GraftExtensions, Tables}
 
 /** Structured-Streaming pipeline over events-shaped data (T1–T6,
   * S11–S12) — the Spark-native re-expression of the reference's
@@ -177,111 +178,112 @@ object EventStream {
       }
   }
 
-  /** T8 as a REAL streaming run: deliver the full rig, fold through
-    * the state store, land updated tallies in an update-mode memory
-    * sink. A key may emit once per micro-batch that carried its rows;
-    * `n_events` is strictly monotone per key, so keep-max-n yields
-    * the final tally no matter how AvailableNow sliced the files. */
-  def runStatefulTally(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t8-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    withReplayWidth(s) {
-      val q = statefulTally(readJsonStream(s, src).as[Event])
-        .toDF()
-        .writeStream.format("memory").queryName("t8_mem")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+  /** A key emits once per micro-batch that carried its rows and
+    * `n_events` is strictly monotone per key, so keep-max-n yields the
+    * final tally no matter how AvailableNow sliced the files (T8, T15). */
+  private def finalTallies(emitted: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("n_events").desc)
-    s.table("t8_mem")
+    emitted
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
   }
 
-  private def freshDir(path: String): String = {
-    val f = new java.io.File(path)
-    if (f.exists()) graft.Fs.deleteRecursively(f)
-    f.mkdirs()
-    path
+  /** T8 as a REAL streaming run: deliver the full rig, fold through
+    * the state store, land updated tallies in an update-mode memory
+    * sink; [[finalTallies]] reads the final tally per key. */
+  def runStatefulTally(s: SparkSession, d: String): Replay = {
+    import s.implicits._
+    replay(s, d, "t8")((ev, _) =>
+      toMemory(statefulTally(ev.as[Event]).toDF(), "t8_mem", "update"))(
+      _ => finalTallies(s.table("t8_mem")))
   }
 
-  // ---- Rig staging (untimed) ---------------------------------------------
+  // ---- Replay rig --------------------------------------------------------
   // Rendering the events table as JSON is test scaffolding, not the
-  // streaming engine: it is staged ONCE per sfDir here so a benchmark
-  // (or repeated Verify run) times only the readStream → sink query.
-  // The timed queries merely copy the staged part files into a fresh
-  // source dir — the "message arrival" step of the file-source
-  // stand-in, analogous to records landing on a Kafka topic.
+  // streaming engine: it is staged ONCE per sfDir ([[stageRig]]) so a
+  // benchmark (or repeated Verify run) times only the readStream → sink
+  // query. Each timed query then copies the staged part files into a
+  // fresh source dir — the "message arrival" step of the file-source
+  // stand-in, analogous to records landing on a Kafka topic — and runs
+  // to completion through [[replay]].
 
-  private val rigStaged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** A finished bounded replay: the query's result, the query's own
+    * per-batch `recentProgress` (input rows, watermark drops, state
+    * operators — what StreamingSpec asserts on), and the run dir whose
+    * `src`/`ckpt` and sink output the result reads lazily. */
+  final case class Replay(out: DataFrame,
+                          progress: Seq[StreamingQueryProgress],
+                          dir: String)
 
-  /** Corpus event-time horizon (max ts), memoized per sfDir like
-    * [[stageRig]]: the T10o/T18 sentinel ladders only need "a
-    * timestamp far past the horizon", which is rig scaffolding — a
-    * deterministic property of the immutable corpus — so benchmarks
-    * should time the stream, not a repeated max() scan per rep
-    * (round 14, guide §1.5/§5). */
-  private val horizonStaged =
-    scala.collection.concurrent.TrieMap.empty[String, java.sql.Timestamp]
-  private def corpusHorizon(s: SparkSession, d: String): java.sql.Timestamp =
-    horizonStaged.getOrElseUpdate(d,
-      Tables.events(s, d).agg(max(col("ts"))).head().getTimestamp(0))
+  /** This JVM's scratch root: every staged rig and run dir lives under
+    * one fresh dir in `java.io.tmpdir`, so two JVMs on one machine never
+    * share (or delete) each other's files. Deleted at JVM exit and not
+    * earlier, because a returned result reads its run dir lazily. */
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-stream-")
+    sys.addShutdownHook(graft.Fs.deleteRecursively(root.toFile))
+    root
+  }
 
-  /** T17's late plant (every 11th event, fresh negative id, ts − 60 d),
-    * staged once per sfDir like [[stageRig]]: a deterministic render
-    * of the immutable corpus — each timed rep should pay the watermark
-    * drop, not a corpus scan + count + single-file JSON write. Returns
-    * (dir, planted-row count). */
-  private val latePlantStaged =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Long)]
-  private def stageLatePlant(s: SparkSession, d: String): (String, Long) =
-    latePlantStaged.getOrElseUpdate(d, {
-      val dir = freshDir(
-        s"/tmp/graft-stream-late-${new java.io.File(d).getName}")
-      val late = Tables.events(s, d).filter(col("event_id") % 11 === 0)
+  private def runDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(scratchRoot, s"$tag-").toString
+
+  /** The staged source of one sfDir: the events table as two
+    * chronological JSON halves (first / second half by the ts midpoint
+    * — the T2 resume protocol's split) and the corpus event-time
+    * horizon (max ts, which the T10o/T18 sentinels sit past). The T17
+    * late plant and the T14 retransmits are further deterministic
+    * renders of the same immutable corpus, staged on first use. */
+  final class Rig private[EventStream] (s: SparkSession, d: String,
+      dir: String, val horizon: java.sql.Timestamp) {
+    val half1 = s"$dir/half1"
+    val half2 = s"$dir/half2"
+
+    /** T17's plant: every 11th event with a fresh negative id at
+      * ts − 60 d. */
+    lazy val latePlant: String = {
+      Tables.events(s, d).filter(col("event_id") % 11 === 0)
         .withColumn("event_id", -col("event_id") - 1000000L)
         .withColumn("ts", col("ts") - expr("INTERVAL 60 DAYS"))
-      val n = late.count()
-      late.coalesce(1).write.mode("overwrite")
-        .option("timestampFormat", TsFormat).json(dir)
-      (dir, n)
-    })
-  /** Per-run work dirs carry the JVM pid: two concurrent processes
-    * (a Verify next to a Bench, or a local test next to the driver)
-    * each start their own sequence at 0, so a pid-free name would let
-    * them clobber each other's checkpoints mid-query. */
-  private val seq = new java.util.concurrent.atomic.AtomicLong(0)
-  private def nextRunId(): String =
-    s"${java.lang.ProcessHandle.current().pid()}-${seq.incrementAndGet()}"
+        .coalesce(1).write.option("timestampFormat", TsFormat)
+        .json(s"$dir/late")
+      s"$dir/late"
+    }
 
-  /** Stage the events table as two chronological JSON halves (first /
-    * second half by the ts midpoint — the T2 resume protocol's split).
-    * Idempotent per sfDir; safe to call untimed before a benchmark. */
-  def stageRig(s: SparkSession, d: String): String =
-    rigStaged.getOrElseUpdate(d, {
-      val base = freshDir(
-        s"/tmp/graft-stream-rig-${new java.io.File(d).getName}")
+    /** T14's retransmits: every 7th event re-delivered with its event
+      * time shifted +30 s — same event_id, DIFFERENT event time, the
+      * duplicate shape a flaky producer actually emits (the reference's
+      * producer re-sends on ack timeout with a fresh timestamp,
+      * `ingestion/producer.py:184-197`). */
+    lazy val retransmits: String = {
+      Tables.events(s, d).filter(col("event_id") % 7 === 0)
+        .withColumn("ts", col("ts") + expr("INTERVAL 30 SECONDS"))
+        .coalesce(1).write.option("timestampFormat", TsFormat)
+        .json(s"$dir/retrans")
+      s"$dir/retrans"
+    }
+  }
+
+  private val rigs = scala.collection.mutable.Map.empty[String, Rig]
+
+  /** `d`'s [[Rig]], staged on first call. Idempotent per sfDir; safe to
+    * call untimed before a benchmark. */
+  def stageRig(s: SparkSession, d: String): Rig = rigs.synchronized {
+    rigs.getOrElseUpdate(d, {
+      val dir = runDir("rig")
       val ev = Tables.events(s, d)
       val bounds = ev.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi"))
         .head()
       val mid = new java.sql.Timestamp(
         (bounds.getTimestamp(0).getTime + bounds.getTimestamp(1).getTime) / 2)
       ev.filter(col("ts") <= lit(mid)).coalesce(1)
-        .write.mode("overwrite").option("timestampFormat", TsFormat)
-        .json(s"$base/half1")
+        .write.option("timestampFormat", TsFormat).json(s"$dir/half1")
       ev.filter(col("ts") > lit(mid)).coalesce(1)
-        .write.mode("overwrite").option("timestampFormat", TsFormat)
-        .json(s"$base/half2")
-      base
+        .write.option("timestampFormat", TsFormat).json(s"$dir/half2")
+      new Rig(s, d, dir, bounds.getTimestamp(1))
     })
+  }
 
   /** Drop staged JSON part files into a source dir (file arrival). */
   private def deliver(stagedDir: String, srcDir: String): Unit = {
@@ -295,37 +297,110 @@ object EventStream {
       }
   }
 
-  /** Run one micro-batch streaming query to completion: source dir →
-    * windowAgg → named memory sink, complete mode, checkpointed,
-    * Trigger.AvailableNow (the batch-bounded form of the reference's
-    * 300 s poll loop, `tests/test-producer.py:24-26`). */
+  private def deliverHalves(rig: Rig, src: String): Unit = {
+    deliver(rig.half1, src); deliver(rig.half2, src)
+  }
+
+  /** The T10o/T18 source: ONE data file (the halves concatenated), then
+    * two sentinel files 30 and 60 days past the corpus horizon, each
+    * holding one event per entry of `types` (entry i: id −days−i, user
+    * −1−i, ids and users no real event shares). Read one file per
+    * micro-batch, the first sentinel's batch advances the watermark
+    * past every data window and the second's EXECUTES under it,
+    * flushing the expired state (see [[runStreamStreamOuterJoin]]).
+    * One data file keeps the replay at three batches: each extra
+    * micro-batch pays the full per-partition state-store open/commit
+    * cycle, the dominant cost of these queries at test scale. */
+  private def sentinelLadder(types: String*)(rig: Rig, src: String): Unit = {
+    new java.io.File(src).mkdirs()
+    val dataOut = java.nio.file.Paths.get(src, "aa_data.json")
+    val halves = Seq(rig.half1, rig.half2).flatMap(h =>
+      Option(new java.io.File(h).listFiles()).getOrElse(Array.empty).toSeq
+        .filter(_.getName.endsWith(".json")).sortBy(_.getName))
+    val out = java.nio.file.Files.newOutputStream(dataOut)
+    try halves.foreach(f => java.nio.file.Files.copy(f.toPath, out))
+    finally out.close()
+    // FileStreamSource orders pending files by MODIFICATION TIME, not
+    // name — on a coarse-mtime filesystem the three back-to-back
+    // writes could tie and run a sentinel batch BEFORE the data batch
+    // (whose rows would then all be discarded as late). Pin an
+    // explicit minute-spaced mtime ladder so the order is never
+    // granularity-dependent.
+    val t0 = dataOut.toFile.lastModified()
+    val fmt = java.time.format.DateTimeFormatter
+      .ofPattern(TsFormat).withZone(java.time.ZoneOffset.UTC)
+    for (days <- Seq(30, 60)) {
+      val sentinelTs =
+        fmt.format(rig.horizon.toInstant.plus(java.time.Duration.ofDays(days)))
+      val rows = types.zipWithIndex.map { case (tpe, i) =>
+        s"""{"event_id":${-days - i},"ts":"$sentinelTs","user_id":${-1 - i},""" +
+          s""""event_type":"$tpe","value":0.0,"props":"{}"}""" + "\n"
+      }
+      val f = java.nio.file.Paths.get(src, s"zz_sentinel_$days.json")
+      java.nio.file.Files.writeString(f, rows.mkString)
+      f.toFile.setLastModified(t0 + days * 60000L)
+    }
+  }
+
   /** Bounded-replay shuffle width: every STATEFUL operator opens one
     * state store per shuffle partition per micro-batch, so a
     * toy-sized replay at the session's width pays mostly store churn
-    * (measured: the t10_outer rig halved from this alone). Stateful
-    * rig runners execute their streaming query at 8 partitions,
-    * restored after — the checkpoint pins the width at first start,
-    * so resumes stay consistent. Production keeps the session width:
-    * there state VOLUME, not store count, dominates. Result
-    * invariance to shuffle width is DeterminismSpec's assertion. */
-  private def withReplayWidth[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "8")
-    try body finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
-  }
+    * (measured: the t10_outer rig halved from this alone). Every rig
+    * query runs at 8 partitions, restored after — the checkpoint pins
+    * the width at first start, so resumes stay consistent; stateless
+    * queries plan no shuffle, so the width does not touch them.
+    * Production keeps the session width: there state VOLUME, not store
+    * count, dominates. Result invariance to shuffle width is
+    * DeterminismSpec's assertion. */
+  private val ReplayWidth = "spark.sql.shuffle.partitions" -> "8"
 
-  private def runToCompletion(s: SparkSession, srcDir: String,
-                              ckpt: String, sink: String): Unit =
-    withReplayWidth(s) {
-      val q = windowAgg(readJsonStream(s, srcDir))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+  /** The RocksDB state-store provider (T12, T15). The provider is a
+    * session conf snapshot at query start, set for the run only, so the
+    * other streaming queries keep exercising the default provider. One
+    * RocksDB INSTANCE opens per shuffle partition per stateful operator
+    * per batch — the replay-width rationale applies doubly. */
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** A named memory sink: the result table the run reads back. */
+  private def toMemory(df: DataFrame, name: String,
+                       mode: String): DataStreamWriter[Row] =
+    df.writeStream.format("memory").queryName(name).outputMode(mode)
+
+  /** Run the query `w` builds to completion on checkpoint `ckpt`:
+    * start → `Trigger.AvailableNow` (the batch-bounded form of the
+    * reference's 300 s poll loop, `tests/test-producer.py:24-26`) →
+    * awaitTermination, with [[ReplayWidth]] and `confs` set while the
+    * query is built and run. Returns the finished query's progress. */
+  private def drain(s: SparkSession, ckpt: String, confs: (String, String)*)(
+      w: => DataStreamWriter[Row]): Seq[StreamingQueryProgress] =
+    GraftExtensions.withConfs(s, ReplayWidth +: confs: _*) {
+      val q = w.option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
+      q.recentProgress.toSeq
     }
+
+  /** One bounded replay of `d`'s rig: a fresh run dir whose `src` is
+    * filled by `stage` (both halves by default) and whose `ckpt` holds
+    * the checkpoint; `write` turns the source stream (capped at
+    * `maxFilesPerTrigger` files per micro-batch) into a sink, given the
+    * run dir; the query runs under [[drain]]; `read` returns the result
+    * from the run dir. */
+  private def replay(s: SparkSession, d: String, tag: String,
+      maxFilesPerTrigger: Option[Int] = None,
+      confs: Seq[(String, String)] = Nil,
+      stage: (Rig, String) => Unit = deliverHalves)(
+      write: (DataFrame, String) => DataStreamWriter[Row])(
+      read: String => DataFrame): Replay = {
+    val rig = stageRig(s, d)
+    val dir = runDir(tag)
+    stage(rig, s"$dir/src")
+    val progress = drain(s, s"$dir/ckpt", confs: _*)(
+      write(readJsonStream(s, s"$dir/src", maxFilesPerTrigger), dir))
+    Replay(read(dir), progress, dir)
+  }
 
   /** T13: bounded backfill — the operational answer to "replay a month
     * of backlog without one giant batch": Trigger.AvailableNow drains
@@ -335,27 +410,12 @@ object EventStream {
     * bounded-memory batches with state + checkpoint advancing per
     * batch. The result must equal the one-shot batch aggregate no
     * matter how the slicing landed — exactly what the oracle checks;
-    * StreamingSpec asserts the slicing actually happened (the batch
-    * count is recorded here for it). */
-  @volatile private[streaming] var lastBackfillBatches: Long = -1L
-  def runBoundedBackfill(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(
-      s"/tmp/graft-stream-t13-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    withReplayWidth(s) {
-      val q = windowAgg(readJsonStream(s, src, maxFilesPerTrigger = Some(1)))
-        .writeStream.format("memory").queryName("t13_mem")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastBackfillBatches = q.recentProgress.count(_.numInputRows > 0).toLong
-    }
-    s.table("t13_mem")
-  }
+    * StreamingSpec asserts from the returned progress that the slicing
+    * actually happened. */
+  def runBoundedBackfill(s: SparkSession, d: String): Replay =
+    replay(s, d, "t13", maxFilesPerTrigger = Some(1))((ev, _) =>
+      toMemory(windowAgg(ev), "t13_mem", "complete"))(
+      _ => s.table("t13_mem"))
 
   /** T16: streaming SESSION windows — the one windowing mode where
     * micro-batch boundaries genuinely matter: a session spanning two
@@ -365,38 +425,25 @@ object EventStream {
     * re-reads + re-merges the key's open sessions per batch). The rig
     * replays the events chronologically as two file-batches split at
     * the ts midpoint (`maxFilesPerTrigger = 1`), so every
-    * midpoint-spanning session exercises the cross-batch merge; the
-    * batch count is recorded for StreamingSpec to pin the slicing.
+    * midpoint-spanning session exercises the cross-batch merge;
+    * StreamingSpec pins the slicing from the returned progress.
     * Complete mode emits the final merged sessions without watermark
     * eviction at replay scale; production uses append mode +
     * `withWatermark` so closed sessions evict and state stays bounded
     * — same plan shape. Oracle = T5's lag/cumsum island
     * reconstruction (the batch definition of a 2 h-gap session). */
-  @volatile private[streaming] var lastSessionBatches: Long = -1L
-  def runSessionStream(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t16-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    withReplayWidth(s) {
-      val q = readJsonStream(s, src, maxFilesPerTrigger = Some(1))
+  def runSessionStream(s: SparkSession, d: String): Replay =
+    replay(s, d, "t16", maxFilesPerTrigger = Some(1))((ev, _) =>
+      toMemory(ev
         .groupBy(session_window(col("ts"), "2 hours").as("w"),
           col("user_id"))
         .agg(count(lit(1)).as("n"),
           round(sum(col("value").cast("decimal(24,10)")).cast("double") /
             count(lit(1)), 6).as("avg_value"))
         .select(col("user_id"), col("w.start").as("sess_start"),
-          col("w.end").as("sess_end"), col("n"), col("avg_value"))
-        .writeStream.format("memory").queryName("t16_mem")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastSessionBatches = q.recentProgress.count(_.numInputRows > 0).toLong
-    }
-    s.table("t16_mem")
-  }
+          col("w.end").as("sess_end"), col("n"), col("avg_value")),
+        "t16_mem", "complete"))(
+      _ => s.table("t16_mem"))
 
   /** T17: watermark LATE-DATA DROP made observable — the semantics T14
     * (dedup of retransmits) never surfaces: rows arriving after the
@@ -417,27 +464,23 @@ object EventStream {
     * id at ts − 60 days — if the drop failed, the result would carry
     * extra ids (rows mismatch) rather than silently passing. Result =
     * the deduped on-time stream = exactly the original events table
-    * (oracle); drop count spec-pinned to the plant size. */
-  @volatile private[streaming] var lastLateDropped: Long = -1L
-  @volatile private[streaming] var lastLatePlanted: Long = -1L
-  def runLateDataDrop(s: SparkSession, d: String): DataFrame = {
+    * (oracle); StreamingSpec pins the progress's drop count to the
+    * plant size (input rows beyond the corpus). */
+  def runLateDataDrop(s: SparkSession, d: String): Replay = {
     val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t17-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    // the late plant is staged once per sfDir (round 14, the stageRig
+    val dir = runDir("t17"); val src = s"$dir/src"
+    deliverHalves(rig, src)
+    // the late plant is staged once per sfDir (the stageRig
     // convention): a deterministic render of the immutable corpus, so
     // each rep times the watermark drop, not a corpus scan + JSON write
-    val (lateDir, nPlanted) = stageLatePlant(s, d)
-    lastLatePlanted = nPlanted
-    withReplayWidth(s) {
-      val q = readJsonStream(s, src)
-        .withWatermark("ts", "2 days")
-        .dropDuplicatesWithinWatermark("event_id")
-        .select(col("event_id"), col("event_type"), col("value"))
-        .writeStream.format("memory").queryName("t17_mem")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
+    val late = rig.latePlant
+    val progress = GraftExtensions.withConfs(s, ReplayWidth) {
+      val q = toMemory(readJsonStream(s, src)
+          .withWatermark("ts", "2 days")
+          .dropDuplicatesWithinWatermark("event_id")
+          .select(col("event_id"), col("event_type"), col("value")),
+          "t17_mem", "append")
+        .option("checkpointLocation", s"$dir/ckpt")
         // 10 ms poll: the trigger interval is rig plumbing — it only
         // bounds how fast the source NOTICES the late file after
         // deliver(); the declared operation (the watermark drop) is
@@ -445,18 +488,16 @@ object EventStream {
         // of pure discovery latency across the two processAllAvailable
         // fences (round-15 profiling); the per-tick cost of a shorter
         // interval is one listing of a two-file directory.
-        .trigger(org.apache.spark.sql.streaming.Trigger
-          .ProcessingTime("10 milliseconds"))
+        .trigger(Trigger.ProcessingTime("10 milliseconds"))
         .start()
       try {
         q.processAllAvailable()        // data batch: watermark advances
-        deliver(lateDir, src)          // late batch: runs under max-2d
+        deliver(late, src)             // late batch: runs under max-2d
         q.processAllAvailable()
-        lastLateDropped = q.recentProgress
-          .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+        q.recentProgress.toSeq
       } finally q.stop()
     }
-    s.table("t17_mem")
+    Replay(s.table("t17_mem"), progress, dir)
   }
 
   /** T18: CHAINED stateful aggregation — daily windows re-aggregated
@@ -474,34 +515,10 @@ object EventStream {
     * the final avg is exact regardless of how days landed in batches.
     * Oracle: the batch weekly rollup with epoch-aligned 7-day buckets
     * (Spark's window origin), n + decimal-exact avg. */
-  @volatile private[streaming] var lastChainedStateOps: Long = -1L
-  def runChainedWindows(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t18-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    new java.io.File(src).mkdirs()
-    val dataOut = java.nio.file.Paths.get(src, "aa_data.json")
-    val halves = Seq(s"$rig/half1", s"$rig/half2").flatMap(h =>
-      Option(new java.io.File(h).listFiles()).getOrElse(Array.empty).toSeq
-        .filter(_.getName.endsWith(".json")).sortBy(_.getName))
-    val out = java.nio.file.Files.newOutputStream(dataOut)
-    try halves.foreach(f => java.nio.file.Files.copy(f.toPath, out))
-    finally out.close()
-    val t0 = dataOut.toFile.lastModified()
-    val maxTs = corpusHorizon(s, d)
-    val fmt = java.time.format.DateTimeFormatter
-      .ofPattern(TsFormat).withZone(java.time.ZoneOffset.UTC)
-    for (days <- Seq(30, 60)) {
-      val sentinelTs =
-        fmt.format(maxTs.toInstant.plus(java.time.Duration.ofDays(days)))
-      val f = java.nio.file.Paths.get(src, s"zz_sentinel_$days.json")
-      java.nio.file.Files.writeString(f,
-        s"""{"event_id":${-days},"ts":"$sentinelTs","user_id":-1,""" +
-          s""""event_type":"sentinel","value":0.0,"props":"{}"}""" + "\n")
-      f.toFile.setLastModified(t0 + days * 60000L)
-    }
-    withReplayWidth(s) {
-      val q = readJsonStream(s, src, maxFilesPerTrigger = Some(1))
+  def runChainedWindows(s: SparkSession, d: String): Replay =
+    replay(s, d, "t18", maxFilesPerTrigger = Some(1),
+        stage = sentinelLadder("sentinel"))((ev, _) =>
+      toMemory(ev
         .withWatermark("ts", "2 days")
         .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
         .agg(count(lit(1)).as("dn"),
@@ -511,38 +528,9 @@ object EventStream {
           round(sum(col("dsum")).cast("double") / sum(col("dn")), 6)
             .as("avg_value"))
         .select(col("wk.start").as("week_start"), col("event_type"),
-          col("n"), col("avg_value"))
-        .writeStream.format("memory").queryName("t18_mem")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastChainedStateOps =
-        q.recentProgress.map(_.stateOperators.length.toLong).foldLeft(0L)(
-          math.max)
-    }
-    s.table("t18_mem").filter(col("event_type") =!= "sentinel")
-  }
-
-  /** Staged retransmit rig for T14: every 7th event re-delivered with
-    * its event time shifted +30 s — same event_id, DIFFERENT event
-    * time, the duplicate shape a flaky producer actually emits (the
-    * reference's producer re-sends on ack timeout with a fresh
-    * timestamp, `ingestion/producer.py:184-197`). Memoized per sfDir
-    * like [[stageRig]] so benchmarks time the stream, not the render. */
-  private val retransStaged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def stageRetransmits(s: SparkSession, d: String): String =
-    retransStaged.getOrElseUpdate(d, {
-      val dir = freshDir(
-        s"/tmp/graft-stream-retrans-${new java.io.File(d).getName}")
-      Tables.events(s, d).filter(col("event_id") % 7 === 0)
-        .withColumn("ts", col("ts") + expr("INTERVAL 30 SECONDS"))
-        .coalesce(1).write.mode("overwrite")
-        .option("timestampFormat", TsFormat).json(dir)
-      dir
-    })
+          col("n"), col("avg_value")),
+        "t18_mem", "append"))(
+      _ => s.table("t18_mem").filter(col("event_type") =!= "sentinel"))
 
   /** T14: retransmit-tolerant streaming dedup via
     * `dropDuplicatesWithinWatermark` — the Spark-4 dedup contract for
@@ -552,50 +540,35 @@ object EventStream {
     * WithinWatermark form guarantees dedup for duplicates arriving
     * within the watermark delay and evicts each key once the watermark
     * passes its first-seen time + delay — bounded state with explicit
-    * semantics). The downstream aggregate is deliberately
+    * semantics). The source carries both halves plus the rig's staged
+    * retransmits. The downstream aggregate is deliberately
     * event-time-free (per-type count + exact decimal sum), so the
     * result is invariant to WHICH copy survived — every event counts
     * once iff the dedup worked, which is exactly what the oracle
     * checks against the retransmit-free events table. */
-  def runDedupWithinWatermark(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val dups = stageRetransmits(s, d)
-    val base = freshDir(
-      s"/tmp/graft-stream-t14-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    deliver(dups, src)
-    withReplayWidth(s) {
-      val q = readJsonStream(s, src)
+  def runDedupWithinWatermark(s: SparkSession, d: String): Replay =
+    replay(s, d, "t14", stage = (rig, src) => {
+        deliverHalves(rig, src); deliver(rig.retransmits, src)
+      })((ev, _) =>
+      toMemory(ev
         .withWatermark("ts", "2 days")
         .dropDuplicatesWithinWatermark("event_id")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           round(sum(col("value").cast("decimal(24,10)")).cast("double") /
-            count(lit(1)), 6).as("avg_value"))
-        .writeStream.format("memory").queryName("t14_mem")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table("t14_mem")
-  }
+            count(lit(1)), 6).as("avg_value")),
+        "t14_mem", "complete"))(
+      _ => s.table("t14_mem"))
 
   /** T1: an ACTUAL Structured Streaming execution — events dropped as
     * JSON, consumed by readStream, aggregated with event-time windows,
     * delivered through a checkpointed memory sink. The returned
     * DataFrame is the sink table, so the DuckDB oracle verifies a real
     * streaming run end-to-end. */
-  def runStreamingAgg(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t1-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    runToCompletion(s, src, ckpt, "t1_mem")
-    s.table("t1_mem")
-  }
+  def runStreamingAgg(s: SparkSession, d: String): Replay =
+    replay(s, d, "t1")((ev, _) =>
+      toMemory(windowAgg(ev), "t1_mem", "complete"))(
+      _ => s.table("t1_mem"))
 
   /** T24: the Spark-4 STATE DATA SOURCE — reading a streaming
     * checkpoint's state store as a plain DataFrame
@@ -609,19 +582,15 @@ object EventStream {
     * and the oracle checks it against the batch aggregate, so the
     * round-trip proves the store holds exactly the aggregate's state.
     */
-  def runStateRead(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t24-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    runToCompletion(s, src, ckpt, "t24_mem")
-    s.read.format("statestore").load(ckpt)
-      .select(col("key.window.start").as("win_start"),
-        col("key.event_type").as("event_type"),
-        col("value.count").as("n"),
-        round(col("value.sum").cast("double") / col("value.count"), 6)
-          .as("avg_value"))
-  }
+  def runStateRead(s: SparkSession, d: String): Replay =
+    replay(s, d, "t24")((ev, _) =>
+      toMemory(windowAgg(ev), "t24_mem", "complete"))(dir =>
+      s.read.format("statestore").load(s"$dir/ckpt")
+        .select(col("key.window.start").as("win_start"),
+          col("key.event_type").as("event_type"),
+          col("value.count").as("n"),
+          round(col("value.sum").cast("double") / col("value.count"), 6)
+            .as("avg_value")))
 
   /** T25: the state source's CHANGE FEED — the CDC view of the state
     * store (`readChangeFeed`): every (batch_id, change_type, key,
@@ -633,35 +602,24 @@ object EventStream {
     * latest change per key wins — and the reconstruction must equal
     * the batch aggregate (oracle), proving the feed carries the
     * complete update history. */
-  def runStateChangeFeed(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t25-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    withReplayWidth(s) {
-      val q = windowAgg(readJsonStream(s, src, maxFilesPerTrigger = Some(1)))
-        .writeStream.format("memory").queryName("t25_mem")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val feed = s.read.format("statestore")
-      .option("readChangeFeed", "true")
-      .option("changeStartBatchId", "0")
-      .load(ckpt)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("key").orderBy(col("batch_id").desc)
-    feed
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("change_type") =!= "delete")
-      .select(col("key.window.start").as("win_start"),
-        col("key.event_type").as("event_type"),
-        col("value.count").as("n"),
-        round(col("value.sum").cast("double") / col("value.count"), 6)
-          .as("avg_value"))
-  }
+  def runStateChangeFeed(s: SparkSession, d: String): Replay =
+    replay(s, d, "t25", maxFilesPerTrigger = Some(1))((ev, _) =>
+      toMemory(windowAgg(ev), "t25_mem", "complete"))({ dir =>
+      val feed = s.read.format("statestore")
+        .option("readChangeFeed", "true")
+        .option("changeStartBatchId", "0")
+        .load(s"$dir/ckpt")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("key").orderBy(col("batch_id").desc)
+      feed
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1 && col("change_type") =!= "delete")
+        .select(col("key.window.start").as("win_start"),
+          col("key.event_type").as("event_type"),
+          col("value.count").as("n"),
+          round(col("value.sum").cast("double") / col("value.count"), 6)
+            .as("avg_value"))
+    })
 
   /** T2: checkpoint/offset resume, proven by the result. First run
     * consumes the chronological first half and terminates (simulated
@@ -670,15 +628,16 @@ object EventStream {
     * aggregation state + file offsets and processes only the new
     * files. The final table equals the full-data aggregate ONLY if
     * recovery worked — which is exactly what the oracle checks. */
-  def runCheckpointResume(s: SparkSession, d: String): DataFrame = {
+  def runCheckpointResume(s: SparkSession, d: String): Replay = {
     val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t2-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src)
-    runToCompletion(s, src, ckpt, "t2_mem")       // first half, then stop
-    deliver(s"$rig/half2", src)
-    runToCompletion(s, src, ckpt, "t2_mem")       // resume from checkpoint
-    s.table("t2_mem")
+    val dir = runDir("t2"); val src = s"$dir/src"
+    def run() = drain(s, s"$dir/ckpt")(
+      toMemory(windowAgg(readJsonStream(s, src)), "t2_mem", "complete"))
+    deliver(rig.half1, src)
+    val first = run()                     // first half, then stop
+    deliver(rig.half2, src)
+    val resumed = run()                   // resume from checkpoint
+    Replay(s.table("t2_mem"), first ++ resumed, dir)
   }
 
   /** T9: stream-static enrichment join — the canonical "enrich the
@@ -690,24 +649,16 @@ object EventStream {
     * never shuffles — the 100 TB shape for a fact stream against a
     * dimension that fits in executor memory. Stateless (no watermark
     * needed): each event joins alone, append mode. */
-  def runStreamStaticJoin(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t9-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
+  def runStreamStaticJoin(s: SparkSession, d: String): Replay = {
     val dim = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val q = readJsonStream(s, src)
-      .join(broadcast(dim), col("user_id") === col("c_custkey"))
-      .select(col("event_id"), col("user_id"), col("c_mktsegment"),
-        col("value"))
-      .writeStream.format("memory").queryName("t9_mem")
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table("t9_mem")
+    replay(s, d, "t9")((ev, _) =>
+      toMemory(ev
+        .join(broadcast(dim), col("user_id") === col("c_custkey"))
+        .select(col("event_id"), col("user_id"), col("c_mktsegment"),
+          col("value")),
+        "t9_mem", "append"))(
+      _ => s.table("t9_mem"))
   }
 
   /** T10: stream-stream interval join — click→purchase attribution
@@ -719,36 +670,24 @@ object EventStream {
     * production requirement for an unbounded stream (an unbounded
     * stream-stream join would buffer both streams forever). Inner
     * join → matches emit as they form; append mode. */
-  def runStreamStreamJoin(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t10-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    val ev = readJsonStream(s, src)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 day")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"),
-        col("event_id").as("purchase_id"), col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "1 day")
-    withReplayWidth(s) {
-      val q = clicks.join(purchases,
+  def runStreamStreamJoin(s: SparkSession, d: String): Replay =
+    replay(s, d, "t10")({ (ev, _) =>
+      val clicks = ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("event_id").as("click_id"),
+          col("ts").as("click_ts"))
+        .withWatermark("click_ts", "1 day")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"),
+          col("event_id").as("purchase_id"), col("ts").as("purchase_ts"))
+        .withWatermark("purchase_ts", "1 day")
+      toMemory(clicks.join(purchases,
           col("user_id") === col("p_user") &&
           col("purchase_ts") >= col("click_ts") &&
           col("purchase_ts") <= col("click_ts") + expr("INTERVAL 4 HOURS"))
         .select(col("user_id"), col("click_id"), col("purchase_id"),
-          col("click_ts"), col("purchase_ts"))
-        .writeStream.format("memory").queryName("t10_mem")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table("t10_mem")
-  }
+          col("click_ts"), col("purchase_ts")),
+        "t10_mem", "append")
+    })(_ => s.table("t10_mem"))
 
   /** T10b: LEFT OUTER stream-stream join — the harder semantics on
     * top of T10's inner machinery: a click with NO purchase in its
@@ -767,11 +706,12 @@ object EventStream {
     *    the final batch is never acted on (measured: the last ~4 h of
     *    unmatched clicks stayed stuck with a single sentinel). The
     *    rig therefore appends TWO sentinel events (30 and 60 days
-    *    past the corpus horizon) and forces one file per micro-batch:
-    *    the first sentinel's batch advances the watermark past every
-    *    click's window, and the second sentinel's batch EXECUTES
-    *    under that watermark, flushing the expired state. Two
-    *    non-obvious constraints shape the sentinels themselves:
+    *    past the corpus horizon) and forces one file per micro-batch
+    *    ([[sentinelLadder]]): the first sentinel's batch advances the
+    *    watermark past every click's window, and the second
+    *    sentinel's batch EXECUTES under that watermark, flushing the
+    *    expired state. Two non-obvious constraints shape the
+    *    sentinels themselves:
     *    (1) Catalyst pushes each branch's type filter BELOW the
     *    watermark operator, so a row only feeds the watermark stats
     *    if it SURVIVES the branch filter — and (2) the global
@@ -789,99 +729,33 @@ object EventStream {
     *    and every batch flushes expired state.
     * Result equals the batch LEFT JOIN with the same window condition
     * — which is what the oracle checks. */
-  def runStreamStreamOuterJoin(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t10o-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    // ONE data file (halves concatenated): with maxFilesPerTrigger=1
-    // the replay then costs one data batch + two sentinel batches —
-    // each extra micro-batch pays the full per-partition state-store
-    // open/commit cycle on both join sides, the dominant cost of this
-    // query at test scale
-    new java.io.File(src).mkdirs()
-    val dataOut = java.nio.file.Paths.get(src, "aa_data.json")
-    val halves = Seq(s"$rig/half1", s"$rig/half2").flatMap(h =>
-      Option(new java.io.File(h).listFiles()).getOrElse(Array.empty).toSeq
-        .filter(_.getName.endsWith(".json")).sortBy(_.getName))
-    val out = java.nio.file.Files.newOutputStream(dataOut)
-    try halves.foreach(f => java.nio.file.Files.copy(f.toPath, out))
-    finally out.close()
-    // FileStreamSource orders pending files by MODIFICATION TIME, not
-    // name — on a coarse-mtime filesystem the three back-to-back
-    // writes could tie and run a sentinel batch BEFORE the data batch
-    // (whose rows would then all be discarded as late). Pin an
-    // explicit minute-spaced mtime ladder so the order is never
-    // granularity-dependent.
-    val t0 = dataOut.toFile.lastModified()
-    // sentinel: one event far past the corpus horizon (event-time is
-    // what matters; the type matches neither side's filter)
-    val maxTs = corpusHorizon(s, d)
-    val fmt = java.time.format.DateTimeFormatter
-      .ofPattern(TsFormat).withZone(java.time.ZoneOffset.UTC)
-    for (days <- Seq(30, 60)) {
-      val sentinelTs =
-        fmt.format(maxTs.toInstant.plus(java.time.Duration.ofDays(days)))
-      def row(id: Long, user: Long, tpe: String) =
-        s"""{"event_id":$id,"ts":"$sentinelTs","user_id":$user,""" +
-          s""""event_type":"$tpe","value":0.0,"props":"{}"}"""
-      val f = java.nio.file.Paths.get(src, s"zz_sentinel_$days.json")
-      java.nio.file.Files.writeString(f,
-        row(-days, -1, "click") + "\n" + row(-days - 1, -2, "purchase") + "\n")
-      f.toFile.setLastModified(t0 + days * 60000L)
-    }
-    // one file per micro-batch so the sentinels land in their own
-    // batches (file order is lexicographic: data, then zz_sentinel_30,
-    // then zz_sentinel_60)
-    val ev = s.readStream.schema(eventSchema)
-      .option("timestampFormat", TsFormat)
-      .option("maxFilesPerTrigger", 1)
-      .json(src)
-      .withWatermark("ts", "1 day")
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"),
-        col("event_id").as("purchase_id"), col("ts").as("purchase_ts"))
-    val joined = clicks.join(purchases,
-        col("user_id") === col("p_user") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 4 HOURS"),
-        "leftOuter")
-      .select(col("user_id"), col("click_id"), col("purchase_id"),
-        col("click_ts"), col("purchase_ts"))
-    withReplayWidth(s) {
-      val q = joined
-        .writeStream.format("memory").queryName("t10o_mem")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    // sentinel guard applied on the SINK, not inside the streaming
-    // query: an in-stream `user_id >= 0` would be pushed below the
-    // left join into both scans (measured — left-side predicates
-    // propagate through the equi-key to the right side too), dropping
-    // the sentinels before the watermark operator and re-creating the
-    // stuck-tail bug the sentinels exist to fix.
-    s.table("t10o_mem").filter(col("user_id") >= 0)
-  }
+  def runStreamStreamOuterJoin(s: SparkSession, d: String): Replay =
+    replay(s, d, "t10o", maxFilesPerTrigger = Some(1),
+        stage = sentinelLadder("click", "purchase"))({ (src, _) =>
+      val ev = src.withWatermark("ts", "1 day")
+      val clicks = ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("event_id").as("click_id"),
+          col("ts").as("click_ts"))
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"),
+          col("event_id").as("purchase_id"), col("ts").as("purchase_ts"))
+      toMemory(clicks.join(purchases,
+          col("user_id") === col("p_user") &&
+          col("purchase_ts") >= col("click_ts") &&
+          col("purchase_ts") <= col("click_ts") + expr("INTERVAL 4 HOURS"),
+          "leftOuter")
+        .select(col("user_id"), col("click_id"), col("purchase_id"),
+          col("click_ts"), col("purchase_ts")),
+        "t10o_mem", "append")
+    })(
+      // sentinel guard applied on the SINK, not inside the streaming
+      // query: an in-stream `user_id >= 0` would be pushed below the
+      // left join into both scans (measured — left-side predicates
+      // propagate through the equi-key to the right side too),
+      // dropping the sentinels before the watermark operator and
+      // re-creating the stuck-tail bug the sentinels exist to fix.
+      _ => s.table("t10o_mem").filter(col("user_id") >= 0))
 
-  /** T11: foreachBatch upsert sink — the bridge pattern for sinks with
-    * no native streaming support (JDBC, key-value stores, lakehouse
-    * MERGE): an update-mode aggregation hands each micro-batch's
-    * CHANGED per-key rows to arbitrary batch code. Here each batch
-    * appends its rows stamped with the batch id; a batch REPLAYED
-    * after a failure between the append and the checkpoint commit
-    * appends the same (user_id, batch_id) rows AGAIN — replay-safe
-    * not because the log is idempotent (it is not) but because a
-    * replayed batch recomputes byte-identical rows and the read
-    * side's latest-wins row_number keeps exactly one row per key
-    * either way; the final
-    * serving table therefore equals the plain batch GROUP BY, which is
-    * what the oracle checks. Aggregates are order-insensitive
-    * (count / max), so batch slicing can't change the final values. */
   /** T20: SCD2 (slowly-changing-dimension type 2) maintenance in
     * foreachBatch — the lakehouse dimension-history op: each user's
     * event_type is the tracked attribute; every CHANGE opens a
@@ -897,17 +771,11 @@ object EventStream {
     * tiebreaks simultaneous changes. The rig's time-ordered halves
     * replay as 2+ real micro-batches (maxFilesPerTrigger = 1), and
     * the final history must equal the one-shot batch derivation —
-    * exactly what the oracle computes with two windows. */
-  /** Batch count of the most recent T20 run — StreamingSpec asserts
-    * ≥ 2, proving the cross-batch boundary merge actually executed
-    * (a single-batch run would make the history trivially right). */
-  @volatile private[streaming] var lastScd2Batches: Long = -1L
-
-  def runScd2Maintain(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t20-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    val hist = s"$base/hist"
+    * exactly what the oracle computes with two windows. StreamingSpec
+    * asserts ≥ 2 data batches in the returned progress, proving the
+    * cross-batch boundary merge actually executed (a single-batch run
+    * would make the history trivially right). */
+  def runScd2Maintain(s: SparkSession, d: String): Replay = {
     // SCD2's contract is IN-ORDER arrival per key (a CDC feed is
     // ordered within a partition; Kafka guarantees it per partition).
     // The generic deliver() copies part files under their random
@@ -916,23 +784,24 @@ object EventStream {
     // from the future. Deliver with ordered names AND strictly
     // increasing mtimes so the maxFilesPerTrigger=1 replay is the
     // time-ordered sequence the operator is defined over.
-    def deliverOrdered(staged: String, prefix: String,
-                       mtime: Long): Unit = {
-      val dst = new java.io.File(src); dst.mkdirs()
-      Option(new java.io.File(staged).listFiles())
-        .getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".json")).sortBy(_.getName)
-        .zipWithIndex.foreach { case (f, i) =>
-          val t = new java.io.File(dst, f"$prefix-$i%03d.json")
-          java.nio.file.Files.copy(f.toPath, t.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          t.setLastModified(mtime)
-          ()
-        }
+    def deliverOrdered(rig: Rig, src: String): Unit = {
+      def copy(staged: String, prefix: String, mtime: Long): Unit = {
+        val dst = new java.io.File(src); dst.mkdirs()
+        Option(new java.io.File(staged).listFiles())
+          .getOrElse(Array.empty)
+          .filter(_.getName.endsWith(".json")).sortBy(_.getName)
+          .zipWithIndex.foreach { case (f, i) =>
+            val t = new java.io.File(dst, f"$prefix-$i%03d.json")
+            java.nio.file.Files.copy(f.toPath, t.toPath,
+              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+            t.setLastModified(mtime)
+            ()
+          }
+      }
+      val now = System.currentTimeMillis()
+      copy(rig.half1, "batch-000", now - 120000L)
+      copy(rig.half2, "batch-001", now - 60000L)
     }
-    val now = System.currentTimeMillis()
-    deliverOrdered(s"$rig/half1", "batch-000", now - 120000L)
-    deliverOrdered(s"$rig/half2", "batch-001", now - 60000L)
     val histSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("user_id",
         org.apache.spark.sql.types.LongType),
@@ -943,14 +812,11 @@ object EventStream {
         org.apache.spark.sql.types.TimestampType),
       org.apache.spark.sql.types.StructField("valid_to",
         org.apache.spark.sql.types.TimestampType)))
-    val batches = new java.util.concurrent.atomic.AtomicLong(0L)
-    withReplayWidth(s) {
-      val q = readJsonStream(s, src, maxFilesPerTrigger = Some(1))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    replay(s, d, "t20", maxFilesPerTrigger = Some(1),
+        stage = deliverOrdered)({ (ev, dir) =>
+      val hist = s"$dir/hist"
+      ev.writeStream.outputMode("append")
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          batches.incrementAndGet()
           val ss = batch.sparkSession
           val wU = org.apache.spark.sql.expressions.Window
             .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
@@ -984,54 +850,49 @@ object EventStream {
           merged.write.mode("overwrite").parquet(hist)
           ()
         }
-        .start()
-      q.awaitTermination()
-    }
-    lastScd2Batches = batches.get()
-    s.read.parquet(hist)
-      .withColumn("is_current", col("valid_to").isNull)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("valid_from"), col("valid_to"), col("is_current"))
+    })(dir =>
+      s.read.parquet(s"$dir/hist")
+        .withColumn("is_current", col("valid_to").isNull)
+        .select(col("user_id"), col("event_id"), col("event_type"),
+          col("valid_from"), col("valid_to"), col("is_current")))
   }
 
-  def runForeachBatchUpsert(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t11-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    val log = s"$base/servelog"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    withReplayWidth(s) {
-      val q = readJsonStream(s, src)
-        .withWatermark("ts", "2 days")
+  /** T11: foreachBatch upsert sink — the bridge pattern for sinks with
+    * no native streaming support (JDBC, key-value stores, lakehouse
+    * MERGE): an update-mode aggregation hands each micro-batch's
+    * CHANGED per-key rows to arbitrary batch code. Here each batch
+    * appends its rows stamped with the batch id; a batch REPLAYED
+    * after a failure between the append and the checkpoint commit
+    * appends the same (user_id, batch_id) rows AGAIN — replay-safe
+    * not because the log is idempotent (it is not) but because a
+    * replayed batch recomputes byte-identical rows and the read
+    * side's latest-wins row_number keeps exactly one row per key
+    * either way; the final
+    * serving table therefore equals the plain batch GROUP BY, which is
+    * what the oracle checks. Aggregates are order-insensitive
+    * (count / max), so batch slicing can't change the final values. */
+  def runForeachBatchUpsert(s: SparkSession, d: String): Replay =
+    replay(s, d, "t11")((ev, dir) =>
+      ev.withWatermark("ts", "2 days")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"), max(col("value")).as("max_value"))
         .writeStream
         .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
           batch.withColumn("batch_id", lit(id))
-            .write.mode("append").parquet(log)
-        }
-        .start()
-      q.awaitTermination()
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("batch_id").desc)
-    s.read.parquet(log)
-      // a replayed batch (failure between append and checkpoint
-      // commit) duplicates (user_id, batch_id) rows with identical
-      // values; row_number picks ONE row per user regardless, so no
-      // separate replay-collapse pass (and its shuffle) is needed
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("n_events"), col("max_value"))
-  }
-
-  /** Checkpoint dir of the most recent T12 run (StreamingSpec asserts
-    * the state files on disk are RocksDB's, not the default
-    * provider's — the part the result compare can't see). */
-  @volatile private[streaming] var lastT12Ckpt: String = _
+            .write.mode("append").parquet(s"$dir/servelog")
+        })({ dir =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id").orderBy(col("batch_id").desc)
+      s.read.parquet(s"$dir/servelog")
+        // a replayed batch (failure between append and checkpoint
+        // commit) duplicates (user_id, batch_id) rows with identical
+        // values; row_number picks ONE row per user regardless, so no
+        // separate replay-collapse pass (and its shuffle) is needed
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col("user_id"), col("n_events"), col("max_value"))
+    })
 
   /** T12: the same stateful pipeline under the ROCKSDB state store —
     * the 100 TB state backend. The default HDFSBackedStateStoreProvider
@@ -1040,35 +901,16 @@ object EventStream {
     * state on local SSD with changelog/snapshot files in the
     * checkpoint, which is what makes billions of keys per executor
     * (big watermark windows, wide dedup sets, stream-stream buffers)
-    * operable. The provider is a session conf snapshot at query
-    * start; it is set for this run and restored after, so the other
-    * streaming queries keep exercising the default provider. Result
-    * must equal the plain batch aggregate — the oracle's check, same
-    * as T1 (the corpus has unique event_ids, so the dedup stage's
+    * operable. The provider is set for this run only ([[RocksDb]]);
+    * StreamingSpec proves it engaged from the returned run dir's
+    * `ckpt/state` files — the part the result compare can't see.
+    * Result must equal the plain batch aggregate — the oracle's check,
+    * same as T1 (the corpus has unique event_ids, so the dedup stage's
     * state machinery runs for real but must not change the answer). */
-  def runRocksDbStateAgg(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t12-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    // one RocksDB INSTANCE opens per shuffle partition per stateful
-    // operator per batch — the replay-width rationale applies doubly
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try withReplayWidth(s) {
-      val q = dedupWindowAgg(readJsonStream(s, src))
-        .writeStream.format("memory").queryName("t12_mem")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
-    lastT12Ckpt = ckpt
-    s.table("t12_mem")
-  }
+  def runRocksDbStateAgg(s: SparkSession, d: String): Replay =
+    replay(s, d, "t12", confs = Seq(RocksDb))((ev, _) =>
+      toMemory(dedupWindowAgg(ev), "t12_mem", "complete"))(
+      _ => s.table("t12_mem"))
 
   // ---- T15: transformWithState (the Spark-4 arbitrary-state API) --------
 
@@ -1109,48 +951,21 @@ object EventStream {
   }
 
   /** T15 as a real checkpointed run (RocksDB provider set for the run,
-    * restored after — the API throws on the default provider). A key
-    * emits once per micro-batch that carried its rows; n_events is
-    * strictly monotone per key, so keep-max-n is the final tally
-    * regardless of how AvailableNow sliced the files (T8's protocol). */
-  def runTransformWithState(s: SparkSession, d: String): DataFrame = {
+    * restored after — the API throws on the default provider), final
+    * tallies read by [[finalTallies]] (T8's protocol). */
+  def runTransformWithState(s: SparkSession, d: String): Replay = {
     import s.implicits._
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t15-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try withReplayWidth(s) {
-      val q = readJsonStream(s, src).as[Event]
+    replay(s, d, "t15", confs = Seq(RocksDb))((ev, _) =>
+      toMemory(ev.as[Event]
         .groupByKey(_.user_id)
         .transformWithState(new TallyProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Update())
-        .toDF()
-        .writeStream.format("memory").queryName("t15_mem")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("n_events").desc)
-    s.table("t15_mem")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
+        .toDF(),
+        "t15_mem", "update"))(
+      _ => finalTallies(s.table("t15_mem")))
   }
 
-  /** T4/S11: keyed publish through a REAL streaming query — the
-    * producer's keyed emit (`ingestion/producer.py:173-182`) as
-    * readStream → key/value payload → file sink (append mode,
-    * checkpointed). On a cluster the sink line changes to
-    * `.format("kafka")` with the same key/value contract; no broker
-    * ships in this container, so the payload lands as JSON files and
-    * is read back for the oracle compare. */
   /** T19: per-batch trending leaderboard — the "top types right now"
     * panel: a complete-mode windowed count feeding foreachBatch,
     * which ranks the CURRENT totals and overwrites a small
@@ -1162,17 +977,12 @@ object EventStream {
     * what the oracle checks. Complete mode is the right output mode
     * here BECAUSE the sink is a full overwrite: replay after a crash
     * rewrites the same table (self-healing, no dedup log needed). */
-  def runTrendingTopK(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t19-run${nextRunId()}")
-    val src = s"$base/src"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    withReplayWidth(s) {
-      val counts = readJsonStream(s, src)
-        .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
+  def runTrendingTopK(s: SparkSession, d: String): Replay =
+    replay(s, d, "t19")((ev, dir) =>
+      ev.groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(col("w.start").as("win_start"), col("event_type"), col("n"))
-      val q = counts.writeStream
+        .writeStream
         .outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val wr = org.apache.spark.sql.expressions.Window
@@ -1181,16 +991,10 @@ object EventStream {
           batch.withColumn("rnk", row_number().over(wr))
             .filter(col("rnk") <= 3)
             .coalesce(1)
-            .write.mode("overwrite").parquet(out)
+            .write.mode("overwrite").parquet(s"$dir/out")
           ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out)
-  }
+        })(
+      dir => s.read.parquet(s"$dir/out"))
 
   /** T26: streaming drift monitor — A77's Page–Hinkley detector run
     * AS A STREAM: a complete-mode daily aggregation (pinned decimal
@@ -1207,19 +1011,14 @@ object EventStream {
     * argument). The final table must therefore EQUAL the batch A77
     * — which is exactly what the oracle checks, making the streaming
     * path fully hash-verified. */
-  def runDriftMonitor(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t26-run${nextRunId()}")
-    val src = s"$base/src"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    withReplayWidth(s) {
-      val daily = readJsonStream(s, src)
-        .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
+  def runDriftMonitor(s: SparkSession, d: String): Replay =
+    replay(s, d, "t26")((ev, dir) =>
+      ev.groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
         .agg(sum(col("value").cast("decimal(24,10)")).as("vsum"),
           count(lit(1)).as("vn"))
         .select(col("w.start").as("day"), col("event_type"),
           col("vsum"), col("vn"))
-      val q = daily.writeStream
+        .writeStream
         .outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val wd = org.apache.spark.sql.expressions.Window
@@ -1241,16 +1040,10 @@ object EventStream {
             .select(col("event_type"), col("day"), col("v"), col("ph"),
               (col("ph") > lit(5.0d)).as("alarm"))
             .coalesce(1)
-            .write.mode("overwrite").parquet(out)
+            .write.mode("overwrite").parquet(s"$dir/out")
           ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out)
-  }
+        })(
+      dir => s.read.parquet(s"$dir/out"))
 
   /** T21: sketch-in-state streaming distinct — the bounded-memory
     * streaming answer to COUNT(DISTINCT): exact distinct in a stream
@@ -1260,33 +1053,19 @@ object EventStream {
     * state store (rsd 2%, same contract as batch A16). The two rig
     * halves replay as separate micro-batches (maxFilesPerTrigger=1),
     * so the cross-batch sketch merge is real — StreamingSpec asserts
-    * ≥2 batches ran AND every estimate lands within 5% of the exact
-    * batch distinct. At 100 TB: state per window is O(sketch), not
-    * O(distinct users) — the only viable shape. */
-  @volatile private[streaming] var lastApproxDistinctBatches: Long = -1L
-  def runStreamingApproxDistinct(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t21-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    withReplayWidth(s) {
-      val q = readJsonStream(s, src, maxFilesPerTrigger = Some(1))
+    * ≥2 data batches ran AND every estimate lands within 5% of the
+    * exact batch distinct. At 100 TB: state per window is O(sketch),
+    * not O(distinct users) — the only viable shape. */
+  def runStreamingApproxDistinct(s: SparkSession, d: String): Replay =
+    replay(s, d, "t21", maxFilesPerTrigger = Some(1))((ev, _) =>
+      toMemory(ev
         .withWatermark("ts", "2 days")
         .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
         .agg(approx_count_distinct(col("user_id"), 0.02).as("est_users"))
         .select(col("w.start").as("win_start"), col("event_type"),
-          col("est_users"))
-        .writeStream.format("memory").queryName("t21_mem")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastApproxDistinctBatches =
-        Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-    }
-    s.table("t21_mem")
-  }
+          col("est_users")),
+        "t21_mem", "complete"))(
+      _ => s.table("t21_mem"))
 
   /** T22: streaming progress audit — the OBSERVABILITY surface every
     * production stream is operated through: after a real checkpointed
@@ -1299,28 +1078,17 @@ object EventStream {
     * ≥2 data batches (the file-capped trigger slices), and
     * Σ input_rows == the exact corpus row count — the engine's
     * telemetry must account for every row it claims to have read. */
-  def runProgressAudit(s: SparkSession, d: String): DataFrame = {
+  def runProgressAudit(s: SparkSession, d: String): Replay = {
     import s.implicits._
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t22-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    val progress = withReplayWidth(s) {
-      val q = windowAgg(readJsonStream(s, src, maxFilesPerTrigger = Some(1)))
-        .writeStream.format("memory").queryName("t22_mem")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.toSeq
-    }
-    progress.map { p =>
+    val r = replay(s, d, "t22", maxFilesPerTrigger = Some(1))((ev, _) =>
+      toMemory(windowAgg(ev), "t22_mem", "complete"))(
+      _ => s.table("t22_mem"))
+    r.copy(out = r.progress.map { p =>
       val stateRows = Option(p.stateOperators)
         .map(_.map(_.numRowsTotal).sum).getOrElse(0L)
       (p.batchId, p.numInputRows, stateRows)
     }.toDF("batch_id", "input_rows", "state_rows")
-      .orderBy("batch_id")
+      .orderBy("batch_id"))
   }
 
   /** T23: STATELESS streaming ingest dedup via a Bloom probe — the
@@ -1336,11 +1104,7 @@ object EventStream {
     * halves replay as the stream, and only (most of) the second half
     * survives. The query is append-mode with NO watermark and NO
     * state store — the plan difference IS the point. */
-  def runBloomIngestFilter(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t23-run${nextRunId()}")
-    val src = s"$base/src"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
+  def runBloomIngestFilter(s: SparkSession, d: String): Replay = {
     // ledger: Bloom over the first half's event ids (batch-side build,
     // amortized across every future micro-batch in production)
     import org.apache.spark.sql.catalyst.expressions.Literal
@@ -1351,43 +1115,35 @@ object EventStream {
       ColumnBridge.expression(xxhash64(col("event_id"))),
       Literal(100000L), Literal(1600000L), 0, 0).toAggregateExpression()
     val bytes = s.read.schema(eventSchema).option("timestampFormat", TsFormat)
-      .json(s"$rig/half1")
+      .json(stageRig(s, d).half1)
       .select(ColumnBridge.column(bfAgg).as("bf"))
       .head().getAs[Array[Byte]](0)
-    withReplayWidth(s) {
-      val q = readJsonStream(s, src)
+    replay(s, d, "t23")((ev, _) =>
+      toMemory(ev
         .filter(!ColumnBridge.column(BloomFilterMightContain(
           ColumnBridge.expression(lit(bytes)),
           ColumnBridge.expression(xxhash64(col("event_id"))))))
-        .select(col("event_id"), col("user_id"), col("event_type"))
-        .writeStream.format("memory").queryName("t23_mem")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table("t23_mem")
+        .select(col("event_id"), col("user_id"), col("event_type")),
+        "t23_mem", "append"))(
+      _ => s.table("t23_mem"))
   }
 
-  def runKeyedPublish(s: SparkSession, d: String): DataFrame = {
-    val rig = stageRig(s, d)
-    val base = freshDir(s"/tmp/graft-stream-t4-run${nextRunId()}")
-    val src = s"$base/src"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    deliver(s"$rig/half1", src); deliver(s"$rig/half2", src)
-    val q = kafkaPayload(readJsonStream(s, src))
-      .writeStream.format("json")
-      .option("path", out)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("key", StringType),
-        org.apache.spark.sql.types.StructField("value", StringType))))
-      .json(out)
-  }
+  /** T4/S11: keyed publish through a REAL streaming query — the
+    * producer's keyed emit (`ingestion/producer.py:173-182`) as
+    * readStream → key/value payload → file sink (append mode,
+    * checkpointed). On a cluster the sink line changes to
+    * `.format("kafka")` with the same key/value contract; no broker
+    * ships in this container, so the payload lands as JSON files and
+    * is read back for the oracle compare. */
+  def runKeyedPublish(s: SparkSession, d: String): Replay =
+    replay(s, d, "t4")((ev, dir) =>
+      kafkaPayload(ev).writeStream.format("json")
+        .option("path", s"$dir/out")
+        .outputMode("append"))(dir =>
+      s.read.schema(org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("key", StringType),
+          org.apache.spark.sql.types.StructField("value", StringType))))
+        .json(s"$dir/out"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S11 payload formatting as a batch query (oracle-checked JSON).
@@ -1403,132 +1159,132 @@ object EventStream {
     // T1: real streaming execution (readStream → windowed agg →
     // checkpointed memory sink, Trigger.AvailableNow).
     "t1_streaming_window_agg" -> ((s, d) =>
-      runStreamingAgg(s, d).orderBy("win_start", "event_type")),
+      runStreamingAgg(s, d).out.orderBy("win_start", "event_type")),
 
     // T2: checkpoint resume across two streaming runs — result is the
     // full-data aggregate only if offsets + state recovered.
     "t2_checkpoint_resume" -> ((s, d) =>
-      runCheckpointResume(s, d).orderBy("win_start", "event_type")),
+      runCheckpointResume(s, d).out.orderBy("win_start", "event_type")),
 
     // T24: state-store read-back (Spark 4 state data source) — the
     // checkpoint's aggregation buffers reconstructed to the batch
     // aggregate (oracle = the same windowed counts from events).
     "t24_state_read" -> ((s, d) =>
-      runStateRead(s, d).orderBy("win_start", "event_type")),
+      runStateRead(s, d).out.orderBy("win_start", "event_type")),
 
     // T25: the state CHANGE FEED log-compacted (latest change per key
     // wins) back to the batch aggregate — proves the CDC view carries
     // the complete multi-batch update history (oracle).
     "t25_state_changefeed" -> ((s, d) =>
-      runStateChangeFeed(s, d).orderBy("win_start", "event_type")),
+      runStateChangeFeed(s, d).out.orderBy("win_start", "event_type")),
 
     // T4: keyed publish executed as a real writeStream (file sink
     // standing in for the Kafka sink; same key/value contract).
     "t4_keyed_publish" -> ((s, d) =>
-      runKeyedPublish(s, d).orderBy("key")),
+      runKeyedPublish(s, d).out.orderBy("key")),
 
-    // T19: per-batch trending leaderboard (complete mode →
-    // foreachBatch rank + overwrite); final table equals the batch
-    // top-3-per-day (oracle).
     // T21: streaming approx distinct — HLL sketch per (window, type)
     // in the state store, merged across micro-batches; rows-only
     // (sketch estimate), StreamingSpec anchors ≤5% of batch exact.
     "t21_stream_approx_distinct" -> ((s, d) =>
-      runStreamingApproxDistinct(s, d).orderBy("win_start", "event_type")),
+      runStreamingApproxDistinct(s, d).out.orderBy("win_start", "event_type")),
 
     // T22: per-batch progress telemetry from a real run — rows-only,
     // StreamingSpec anchors Σ input_rows == exact corpus count.
     "t22_progress_audit" -> ((s, d) =>
-      runProgressAudit(s, d)),
+      runProgressAudit(s, d).out),
 
     // T23: stateless Bloom-probe ingest dedup — rows-only;
     // StreamingSpec anchors exactness (no ledger row survives) and
     // the FP bound (≥99% of genuinely-new rows survive).
     "t23_bloom_ingest" -> ((s, d) =>
-      runBloomIngestFilter(s, d).orderBy("event_id")),
+      runBloomIngestFilter(s, d).out.orderBy("event_id")),
 
     // T26: the streaming Page–Hinkley drift monitor — final table
     // equals batch A77 exactly (fully hash-checked; see
     // runDriftMonitor's doc for why re-derive-from-totals is the
     // right streaming form here).
     "t26_drift_monitor" -> ((s, d) =>
-      runDriftMonitor(s, d).orderBy("event_type", "day")),
+      runDriftMonitor(s, d).out.orderBy("event_type", "day")),
 
+    // T19: per-batch trending leaderboard (complete mode →
+    // foreachBatch rank + overwrite); final table equals the batch
+    // top-3-per-day (oracle).
     "t19_trending_topk" -> ((s, d) =>
-      runTrendingTopK(s, d).orderBy("win_start", "rnk")),
+      runTrendingTopK(s, d).out.orderBy("win_start", "rnk")),
 
     // T20: SCD2 dimension-history maintenance in foreachBatch; the
     // incrementally-merged history equals the one-shot batch
     // derivation (oracle).
     "t20_scd2_history" -> ((s, d) =>
-      runScd2Maintain(s, d)
+      runScd2Maintain(s, d).out
         .orderBy("user_id", "valid_from", "event_id")),
 
     // T8: custom keyed state (flatMapGroupsWithState) executed as a
     // real streaming run; final per-key tallies equal the plain
     // GROUP BY — which is exactly what the oracle checks.
     "t8_stateful_tally" -> ((s, d) =>
-      runStatefulTally(s, d).orderBy("user_id")),
+      runStatefulTally(s, d).out.orderBy("user_id")),
 
     // T9: stream-static enrichment executed as a real streaming run;
     // result equals the plain batch join — the oracle's check.
     "t9_stream_static_join" -> ((s, d) =>
-      runStreamStaticJoin(s, d).orderBy("event_id")),
+      runStreamStaticJoin(s, d).out.orderBy("event_id")),
 
     // T10: watermarked stream-stream interval join executed for real;
     // the emitted matches equal the batch interval join (oracle).
     "t10_stream_stream_join" -> ((s, d) =>
-      runStreamStreamJoin(s, d).orderBy("click_id", "purchase_id")),
+      runStreamStreamJoin(s, d).out.orderBy("click_id", "purchase_id")),
 
     // T10b: LEFT OUTER stream-stream join — unmatched clicks emit
     // with NULL purchase only after watermark expiry (sentinel-driven
     // on a bounded replay); equals the batch left join (oracle).
     "t10_outer_join" -> ((s, d) =>
-      runStreamStreamOuterJoin(s, d)
+      runStreamStreamOuterJoin(s, d).out
         .orderBy("click_id", "purchase_id")),
 
     // T12: the stateful dedup+agg pipeline on the RocksDB state store
     // (the scale state backend); equals the plain aggregate (oracle).
     "t12_rocksdb_state" -> ((s, d) =>
-      runRocksDbStateAgg(s, d).orderBy("win_start", "event_type")),
+      runRocksDbStateAgg(s, d).out.orderBy("win_start", "event_type")),
 
     // T13: bounded backfill — AvailableNow + maxFilesPerTrigger=1
     // replays the backlog as capped micro-batches; final aggregate
     // equals the one-shot batch result (oracle) regardless of slicing.
     "t13_bounded_backfill" -> ((s, d) =>
-      runBoundedBackfill(s, d).orderBy("win_start", "event_type")),
+      runBoundedBackfill(s, d).out.orderBy("win_start", "event_type")),
 
     // T15: transformWithState (Spark-4 arbitrary-state API) executed
     // for real on RocksDB; final per-key tallies equal the plain
     // GROUP BY — the oracle's check, same contract as T8.
     "t15_transform_with_state" -> ((s, d) =>
-      runTransformWithState(s, d).orderBy("user_id")),
+      runTransformWithState(s, d).out.orderBy("user_id")),
 
     // T14: dropDuplicatesWithinWatermark on a planted-retransmit rig —
     // duplicates with DIFFERENT event times deduped within the
     // watermark delay; per-type totals equal the retransmit-free
     // batch aggregate (oracle) iff every event counted exactly once.
     "t14_dedup_within_wm" -> ((s, d) =>
-      runDedupWithinWatermark(s, d).orderBy("event_type")),
+      runDedupWithinWatermark(s, d).out.orderBy("event_type")),
 
     // T17: watermark late-data drop — planted 60-day-late rows (fresh
     // negative ids) must be discarded by the watermarked dedup; the
     // on-time stream equals the original events exactly (oracle),
     // drop count spec-pinned to the plant.
     "t17_late_data_drop" -> ((s, d) =>
-      runLateDataDrop(s, d).orderBy("event_id")),
+      runLateDataDrop(s, d).out.orderBy("event_id")),
 
     // T18: chained daily→weekly window aggregation in one streaming
     // query (two stateful operators, append mode, sentinel-flushed);
     // equals the batch weekly rollup (oracle).
     "t18_chained_windows" -> ((s, d) =>
-      runChainedWindows(s, d).orderBy("week_start", "event_type")),
+      runChainedWindows(s, d).out.orderBy("week_start", "event_type")),
 
     // T16: streaming session windows — sessions spanning the two
     // replay batches merge in the state store; final sessions equal
     // the batch gap/island reconstruction (oracle, same as T5's).
     "t16_session_stream" -> ((s, d) =>
-      runSessionStream(s, d).orderBy("user_id", "sess_start")),
+      runSessionStream(s, d).out.orderBy("user_id", "sess_start")),
 
     // T11: foreachBatch upsert sink — update-mode agg through a
     // batch-id-stamped append log (the log itself is NOT idempotent;
@@ -1536,7 +1292,7 @@ object EventStream {
     // runForeachBatchUpsert's doc); final serving table equals the
     // plain GROUP BY (oracle).
     "t11_foreachbatch_upsert" -> ((s, d) =>
-      runForeachBatchUpsert(s, d).orderBy("user_id"))
+      runForeachBatchUpsert(s, d).out.orderBy("user_id"))
   )
 
   val oracles: Map[String, String] = Map(

@@ -34,9 +34,31 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
       .toSet
 
+  /** Micro-batches of a finished replay that read input rows. */
+  private def dataBatches(r: EventStream.Replay): Int =
+    r.progress.count(_.numInputRows > 0)
+
   test("T1: a real streaming run equals the batch aggregate") {
-    val streamed = asSet(EventStream.runStreamingAgg(spark, sf))
+    val streamed = asSet(EventStream.runStreamingAgg(spark, sf).out)
     assert(streamed == batchExpected)
+  }
+
+  test("staged rigs of two sf dirs with one basename stay apart") {
+    // a second dir named like sf0.001 whose events are sf0.01's: if
+    // rig dirs were derived from the basename, staging it would
+    // overwrite sf0.001's staged halves and the sf0.001 run would
+    // stream sf0.01's events (the cross-JVM clobber, in one JVM)
+    val other = new java.io.File(
+      SparkTestSession.fixtureDir("rig-isolation"), new java.io.File(sf).getName)
+    other.mkdirs()
+    val link = new java.io.File(other, "events.parquet").toPath
+    java.nio.file.Files.createSymbolicLink(link, java.nio.file.Paths.get(sf)
+      .resolveSibling("sf0.01").resolve("events.parquet"))
+    try {
+      EventStream.stageRig(spark, sf)
+      EventStream.stageRig(spark, other.getPath)
+      assert(asSet(EventStream.runStreamingAgg(spark, sf).out) == batchExpected)
+    } finally java.nio.file.Files.delete(link)
   }
 
   test("T2: kill + resume from checkpoint reconstructs the full result") {
@@ -44,7 +66,7 @@ class StreamingSpec extends AnyFunSuite {
     // query, appends the second half, and restarts on the SAME
     // checkpoint. Equality with the full-data batch aggregate holds
     // only if file-source offsets and aggregation state both recover.
-    val resumed = asSet(EventStream.runCheckpointResume(spark, sf))
+    val resumed = asSet(EventStream.runCheckpointResume(spark, sf).out)
     assert(resumed == batchExpected)
   }
 
@@ -54,19 +76,20 @@ class StreamingSpec extends AnyFunSuite {
     // operator; a single giant batch would be the failure mode the
     // pattern exists to avoid. Correctness under slicing is the same
     // equality every streaming run here asserts.
-    val streamed = asSet(EventStream.runBoundedBackfill(spark, sf))
-    assert(streamed == batchExpected)
-    assert(EventStream.lastBackfillBatches >= 2,
-      s"backlog replayed in ${EventStream.lastBackfillBatches} batch(es); " +
+    val run = EventStream.runBoundedBackfill(spark, sf)
+    assert(asSet(run.out) == batchExpected)
+    assert(dataBatches(run) >= 2,
+      s"backlog replayed in ${dataBatches(run)} batch(es); " +
         "expected the file-capped trigger to slice it")
   }
 
   test("T21: streaming HLL distinct within 5% of batch exact, sketches merged across batches") {
     import org.apache.spark.sql.functions._
-    val got = EventStream.runStreamingApproxDistinct(spark, sf).collect()
+    val run = EventStream.runStreamingApproxDistinct(spark, sf)
+    val got = run.out.collect()
       .map(r => (r.getTimestamp(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(EventStream.lastApproxDistinctBatches >= 2,
-      s"replayed in ${EventStream.lastApproxDistinctBatches} batch(es); " +
+    assert(dataBatches(run) >= 2,
+      s"replayed in ${dataBatches(run)} batch(es); " +
         "the cross-batch sketch merge needs the file-capped trigger to slice")
     val exact = graft.Tables.events(spark, sf)
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
@@ -81,7 +104,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("T22: progress telemetry accounts for every corpus row across sliced batches") {
-    val rows = EventStream.runProgressAudit(spark, sf).collect()
+    val rows = EventStream.runProgressAudit(spark, sf).out.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val dataBatches = rows.filter(_._2 > 0)
     assert(dataBatches.length >= 2,
@@ -98,7 +121,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("T23: the Bloom ingest filter is exact on the ledger and loses <1% of new rows") {
     import org.apache.spark.sql.functions._
-    val got = EventStream.runBloomIngestFilter(spark, sf).collect()
+    val got = EventStream.runBloomIngestFilter(spark, sf).out.collect()
       .map(_.getLong(0)).toSet
     // ground truth from the same chronological halves the rig stages
     val ev = graft.Tables.events(spark, sf)
@@ -125,10 +148,11 @@ class StreamingSpec extends AnyFunSuite {
     // single-batch run would make the history trivially right. The
     // result itself equals the one-shot batch derivation via the
     // DuckDB oracle; here we recompute it in-process as well.
-    val hist = EventStream.runScd2Maintain(spark, sf).collect()
+    val run = EventStream.runScd2Maintain(spark, sf)
+    val hist = run.out.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    assert(EventStream.lastScd2Batches >= 2,
-      s"history built in ${EventStream.lastScd2Batches} batch(es)")
+    assert(dataBatches(run) >= 2,
+      s"history built in ${dataBatches(run)} batch(es)")
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     val wU = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
@@ -150,12 +174,13 @@ class StreamingSpec extends AnyFunSuite {
     def asSess(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getTimestamp(1),
         r.getTimestamp(2), r.getLong(3), r.getDouble(4))).toSet
-    val streamed = asSess(EventStream.runSessionStream(spark, sf01))
+    val run = EventStream.runSessionStream(spark, sf01)
+    val streamed = asSess(run.out)
     val batch = asSess(graft.SparkEntry.queries("t5_session_window")(spark, sf01))
     assert(streamed == batch)
     // the slicing actually happened — otherwise no cross-batch merge ran
-    assert(EventStream.lastSessionBatches >= 2,
-      s"replay ran in ${EventStream.lastSessionBatches} batch(es); " +
+    assert(dataBatches(run) >= 2,
+      s"replay ran in ${dataBatches(run)} batch(es); " +
         "expected the file-capped trigger to slice it")
     // non-vacuity: at least one session has events on BOTH sides of the
     // replay midpoint (first event ≤ mid < last event), so the state
@@ -169,13 +194,18 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("T17: watermark drops the planted late rows, result equals batch") {
-    val streamed = EventStream.runLateDataDrop(spark, sf)
+    val run = EventStream.runLateDataDrop(spark, sf)
+    val streamed = run.out
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
       .toSet
-    assert(EventStream.lastLatePlanted > 0, "vacuous: nothing planted")
-    assert(EventStream.lastLateDropped == EventStream.lastLatePlanted,
-      s"dropped ${EventStream.lastLateDropped} of " +
-        s"${EventStream.lastLatePlanted} planted late rows")
+    // planted = rows the stream read beyond the corpus itself
+    val planted =
+      run.progress.map(_.numInputRows).sum - Tables.events(spark, sf).count()
+    val dropped = run.progress.flatMap(_.stateOperators)
+      .map(_.numRowsDroppedByWatermark).sum
+    assert(planted > 0, "vacuous: nothing planted")
+    assert(dropped == planted,
+      s"dropped $dropped of $planted planted late rows")
     val expected = Tables.events(spark, sf)
       .select(col("event_id"), col("event_type"), col("value"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
@@ -186,7 +216,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("T18: chained daily→weekly windows equal the batch weekly rollup") {
-    val streamed = EventStream.runChainedWindows(spark, sf)
+    val run = EventStream.runChainedWindows(spark, sf)
+    val streamed = run.out
       .collect()
       .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2),
         r.getDouble(3))).toSet
@@ -203,8 +234,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == expected)
     // the chain genuinely ran as TWO stateful operators in one query —
     // not an optimizer collapse into a single aggregation
-    assert(EventStream.lastChainedStateOps == 2,
-      s"expected 2 stateful operators, saw ${EventStream.lastChainedStateOps}")
+    val stateOps = run.progress.map(_.stateOperators.length).max
+    assert(stateOps == 2, s"expected 2 stateful operators, saw $stateOps")
   }
 
   test("T14: dropDuplicatesWithinWatermark absorbs shifted-ts retransmits") {
@@ -213,7 +244,7 @@ class StreamingSpec extends AnyFunSuite {
     // non-vacuity: the rig re-delivers every 7th event at ts+30 s, so
     // the source holds MORE rows than the events table
     assert(ev.filter(col("event_id") % 7 === 0).count() > 0)
-    val streamed = EventStream.runDedupWithinWatermark(spark, sf)
+    val streamed = EventStream.runDedupWithinWatermark(spark, sf).out
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
       .toSet
     val expected = ev.groupBy("event_type")
@@ -388,7 +419,7 @@ class StreamingSpec extends AnyFunSuite {
   test("T15: transformWithState tallies equal the batch GROUP BY") {
     // the new-API fold must land exactly where flatMapGroupsWithState
     // (T8) and the plain aggregate land — per-key, order-insensitive
-    val df = EventStream.runTransformWithState(spark, sf)
+    val df = EventStream.runTransformWithState(spark, sf).out
     val got = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getLong(4))).toSet
@@ -426,9 +457,9 @@ class StreamingSpec extends AnyFunSuite {
     // default heap provider would produce identical numbers. Prove
     // engagement from the checkpoint: RocksDB writes .changelog/.zip
     // state files where the default provider writes .delta/.snapshot.
-    val df = EventStream.runRocksDbStateAgg(spark, SparkTestSession.Sf0001)
-    assert(df.count() > 0)
-    val stateDir = new java.io.File(s"${EventStream.lastT12Ckpt}/state")
+    val run = EventStream.runRocksDbStateAgg(spark, SparkTestSession.Sf0001)
+    assert(run.out.count() > 0)
+    val stateDir = new java.io.File(s"${run.dir}/ckpt/state")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory)
         Option(f.listFiles()).toSeq.flatten.flatMap(walk)
