@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.expressions.Window
 import graft.Tables
 
 import scala.collection.mutable
@@ -266,8 +267,7 @@ object Backtest {
     "t7_equity_metrics" -> ((s, d) => {
       val eq = foldDump(s, d).filter(col("kind") === "equity")
         .select(col("day"), col("equity"))
-      val w = org.apache.spark.sql.expressions.Window.orderBy("day")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+      val w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
       eq.withColumn("peak", max(col("equity")).over(w))
         .withColumn("dd", col("equity") / col("peak") - 1)
         .agg(r6(min(col("dd"))).as("max_drawdown"),
@@ -280,125 +280,126 @@ object Backtest {
 
   /** The 34-metric summary block (scripts/07_backtest.py:368-418)
     * over a fold-output-shaped frame (`kind` = trade | equity rows) —
-    * shared by `t7_full_metrics` (over the live fold) and the
-    * golden-run-A replay spec (over the reference's SHIPPED trade log
-    * and equity curve, `trades/HOLDING_PERIOD_24/`), which pins every
-    * headline metric to the published summary JSON. Daily and
-    * downside volatilities are POPULATION std (numpy's ddof=0 default
-    * in 07_backtest.py:345,356 — `stddev_samp` here diverged in the
-    * 4th significant digit on the golden curve), and the downside std
-    * is centered on the DOWNSIDE mean, exactly numpy's
-    * `downside_returns.std()`. */
+    * shared by `t7_full_metrics` (over the fold dump), the dashboard's
+    * re-run (over a live [[run]]) and the golden-run-A replay spec
+    * (over the reference's SHIPPED trade log and equity curve,
+    * `trades/HOLDING_PERIOD_24/`), which pins every headline metric to
+    * the published summary JSON. Daily and downside volatilities are
+    * POPULATION std (numpy's ddof=0 default in 07_backtest.py:345,356 —
+    * `stddev_samp` here diverged in the 4th significant digit on the
+    * golden curve), and the downside std is centered on the DOWNSIDE
+    * mean, exactly numpy's `downside_returns.std()`.
+    *
+    * One pass over `out`: one window spec (partitioned by kind, in
+    * the trade log's total order) derives every per-row quantity, and
+    * one aggregate gated on kind folds both blocks into the row. A
+    * live fold runs once; each extra reference to `out` re-runs it.
+    *  - Streaks (scripts/07_backtest.py:308-314): a trade's streak is
+    *    its row number minus that of the last trade of the other sign.
+    *  - Equity curve: daily return against the previous day, drawdown
+    *    against the running peak; both are NULL where the divisor is 0
+    *    (ANSI mode throws on x/0 even for doubles, and a wiped-out
+    *    portfolio does reach equity 0).
+    *  - Max-drawdown period (scripts/07_backtest.py:333-338): the
+    *    trough is the least drawdown, NULLs last, earliest day first;
+    *    the peak is the first day that reached the running peak at the
+    *    trough (idxmax semantics); the duration is in days. A window
+    *    over the whole partition hands every row the trough, so the
+    *    aggregate keeps scalar buffers: a struct buffer plans a
+    *    SortAggregate, outside whole-stage codegen.
+    *
+    * No trades: `n_trades` 0, every other trade metric and both
+    * streaks NULL. No equity rows: no result row. */
   def fullMetricsOf(out: DataFrame, initialCash: Double): DataFrame = {
-      val trades = out.filter(col("kind") === "trade")
-      val equity = out.filter(col("kind") === "equity")
-
-      // win/loss streaks: sessionize consecutive same-sign trades
-      // (scripts/07_backtest.py:308-314) — W6 over the trade log.
-      // daysHeld DESC breaks the one possible (day, key) tie — a key
-      // that exits in phase 1 of the last day, re-enters in phase 2
-      // and is force-closed emits TWO trade rows that day (the exit
-      // with daysHeld ≥ 1 chronologically before the force-close with
-      // daysHeld = 0) — so the ordering is total and both engines
-      // sessionize the dumped log identically.
-      val wOrd = org.apache.spark.sql.expressions.Window
-        .orderBy(col("day"), col("key"), col("daysHeld").desc)
-      val wCum = org.apache.spark.sql.expressions.Window
-        .orderBy(col("day"), col("key"), col("daysHeld").desc)
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      val streaks = trades
-        .withColumn("win", (col("pnl") > 0).cast("int"))
-        .withColumn("chg",
-          when(lag(col("win"), 1).over(wOrd).isNull ||
-               lag(col("win"), 1).over(wOrd) =!= col("win"), 1).otherwise(0))
-        .withColumn("sid", sum(col("chg")).over(wCum))
-        .groupBy("sid", "win").agg(count(lit(1)).as("len"))
-        .agg(max(when(col("win") === 1, col("len"))).as("max_win_streak"),
-             max(when(col("win") === 0, col("len"))).as("max_loss_streak"))
-
-      val tradeAgg = trades.agg(
-        count(lit(1)).as("n_trades"),
-        sum(when(col("pnl") > 0, 1L).otherwise(0L)).as("wins"),
-        sum(when(col("pnl") <= 0, 1L).otherwise(0L)).as("losses"),
-        r6(safeDiv(sum(when(col("pnl") > 0, 1.0).otherwise(0.0)),
-           count(lit(1)))).as("win_rate"),
-        r6(avg(when(col("pnl") > 0, col("pnl")))).as("avg_win"),
-        r6(avg(when(col("pnl") <= 0, col("pnl")))).as("avg_loss"),
-        r6(max(col("pnl"))).as("largest_win"),
-        r6(min(col("pnl"))).as("largest_loss"),
-        r6(safeDiv(sum(when(col("pnl") > 0, col("pnl")).otherwise(0.0)),
-           abs(sum(when(col("pnl") <= 0, col("pnl")).otherwise(0.0)))))
+    def trades(c: Column): Column = when(col("kind") === "trade", c)
+    def days(c: Column): Column = when(col("kind") === "equity", c)
+    val win = col("pnl") > 0
+    val loss = col("pnl") <= 0
+    // daysHeld DESC breaks the one (day, key) tie: a key that exits on
+    // the last day, re-enters and is force-closed emits the exit
+    // (daysHeld ≥ 1) before the force-close (daysHeld 0), so both
+    // engines sessionize the dumped log identically. Equity rows
+    // (key -1, daysHeld 0) fall in day order.
+    val w = Window.partitionBy("kind")
+      .orderBy(col("day"), col("key"), col("daysHeld").desc)
+    val upTo = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val rows = out
+      .select(col("kind"), col("day"), col("key"), col("pnl"),
+        col("exitReason"), col("daysHeld"), col("equity"),
+        row_number().over(w).as("rn"),
+        lag(col("equity"), 1).over(w).as("prev"),
+        max(col("equity")).over(upTo).as("peak"),
+        min_by(col("day"), struct(-col("equity"), col("day"))).over(upTo)
+          .as("peak_day"))
+      .withColumn("r", safeDiv(col("equity"), col("prev")) - 1)
+      .withColumn("dd", safeDiv(col("equity"), col("peak")) - 1)
+      .select(col("*"), (col("rn") - coalesce(
+        when(win, max(when(loss, col("rn"))).over(upTo))
+          .otherwise(max(when(win, col("rn"))).over(upTo)), lit(0)))
+        .cast("long").as("streak"),
+        min(struct(col("dd").isNull, col("dd"), col("day"), col("peak_day")))
+          .over(w.rowsBetween(Window.unboundedPreceding,
+            Window.unboundedFollowing)).as("trough"))
+    def exitCount(reason: String): Column =
+      sum(trades(when(col("exitReason") === reason, 1L).otherwise(0L)))
+    val annReturn = pow(lit(1.0) + col("mu"), 252.0) - 1
+    rows
+      .agg(
+        count(trades(lit(1))).as("n_trades"),
+        sum(trades(when(win, 1L).otherwise(0L))).as("wins"),
+        sum(trades(when(loss, 1L).otherwise(0L))).as("losses"),
+        r6(safeDiv(sum(trades(when(win, 1.0).otherwise(0.0))),
+          count(trades(lit(1))))).as("win_rate"),
+        r6(avg(trades(when(win, col("pnl"))))).as("avg_win"),
+        r6(avg(trades(when(loss, col("pnl"))))).as("avg_loss"),
+        r6(max(trades(col("pnl")))).as("largest_win"),
+        r6(min(trades(col("pnl")))).as("largest_loss"),
+        r6(safeDiv(sum(trades(when(win, col("pnl")).otherwise(0.0))),
+          abs(sum(trades(when(loss, col("pnl")).otherwise(0.0))))))
           .as("profit_factor"),
-        r6(avg(col("pnl"))).as("expectancy"),
-        r6(sum(col("pnl"))).as("total_pnl"),
-        r6(avg(col("daysHeld"))).as("avg_days_held"),
-        max(col("daysHeld")).as("max_days_held"),
-        sum(when(col("exitReason") === "stop_loss", 1L).otherwise(0L))
-          .as("n_stop_loss"),
-        sum(when(col("exitReason") === "take_profit", 1L).otherwise(0L))
-          .as("n_take_profit"),
-        sum(when(col("exitReason") === "hold_period", 1L).otherwise(0L))
-          .as("n_hold_period"),
-        sum(when(col("exitReason") === "end_of_backtest", 1L).otherwise(0L))
-          .as("n_end_close"))
-
-      // equity-curve block: daily returns, annualized, drawdown.
-      val wDay = org.apache.spark.sql.expressions.Window.orderBy("day")
-      val wPeak = org.apache.spark.sql.expressions.Window.orderBy("day")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      val curve = equity
-        .select(col("day"), col("equity"))
-        .withColumn("prev", lag(col("equity"), 1).over(wDay))
-        .withColumn("r", safeDiv(col("equity"), col("prev")) - 1)
-        .withColumn("peak", max(col("equity")).over(wPeak))
-        .withColumn("dd", safeDiv(col("equity"), col("peak")) - 1)
-      val eqAgg = curve
-        .agg(
-          count(lit(1)).as("n_days"),
-          // max_by(equity, day), NOT last(equity): last() is
-          // order-dependent and only held because the global window
-          // upstream left one sorted partition.
-          r6(max_by(col("equity"), col("day"))).as("final_equity"),
-          r6(max_by(col("equity"), col("day")) /
-             lit(initialCash) - 1).as("total_return"),
-          avg(col("r")).as("mu"),
-          stddev_pop(col("r")).as("sigma"),
-          stddev_pop(when(col("r") < 0, col("r"))).as("downside"),
-          r6(min(col("dd"))).as("max_drawdown"),
-          r6(max(col("r"))).as("best_day"),
-          r6(min(col("r"))).as("worst_day"))
-        .select(col("n_days"), col("final_equity"), col("total_return"),
-          r6(col("mu")).as("mean_daily"),
-          r6(col("sigma")).as("std_daily"),
-          (pow(lit(1.0) + col("mu"), 252.0) - 1).cast("float").as("ann_return"),
-          r6(col("sigma") * sqrt(lit(252.0))).cast("float").as("ann_vol"),
-          safeDiv(pow(lit(1.0) + col("mu"), 252.0) - 1,
-            col("sigma") * sqrt(lit(252.0))).cast("float").as("sharpe"),
-          safeDiv(pow(lit(1.0) + col("mu"), 252.0) - 1,
-            col("downside") * sqrt(lit(252.0))).cast("float").as("sortino"),
-          col("max_drawdown"), col("best_day"), col("worst_day"))
-
-      // max-drawdown PERIOD (scripts/07_backtest.py:333-338): trough
-      // day = argmin drawdown; peak day = first day achieving the
-      // running max at the trough (idxmax semantics); duration in
-      // days — the "-29.45% (63 d, ...)" line of the summary.
-      val wTrough = org.apache.spark.sql.expressions.Window
-        .orderBy(col("dd").asc_nulls_last, col("day"))
-      val trough = curve.withColumn("rn", row_number().over(wTrough))
-        .filter(col("rn") === 1)
-        .select(col("day").as("trough_day"), col("peak").as("peak_val"))
-      val ddPeriod = curve.select(col("day"), col("equity"))
-        .crossJoin(broadcast(trough))    // 1 row
-        .filter(col("day") <= col("trough_day") &&
-                col("equity") === col("peak_val"))
-        .groupBy(col("trough_day"))
-        .agg(min(col("day")).as("peak_day"))
-        .select(to_date(col("peak_day")).as("max_dd_peak_date"),
-          to_date(col("trough_day")).as("max_dd_trough_date"),
-          datediff(to_date(col("trough_day")), to_date(col("peak_day")))
-            .cast("long").as("max_dd_duration_days"))
-
-      tradeAgg.crossJoin(streaks).crossJoin(eqAgg).crossJoin(ddPeriod)
+        r6(avg(trades(col("pnl")))).as("expectancy"),
+        r6(sum(trades(col("pnl")))).as("total_pnl"),
+        r6(avg(trades(col("daysHeld")))).as("avg_days_held"),
+        max(trades(col("daysHeld"))).as("max_days_held"),
+        exitCount("stop_loss").as("n_stop_loss"),
+        exitCount("take_profit").as("n_take_profit"),
+        exitCount("hold_period").as("n_hold_period"),
+        exitCount("end_of_backtest").as("n_end_close"),
+        max(trades(when(win, col("streak")))).as("max_win_streak"),
+        max(trades(when(loss, col("streak")))).as("max_loss_streak"),
+        count(days(lit(1))).as("n_days"),
+        // max_by(equity, day), NOT last(equity): last() is order-dependent
+        r6(max_by(col("equity"), days(col("day")))).as("final_equity"),
+        r6(max_by(col("equity"), days(col("day"))) /
+          lit(initialCash) - 1).as("total_return"),
+        avg(days(col("r"))).as("mu"),
+        stddev_pop(days(col("r"))).as("sigma"),
+        stddev_pop(days(when(col("r") < 0, col("r")))).as("downside"),
+        r6(min(days(col("dd")))).as("max_drawdown"),
+        r6(max(days(col("r")))).as("best_day"),
+        r6(min(days(col("r")))).as("worst_day"),
+        max(days(col("trough.peak_day"))).as("peak_day"),
+        max(days(col("trough.day"))).as("trough_day"))
+      .filter(col("n_days") > 0)
+      .select(Seq("n_trades", "wins", "losses", "win_rate", "avg_win",
+          "avg_loss", "largest_win", "largest_loss", "profit_factor",
+          "expectancy", "total_pnl", "avg_days_held", "max_days_held",
+          "n_stop_loss", "n_take_profit", "n_hold_period", "n_end_close",
+          "max_win_streak", "max_loss_streak", "n_days", "final_equity",
+          "total_return").map(col) ++ Seq(
+        r6(col("mu")).as("mean_daily"),
+        r6(col("sigma")).as("std_daily"),
+        annReturn.cast("float").as("ann_return"),
+        r6(col("sigma") * sqrt(lit(252.0))).cast("float").as("ann_vol"),
+        safeDiv(annReturn, col("sigma") * sqrt(lit(252.0)))
+          .cast("float").as("sharpe"),
+        safeDiv(annReturn, col("downside") * sqrt(lit(252.0)))
+          .cast("float").as("sortino"),
+        col("max_drawdown"), col("best_day"), col("worst_day"),
+        to_date(col("peak_day")).as("max_dd_peak_date"),
+        to_date(col("trough_day")).as("max_dd_trough_date"),
+        datediff(to_date(col("trough_day")), to_date(col("peak_day")))
+          .cast("long").as("max_dd_duration_days")): _*)
   }
 
   /** Round-14: the fold ITSELF is now hash-checked too —

@@ -23,14 +23,17 @@ import graft.functions.StudentT
   *    with an equi key on user_id and a per-row range residual — a
   *    shuffled hash join whose output is ≤5× the single-lookback one,
   *    never a re-scan;
-  *  - the 4 leads enter as a `stack` unpivot of window-function leads
-  *    AFTER daily aggregation (O(days×keys) rows), so the fact table
-  *    is never widened;
+  *  - the 4 leads are window-function leads on the daily aggregate
+  *    that IS the spine; they ride through the join and enter as a
+  *    `stack` unpivot after the (key, day, lookback) aggregate
+  *    (O(days×keys×5) rows), so the fact table is never widened and
+  *    the daily aggregate is built once;
   *  - corr/count are map-side-combinable hash aggregates over the
-  *    (key, lookback, lead) grid — 20 cells per key, one shuffle.
+  *    (key, lookback, lead) grid — 20 cells per key.
   *
-  * At 100 TB: events shuffle once by user_id for the interval join,
-  * the grid agg shuffles O(days × keys × 20) rows. Nothing rescans.
+  * At 100 TB: events are scanned twice (daily and hourly aggregates)
+  * and shuffle once by user_id for the interval join; the grid agg
+  * runs on O(days × keys × 20) rows. Nothing rescans.
   */
 object LagGrid {
 
@@ -39,35 +42,28 @@ object LagGrid {
   private val Lookbacks = Seq(12, 24, 48, 72, 168)
   private val Leads = Seq(1, 2, 3, 5)
 
-  /** Daily close per key (avg event value — the price-series proxy). */
-  private def daily(s: SparkSession, d: String): DataFrame =
+  /** (key, day, close, l1, l2, l3, l5): the daily close per key (avg
+    * event value — the price-series proxy) and its lead_days-ahead
+    * closes. One row per (key, day): the spine of the interval join,
+    * and the forward-return side it carries through that join. */
+  private def dailyLeads(s: SparkSession, d: String): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("day")
     Tables.events(s, d)
       .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
       .agg(avg(col("value")).as("close"))
-
-  /** (key, day, lead_days, fwd_ret) — leads unpivoted after the daily
-    * agg, so the ×4 blow-up applies to O(days×keys) rows only. */
-  private def forwardReturns(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("day")
-    val withLeads = daily(s, d)
       .select(Seq(col("user_id"), col("day"), col("close")) ++
         Leads.map(k => lead(col("close"), k).over(w).as(s"l$k")): _*)
-    val stackExpr = Leads.map(k => s"$k, l$k").mkString(", ")
-    withLeads
-      .select(col("user_id"), col("day"), col("close"),
-        expr(s"stack(${Leads.size}, $stackExpr) as (lead_days, fwd_close)"))
-      .filter(col("fwd_close").isNotNull)
-      // NULL-on-zero close (a day whose avg value is exactly 0): corr
-      // skips NULL pairs on both engines; ANSI x/0 would throw instead.
-      .select(col("user_id"), col("day"), col("lead_days"),
-        (col("fwd_close") / nullif(col("close"), lit(0.0)) - 1).as("fwd_ret"))
   }
 
-  /** (key, day, lookback_h, senti) — ONE interval join over the
-    * crossed lookback dimension: win_start is computed per (day, lb)
-    * row, so the range residual varies by row while the equi key on
-    * user_id keeps the plan a shuffled hash join. */
-  private def lookbackSignal(s: SparkSession, d: String): DataFrame = {
+  /** The full 20-cell grid: corr + n per (key, lookback, lead) — the
+    * raw plan (PlanShapeSpec asserts join shapes on this form). ONE
+    * interval join over the crossed lookback dimension: win_start is
+    * per (day, lb) row, so the range residual varies by row while the
+    * equi key on user_id keeps the join keyed. Its spine is the daily
+    * aggregate with its leads, carried to the (key, day, lb) senti
+    * rows and unpivoted there: events are scanned twice (daily and
+    * hourly), and no second join meets the forward returns. */
+  def gridPlan(s: SparkSession, d: String): DataFrame = {
     // Hourly pre-aggregation before the interval join (round 15,
     // guide §2.3 — shuffle/join fewer rows): every lookback window is
     // HOUR-ALIGNED ([day − lb h, day) with day date-truncated and lb
@@ -82,32 +78,34 @@ object LagGrid {
       .agg(sum(col("value")).as("sv"), count(col("value")).as("cv"))
       .alias("ev")
     val lbs = s.createDataFrame(Lookbacks.map(Tuple1(_))).toDF("lookback_h")
-    // Spine from the SAME daily aggregate the forward-return side
-    // builds (identical subplan → ReuseExchange): one events scan +
-    // one shuffle serves both, instead of a separate distinct() pass.
-    val spine = daily(s, d)
-      .select(col("user_id"), col("day"))
+    val spine = dailyLeads(s, d)
       .crossJoin(broadcast(lbs))
       .withColumn("win_start",
         col("day") - expr("make_dt_interval(0, lookback_h, 0, 0)"))
       .alias("sp")
+    // close and the leads are functions of (user_id, day): grouping by
+    // them as well only carries them past the aggregate
+    val keys = Seq("user_id", "day", "lookback_h", "close") ++
+      Leads.map(k => s"l$k")
+    val stackExpr = Leads.map(k => s"$k, l$k").mkString(", ")
     spine.join(ev,
         col("sp.user_id") === col("ev.user_id") &&
         col("ev.ts") >= col("sp.win_start") &&
         col("ev.ts") <  col("sp.day"))
-      .groupBy(col("sp.user_id").as("user_id"), col("sp.day").as("day"),
-        col("sp.lookback_h").as("lookback_h"))
+      .groupBy(keys.map(k => col(s"sp.$k").as(k)): _*)
       // avg over the bucket rollup: NULL when no non-null value exists
       // in the window (what avg(value) returned), never a 0/0 throw
       .agg((sum(col("ev.sv")) / nullif(sum(col("ev.cv")), lit(0L)))
         .as("senti"))
-  }
-
-  /** The full 20-cell grid: corr + n per (key, lookback, lead) — the
-    * raw plan (PlanShapeSpec asserts join shapes on this form). */
-  def gridPlan(s: SparkSession, d: String): DataFrame =
-    lookbackSignal(s, d)
-      .join(forwardReturns(s, d), Seq("user_id", "day"))
+      // the leads unpivot after both aggregates, so the ×4 blow-up
+      // applies to O(days × keys × lookbacks) rows only
+      .select(col("user_id"), col("lookback_h"), col("senti"), col("close"),
+        expr(s"stack(${Leads.size}, $stackExpr) as (lead_days, fwd_close)"))
+      .filter(col("fwd_close").isNotNull)
+      // NULL-on-zero close (a day whose avg value is exactly 0): corr
+      // skips NULL pairs on both engines; ANSI x/0 would throw instead.
+      .withColumn("fwd_ret",
+        col("fwd_close") / nullif(col("close"), lit(0.0)) - 1)
       .groupBy(col("user_id"), col("lookback_h"), col("lead_days"))
       // Stats.corrSafe, not the corr builtin: NULL (like DuckDB corr)
       // instead of an ANSI divide-by-zero throw on a zero-variance
@@ -118,6 +116,7 @@ object LagGrid {
            // :154-158) — same hash agg, zero extra passes
            avg(col("fwd_ret")).as("mr"),
            avg(col("senti")).as("ms"))
+  }
 
   /** Memoized, materialized grid. All three lag_grid queries consume
     * the SAME O(keys × 20)-row table; without sharing, each rebuilt

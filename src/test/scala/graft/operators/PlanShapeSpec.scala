@@ -2,6 +2,11 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec,
+  SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec,
+  CartesianProductExec}
 import graft.SparkTestSession
 
 /** Scale guarantees as plan assertions: the designated 100 TB paths
@@ -256,6 +261,33 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(nlj.size <= 1, s"unexpected nested loops:\n${plan.take(2000)}")
     assert(plan.contains("LocalTableScan"),
       "lookback dim should be a local (broadcast) relation")
+  }
+
+  /** The physical operators of `df`'s executed plan, descending into
+    * adaptive plans and query stages. */
+  private def nodesOf(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] =
+    new AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case p => p }
+
+  test("lag grid: one daily aggregate feeds spine and leads, two scans") {
+    // the window's output (day + leads) is the spine, so events are
+    // scanned once for the daily aggregate and once for the hourly
+    // buckets, and no join meets a second copy of the daily side
+    LagGrid.grid.invalidate(spark, sf)
+    val nodes = nodesOf(LagGrid.gridPlan(spark, sf))
+    assert(nodes.count(_.isInstanceOf[FileSourceScanExec]) == 2,
+      nodes.map(_.nodeName))
+  }
+
+  test("34-metric block over the live fold runs the fold once") {
+    // every metric reads one pass over the fold output: one
+    // MapPartitions, and no nested-loop or cartesian join of blocks
+    val nodes = nodesOf(Backtest.fullMetricsOf(Backtest.run(spark, sf),
+      BacktestConfig.Default.initialCash))
+    assert(nodes.count(_.isInstanceOf[MapPartitionsExec]) == 1,
+      nodes.map(_.nodeName))
+    assert(!nodes.exists(n => n.isInstanceOf[BroadcastNestedLoopJoinExec] ||
+      n.isInstanceOf[CartesianProductExec]), nodes.map(_.nodeName))
   }
 
   test("signal pipeline broadcasts config, fact side stays keyed") {
