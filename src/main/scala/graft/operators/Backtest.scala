@@ -60,8 +60,6 @@ object BacktestConfig {
   */
 object Backtest {
 
-  private def r6(c: Column): Column = round(c, 6)
-
   /** Materialized-intermediate dump for the T7 metric blocks (the
     * D3SigDump pattern): the fold itself is the only non-SQL stage, so
     * the metric queries write its output here, read it back (both

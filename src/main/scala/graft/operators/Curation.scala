@@ -566,24 +566,8 @@ object Curation {
     // PIPE10: the DS21 closure chain + both temperature formulas,
     // decimal-pinned Z sums, r6'd q renders, one raw subtraction
     "pipe10_effective_mix" ->
-      """WITH RECURSIVE
-           docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-             FROM documents),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.5),
+      s"""WITH RECURSIVE
+           ${Dedup.pairsCtes("", "0.5")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
            reach AS (
@@ -633,21 +617,7 @@ object Curation {
              WHERE (da % 5 = 0) <> (db % 5 = 0)),
            cdocs AS (SELECT da AS doc_id FROM cross0
                      UNION SELECT db FROM cross0),
-           docs AS (
-             SELECT dd.doc_id,
-                    string_split_regex(lower(trim(dd.text)), '\\s+') AS t
-             FROM documents dd JOIN cdocs USING (doc_id)),
-           shg AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM shg GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM shg a JOIN shg b
-               ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
+           ${Dedup.interCtes(Dedup.cdocsTokens, "shg")},
            verified AS (
              SELECT c.da, c.db, c.est_jaccard,
                     round(CAST(coalesce(i.i, 0) AS DOUBLE) /
@@ -666,24 +636,8 @@ object Curation {
     // cells, the d26 degree/union cells, and the recursive closure —
     // the composed edge-audit export certified by one hash
     "pipe8_edge_audit" ->
-      """WITH RECURSIVE
-           docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-             FROM documents),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS MATERIALIZED (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.5),
+      s"""WITH RECURSIVE
+           ${Dedup.pairsCtes("", "0.5", pairsAs = "pairs AS MATERIALIZED")},
            dedges AS (SELECT da AS src, db AS dst FROM pairs
                       UNION ALL SELECT db AS src, da AS dst FROM pairs),
            deg AS (SELECT src AS v, count(*) AS deg FROM dedges
@@ -733,24 +687,8 @@ object Curation {
     // the two strategy rows aggregated — the component row's zero is
     // re-derived, not assumed
     "pipe9_split_contrast" ->
-      """WITH RECURSIVE
-           docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-             FROM documents),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS MATERIALIZED (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.5),
+      s"""WITH RECURSIVE
+           ${Dedup.pairsCtes("", "0.5", pairsAs = "pairs AS MATERIALIZED")},
            uedges AS (SELECT da AS src, db AS dst FROM pairs
                       UNION SELECT db AS src, da AS dst FROM pairs),
            reach AS (
@@ -807,23 +745,7 @@ object Curation {
                AND db IN (SELECT v FROM n${lvl}_$r))"""
         }.mkString(",\n           ")
       s"""WITH RECURSIVE
-           docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-             FROM documents),
-           sh0 AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh0 GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh0 a JOIN sh0 b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS MATERIALIZED (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.5),
+           ${Dedup.pairsCtes("", "0.5", pairsAs = "pairs AS MATERIALIZED", sh = "sh0")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
            reach AS (
@@ -883,24 +805,8 @@ object Curation {
     // split ladder, md5 interleave — one CTE chain, so the hash
     // match certifies the composed pipeline end to end
     "pipe6_dedup_mix" ->
-      """WITH RECURSIVE
-           docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-             FROM documents),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           prs AS (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.5),
+      s"""WITH RECURSIVE
+           ${Dedup.pairsCtes("", "0.5", pairsAs = "prs AS")},
            edges AS (SELECT da AS src, db AS dst FROM prs
                      UNION SELECT db AS src, da AS dst FROM prs),
            reach AS (

@@ -735,24 +735,8 @@ object DatasetOps {
     // closure (the d10b chain), then the identical weight algebra —
     // r6'd 1/|cluster| into a decimal-pinned sum, one division
     "ds21_dedup_weights" ->
-      """WITH RECURSIVE
-           docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-             FROM documents),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.5),
+      s"""WITH RECURSIVE
+           ${Dedup.pairsCtes("", "0.5")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
            reach AS (
@@ -833,23 +817,7 @@ object DatasetOps {
     // exhaustive corpus 0.5 graph + the ds1 md5 CASE per endpoint,
     // unordered split combination by least/greatest, BIGINT counts
     "ds22_leakage_audit" ->
-      """WITH docs AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-           FROM documents),
-         sh AS (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-                    generate_series(1, len(t) - 2),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-           FROM docs WHERE len(t) >= 3),
-         sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-         inter AS (
-           SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-           FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT da, db FROM inter
-           JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-           WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.5),
+      s"""WITH ${Dedup.pairsCtes("", "0.5")},
          sp AS (
            SELECT doc_id,
                   CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)
@@ -997,24 +965,8 @@ object DatasetOps {
          ORDER BY t.source""",
     // d10's recursive closure + the DS1 split CASE on the component id
     "ds13_cluster_split" ->
-      """WITH RECURSIVE
-           docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-             FROM documents WHERE doc_id < 100),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.02),
+      s"""WITH RECURSIVE
+           ${Dedup.pairsCtes(" WHERE doc_id < 100", "0.02")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
            reach AS (

@@ -30,8 +30,6 @@ import graft.Tables
   */
 object Dedup {
 
-  private def r6(c: Column): Column = round(c, 6)
-
   private val NumHashes = 32
   private val Bands = 8
   private val RowsPerBand = NumHashes / Bands
@@ -1314,27 +1312,48 @@ object Dedup {
     })
   )
 
-  /** Shared oracle CTE chain `docs → sh → sizes → inter → pairs`: the
-    * exhaustive exact-Jaccard 3-gram pair graph the graph-kernel
-    * oracles replay (docFilter scopes the demo slices, tau is the
-    * Jaccard threshold). Matches [[graft.operators.TextAnalysis
-    * .ngramJaccardPairs]] on slices and [[verifiedCorpusPairs]] on
-    * the corpus (where a hash match ALSO proves banded LSH recall). */
-  private def pairsCtes(docFilter: String, tau: String): String =
+  /** Shared oracle CTE chain `docs → sh → sizes → inter`: each doc's
+    * distinct word 3-grams (the CTE named `sh`), their count `sz`, and
+    * per doc pair da < db the count `i` of 3-grams they share. `docs`
+    * is the docs CTE's query: doc_id and its token list `t`. */
+  private[operators] def interCtes(docs: String, sh: String = "sh"): String =
     s"""docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-             FROM documents$docFilter),
-           sh AS (
+             $docs),
+           $sh AS (
              SELECT doc_id, unnest(list_distinct(list_transform(
                       generate_series(1, len(t) - 2),
                       i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
              FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
+           sizes AS (SELECT doc_id, count(*) AS sz FROM $sh GROUP BY 1),
            inter AS (
              SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS (
+             FROM $sh a JOIN $sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+             GROUP BY 1, 2)"""
+
+  /** The docs query over `documents` + docFilter: the whitespace tokens
+    * of each lower-cased, trimmed text. */
+  private[operators] def docTokens(docFilter: String): String =
+    s"""SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
+             FROM documents$docFilter"""
+
+  /** The docs query over the docs a `cdocs` CTE names. */
+  private[operators] val cdocsTokens: String =
+    """SELECT dd.doc_id,
+                    string_split_regex(lower(trim(dd.text)), '\s+') AS t
+             FROM documents dd JOIN cdocs USING (doc_id)"""
+
+  /** [[interCtes]] over `documents` + docFilter, then `pairs`: the
+    * exhaustive exact-Jaccard 3-gram pair graph the graph-kernel
+    * oracles replay (docFilter scopes the demo slices, tau is the
+    * Jaccard threshold; `pairsAs` heads the pairs CTE — its name, and
+    * AS MATERIALIZED where an oracle reads it many times). Matches
+    * [[graft.operators.TextAnalysis.ngramJaccardPairs]] on slices and
+    * [[verifiedCorpusPairs]] on the corpus (where a hash match ALSO
+    * proves banded LSH recall). */
+  private[operators] def pairsCtes(docFilter: String, tau: String,
+      pairsAs: String = "pairs AS", sh: String = "sh"): String =
+    s"""${interCtes(docTokens(docFilter), sh)},
+           $pairsAs (
              SELECT da, db FROM inter
              JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
              WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= $tau)"""
@@ -1463,21 +1482,7 @@ object Dedup {
       s"""WITH $d3CandCtes,
            cdocs AS (SELECT da AS doc_id FROM cand
                      UNION SELECT db FROM cand),
-           docs AS (
-             SELECT dd.doc_id,
-                    string_split_regex(lower(trim(dd.text)), '\\s+') AS t
-             FROM documents dd JOIN cdocs USING (doc_id)),
-           shg AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM shg GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM shg a JOIN shg b
-               ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2)
+           ${interCtes(cdocsTokens, "shg")}
          SELECT c.da, c.db, c.est_jaccard,
                 round(CAST(coalesce(i.i, 0) AS DOUBLE) /
                       (x.sz + y.sz - coalesce(i.i, 0)), 6) AS true_jaccard
@@ -1550,24 +1555,8 @@ object Dedup {
     // hash equality proves the engine's banded LSH path recalled
     // every exhaustive edge (verifiedCorpusPairs' contract)
     "d10_cc_corpus" ->
-      """WITH RECURSIVE
-           docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-             FROM documents),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.5),
+      s"""WITH RECURSIVE
+           ${pairsCtes("", "0.5")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
            reach AS (
@@ -1579,23 +1568,7 @@ object Dedup {
     // D12b: same exhaustive full-corpus pair graph at 0.5, then the
     // identical degree-ordered orientation + wedge-close arithmetic
     "d12_tri_corpus" ->
-      """WITH docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-             FROM documents),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.5),
+      s"""WITH ${pairsCtes("", "0.5")},
            deg AS (
              SELECT v, count(*) AS dg FROM (
                SELECT da AS v FROM pairs
@@ -1630,23 +1603,7 @@ object Dedup {
     // the banded LSH edge recall; the sequential-recompute spec
     // anchor stays as the third leg (DedupSpec).
     "d14_lpa_corpus" ->
-      s"""WITH docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-             FROM documents),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.5),
+      s"""WITH ${pairsCtes("", "0.5")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
            l0 AS (SELECT doc_id, doc_id AS label FROM documents),
@@ -1874,23 +1831,7 @@ object Dedup {
              WHERE da IN (SELECT v FROM n${lvl}_$r)
                AND db IN (SELECT v FROM n${lvl}_$r))"""
         }.mkString(",\n           ")
-      s"""WITH docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-             FROM documents),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS MATERIALIZED (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.5),
+      s"""WITH ${pairsCtes("", "0.5", pairsAs = "pairs AS MATERIALIZED")},
            ${peelCtes(2, 2, "pairs")},
            ${peelCtes(3, 3, "e2_8")},
            c1 AS (
@@ -1906,23 +1847,7 @@ object Dedup {
     // D23: exhaustive graph; 3 MATERIALIZED shell CTEs (distinct +
     // tuple NOT IN against nearer shells), the same fixed fold
     "d23_harmonic" ->
-      """WITH docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-             FROM documents),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS MATERIALIZED (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.5),
+      s"""WITH ${pairsCtes("", "0.5", pairsAs = "pairs AS MATERIALIZED")},
            r1 AS MATERIALIZED (
              SELECT DISTINCT v, u FROM (
                SELECT da AS v, db AS u FROM pairs
@@ -1956,23 +1881,7 @@ object Dedup {
     // D22: same exhaustive graph; Newman's r over directed edge
     // copies — integer sums, one division
     "d22_assortativity" ->
-      """WITH docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-             FROM documents),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.5),
+      s"""WITH ${pairsCtes("", "0.5")},
            deg AS (
              SELECT v, CAST(count(*) AS BIGINT) AS dg FROM (
                SELECT da AS v FROM pairs
@@ -2002,23 +1911,7 @@ object Dedup {
     // again proves the banded LSH graph recalled every exhaustive
     // edge before the coefficient arithmetic ran
     "d13_coeff_corpus" ->
-      """WITH docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-             FROM documents),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.5),
+      s"""WITH ${pairsCtes("", "0.5")},
            deg AS (
              SELECT v, count(*) AS dg FROM (
                SELECT da AS v FROM pairs
@@ -2053,23 +1946,7 @@ object Dedup {
     // same pair SQL (maxId 200, threshold 0.01), then the identical
     // degree-ordered orientation + wedge-close join as the query
     "d12_triangle_count" ->
-      """WITH docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-             FROM documents WHERE doc_id < 200),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.01),
+      s"""WITH ${pairsCtes(" WHERE doc_id < 200", "0.01")},
            deg AS (
              SELECT v, count(*) AS dg FROM (
                SELECT da AS v FROM pairs
@@ -2096,23 +1973,7 @@ object Dedup {
          GROUP BY 1 ORDER BY doc_id""",
     // d12's CTE chain + degree normalization; deg < 2 excluded
     "d13_clustering_coeff" ->
-      """WITH docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-             FROM documents WHERE doc_id < 200),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.01),
+      s"""WITH ${pairsCtes(" WHERE doc_id < 200", "0.01")},
            deg AS (
              SELECT v, count(*) AS dg FROM (
                SELECT da AS v FROM pairs
@@ -2148,24 +2009,8 @@ object Dedup {
     // transitive closure: reach(id, r) = every doc reachable from id,
     // canonical = min reachable
     "d10_dup_clusters" ->
-      """WITH RECURSIVE
-           docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-             FROM documents WHERE doc_id < 100),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.02),
+      s"""WITH RECURSIVE
+           ${pairsCtes(" WHERE doc_id < 100", "0.02")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
            reach AS (
@@ -2177,24 +2022,8 @@ object Dedup {
     // d10's recursive-CTE components extended with the longest-copy
     // pick — pure integer comparisons
     "d20_keep_best" ->
-      """WITH RECURSIVE
-           docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-             FROM documents WHERE doc_id < 100),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.02),
+      s"""WITH RECURSIVE
+           ${pairsCtes(" WHERE doc_id < 100", "0.02")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
            reach AS (

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -24,8 +24,6 @@ import graft.Tables
   * O(|events| × days_in_window) — linear in the fact table.
   */
 object IntervalJoins {
-
-  private def r6(c: Column): Column = round(c, 6)
 
   /** Distinct (user_id, day) spine — the trading-day calendar per key. */
   private def spine(s: SparkSession, d: String): DataFrame =
@@ -87,8 +85,7 @@ object IntervalJoins {
         .groupBy(session_window(col("ts"), "2 hours").as("w"),
           col("user_id"))
         .agg(count(lit(1)).as("n"),
-          round(sum(col("value").cast("decimal(24,10)")).cast("double") /
-            count(lit(1)), 6).as("avg_value"))
+          r6(pinnedMean(col("value"))).as("avg_value"))
         .select(col("user_id"), col("w.start").as("sess_start"),
           col("w.end").as("sess_end"), col("n"), col("avg_value"))
         .orderBy("user_id", "sess_start")),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -36,8 +36,6 @@ import graft.functions.StudentT
   * runs on O(days × keys × 20) rows. Nothing rescans.
   */
 object LagGrid {
-
-  private def r6(c: Column): Column = round(c, 6)
 
   private val Lookbacks = Seq(12, 24, 48, 72, 168)
   private val Leads = Seq(1, 2, 3, 5)
@@ -240,9 +238,11 @@ object LagGrid {
     })
   )
 
-  val oracles: Map[String, String] = Map(
-    "lag_grid_corr" ->
-      """WITH daily AS (
+  /** The lag-grid oracles' shared CTEs `daily → leads → fwd → lb →
+    * senti`: each (user, day)'s forward returns at the 4 leads and its
+    * trailing mean sentiment at the 5 lookbacks. */
+  private val gridCtes: String =
+    """daily AS (
            SELECT user_id, date_trunc('day', ts) AS day, avg(value) AS close
            FROM events GROUP BY 1, 2),
          leads AS (
@@ -268,7 +268,11 @@ object LagGrid {
            JOIN events e ON s.user_id = e.user_id
              AND e.ts >= s.day - to_hours(CAST(l.lookback_h AS BIGINT))
              AND e.ts <  s.day
-           GROUP BY 1, 2, 3)
+           GROUP BY 1, 2, 3)"""
+
+  val oracles: Map[String, String] = Map(
+    "lag_grid_corr" ->
+      s"""WITH $gridCtes
          SELECT f.user_id, s.lookback_h, f.lead_days,
                 round(corr(s.senti, f.fwd_ret), 6) AS r, count(*) AS n
          FROM senti s
@@ -276,33 +280,7 @@ object LagGrid {
          GROUP BY 1, 2, 3
          ORDER BY 1, 2, 3""",
     "lag_grid_best" ->
-      """WITH daily AS (
-           SELECT user_id, date_trunc('day', ts) AS day, avg(value) AS close
-           FROM events GROUP BY 1, 2),
-         leads AS (
-           SELECT user_id, day, close,
-                  lead(close, 1) OVER w AS l1, lead(close, 2) OVER w AS l2,
-                  lead(close, 3) OVER w AS l3, lead(close, 5) OVER w AS l5
-           FROM daily WINDOW w AS (PARTITION BY user_id ORDER BY day)),
-         fwd AS (
-           SELECT user_id, day, lead_days,
-                  fwd_close / nullif(close, 0) - 1 AS fwd_ret
-           FROM (
-             SELECT user_id, day, close, 1 AS lead_days, l1 AS fwd_close FROM leads
-             UNION ALL SELECT user_id, day, close, 2, l2 FROM leads
-             UNION ALL SELECT user_id, day, close, 3, l3 FROM leads
-             UNION ALL SELECT user_id, day, close, 5, l5 FROM leads)
-           WHERE fwd_close IS NOT NULL),
-         lb(lookback_h) AS (VALUES (12), (24), (48), (72), (168)),
-         senti AS (
-           SELECT s.user_id, s.day, l.lookback_h, avg(e.value) AS senti
-           FROM (SELECT DISTINCT user_id, date_trunc('day', ts) AS day
-                 FROM events) s
-           CROSS JOIN lb l
-           JOIN events e ON s.user_id = e.user_id
-             AND e.ts >= s.day - to_hours(CAST(l.lookback_h AS BIGINT))
-             AND e.ts <  s.day
-           GROUP BY 1, 2, 3),
+      s"""WITH $gridCtes,
          cells AS (
            SELECT f.user_id, s.lookback_h, f.lead_days,
                   corr(s.senti, f.fwd_ret) AS c, count(*) AS n

@@ -24,9 +24,6 @@ import graft.Tables
   */
 object Relational {
 
-  /** Round doubles for oracle-tolerant compare (BOTH sides round to 6). */
-  private def r6(c: Column): Column = round(c, 6)
-
   /** SQL7's bounded-walk depths — shared constants so the exactness
     * guards in DedupSpec assert against the SAME literal the SQL
     * interpolates (the bound is tested, not narrated): the walk is
@@ -303,8 +300,7 @@ object Relational {
           lit("2024-01-10 00:00:00").cast("timestamp"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
-          round(sum(col("value").cast("decimal(24,10)")).cast("double") /
-            count(lit(1)), 6).as("avg_value"))
+          r6(pinnedMean(col("value"))).as("avg_value"))
         .orderBy("event_type")),
 
     // J9: band join — classifying a fact column into a TINY table of
@@ -548,8 +544,7 @@ object Relational {
           date_format(date_trunc("day", col("ts")), "yyyy-MM-dd"))
         .rollup(col("event_type"), col("day"))
         .agg(count(lit(1)).as("n"),
-          round(sum(col("value").cast("decimal(24,10)")).cast("double") /
-            count(lit(1)), 6).as("avg_value"),
+          r6(pinnedMean(col("value"))).as("avg_value"),
           grouping(col("event_type")).as("g_et"),
           grouping(col("day")).as("g_day"))
         .select(
@@ -577,8 +572,7 @@ object Relational {
           when(col("value") > 100, lit("high")).otherwise(lit("low")))
         .cube(col("event_type"), col("day"), col("bucket"))
         .agg(count(lit(1)).as("n"),
-          round(sum(col("value").cast("decimal(24,10)")).cast("double") /
-            count(lit(1)), 6).as("avg_value"),
+          r6(pinnedMean(col("value"))).as("avg_value"),
           grouping_id().cast("long").as("gid"),
           grouping(col("event_type")).as("g_et"),
           grouping(col("day")).as("g_day"),
@@ -2698,24 +2692,8 @@ object Relational {
     // DuckDB recomputes the pairs in SQL, Spark's rCTE runs over the
     // oracle-checked d2-equivalent pair DataFrame
     "sql7_recursive_closure" ->
-      """WITH RECURSIVE
-           docs AS (
-             SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-             FROM documents WHERE doc_id < 100),
-           sh AS (
-             SELECT doc_id, unnest(list_distinct(list_transform(
-                      generate_series(1, len(t) - 2),
-                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-             FROM docs WHERE len(t) >= 3),
-           sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-           inter AS (
-             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-           pairs AS (
-             SELECT da, db FROM inter
-             JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
-             WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= 0.02),
+      s"""WITH RECURSIVE
+           ${Dedup.pairsCtes(" WHERE doc_id < 100", "0.02")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
            reach AS (

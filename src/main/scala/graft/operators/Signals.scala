@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -34,25 +34,6 @@ object SignalConfig {
 
 object Signals {
 
-  private def r6(c: Column): Column = round(c, 6)
-
-  /** Pearson r with DuckDB-corr NULL semantics: Spark's `corr`
-    * builtin THROWS on zero variance under ANSI (the documented
-    * corr-builtin residue of the StatsDegenerate ratchet — the throw
-    * lives inside Spark's own aggregate, so it can't be guarded from
-    * outside), which crashed every Signals query on a flat corpus
-    * (SignalsDegenerateSpec, round 13). covar_pop / (σ·σ) through
-    * try_divide is the same quantity, returns NULL on a constant
-    * series exactly like DuckDB's corr, and only its SIGN feeds the
-    * signal CASE. The when-gates replicate corr's pairwise deletion
-    * (each stddev sees only rows where the OTHER column is non-null). */
-  private def safeCorr: Column = {
-    val vv = when(col("k").isNotNull, col("value"))
-    val kk = when(col("value").isNotNull, col("k"))
-    try_divide(covar_pop(col("value"), col("k")),
-      stddev_pop(vv) * stddev_pop(kk))
-  }
-
   /** J5 config side: per-key correlation (sign drives the flip) —
     * shared by the P8 pipeline and the PIPE11/PIPE12 sweep. */
   private def keyConfig(s: SparkSession, d: String): DataFrame =
@@ -60,7 +41,7 @@ object Signals {
       .select(col("event_type"), col("value"),
         get_json_object(col("props"), "$.k").cast("double").as("k"))
       .groupBy(col("event_type"))
-      .agg(safeCorr.as("r"))
+      .agg(Stats.corrSafe(col("value"), col("k")).as("r"))
 
   /** The P5+P8+J5 pipeline under a given threshold config. */
   def pipeline(s: SparkSession, d: String,

@@ -32,8 +32,6 @@ import graft.Tables
   */
 object Similarity {
 
-  private def r6(c: Column): Column = round(c, 6)
-
   /** Σ aᵢ·bᵢ in index order (deterministic fp) — the codegen kernel;
     * DotProductSpec pins it to the HOF fold it replaced. */
   private def dot(a: Column, b: Column): Column =
@@ -824,10 +822,7 @@ object Similarity {
     // one z-vector.
     "sim10_subseq_match" -> ((s, d) => {
       val W = 8
-      val dly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("px"))
+      val dly = dailyMean(Tables.events(s, d), "px")
       val wins = dly.groupBy(col("event_type"))
         .agg(array_sort(collect_list(struct(col("day"), col("px"))))
           .as("sp"))

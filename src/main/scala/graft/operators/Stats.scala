@@ -23,18 +23,27 @@ import graft.functions.StudentT
   */
 object Stats {
 
-  private def r6(c: Column): Column = round(c, 6)
+  /** Range buckets of the A33/A35 two-level rank decomposition:
+    * values hash into this many equal-width ranges of [lo, hi], the
+    * within-bucket cumulatives run partitioned by bucket, and only the
+    * ≤B-row bucket-offset frame touches a single-partition window. */
+  private val RankBuckets = 1024
 
-  /** Shared A112/A113 spine: per distinct click/purchase value, the
-    * group tallies (k1, k2), the INCLUSIVE combined cumulatives
-    * (c1, c2) via the A33/A35 bucketed two-level decomposition (no
-    * global sort — per-bucket windows + a ≤B-row bucket-offset
-    * frame), the group sizes, and the scaled ECDF gap
-    * dd = n2·c1 − n1·c2 (exact BIGINT: F−G at that value times
-    * n1·n2). Everything downstream of this frame is integer
-    * arithmetic plus one final division. */
-  private def cvmSpine(s: SparkSession, d: String): DataFrame = {
-    val B = 1024
+  /** The range bucket of `value` in [lo, hi]. hi = lo (every value
+    * identical) would make the bin division 0/0 → NaN and poison the
+    * downstream int cast under ANSI; one bucket is also the RIGHT
+    * decomposition for a single distinct value (degenerate-fixture
+    * spec: StatsDegenerateSpec). */
+  private def rankBucket: Column =
+    when(col("hi") > col("lo"),
+      least(floor((col("value") - col("lo")) /
+        (col("hi") - col("lo")) * RankBuckets), lit(RankBuckets - 1)))
+      .otherwise(lit(0L)).cast("int")
+
+  /** The click (g1) and purchase values with their range bucket, and
+    * the bounds frame (lo, hi and the group sizes n1, n2) — the input
+    * of every two-sample rank test here. */
+  private def twoSample(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val ev = Tables.events(s, d)
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("value"), (col("event_type") === "click").as("g1"))
@@ -42,17 +51,20 @@ object Stats {
       max(col("value")).as("hi"),
       sum(when(col("g1"), 1L).otherwise(0L)).as("n1"),
       sum(when(!col("g1"), 1L).otherwise(0L)).as("n2"))
-    val perv = ev.crossJoin(broadcast(bounds))
-      // hi = lo (every value identical) would make the bin division
-      // 0/0 → NaN and poison the downstream int cast under ANSI; one
-      // bucket is also the RIGHT decomposition for a single distinct
-      // value (degenerate-fixture spec: StatsDegenerateSpec)
-      .withColumn("bucket",
-        when(col("hi") > col("lo"),
-          least(floor((col("value") - col("lo")) /
-            (col("hi") - col("lo")) * B), lit(B - 1)))
-          .otherwise(lit(0L)).cast("int"))
-      .groupBy(col("bucket"), col("value"))
+    (ev.crossJoin(broadcast(bounds)).withColumn("bucket", rankBucket),
+      bounds)
+  }
+
+  /** Shared A33/A112/A113 spine: per distinct click/purchase value, the
+    * group tallies (k1, k2), the INCLUSIVE combined cumulatives
+    * (c1, c2) via the bucketed two-level decomposition (no global
+    * sort), the group sizes, and the scaled ECDF gap
+    * dd = n2·c1 − n1·c2 (exact BIGINT: F−G at that value times
+    * n1·n2). Everything downstream of this frame is integer
+    * arithmetic plus one final division. Returns (spine, bounds). */
+  private def cvmSpine(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val (rows, bounds) = twoSample(s, d)
+    val perv = rows.groupBy(col("bucket"), col("value"))
       .agg(sum(when(col("g1"), 1L).otherwise(0L)).as("k1"),
         sum(when(!col("g1"), 1L).otherwise(0L)).as("k2"))
     val wIn = Window.partitionBy("bucket").orderBy("value")
@@ -64,14 +76,87 @@ object Stats {
       .withColumn("off1", coalesce(sum(col("b1")).over(wB), lit(0L)))
       .withColumn("off2", coalesce(sum(col("b2")).over(wB), lit(0L)))
       .select(col("bucket"), col("off1"), col("off2"))
-    perv
+    (perv
       .withColumn("c1in", sum(col("k1")).over(wIn))
       .withColumn("c2in", sum(col("k2")).over(wIn))
       .join(offs, Seq("bucket"))
       .crossJoin(broadcast(bounds.select(col("n1"), col("n2"))))
       .withColumn("c1", col("off1") + col("c1in"))
       .withColumn("c2", col("off2") + col("c2in"))
-      .withColumn("dd", col("n2") * col("c1") - col("n1") * col("c2"))
+      .withColumn("dd", col("n2") * col("c1") - col("n1") * col("c2")),
+      bounds)
+  }
+
+  /** Shared A35/A97/A111 spine: per distinct click/purchase value, the
+    * click tally k1, the pooled tally k, and the pooled count strictly
+    * below it as off (earlier buckets) + cin (earlier values in the
+    * bucket), so its midrank is off + cin + (k+1)/2 — an exact
+    * half-integer. Returns (spine, bounds). */
+  private def midrankSpine(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val (rows, bounds) = twoSample(s, d)
+    val perv = rows.groupBy(col("bucket"), col("value"))
+      .agg(sum(when(col("g1"), 1L).otherwise(0L)).as("k1"),
+        count(lit(1)).as("k"))
+    val wIn = Window.partitionBy("bucket").orderBy("value")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val wB = Window.orderBy("bucket")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offs = perv.groupBy("bucket").agg(sum(col("k")).as("bk"))
+      .withColumn("off", coalesce(sum(col("bk")).over(wB), lit(0L)))
+      .select(col("bucket"), col("off"))
+    (perv
+      .withColumn("cin", coalesce(sum(col("k")).over(wIn), lit(0L)))
+      .join(offs, Seq("bucket")), bounds)
+  }
+
+  /** The A81/A85/A86/A118 trend panel: the pinned daily mean y per
+    * (event_type, day) and its integer day index x. */
+  private def trendPanel(s: SparkSession, d: String): DataFrame =
+    dailyMean(Tables.events(s, d), "y")
+      .withColumn("x", datediff(col("day"), lit("2024-01-01"))
+        .cast("long"))
+
+  /** OLS co-moments of y on x over the trend panel: exact BIGINT x
+    * sums, and y/xy sums pinned through DECIMAL and rendered once, so
+    * every fit downstream is one fixed IEEE chain on identical
+    * scalars. */
+  private def trendSums: Seq[Column] = Seq(count(lit(1)).as("n"),
+    sum(col("x")).as("sx"),
+    sum(col("x") * col("x")).as("sxx"),
+    sum(col("y").cast("decimal(24,10)")).cast("double").as("sy"),
+    sum((col("x") * col("y")).cast("decimal(28,8)")).cast("double")
+      .as("sxy"))
+
+  /** The per-type OLS line of the trend panel: its co-moments plus
+    * slope `beta` and intercept `alpha`. */
+  private def trendFit(panel: DataFrame): DataFrame =
+    panel.groupBy(col("event_type"))
+      .agg(trendSums.head, trendSums.tail: _*)
+      .withColumn("beta",
+        (col("n") * col("sxy") - col("sx") * col("sy")) /
+          (col("n") * col("sxx") - col("sx") * col("sx")).cast("double"))
+      .withColumn("alpha",
+        (col("sy") - col("beta") * col("sx")) / col("n"))
+
+  /** The A87/A108 blocked-rank frame: the pinned (day, type) mean y,
+    * the type count k, and per COMPLETE day (all k types present) each
+    * type's midrank r = rank + (ties−1)/2 among that day's means — an
+    * exact half-integer, so every sum over it is exact. The cell keeps
+    * its (day, type) key order, which sets the plan's exchange. */
+  private def friedmanRanks(s: SparkSession, d: String): DataFrame = {
+    val cell = Tables.events(s, d)
+      .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
+      .agg(pinnedMean(col("value")).as("y"))
+    val k = cell.select(countDistinct(col("event_type")).as("k"))
+    val wDay = Window.partitionBy("day")
+    cell.crossJoin(broadcast(k))
+      .withColumn("n_in_day", count(lit(1)).over(wDay))
+      .filter(col("n_in_day") === col("k"))
+      .withColumn("rnk", rank().over(wDay.orderBy("y")))
+      .withColumn("ct", count(lit(1)).over(
+        Window.partitionBy("day", "y")))
+      .withColumn("r", col("rnk") +
+        (col("ct") - 1).cast("double") / 2)
   }
 
   /** Daily avg value per event_type — the shared grid input. */
@@ -130,10 +215,7 @@ object Stats {
     * the persist overhead is nil. */
   private[graft] val mkBase = graft.MaterializedTable(
       "a55_base_build")((s, d) => {
-    val dly = Tables.events(s, d)
-      .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-      .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-        count(lit(1))).as("y"))
+    val dly = dailyMean(Tables.events(s, d), "y")
       .withColumn("x",
         datediff(col("day"), lit("2024-01-01")).cast("double"))
       .select(col("event_type"), col("x"), col("y"))
@@ -345,10 +427,7 @@ object Stats {
     // Output one row per event_type (plus per-k diagnostics rows
     // would be the drill-down; the slope is the decision value).
     "a51_hurst_rs" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("v"))
+      val daily = dailyMean(Tables.events(s, d), "v")
         .withColumn("rn", row_number().over(
           Window.partitionBy("event_type").orderBy("day")) - 1)
       val ks = Seq(4, 8, 16)
@@ -455,10 +534,7 @@ object Stats {
     // sums; the subtraction/comparison chain is elementwise IEEE;
     // fully oracle-checked.
     "a49_cusum_drift" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("v"))
+      val daily = dailyMean(Tables.events(s, d), "v")
       def dmean(c: Column) =
         sum(c.cast("decimal(30,12)")).cast("double") / count(lit(1))
       val target = daily.groupBy("event_type")
@@ -644,10 +720,7 @@ object Stats {
     // positively-autocorrelated series needs. Fully oracle-checked.
     "a64_newey_west" -> ((s, d) => {
       val L = 5
-      val dly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
+      val dly = dailyMean(Tables.events(s, d), "y")
       val mu = dly.groupBy(col("event_type"))
         .agg((sum(col("y").cast("decimal(24,10)")).cast("double") /
           count(lit(1))).as("mu"))
@@ -803,35 +876,8 @@ object Stats {
     // chain over identical doubles → z is raw-double oracle-checked.
     // (Asymptotic z without continuity correction; the p twin below.)
     "a35_mannwhitney" -> ((s, d) => {
-      val B = 1024
-      val ev = Tables.events(s, d)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("value"), (col("event_type") === "click").as("g1"))
-      val bounds = ev.agg(min(col("value")).as("lo"),
-        max(col("value")).as("hi"),
-        sum(when(col("g1"), 1L).otherwise(0L)).as("n1"),
-        sum(when(!col("g1"), 1L).otherwise(0L)).as("n2"))
-      val perv = ev.crossJoin(broadcast(bounds))
-        // hi = lo -> one bucket (the cvmSpine degenerate-range guard;
-        // ratchet spec)
-        .withColumn("bucket",
-          when(col("hi") > col("lo"),
-            least(floor((col("value") - col("lo")) /
-              (col("hi") - col("lo")) * B), lit(B - 1)))
-            .otherwise(lit(0L)).cast("int"))
-        .groupBy(col("bucket"), col("value"))
-        .agg(sum(when(col("g1"), 1L).otherwise(0L)).as("k1"),
-          count(lit(1)).as("k"))
-      val wIn = Window.partitionBy("bucket").orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val wB = Window.orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offs = perv.groupBy("bucket").agg(sum(col("k")).as("bk"))
-        .withColumn("off", coalesce(sum(col("bk")).over(wB), lit(0L)))
-        .select(col("bucket"), col("off"))
-      val ranked = perv
-        .withColumn("cin", coalesce(sum(col("k")).over(wIn), lit(0L)))
-        .join(offs, Seq("bucket"))
+      val (spine, bounds) = midrankSpine(s, d)
+      val ranked = spine
         .withColumn("midrank",
           (col("off") + col("cin")).cast("double") +
             (col("k") + 1).cast("double") / 2.0)
@@ -878,10 +924,7 @@ object Stats {
     // absorbs the engines' different moment-update orders (A2's
     // contract). DuckDB's regr_* family matches definitionally.
     "a34_ols_trend" -> ((s, d) => {
-      val dly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
+      val dly = dailyMean(Tables.events(s, d), "y")
         .withColumn("x",
           datediff(col("day"), lit("2024-01-01")).cast("double"))
       dly.groupBy(col("event_type"))
@@ -904,10 +947,7 @@ object Stats {
     // median via the same interpolating percentile a17 proves;
     // intercept = median(y − slope·x). Fully oracle-checked.
     "a54_theil_sen" -> ((s, d) => {
-      val dly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
+      val dly = dailyMean(Tables.events(s, d), "y")
         .withColumn("x",
           datediff(col("day"), lit("2024-01-01")).cast("double"))
         .select(col("event_type"), col("x"), col("y"))
@@ -965,11 +1005,8 @@ object Stats {
     // pairs, never corpus-sized — the small side broadcast). Fully
     // oracle-checked.
     "a66_rank_corr" -> ((s, d) => {
-      val dly = Tables.events(s, d)
-        .filter(col("event_type").isin("click", "purchase"))
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
+      val dly = dailyMean(Tables.events(s, d)
+        .filter(col("event_type").isin("click", "purchase")), "y")
       val j = dly.filter(col("event_type") === "click")
         .select(col("day"), col("y").as("xc"))
         .join(dly.filter(col("event_type") === "purchase")
@@ -1009,10 +1046,7 @@ object Stats {
     "a56_bootstrap_ci" -> ((s, d) => {
       val B = 200
       val w = Window.partitionBy("event_type").orderBy("day")
-      val dly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
+      val dly = dailyMean(Tables.events(s, d), "y")
         .withColumn("idx", row_number().over(w) - 1)
       val n = dly.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
       val draws = n
@@ -1053,11 +1087,8 @@ object Stats {
     "a57_permutation_test" -> ((s, d) => {
       val B = 200
       val w = Window.partitionBy("event_type").orderBy("day")
-      val el = Tables.events(s, d)
-        .filter(col("event_type").isin("click", "purchase"))
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
+      val el = dailyMean(Tables.events(s, d)
+        .filter(col("event_type").isin("click", "purchase")), "y")
         .withColumn("eid", concat_ws(":", col("event_type"),
           (row_number().over(w) - 1)))
         .select(col("eid"), col("event_type").as("g"), col("y"))
@@ -1112,10 +1143,7 @@ object Stats {
     "a58_seasonal_decomp" -> ((s, d) => {
       val w = Window.partitionBy("event_type").orderBy("day")
         .rowsBetween(-3, 3)
-      val dly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
+      val dly = dailyMean(Tables.events(s, d), "y")
       val tr = dly
         .withColumn("trend",
           when(count(lit(1)).over(w) === 7,
@@ -1203,10 +1231,7 @@ object Stats {
     // sums decimal-exact. Fully oracle-checked.
     "a61_var_cvar" -> ((s, d) => {
       val wl = Window.partitionBy("event_type").orderBy("day")
-      val rets = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
+      val rets = dailyMean(Tables.events(s, d), "y")
         .withColumn("prev", lag(col("y"), 1).over(wl))
         .filter(col("prev").isNotNull && col("prev") =!= 0.0)
         .withColumn("r", (col("y") - col("prev")) / col("prev"))
@@ -1267,41 +1292,10 @@ object Stats {
     // in pinned left-assoc order) differs only by libm exp ulps →
     // round6, same as TXT11's ln discipline.
     "a33_ks_test" -> ((s, d) => {
-      val B = 1024
-      val ev = Tables.events(s, d)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("value"), (col("event_type") === "click").as("g1"))
-      val bounds = ev.agg(min(col("value")).as("lo"),
-        max(col("value")).as("hi"),
-        sum(when(col("g1"), 1L).otherwise(0L)).as("n1"),
-        sum(when(!col("g1"), 1L).otherwise(0L)).as("n2"))
-      val perv = ev.crossJoin(broadcast(bounds))
-        // hi = lo -> one bucket (the cvmSpine degenerate-range guard;
-        // ratchet spec)
-        .withColumn("bucket",
-          when(col("hi") > col("lo"),
-            least(floor((col("value") - col("lo")) /
-              (col("hi") - col("lo")) * B), lit(B - 1)))
-            .otherwise(lit(0L)).cast("int"))
-        .groupBy(col("bucket"), col("value"))
-        .agg(sum(when(col("g1"), 1L).otherwise(0L)).as("k1"),
-          sum(when(!col("g1"), 1L).otherwise(0L)).as("k2"))
-      val wIn = Window.partitionBy("bucket").orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val inB = perv
-        .withColumn("c1in", sum(col("k1")).over(wIn))
-        .withColumn("c2in", sum(col("k2")).over(wIn))
-      val wB = Window.orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offs = perv.groupBy("bucket")
-        .agg(sum(col("k1")).as("b1"), sum(col("k2")).as("b2"))
-        .withColumn("off1", coalesce(sum(col("b1")).over(wB), lit(0L)))
-        .withColumn("off2", coalesce(sum(col("b2")).over(wB), lit(0L)))
-        .select(col("bucket"), col("off1"), col("off2"))
-      val d0 = inB.join(offs, Seq("bucket"))
-        .crossJoin(broadcast(bounds.select(col("n1"), col("n2"))))
-        .select(abs((col("off1") + col("c1in")).cast("double") / col("n1") -
-          (col("off2") + col("c2in")).cast("double") / col("n2")).as("diff"))
+      val (spine, bounds) = cvmSpine(s, d)
+      val d0 = spine
+        .select(abs(col("c1").cast("double") / col("n1") -
+          col("c2").cast("double") / col("n2")).as("diff"))
         .agg(max(col("diff")).as("ks_d"))
       val lamC = col("ks_d") *
         sqrt((col("n1") * col("n2")).cast("double") / (col("n1") + col("n2")))
@@ -1464,10 +1458,7 @@ object Stats {
     // frame; K widens columns, never rows.
     "a40_acf" -> ((s, d) => {
       val K = 5
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("px"))
+      val daily = dailyMean(Tables.events(s, d), "px")
       val wT = Window.partitionBy("event_type").orderBy("day")
       val lagged = (1 to K).foldLeft(daily)((df, j) =>
         df.withColumn(s"l$j", lag(col("px"), j).over(wT)))
@@ -1503,8 +1494,7 @@ object Stats {
         .filter(col("rn") > col("k") && col("rn") <= col("n") - col("k"))
         .groupBy(col("event_type"))
         .agg(max(col("n")).as("n_total"), count(lit(1)).as("n_kept"),
-          r6(sum(col("value").cast("decimal(24,10)")).cast("double") /
-            count(lit(1))).as("trimmed_mean"))
+          r6(pinnedMean(col("value"))).as("trimmed_mean"))
         .orderBy("event_type")
     }),
 
@@ -1665,10 +1655,7 @@ object Stats {
     // Scale: one corpus-sized daily hash agg; ranking and the erfc
     // chain run on the O(types × days) frame.
     "a121_lilliefors" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("v"))
+      val daily = dailyMean(Tables.events(s, d), "v")
       def dsum(c: Column) = sum(c.cast("decimal(30,12)")).cast("double")
       val fit = daily.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("v")).as("s1"),
@@ -1752,10 +1739,7 @@ object Stats {
     // final sum has one deterministic association order.
     "a68_ljung_box" -> ((s, d) => {
       val K = 4
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("px"))
+      val daily = dailyMean(Tables.events(s, d), "px")
       val wT = Window.partitionBy("event_type").orderBy("day")
       val lagged = (1 to K).foldLeft(daily)((df, j) =>
         df.withColumn(s"l$j", lag(col("px"), j).over(wT)))
@@ -1826,8 +1810,7 @@ object Stats {
     "a42_weekly_seasonality" -> ((s, d) => {
       val daily = Tables.events(s, d)
         .groupBy(date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("v"))
+        .agg(pinnedMean(col("value")).as("v"))
       def dmean(c: Column) =
         sum(c.cast("decimal(30,12)")).cast("double") / count(lit(1))
       val byDow = daily
@@ -2272,10 +2255,7 @@ object Stats {
     // (same frame both engines). Fully oracle-checked.
     "a80_mase" -> ((s, d) => {
       val wd = Window.partitionBy("event_type").orderBy("day")
-      Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("v"))
+      dailyMean(Tables.events(s, d), "v")
         .withColumn("l7", lag(col("v"), 7).over(wd))
         .withColumn("l1", lag(col("v"), 1).over(wd))
         .filter(col("l7").isNotNull && col("l1").isNotNull)
@@ -2312,24 +2292,8 @@ object Stats {
     // frame (the a73 argument), one broadcast of the per-type
     // coefficients back onto it. Fully oracle-checked.
     "a81_durbin_watson" -> ((s, d) => {
-      val dly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
-        .withColumn("x", datediff(col("day"), lit("2024-01-01"))
-          .cast("long"))
-      val co = dly.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("x")).as("sx"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("y").cast("decimal(24,10)")).cast("double").as("sy"),
-          sum((col("x") * col("y")).cast("decimal(28,8)")).cast("double")
-            .as("sxy"))
-        .withColumn("beta",
-          (col("n") * col("sxy") - col("sx") * col("sy")) /
-            (col("n") * col("sxx") - col("sx") * col("sx")).cast("double"))
-        .withColumn("alpha",
-          (col("sy") - col("beta") * col("sx")) / col("n"))
+      val dly = trendPanel(s, d)
+      val co = trendFit(dly)
         .select(col("event_type"), col("n"), col("beta"), col("alpha"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       dly.join(broadcast(co), Seq("event_type"))
@@ -2364,10 +2328,7 @@ object Stats {
     // frame. Fully oracle-checked.
     "a82_dickey_fuller" -> ((s, d) => {
       val wd = Window.partitionBy("event_type").orderBy("day")
-      val dly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
+      val dly = dailyMean(Tables.events(s, d), "y")
         .withColumn("xl", lag(col("y"), 1).over(wd))
         .filter(col("xl").isNotNull)
         .withColumn("dy", col("y") - col("xl"))
@@ -2425,10 +2386,7 @@ object Stats {
     // (r6 absorbs the interpolation ulp — the a54 contract). Fully
     // oracle-checked.
     "a83_hodges_lehmann" -> ((s, d) => {
-      val dly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
+      val dly = dailyMean(Tables.events(s, d), "y")
       val a = dly.select(col("event_type"), col("day").as("d1"),
         col("y").as("y1"))
       val b = dly.select(col("event_type"), col("day").as("d2"),
@@ -2473,10 +2431,7 @@ object Stats {
     // n_days column lets a reader re-look-up any other n). Zero-range
     // series drop by an exact comparison.
     "a116_dixon_q" -> ((s, d) => {
-      val dly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
+      val dly = dailyMean(Tables.events(s, d), "y")
       val asc = Window.partitionBy("event_type")
         .orderBy(col("y").asc, col("day").asc)
       val desc = Window.partitionBy("event_type")
@@ -2542,13 +2497,11 @@ object Stats {
     // Degenerate guards (ANSI): a flat panel (SSR₁+SSR₂ = 0), a
     // segment with < 3 days, or n ≤ 4 → NULL F.
     "a118_chow" -> ((s, d) => {
-      val dly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
-        .withColumn("x", datediff(col("day"), lit("2024-01-01"))
-          .cast("long"))
+      val dly = trendPanel(s, d)
         .withColumn("seg", when(col("x") < 15, 1L).otherwise(2L))
+      def sums = trendSums :+
+        sum((col("y") * col("y")).cast("decimal(28,8)")).cast("double")
+          .as("syy")
       def ssrOf(grouped: DataFrame): DataFrame = grouped
         .withColumn("sxxc",
           col("sxx").cast("double") -
@@ -2561,13 +2514,7 @@ object Stats {
               (col("sxy") - col("sx").cast("double") * col("sy") /
                 col("n")) / col("sxxc")))
       val segs = ssrOf(dly.groupBy(col("event_type"), col("seg"))
-        .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("y").cast("decimal(24,10)")).cast("double").as("sy"),
-          sum((col("x") * col("y")).cast("decimal(28,8)")).cast("double")
-            .as("sxy"),
-          sum((col("y") * col("y")).cast("decimal(28,8)")).cast("double")
-            .as("syy")))
+        .agg(sums.head, sums.tail: _*))
         .groupBy(col("event_type"))
         .agg(sum(col("n")).as("n_check"),
           min(col("n")).as("n_min"),
@@ -2576,13 +2523,7 @@ object Stats {
           max(when(col("seg") === 1L, col("ssr"))).as("ssr_1"),
           max(when(col("seg") === 2L, col("ssr"))).as("ssr_2"))
       val pooled = ssrOf(dly.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("y").cast("decimal(24,10)")).cast("double").as("sy"),
-          sum((col("x") * col("y")).cast("decimal(28,8)")).cast("double")
-            .as("sxy"),
-          sum((col("y") * col("y")).cast("decimal(28,8)")).cast("double")
-            .as("syy")))
+        .agg(sums.head, sums.tail: _*))
         .select(col("event_type"), col("n"), col("ssr").as("ssr_pooled"))
       pooled.join(segs, Seq("event_type"))
         .select(col("event_type"), col("n"), col("n1"), col("n2"),
@@ -2597,10 +2538,7 @@ object Stats {
     }),
 
     "a117_two_way_anova" -> ((s, d) => {
-      val dly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
+      val dly = dailyMean(Tables.events(s, d), "y")
       val d0 = dly.agg(min(col("day")).as("d0"))
       val panel = dly.crossJoin(broadcast(d0))
         .withColumn("phase",
@@ -2657,10 +2595,7 @@ object Stats {
     }),
 
     "a84_grubbs" -> ((s, d) => {
-      val dly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
+      val dly = dailyMean(Tables.events(s, d), "y")
       val mo = dly.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_days"),
           sum(col("y").cast("decimal(24,10)")).cast("double").as("s1"),
@@ -2698,24 +2633,8 @@ object Stats {
     // comparison. One corpus pass to daily means; diagnostics live on
     // the date-bounded frame. Fully oracle-checked.
     "a85_cooks_distance" -> ((s, d) => {
-      val dly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
-        .withColumn("x", datediff(col("day"), lit("2024-01-01"))
-          .cast("long"))
-      val co = dly.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("x")).as("sx"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("y").cast("decimal(24,10)")).cast("double").as("sy"),
-          sum((col("x") * col("y")).cast("decimal(28,8)")).cast("double")
-            .as("sxy"))
-        .withColumn("beta",
-          (col("n") * col("sxy") - col("sx") * col("sy")) /
-            (col("n") * col("sxx") - col("sx") * col("sx")).cast("double"))
-        .withColumn("alpha",
-          (col("sy") - col("beta") * col("sx")) / col("n"))
+      val dly = trendPanel(s, d)
+      val co = trendFit(dly)
         .withColumn("xbar", col("sx").cast("double") / col("n"))
         .withColumn("sxx_c",
           col("sxx").cast("double") -
@@ -2757,24 +2676,8 @@ object Stats {
     // IEEE — RAW. The χ² p twin rides the golden-tested gamma-Q
     // kernel (rows-only, A41's contract). Fully oracle-checked.
     "a86_breusch_pagan" -> ((s, d) => {
-      val dly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
-        .withColumn("x", datediff(col("day"), lit("2024-01-01"))
-          .cast("long"))
-      val co = dly.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("x")).as("sx"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("y").cast("decimal(24,10)")).cast("double").as("sy"),
-          sum((col("x") * col("y")).cast("decimal(28,8)")).cast("double")
-            .as("sxy"))
-        .withColumn("beta",
-          (col("n") * col("sxy") - col("sx") * col("sy")) /
-            (col("n") * col("sxx") - col("sx") * col("sx")).cast("double"))
-        .withColumn("alpha",
-          (col("sy") - col("beta") * col("sx")) / col("n"))
+      val dly = trendPanel(s, d)
+      val co = trendFit(dly)
         .select(col("event_type"), col("n"), col("sx"), col("sxx"),
           col("beta"), col("alpha"))
       dly.join(broadcast(co), Seq("event_type"))
@@ -2837,20 +2740,7 @@ object Stats {
     // ranks are per-day windows over ≤k rows; everything after lives
     // on the k-row frame. Fully oracle-checked.
     "a87_friedman" -> ((s, d) => {
-      val cell = Tables.events(s, d)
-        .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
-      val k = cell.select(countDistinct(col("event_type")).as("k"))
-      val wDay = Window.partitionBy("day")
-      val ranked = cell.crossJoin(broadcast(k))
-        .withColumn("n_in_day", count(lit(1)).over(wDay))
-        .filter(col("n_in_day") === col("k"))
-        .withColumn("rnk", rank().over(wDay.orderBy("y")))
-        .withColumn("ct", count(lit(1)).over(
-          Window.partitionBy("day", "y")))
-        .withColumn("r", col("rnk") +
-          (col("ct") - 1).cast("double") / 2)
+      val ranked = friedmanRanks(s, d)
       val perType = ranked.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_days"),
           sum(col("r")).as("rank_sum"),
@@ -2911,8 +2801,7 @@ object Stats {
         .withColumn("qty",
           get_json_object(col("props"), "$.k").cast("long"))
         .groupBy(col("event_type"), col("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("x"), sum(col("qty")).as("y"))
+        .agg(pinnedMean(col("value")).as("x"), sum(col("qty")).as("y"))
         .withColumn("z",
           datediff(col("day"), lit("2024-01-01").cast("date"))
             .cast("long"))
@@ -3081,10 +2970,7 @@ object Stats {
     "a77_page_hinkley" -> ((s, d) => {
       val wd = Window.partitionBy("event_type").orderBy("day")
       val wc = wd.rowsBetween(Window.unboundedPreceding, 0)
-      Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("v"))
+      dailyMean(Tables.events(s, d), "v")
         .withColumn("rn", row_number().over(wd).cast("long"))
         .withColumn("runsum",
           sum(col("v").cast("decimal(30,12)")).over(wc).cast("double"))
@@ -3230,15 +3116,8 @@ object Stats {
     // hash-match with no pins. Scale: candle hash-agg + one keyed
     // window + a group-cardinality broadcast of the medians.
     "a90_runs_test" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
-      val closes = Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      val closes = candles(s, d)
       val med = closes.groupBy("event_type")
         .agg(expr("percentile(close, 0.5)").as("med"))
       closes.join(broadcast(med), Seq("event_type"))
@@ -3274,15 +3153,8 @@ object Stats {
     // division from integers. Everything is hash-agg sized by
     // k·days; the two 1-row total frames cross-join for free.
     "a91_cochran_q" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
-      val flags = Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      val flags = candles(s, d)
         .withColumn("prev", lag(col("close"), 1).over(wd))
         .filter(col("prev").isNotNull)
         .withColumn("x", (col("close") > col("prev")).cast("long"))
@@ -3323,18 +3195,8 @@ object Stats {
     // nothing to pin. Types with b+c = 0 are excluded (the statistic
     // is 0/0). One candle shuffle + per-type lag + one hash agg.
     "a92_mcnemar" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("qty",
-          get_json_object(col("props"), "$.k").cast("long"))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(when(col("rn") === col("cnt"), col("value"))).as("close"),
-          sum(col("qty")).as("vol"))
+      candles(s, d)
         .withColumn("pc", lag(col("close"), 1).over(wd))
         .withColumn("pv", lag(col("vol"), 1).over(wd))
         .filter(col("pc").isNotNull)
@@ -3372,18 +3234,8 @@ object Stats {
     // raw doubles, fully hash-checked. Single-day strata drop (V
     // undefined at n = 1); ΣV = 0 → NULL (the ANSI guard).
     "a119_cmh" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
-      val strata = Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("qty",
-          get_json_object(col("props"), "$.k").cast("long"))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(when(col("rn") === col("cnt"), col("value"))).as("close"),
-          sum(col("qty")).as("vol"))
+      val strata = candles(s, d)
         .withColumn("pc", lag(col("close"), 1).over(wd))
         .withColumn("pv", lag(col("vol"), 1).over(wd))
         .filter(col("pc").isNotNull)
@@ -3429,18 +3281,8 @@ object Stats {
     // while or/rr stay raw. Types with any empty cell are excluded
     // (the statistic is undefined, and ANSI division would throw).
     "a102_odds_ratio" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("qty",
-          get_json_object(col("props"), "$.k").cast("long"))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(when(col("rn") === col("cnt"), col("value"))).as("close"),
-          sum(col("qty")).as("vol"))
+      candles(s, d)
         .withColumn("pc", lag(col("close"), 1).over(wd))
         .withColumn("pv", lag(col("vol"), 1).over(wd))
         .filter(col("pc").isNotNull)
@@ -3524,10 +3366,7 @@ object Stats {
     // then two aggregations over O(types×days) rows — nothing
     // corpus-sized past the first exchange.
     "a104_cronbach_alpha" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("v"))
+      val daily = dailyMean(Tables.events(s, d), "v")
       val itemVar = daily.groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum(col("v").cast("decimal(24,10)")).cast("double").as("s1"),
@@ -3570,10 +3409,7 @@ object Stats {
     // emission. Scale: one (type, day) hash agg, then three small
     // aggs over O(k×n) rows.
     "a105_icc" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("v"))
+      val daily = dailyMean(Tables.events(s, d), "v")
       val g = daily.agg(count(lit(1)).as("nk"),
         sum(col("v").cast("decimal(24,10)")).cast("double").as("s"),
         sum((col("v") * col("v")).cast("decimal(30,10)")).cast("double")
@@ -3664,10 +3500,7 @@ object Stats {
     // r6 only at emission. Scale: a per-type day-pair join, ≤ days²
     // rows per type (A54's bound), then ≤ days-row medians.
     "a107_siegel_slopes" -> ((s, d) => {
-      val dly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
+      val dly = dailyMean(Tables.events(s, d), "y")
         .withColumn("x",
           datediff(col("day"), lit("2024-01-01")).cast("double"))
         .select(col("event_type"), col("x"), col("y"))
@@ -3704,20 +3537,7 @@ object Stats {
     // standard tie-uncorrected normal form, one fixed IEEE chain on
     // exact integers. Complete blocks only (A87's gate).
     "a108_page_trend" -> ((s, d) => {
-      val cell = Tables.events(s, d)
-        .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
-      val k = cell.select(countDistinct(col("event_type")).as("k"))
-      val wDay = Window.partitionBy("day")
-      val ranked = cell.crossJoin(broadcast(k))
-        .withColumn("n_in_day", count(lit(1)).over(wDay))
-        .filter(col("n_in_day") === col("k"))
-        .withColumn("rnk", rank().over(wDay.orderBy("y")))
-        .withColumn("ct", count(lit(1)).over(
-          Window.partitionBy("day", "y")))
-        .withColumn("r", col("rnk") +
-          (col("ct") - 1).cast("double") / 2)
+      val ranked = friedmanRanks(s, d)
       val perType = ranked.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_days"),
           sum(col("r")).as("rank_sum"), max(col("k")).as("k"))
@@ -3749,7 +3569,6 @@ object Stats {
     // by the pair) — no global sequential window, no pair join over
     // rows; the per-value frame is |distinct values|·(k−1) rows.
     "a109_jonckheere" -> ((s, d) => {
-      val B = 1024
       val ev = Tables.events(s, d).filter(col("value").isNotNull)
         .select(col("event_type"), col("value"))
       // ONE corpus pass (round 14, guide §2.4/§5): vc is checkpointed
@@ -3779,12 +3598,7 @@ object Stats {
         .groupBy(col("g"), col("h"), col("value"))
         .agg(sum(col("cg")).as("kg"), sum(col("ch")).as("kh"))
         .crossJoin(broadcast(rng))
-        // lo = hi → one bucket (the cvmSpine degenerate-range guard)
-        .withColumn("bucket",
-          when(col("hi") > col("lo"),
-            least(floor((col("value") - col("lo")) /
-              (col("hi") - col("lo")) * B), lit(B - 1)))
-            .otherwise(lit(0L)).cast("int"))
+        .withColumn("bucket", rankBucket)
         .withColumn("k", col("kg") + col("kh"))
         // perv feeds BOTH offs and ranked (different column prunings,
         // so exchange reuse never fires) — one checkpoint, one pass
@@ -3835,10 +3649,7 @@ object Stats {
     // frame (the A108 allowlisted shape).
     "a110_cochran_armitage" -> ((s, d) => {
       val wT = Window.partitionBy("event_type").orderBy("day")
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("px"))
+      val daily = dailyMean(Tables.events(s, d), "px")
         .withColumn("delta", col("px") - lag(col("px"), 1).over(wT))
         .filter(col("delta").isNotNull)
       val perType = daily.groupBy(col("event_type"))
@@ -3876,35 +3687,8 @@ object Stats {
     // one fixed IEEE chain on exact integers (tie-uncorrected
     // standard form, the A108/A109 convention).
     "a111_ansari_bradley" -> ((s, d) => {
-      val B = 1024
-      val ev = Tables.events(s, d)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("value"), (col("event_type") === "click").as("g1"))
-      val bounds = ev.agg(min(col("value")).as("lo"),
-        max(col("value")).as("hi"),
-        sum(when(col("g1"), 1L).otherwise(0L)).as("n1"),
-        sum(when(!col("g1"), 1L).otherwise(0L)).as("n2"))
-      val perv = ev.crossJoin(broadcast(bounds))
-        // hi = lo -> one bucket (the cvmSpine degenerate-range guard;
-        // ratchet spec)
-        .withColumn("bucket",
-          when(col("hi") > col("lo"),
-            least(floor((col("value") - col("lo")) /
-              (col("hi") - col("lo")) * B), lit(B - 1)))
-            .otherwise(lit(0L)).cast("int"))
-        .groupBy(col("bucket"), col("value"))
-        .agg(sum(when(col("g1"), 1L).otherwise(0L)).as("k1"),
-          count(lit(1)).as("k"))
-      val wIn = Window.partitionBy("bucket").orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val wB = Window.orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offs = perv.groupBy("bucket").agg(sum(col("k")).as("bk"))
-        .withColumn("off", coalesce(sum(col("bk")).over(wB), lit(0L)))
-        .select(col("bucket"), col("off"))
-      val agg = perv
-        .withColumn("cin", coalesce(sum(col("k")).over(wIn), lit(0L)))
-        .join(offs, Seq("bucket"))
+      val (spine, bounds) = midrankSpine(s, d)
+      val agg = spine
         .crossJoin(broadcast(bounds.select(
           (col("n1") + col("n2")).as("nn"))))
         .withColumn("r2",
@@ -3950,7 +3734,7 @@ object Stats {
     // distribution has no elementary series; the STATISTIC is the
     // deliverable, fully hash-checked).
     "a112_cramer_von_mises" -> ((s, d) => {
-      cvmSpine(s, d)
+      cvmSpine(s, d)._1
         .withColumn("term",
           col("dd").cast("decimal(20,0)") * col("dd") *
             (col("k1") + col("k2")))
@@ -3979,7 +3763,7 @@ object Stats {
     // is one exact-integer-to-double division by n₁n₂ — raw doubles,
     // fully hash-checked.
     "a113_kuiper" -> ((s, d) => {
-      cvmSpine(s, d)
+      cvmSpine(s, d)._1
         .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
           greatest(max(col("dd")), lit(0L)).as("dmax"),
           (-least(min(col("dd")), lit(0L))).as("dmin"))
@@ -4015,7 +3799,7 @@ object Stats {
     // fold and table interpolation — the STATISTIC is the
     // deliverable, fully hash-checked.
     "a114_anderson_darling" -> ((s, d) => {
-      cvmSpine(s, d)
+      cvmSpine(s, d)._1
         .withColumn("nn", col("n1") + col("n2"))
         .withColumn("l", col("k1") + col("k2"))
         .withColumn("b2", lit(2L) * (col("c1") + col("c2")) - col("l"))
@@ -4127,15 +3911,8 @@ object Stats {
     // Σ(t³−t))/48), with Σ(t³−t) summed per-row as t_eq² − 1.
     // Determinism: integers until the final two divisions + sqrt.
     "a93_wilcoxon_signed" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
-      val ranked = Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      val ranked = candles(s, d)
         .withColumn("dd", col("close") - lag(col("close"), 1).over(wd))
         .filter(col("dd").isNotNull && col("dd") =!= 0.0d)
         .withColumn("ad", abs(col("dd")))
@@ -4171,17 +3948,7 @@ object Stats {
     // count C/D; tx/ty count ALL x-ties / y-ties (both-tied pairs
     // land in both, per the τ-b definition).
     "a94_kendall_tau" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
-      val c = Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("qty",
-          get_json_object(col("props"), "$.k").cast("long"))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(when(col("rn") === col("cnt"), col("value"))).as("close"),
-          sum(col("qty")).as("vol"))
+      val c = candles(s, d)
       val a = c.select(col("event_type"), col("day").as("da"),
         col("close").as("xa"), col("vol").as("ya"))
       val b = c.select(col("event_type"), col("day").as("db"),
@@ -4217,14 +3984,7 @@ object Stats {
     // would need are returned alongside, so the caller can fold).
     // Expected counts are one division from integers (< 2^53 exact).
     "a95_mood_median" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
-      val closes = Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      val closes = candles(s, d)
       val med = closes.agg(expr("percentile(close, 0.5)").as("med"))
       val counts = closes.crossJoin(broadcast(med))
         .filter(col("close") =!= col("med"))
@@ -4256,15 +4016,8 @@ object Stats {
     // (2S⁺ − n − sgn(2S⁺ − n))/√n — an INTEGER numerator (the ×2
     // trick dodges the n/2 half-grid entirely) over one sqrt.
     "a96_sign_test" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      candles(s, d)
         .withColumn("dd", col("close") - lag(col("close"), 1).over(wd))
         .filter(col("dd").isNotNull && col("dd") =!= 0.0d)
         .groupBy("event_type")
@@ -4289,35 +4042,8 @@ object Stats {
     // thresholds ×(n₁n₂·1000) cross-multiplied in integers — no
     // float boundary can flip a label.
     "a97_cliffs_delta" -> ((s, d) => {
-      val B = 1024
-      val ev = Tables.events(s, d)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("value"), (col("event_type") === "click").as("g1"))
-      val bounds = ev.agg(min(col("value")).as("lo"),
-        max(col("value")).as("hi"),
-        sum(when(col("g1"), 1L).otherwise(0L)).as("n1"),
-        sum(when(!col("g1"), 1L).otherwise(0L)).as("n2"))
-      val perv = ev.crossJoin(broadcast(bounds))
-        // hi = lo -> one bucket (the cvmSpine degenerate-range guard;
-        // ratchet spec)
-        .withColumn("bucket",
-          when(col("hi") > col("lo"),
-            least(floor((col("value") - col("lo")) /
-              (col("hi") - col("lo")) * B), lit(B - 1)))
-            .otherwise(lit(0L)).cast("int"))
-        .groupBy(col("bucket"), col("value"))
-        .agg(sum(when(col("g1"), 1L).otherwise(0L)).as("k1"),
-          count(lit(1)).as("k"))
-      val wIn = Window.partitionBy("bucket").orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val wB = Window.orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offs = perv.groupBy("bucket").agg(sum(col("k")).as("bk"))
-        .withColumn("off", coalesce(sum(col("bk")).over(wB), lit(0L)))
-        .select(col("bucket"), col("off"))
-      val r2 = perv
-        .withColumn("cin", coalesce(sum(col("k")).over(wIn), lit(0L)))
-        .join(offs, Seq("bucket"))
+      val (spine, bounds) = midrankSpine(s, d)
+      val r2 = spine
         // ×2 rank-sum contribution: k1 rows at midrank off+cin+(k+1)/2
         // stay on the integer grid as k1·(2·(off+cin) + k + 1)
         .withColumn("r2c",
@@ -4344,17 +4070,7 @@ object Stats {
     // (x the predictor); D_xy the transpose. Each is ONE division
     // from exact integers — the τ-b lens family completed.
     "a98_gamma_somers" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
-      val c = Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("qty",
-          get_json_object(col("props"), "$.k").cast("long"))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(when(col("rn") === col("cnt"), col("value"))).as("close"),
-          sum(col("qty")).as("vol"))
+      val c = candles(s, d)
       val a = c.select(col("event_type"), col("day").as("da"),
         col("close").as("xa"), col("vol").as("ya"))
       val b = c.select(col("event_type"), col("day").as("db"),
@@ -4383,6 +4099,27 @@ object Stats {
         .orderBy("event_type")
     })
   )
+
+  /** A87/A101/A108 oracle CTEs `cell → kk → full_days → ranked`: the
+    * pinned (day, type) means and, on complete days only, each type's
+    * midrank among that day's means ([[friedmanRanks]]'s frame). */
+  private val friedmanCtes: String =
+    """cell AS (
+           SELECT date_trunc('day', ts) AS day, event_type,
+                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
+                       AS DOUBLE) / count(*) AS y
+           FROM events GROUP BY 1, 2),
+         kk AS (SELECT count(DISTINCT event_type) AS k FROM cell),
+         full_days AS (
+           SELECT day FROM cell, kk GROUP BY day, kk.k
+           HAVING count(*) = max(kk.k)),
+         ranked AS (
+           SELECT c.day, c.event_type, kk.k,
+                  rank() OVER (PARTITION BY c.day ORDER BY c.y) +
+                    CAST(count(*) OVER (PARTITION BY c.day, c.y) - 1
+                         AS DOUBLE) / 2 AS r
+           FROM cell c JOIN full_days f ON c.day = f.day
+           CROSS JOIN kk)"""
 
   /** A51 oracle, GENERATED per block size so both engines run the
     * identical decimal-pinned window arithmetic (the W12/W20 emission
@@ -6018,22 +5755,7 @@ object Stats {
     // a87's midrank frame (exact halves), alphabetical j, the exact
     // Σ j·R_j fold, then the fixed normal chain on exact integers
     "a108_page_trend" ->
-      """WITH cell AS (
-           SELECT date_trunc('day', ts) AS day, event_type,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
-         kk AS (SELECT count(DISTINCT event_type) AS k FROM cell),
-         full_days AS (
-           SELECT day FROM cell, kk GROUP BY day, kk.k
-           HAVING count(*) = max(kk.k)),
-         ranked AS (
-           SELECT c.day, c.event_type, kk.k,
-                  rank() OVER (PARTITION BY c.day ORDER BY c.y) +
-                    CAST(count(*) OVER (PARTITION BY c.day, c.y) - 1
-                         AS DOUBLE) / 2 AS r
-           FROM cell c JOIN full_days f ON c.day = f.day
-           CROSS JOIN kk),
+      s"""WITH $friedmanCtes,
          per_type AS (
            SELECT event_type, count(*) AS n_days, sum(r) AS rank_sum,
                   max(k) AS k
@@ -6892,22 +6614,7 @@ object Stats {
     // identical midranks (rank + (ties−1)/2 on the ≤k-row day
     // windows), exact 0.25-grid sums, one raw Q chain
     "a87_friedman" ->
-      """WITH cell AS (
-           SELECT date_trunc('day', ts) AS day, event_type,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
-         kk AS (SELECT count(DISTINCT event_type) AS k FROM cell),
-         full_days AS (
-           SELECT day FROM cell, kk GROUP BY day, kk.k
-           HAVING count(*) = max(kk.k)),
-         ranked AS (
-           SELECT c.day, c.event_type, kk.k,
-                  rank() OVER (PARTITION BY c.day ORDER BY c.y) +
-                    CAST(count(*) OVER (PARTITION BY c.day, c.y) - 1
-                         AS DOUBLE) / 2 AS r
-           FROM cell c JOIN full_days f ON c.day = f.day
-           CROSS JOIN kk),
+      s"""WITH $friedmanCtes,
          per_type AS (
            SELECT event_type, count(*) AS n_days, sum(r) AS rank_sum,
                   sum(r * r) AS rsq_sum, max(k) AS k
@@ -6931,22 +6638,7 @@ object Stats {
          FROM tot ORDER BY event_type""",
     // A101: a87's chain reduced to one row, W = Q/(m(k−1))
     "a101_kendalls_w" ->
-      """WITH cell AS (
-           SELECT date_trunc('day', ts) AS day, event_type,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
-         kk AS (SELECT count(DISTINCT event_type) AS k FROM cell),
-         full_days AS (
-           SELECT day FROM cell, kk GROUP BY day, kk.k
-           HAVING count(*) = max(kk.k)),
-         ranked AS (
-           SELECT c.day, c.event_type, kk.k,
-                  rank() OVER (PARTITION BY c.day ORDER BY c.y) +
-                    CAST(count(*) OVER (PARTITION BY c.day, c.y) - 1
-                         AS DOUBLE) / 2 AS r
-           FROM cell c JOIN full_days f ON c.day = f.day
-           CROSS JOIN kk),
+      s"""WITH $friedmanCtes,
          per_type AS (
            SELECT event_type, count(*) AS n_days, sum(r) AS rank_sum,
                   sum(r * r) AS rsq_sum, max(k) AS k

@@ -23,8 +23,6 @@ import graft.functions.{RollingFingerprint, RollingFp}
   */
 object TextAnalysis {
 
-  private def r6(c: Column): Column = round(c, 6)
-
   /** Materialized-intermediate dump for the F7 oracle (the D3SigDump
     * pattern — see Dedup for the serial-flow caveat): per-doc
     * token-valence arrays + capped exclamation count; both engines
@@ -2043,19 +2041,7 @@ object TextAnalysis {
            FROM hashed) WHERE rn = 1
          ORDER BY doc_id""",
     "d2_ngram_jaccard" ->
-      """WITH docs AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-           FROM documents WHERE doc_id < 100),
-         sh AS (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-                    generate_series(1, len(t) - 2),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-           FROM docs WHERE len(t) >= 3),
-         sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-         inter AS (
-           SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-           FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
+      s"""WITH ${Dedup.interCtes(Dedup.docTokens(" WHERE doc_id < 100"))}
          SELECT da, db,
                 round(CAST(i AS DOUBLE) / (x.sz + y.sz - i), 6) AS jaccard
          FROM inter JOIN sizes x ON da = x.doc_id
@@ -2066,19 +2052,7 @@ object TextAnalysis {
     // doc_id < 500 covers the planted near-dup families (the < 100
     // slice holds none of the high-containment pairs)
     "d15_containment" ->
-      """WITH docs AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-           FROM documents WHERE doc_id < 500),
-         sh AS (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-                    generate_series(1, len(t) - 2),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-           FROM docs WHERE len(t) >= 3),
-         sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-         inter AS (
-           SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-           FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
+      s"""WITH ${Dedup.interCtes(Dedup.docTokens(" WHERE doc_id < 500"))},
          c AS (
            SELECT da, db,
                   round(CAST(i AS DOUBLE) / x.sz, 6) AS cont_a_in_b,

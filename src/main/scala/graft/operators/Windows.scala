@@ -27,8 +27,6 @@ import graft.Tables
   */
 object Windows {
 
-  private def r6(c: Column): Column = round(c, 6)
-
   /** Per-user event ordering: ts with event_id tiebreak (deterministic). */
   private def wUser = Window.partitionBy("user_id")
     .orderBy(col("ts"), col("event_id"))
@@ -595,14 +593,10 @@ object Windows {
     // to O(types×days) rows, market series joined by day (broadcast —
     // O(days) rows), then per-type incremental frames.
     "w18_rolling_corr" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("y"))
+      val daily = dailyMean(Tables.events(s, d), "y")
       val market = Tables.events(s, d)
         .groupBy(date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("x"))
+        .agg(pinnedMean(col("value")).as("x"))
       val w = Window.partitionBy("event_type").orderBy("day")
         .rowsBetween(-9, 0)
       def s1(c: Column) = sum(c.cast("decimal(30,12)")).over(w)
@@ -640,10 +634,7 @@ object Windows {
     // Scale: hash agg to O(types×days), then per-type incremental
     // frames — nothing touches the raw fact table twice.
     "w19_rsi" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("px"))
+      val daily = dailyMean(Tables.events(s, d), "px")
       val wT = Window.partitionBy("event_type").orderBy("day")
       val frame = wT.rowsBetween(-13, 0)
       val withDelta = daily
@@ -681,10 +672,7 @@ object Windows {
     // left-associated summation, raw-double outputs hash-match with
     // no rounding grid.
     "w20_macd" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("px"))
+      val daily = dailyMean(Tables.events(s, d), "px")
       val wT = Window.partitionBy("event_type").orderBy("day")
       def ewma(span: Int, cn: Int => Column): Column = {
         val terms = (0 until MacdK).map { j =>
@@ -718,10 +706,7 @@ object Windows {
     // division → one subtraction on raw doubles (nothing to round);
     // full 20-row frames only. Same single per-type shuffle as W9.
     "w40_dpo" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("px"))
+      val daily = dailyMean(Tables.events(s, d), "px")
       val wT = Window.partitionBy("event_type").orderBy("day")
       val frame = wT.rowsBetween(-19, 0)
       daily
@@ -745,10 +730,7 @@ object Windows {
     // window passes) — only the final arithmetic differs, and it is
     // a fixed IEEE chain on identical doubles.
     "w41_ppo" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("px"))
+      val daily = dailyMean(Tables.events(s, d), "px")
       val wT = Window.partitionBy("event_type").orderBy("day")
       def ewma(span: Int, cn: Int => Column): Column = {
         val terms = (0 until MacdK).map { j =>
@@ -785,10 +767,7 @@ object Windows {
     // sharing window cascades in one plan; the final ratio is one
     // fixed IEEE chain on bit-identical doubles.
     "w43_trix" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("px"))
+      val daily = dailyMean(Tables.events(s, d), "px")
       val wT = Window.partitionBy("event_type").orderBy("day")
       def ewmaOf(df: org.apache.spark.sql.DataFrame, src: String,
           out: String, pref: String): org.apache.spark.sql.DataFrame = {
@@ -835,19 +814,11 @@ object Windows {
     // doubles, no sums, nothing to pin. One candle shuffle, then
     // per-type series windows sharing one exchange.
     "w44_ichimoku" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       val w5 = wd.rowsBetween(-4, 0)
       val w10 = wd.rowsBetween(-9, 0)
       val w20 = wd.rowsBetween(-19, 0)
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(col("value")).as("high"), min(col("value")).as("low"),
-          max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      candles(s, d)
         .withColumn("n20", count(lit(1)).over(w20))
         .withColumn("tenkan",
           (max(col("high")).over(w5) + min(col("low")).over(w5)) / 2)
@@ -879,10 +850,7 @@ object Windows {
     // outside the proven cascade, nothing to pin. Three hash-
     // exchange-sharing window cascades in one plan (W43's shape).
     "w45_dema_tema" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("px"))
+      val daily = dailyMean(Tables.events(s, d), "px")
       val wT = Window.partitionBy("event_type").orderBy("day")
       def ewmaOf(df: org.apache.spark.sql.DataFrame, src: String,
           out: String, pref: String,
@@ -975,10 +943,7 @@ object Windows {
     // (the deepest lag is the gate — every shallower lag exists a
     // fortiori). Raw doubles end to end.
     "w47_coppock" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("px"))
+      val daily = dailyMean(Tables.events(s, d), "px")
       val wT = Window.partitionBy("event_type").orderBy("day")
       val withRoc = daily
         .withColumn("p10", lag(col("px"), 10).over(wT))
@@ -1010,10 +975,7 @@ object Windows {
     // doubles; the signal re-pins r6(kst). Full frames only — the
     // deepest ROC's SMA frame gates every shallower one a fortiori.
     "w48_kst" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("px"))
+      val daily = dailyMean(Tables.events(s, d), "px")
       val wT = Window.partitionBy("event_type").orderBy("day")
       val f5 = wT.rowsBetween(-4, 0)
       def roc(k: Int): Column =
@@ -1055,8 +1017,7 @@ object Windows {
       val daily = Tables.events(s, d)
         .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
         .agg(max(col("value")).as("high"), min(col("value")).as("low"),
-          (sum(col("value").cast("decimal(24,10)")).cast("double") /
-            count(lit(1))).as("px"))
+          pinnedMean(col("value")).as("px"))
       val wT = Window.partitionBy("event_type").orderBy("day")
       val lagged = (1 until MacdK).foldLeft(daily)((acc, j) =>
         acc.withColumn(s"a$j", lag(col("px"), j).over(wT)))
@@ -1136,19 +1097,11 @@ object Windows {
     // and positive-TR gates are exact comparisons. Same single
     // candle shuffle + per-type series window as W25.
     "w51_ultimate_osc" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wT = Window.partitionBy("event_type").orderBy("day")
       def fsum(c: Column, k: Int) =
         sum(c.cast("decimal(30,12)")).over(wT.rowsBetween(1 - k, 0))
           .cast("double")
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(col("value")).as("high"), min(col("value")).as("low"),
-          max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      candles(s, d)
         .withColumn("pc", lag(col("close"), 1).over(wT))
         .filter(col("pc").isNotNull)
         .withColumn("bp", col("close") - least(col("low"), col("pc")))
@@ -1238,10 +1191,7 @@ object Windows {
     // are excluded by an exact double comparison. Two chained frames
     // over one per-type shuffle.
     "w42_stochrsi" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("px"))
+      val daily = dailyMean(Tables.events(s, d), "px")
       val wT = Window.partitionBy("event_type").orderBy("day")
       val frame = wT.rowsBetween(-13, 0)
       def s14(c: Column) = sum(c.cast("decimal(30,12)")).over(frame)
@@ -1338,10 +1288,7 @@ object Windows {
     // only divergence is ≤1-ulp libm ln/exp, absorbed by round6.
     // Scale: one hash agg to O(types×days) rows, then per-type windows.
     "w15_cum_return" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("v"))
+      val daily = dailyMean(Tables.events(s, d), "v")
       val w = Window.partitionBy("event_type").orderBy("day")
       val cum = Window.partitionBy("event_type").orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1377,10 +1324,7 @@ object Windows {
       val N = 20
       val w = Window.partitionBy("event_type").orderBy("day")
         .rowsBetween(-(N - 1), 0)
-      Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg((sum(col("value").cast("decimal(24,10)")).cast("double") /
-          count(lit(1))).as("px"))
+      dailyMean(Tables.events(s, d), "px")
         .withColumn("n_win", count(lit(1)).over(w))
         .withColumn("s1",
           sum(col("px").cast("decimal(24,10)")).over(w).cast("double"))
@@ -1452,17 +1396,9 @@ object Windows {
     // division → raw, the W24 discipline), full windows only. One
     // (type, day) candle shuffle + one per-type series window.
     "w25_atr" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       val w5 = wd.rowsBetween(-4, 0)
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(col("value")).as("high"), min(col("value")).as("low"),
-          max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      candles(s, d)
         .withColumn("prev_close", lag(col("close"), 1).over(wd))
         .filter(col("prev_close").isNotNull)
         .withColumn("tr", greatest(col("high") - col("low"),
@@ -1489,17 +1425,9 @@ object Windows {
     // raw doubles, fully hash-checked. Same single per-type series
     // window shape as W23/W25 (bounded frames, no global sort).
     "w53_chandelier" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       val w5 = wd.rowsBetween(-4, 0)
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(col("value")).as("high"), min(col("value")).as("low"),
-          max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      candles(s, d)
         .withColumn("prev_close", lag(col("close"), 1).over(wd))
         .filter(col("prev_close").isNotNull)
         .withColumn("tr", greatest(col("high") - col("low"),
@@ -1532,18 +1460,10 @@ object Windows {
     // only when all three %K values exist. Same single per-type
     // series window shape as W23.
     "w26_stochastic" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       val w5 = wd.rowsBetween(-4, 0)
       val w3 = wd.rowsBetween(-2, 0)
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(col("value")).as("high"), min(col("value")).as("low"),
-          max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      candles(s, d)
         .withColumn("n_win", count(lit(1)).over(w5))
         .withColumn("ll", min(col("low")).over(w5))
         .withColumn("hh", max(col("high")).over(w5))
@@ -1572,19 +1492,9 @@ object Windows {
     // end, zero float risk anywhere. One per-type series window after
     // the candle agg, the family's even shuffle shape.
     "w27_obv" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       val cum = wd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("qty",
-          get_json_object(col("props"), "$.k").cast("long"))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(when(col("rn") === col("cnt"), col("value"))).as("close"),
-          sum(col("qty")).as("vol"))
+      candles(s, d)
         .withColumn("prev_close", lag(col("close"), 1).over(wd))
         .filter(col("prev_close").isNotNull)
         .withColumn("signed_vol",
@@ -1616,20 +1526,9 @@ object Windows {
     // identical conditional both engines. Full windows only. Same
     // candle shuffle + per-type series window as W25.
     "w28_mfi" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       val w5 = wd.rowsBetween(-4, 0)
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("qty",
-          get_json_object(col("props"), "$.k").cast("long"))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(col("value")).as("high"), min(col("value")).as("low"),
-          max(when(col("rn") === col("cnt"), col("value"))).as("close"),
-          sum(col("qty")).as("vol"))
+      candles(s, d)
         .withColumn("tp3",
           col("high") + col("low") + col("close"))
         .withColumn("prev_tp3", lag(col("tp3"), 1).over(wd))
@@ -1662,18 +1561,10 @@ object Windows {
     // comparisons — no sums, no divisions, nothing to pin. Same
     // single candle shuffle + per-type series window as W25/W26.
     "w29_donchian" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       val w5 = wd.rowsBetween(-4, 0)
       val w5p = wd.rowsBetween(-5, -1)
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(col("value")).as("high"), min(col("value")).as("low"),
-          max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      candles(s, d)
         .withColumn("n_win", count(lit(1)).over(w5))
         .withColumn("upper", max(col("high")).over(w5))
         .withColumn("lower", min(col("low")).over(w5))
@@ -1696,16 +1587,8 @@ object Windows {
     // pins; the w24 discipline at its purest). One candle shuffle +
     // one lag over the per-type series window.
     "w30_pivot_points" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(col("value")).as("high"), min(col("value")).as("low"),
-          max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      candles(s, d)
         .withColumn("ph", lag(col("high"), 1).over(wd))
         .withColumn("pl", lag(col("low"), 1).over(wd))
         .withColumn("pc", lag(col("close"), 1).over(wd))
@@ -1733,17 +1616,9 @@ object Windows {
     // partitioned window, then stateless per-row arithmetic.
     // Reference: chart indicators family, dashboard/app.py:640-760.
     "w31_cci" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       val w20 = wd.rowsBetween(-19, 0)
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(col("value")).as("high"), min(col("value")).as("low"),
-          max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      candles(s, d)
         .withColumn("tp3", col("high") + col("low") + col("close"))
         .withColumn("xs", collect_list(col("tp3")).over(w20))
         .filter(size(col("xs")) === 20)
@@ -1768,16 +1643,9 @@ object Windows {
     // division from integers. Same collect_list-over-ordered-frame
     // shape as W31; DuckDB replays with list_reverse/list_position.
     "w32_aroon" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       val w15 = wd.rowsBetween(-14, 0)
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(col("value")).as("high"), min(col("value")).as("low"))
+      candles(s, d)
         .withColumn("hs", collect_list(col("high")).over(w15))
         .withColumn("ls", collect_list(col("low")).over(w15))
         .filter(size(col("hs")) === 15)
@@ -1806,17 +1674,9 @@ object Windows {
     // candle shuffle + per-type series window as the whole family.
     // Reference: chart indicators family, dashboard/app.py:640-760.
     "w33_williams_r" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       val w14 = wd.rowsBetween(-13, 0)
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(col("value")).as("high"), min(col("value")).as("low"),
-          max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      candles(s, d)
         .withColumn("n_win", count(lit(1)).over(w14))
         .withColumn("hh", max(col("high")).over(w14))
         .withColumn("ll", min(col("low")).over(w14))
@@ -1839,17 +1699,9 @@ object Windows {
     // and rendered once; upper/lower are single IEEE adds of the two
     // rendered doubles. Full windows only.
     "w34_keltner" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       val w10 = wd.rowsBetween(-9, 0)
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(col("value")).as("high"), min(col("value")).as("low"),
-          max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      candles(s, d)
         .withColumn("n_win", count(lit(1)).over(w10))
         .withColumn("center",
           sum((col("high") + col("low") + col("close"))
@@ -1874,16 +1726,9 @@ object Windows {
     // frame mean decimal-pins the dd² sum (order-free) before the
     // single ÷14 → sqrt. Full windows only.
     "w35_ulcer" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       val w14 = wd.rowsBetween(-13, 0)
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      candles(s, d)
         .withColumn("n_win", count(lit(1)).over(w14))
         .withColumn("maxc", max(col("close")).over(w14))
         .withColumn("dd",
@@ -1905,17 +1750,9 @@ object Windows {
     // once, so each VI is one division of two deterministic doubles.
     // Rows need the prior candle (lag) and a full 14-day frame.
     "w36_vortex" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       val w14 = wd.rowsBetween(-13, 0)
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(col("value")).as("high"), min(col("value")).as("low"),
-          max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      candles(s, d)
         .withColumn("prev_close", lag(col("close"), 1).over(wd))
         .withColumn("prev_high", lag(col("high"), 1).over(wd))
         .withColumn("prev_low", lag(col("low"), 1).over(wd))
@@ -1954,22 +1791,11 @@ object Windows {
     // division by the exact integer volume sum. Same candle shuffle,
     // two frames over one series window.
     "w37_cmf" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       val w20 = wd.rowsBetween(-19, 0)
       val wAll = wd.rowsBetween(Window.unboundedPreceding,
         Window.currentRow)
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("qty",
-          get_json_object(col("props"), "$.k").cast("long"))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(col("value")).as("high"), min(col("value")).as("low"),
-          max(when(col("rn") === col("cnt"), col("value"))).as("close"),
-          sum(col("qty")).as("vol"))
+      candles(s, d)
         .withColumn("mfm", when(col("high") =!= col("low"),
           ((col("close") - col("low")) - (col("high") - col("close"))) /
             (col("high") - col("low"))).otherwise(lit(0.0d)))
@@ -1997,16 +1823,9 @@ object Windows {
     // (a 14-day dead-flat series has no momentum sign). Full frames
     // of 14 deltas only; same single candle shuffle as the family.
     "w38_cmo" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       val w14 = wd.rowsBetween(-13, 0)
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(when(col("rn") === col("cnt"), col("value"))).as("close"))
+      candles(s, d)
         .withColumn("delta", col("close") - lag(col("close"), 1).over(wd))
         .withColumn("gain",
           when(col("delta") > 0, col("delta")).otherwise(lit(0.0)))
@@ -2034,19 +1853,9 @@ object Windows {
     // the W28/W37 coarsening lesson applied up front); the frame sum
     // renders once. Full 13-delta frames only.
     "w39_force_index" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy("event_type").orderBy("day")
       val w13 = wd.rowsBetween(-12, 0)
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("qty",
-          get_json_object(col("props"), "$.k").cast("long"))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(when(col("rn") === col("cnt"), col("value"))).as("close"),
-          sum(col("qty")).as("vol"))
+      candles(s, d)
         .withColumn("fi",
           (col("close") - lag(col("close"), 1).over(wd)) *
             col("vol").cast("double"))
@@ -2089,21 +1898,11 @@ object Windows {
     // high/low = extremes. One (type, day) shuffle: the ranking window
     // and the final hash agg share partitioning, so Catalyst reuses
     // the exchange. All picks are exact doubles — no float risk.
-    "w16_ohlc_candles" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
-      Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(when(col("rn") === 1, col("value"))).as("open"),
-          max(col("value")).as("high"),
-          min(col("value")).as("low"),
-          max(when(col("rn") === col("cnt"), col("value"))).as("close"),
-          count(lit(1)).as("n"))
-        .orderBy("event_type", "day")
-    }),
+    "w16_ohlc_candles" -> ((s, d) =>
+      candles(s, d)
+        .select(col("event_type"), col("day"), col("open"), col("high"),
+          col("low"), col("close"), col("ticks").as("n"))
+        .orderBy("event_type", "day")),
 
     // W54: Heikin-Ashi candles — the smoothed-candle transform every
     // charting stack derives from raw OHLC. ha_close = (o+h+l+c)/4 is
@@ -2119,18 +1918,10 @@ object Windows {
     // fold-replay tool); every op is +,÷ by 2/4 over exact candle
     // extremes, so raw doubles hash-match with no rounding.
     "w54_heikin_ashi" -> ((s, d) => {
-      val part = Window.partitionBy(col("event_type"), col("day"))
-      val asc = part.orderBy(col("ts"), col("event_id"))
-      val candles = Tables.events(s, d)
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(asc))
-        .withColumn("cnt", count(lit(1)).over(part))
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(when(col("rn") === 1, col("value"))).as("o"),
-          max(col("value")).as("h"),
-          min(col("value")).as("l"),
-          max(when(col("rn") === col("cnt"), col("value"))).as("c"))
-      val packed = candles.groupBy("event_type")
+      val packed = candles(s, d)
+        .select(col("event_type"), col("day"), col("open").as("o"),
+          col("high").as("h"), col("low").as("l"), col("close").as("c"))
+        .groupBy("event_type")
         .agg(array_sort(collect_list(struct(col("day"), col("o"),
           col("h"), col("l"), col("c")))).as("cs"))
       val hos = aggregate(col("cs"),

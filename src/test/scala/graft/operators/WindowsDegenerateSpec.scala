@@ -45,6 +45,58 @@ class WindowsDegenerateSpec extends AnyFunSuite {
     d
   }
 
+  test("candle close is the last event by (ts, event_id) when ticks share a ts") {
+    import spark.implicits._
+    val d = graft.SparkTestSession.fixtureDir("w-candle-ties")
+    val rng = new scala.util.Random(11)
+    val dayMs = 86400000L
+    // per (type, day) six ticks at three instants: two share the
+    // opening ts and three the closing one. Event ids are a shuffle,
+    // so neither write order nor value order tells the close.
+    val rows = for {
+      (t, ti) <- Seq("click", "purchase").zipWithIndex
+      day <- 0 until 5
+      ids = rng.shuffle((0 until 6).toList)
+      (hour, j) <- Seq(1, 1, 6, 20, 20, 20).zipWithIndex
+    } yield (1000L * (ti * 5 + day) + ids(j),
+      new java.sql.Timestamp(1704067200000L + day * dayMs + hour * 3600000L),
+      j.toLong, t, (5000 + rng.nextInt(5000)) / 100.0, rng.nextInt(20))
+    rows.map { case (id, ts, u, t, v, k) => (id, ts, u, t, v, s"""{"k": $k}""") }
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.mode("overwrite").parquet(s"$d/events.parquet")
+
+    // sequential recompute: sort each day's ticks by (ts, event_id)
+    val expected = rows.groupBy(r => (r._4, r._2.getTime / dayMs)).map {
+      case (key, rs) =>
+        val ordered = rs.sortBy(r => (r._2.getTime, r._1))
+        key -> (ordered.head._5, rs.map(_._5).max, rs.map(_._5).min,
+          ordered.last._5, rs.size.toLong, rs.map(_._6.toLong).sum)
+    }
+    // the fixture exercises the tiebreak: at some closing instant the
+    // highest event id is neither the last row written nor the max value
+    assert(expected.exists { case (key, e) =>
+      val last = rows.filter(r => (r._4, r._2.getTime / dayMs) == key)
+      e._4 != last.last._5 && e._4 != last.takeRight(3).map(_._5).max
+    })
+
+    val candles = Windows.queries("w16_ohlc_candles")(spark, d).collect()
+      .map(r => (r.getAs[String]("event_type"),
+        r.getAs[java.sql.Timestamp]("day").getTime / dayMs) ->
+        (r.getAs[Double]("open"), r.getAs[Double]("high"),
+          r.getAs[Double]("low"), r.getAs[Double]("close"),
+          r.getAs[Long]("n")))
+      .toMap
+    assert(candles == expected.map { case (k, e) =>
+      k -> (e._1, e._2, e._3, e._4, e._5) })
+    // W27 exposes the candle volume (every day after each type's first)
+    val vols = Windows.queries("w27_obv")(spark, d).collect()
+      .map(r => (r.getAs[String]("event_type"),
+        r.getAs[java.sql.Timestamp]("day").getTime / dayMs) ->
+        r.getAs[Long]("vol"))
+    assert(vols.length == 8)
+    vols.foreach { case (k, v) => assert(v == expected(k)._6, k) }
+  }
+
   test("every W-family query survives a flat market without an ANSI throw") {
     val wQueries = Windows.queries.keys.toSeq.sorted
     assert(wQueries.nonEmpty)
