@@ -9,19 +9,31 @@ expression ids (`#12`, `#12L`), `plan_id=`, `codegen id :`, a bare
 `Arguments: <n>` line, `$Lambda` class names, `@<hex>` object hashes,
 `/tmp/graft-…` / `/tmp/graft_…` scratch names, the `-<n>` suffix a
 streaming run dir gets, RDD ids and the `File.scala:<line>` call sites
-of checkpointed RDDs, and the checkout's `spark-warehouse` path. A query present on one side only differs.
+of checkpointed RDDs, the checkout's `spark-warehouse` path, and the
+JVM-wide counter in lambda variable names (`lambda x_49` -> `lambda x_`:
+it counts every lambda built before, so it moves with construction
+order, not with the plan). A query present on one side only differs.
+
+A plan with an `Expand` node (cube, rollup, grouping sets, distinct
+aggregates) can list its grouping sets, and the keys and filters that
+follow them, in either order from one run to the next. Such a plan
+that differs only in line-wise token order (same lines, and each
+differing line holds the same multiset of tokens) is printed as
+`order-only` and does not count as a difference.
 
 If both dirs also hold an `oracle_sql.json` (graft.Verify writes the
 full map even with a name filter), every oracle is compared too, after
 collapsing whitespace outside single-quoted literals and dropping
 whitespace next to `(`, `)` and `,`.
 
-Prints each name that differs and exits 1 if any do, 0 otherwise.
+Prints each name that differs and exits 1 if any do (order-only plans
+excepted), 0 otherwise.
 """
 import json
 import os
 import re
 import sys
+from collections import Counter
 
 PLAN_MASKS = [
     (re.compile(r"#\d+L?"), "#"),
@@ -35,13 +47,27 @@ PLAN_MASKS = [
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
     (re.compile(r"\.scala:\d+"), ".scala:"),
     (re.compile(r"file:\S*/spark-warehouse/"), "file:spark-warehouse/"),
+    (re.compile(r"\blambda (\w+?)_\d+\b"), r"lambda \1_"),
 ]
+EXPAND = re.compile(r"^\(\d+\) Expand$", re.M)
+TOKEN = re.compile(r"\w+|[^\w\s]")
 
 
 def mask_plan(text):
     for pat, rep in PLAN_MASKS:
         text = pat.sub(rep, text)
     return text
+
+
+def order_only(a, b):
+    """True if masked plans a and b, both with an Expand node, differ
+    only in the order of tokens within lines."""
+    if not (EXPAND.search(a) and EXPAND.search(b)):
+        return False
+    la, lb = a.splitlines(), b.splitlines()
+    return len(la) == len(lb) and all(
+        x == y or Counter(TOKEN.findall(x)) == Counter(TOKEN.findall(y))
+        for x, y in zip(la, lb))
 
 
 def norm_sql(sql):
@@ -85,13 +111,19 @@ def main(argv):
         print(__doc__.strip().splitlines()[2], file=sys.stderr)
         return 2
     a, b = argv[1], argv[2]
-    differ = []
+    differ, reordered = [], []
     pa, pb = plans(a), plans(b)
     for name in sorted(pa | pb):
         if name not in pa or name not in pb:
             differ.append(f"plan {name} (only in {a if name in pa else b})")
-        elif mask_plan(read(f"{a}/{name}.txt")) != \
-                mask_plan(read(f"{b}/{name}.txt")):
+            continue
+        ta = mask_plan(read(f"{a}/{name}.txt"))
+        tb = mask_plan(read(f"{b}/{name}.txt"))
+        if ta == tb:
+            continue
+        if order_only(ta, tb):
+            reordered.append(f"plan {name} (order-only)")
+        else:
             differ.append(f"plan {name}")
     oa, ob = f"{a}/oracle_sql.json", f"{b}/oracle_sql.json"
     if os.path.exists(oa) and os.path.exists(ob):
@@ -102,9 +134,9 @@ def main(argv):
                     f"oracle {name} (only in {a if name in ja else b})")
             elif norm_sql(ja[name]) != norm_sql(jb[name]):
                 differ.append(f"oracle {name}")
-    for line in differ:
+    for line in reordered + differ:
         print(line)
-    print(f"[plan_diff] {len(differ)} differ "
+    print(f"[plan_diff] {len(differ)} differ, {len(reordered)} order-only "
           f"({len(pa & pb)} plans compared)", file=sys.stderr)
     return 1 if differ else 0
 

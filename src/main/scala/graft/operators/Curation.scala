@@ -38,6 +38,37 @@ object Curation {
 
   /** Eval-set membership: every 97th doc stands in for the held-out
     * benchmark suite a real pipeline decontaminates against. */
+  /** The PIPE1 filter signals per doc, shared by the corpus-filter
+    * oracles (PIPE1 verdicts and funnel, DS4's shard write): token
+    * count `n`, mean word length, top-word share and duplicate-trigram
+    * share, in CTE `sig`. */
+  private[operators] val FilterSignalCtes =
+    """docs AS (
+           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
+           FROM documents),
+         d1 AS (SELECT * FROM docs),
+         toks AS (SELECT doc_id, unnest(t) AS w FROM d1),
+         wc AS (SELECT doc_id, w, count(*) AS c FROM toks GROUP BY 1, 2),
+         tw AS (SELECT doc_id, max(c) AS mx, CAST(sum(c) AS BIGINT) AS n,
+                       CAST(sum(c * length(w)) AS BIGINT) AS chars
+                FROM wc GROUP BY 1),
+         tg AS (SELECT doc_id,
+                       CAST(greatest(len(t) - 2, 0) AS BIGINT) AS ntri,
+                       CAST(CASE WHEN len(t) >= 3 THEN
+                         len(list_distinct(list_transform(
+                           generate_series(1, len(t) - 2),
+                           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])))
+                         ELSE 0 END AS BIGINT) AS ndis
+                FROM d1),
+         sig AS (
+           SELECT doc_id, n,
+                  CAST(chars AS DOUBLE) / n AS mean_len,
+                  CAST(mx AS DOUBLE) / n AS top_frac,
+                  CASE WHEN ntri > 0
+                       THEN 1.0 - CAST(ndis AS DOUBLE) / ntri
+                       ELSE 0.0 END AS dup_frac
+           FROM tw JOIN tg USING (doc_id))"""
+
   private val EvalMod = 97
 
   /** Per-doc quality signals + the first failing cleaning rule
@@ -399,19 +430,7 @@ object Curation {
         .withColumn("bucket",
           conv(substring(col("k"), 1, 2), 16, 10).cast("long"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val bcnt = base.groupBy("lang", "source", "bucket")
-        .agg(count(lit(1)).as("c"))
-        .withColumn("below", coalesce(sum(col("c")).over(
-          Window.partitionBy("lang", "source").orderBy("bucket")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      val n = bcnt.groupBy("lang", "source").agg(sum(col("c")).as("n"))
-      val train = base
-        .withColumn("wrn", row_number().over(
-          Window.partitionBy("lang", "source", "bucket")
-            .orderBy("k", "doc_id")).cast("long"))
-        .join(bcnt.select(col("lang"), col("source"), col("bucket"),
-          col("below")), Seq("lang", "source", "bucket"))
-        .join(n, Seq("lang", "source"))
+      val train = DatasetOps.stratumRanks(base)
         .filter(col("below") + col("wrn") <= expr("div(n * 8, 10)"))
         .select(col("doc_id"), col("source"))
       val tb = train
@@ -419,30 +438,9 @@ object Curation {
         .withColumn("shard",
           conv(substring(col("k"), 1, 2), 16, 10).cast("long"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val hist = tb.groupBy("source", "shard").agg(count(lit(1)).as("c"))
-        .withColumn("before", coalesce(sum(col("c")).over(
-          Window.partitionBy("source").orderBy("shard")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("source"), col("shard"), col("before"))
-      val ranked = tb.join(broadcast(hist), Seq("source", "shard"))
-        .withColumn("rank", col("before") + row_number().over(
-          Window.partitionBy("source", "shard")
-            .orderBy(col("k"), col("doc_id"))))
+      val ranked = DatasetOps.sourceRanks(tb)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val srcs = ranked.groupBy("source").agg(count(lit(1)).as("n_src"))
-        .withColumn("source_idx",
-          row_number().over(Window.orderBy("source")).cast("long"))
-        .withColumn("mn", min(col("n_src")).over(Window.partitionBy()))
-        .withColumn("n_sources",
-          count(lit(1)).over(Window.partitionBy()))
-        .select(col("source"), col("source_idx"), col("mn"),
-          col("n_sources"))
-      ranked.join(broadcast(srcs), Seq("source"))
-        .filter(col("rank") <= col("mn"))
-        .select(col("doc_id"), col("source"), col("rank"),
-          ((col("rank") - 1) * col("n_sources") + col("source_idx") - 1)
-            .as("global_pos"))
-        .orderBy("global_pos")
+      DatasetOps.interleave(ranked)
     }),
 
     // PIPE7: graph TRIAGE — the dedup dashboard the graph family's
@@ -570,11 +568,7 @@ object Curation {
            ${Dedup.pairsCtes("", "0.5")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
-           reach AS (
-             SELECT doc_id AS id, doc_id AS r FROM documents
-             UNION
-             SELECT reach.id, e.dst FROM reach
-             JOIN edges e ON reach.r = e.src),
+           ${Dedup.reachCte("edges", "documents")},
            cc AS (SELECT id AS doc_id, min(r) AS canonical_id
                   FROM reach GROUP BY id),
            cs AS (SELECT canonical_id, count(*) AS cs
@@ -654,11 +648,7 @@ object Curation {
              GROUP BY 1, 2),
            uedges AS (SELECT da AS src, db AS dst FROM pairs
                       UNION SELECT db AS src, da AS dst FROM pairs),
-           reach AS (
-             SELECT doc_id AS id, doc_id AS r FROM documents
-             UNION
-             SELECT reach.id, e.dst FROM reach JOIN uedges e
-               ON reach.r = e.src),
+           ${Dedup.reachCte("uedges", "documents")},
            cc AS (SELECT id AS doc_id, min(r) AS component FROM reach
                   GROUP BY id)
          SELECT p.da, p.db, cc.component,
@@ -691,11 +681,7 @@ object Curation {
            ${Dedup.pairsCtes("", "0.5", pairsAs = "pairs AS MATERIALIZED")},
            uedges AS (SELECT da AS src, db AS dst FROM pairs
                       UNION SELECT db AS src, da AS dst FROM pairs),
-           reach AS (
-             SELECT doc_id AS id, doc_id AS r FROM documents
-             UNION
-             SELECT reach.id, e.dst FROM reach JOIN uedges e
-               ON reach.r = e.src),
+           ${Dedup.reachCte("uedges", "documents")},
            cc AS (SELECT id AS doc_id, min(r) AS component FROM reach
                   GROUP BY id),
            sp AS (
@@ -732,48 +718,17 @@ object Curation {
     // replayed chains (recursive CC, 8+8 materialized peel, 3
     // materialized harmonic shells, keep-best window)
     "pipe7_graph_triage" -> {
-      def peelCtes(lvl: Int, k: Int, seed: String): String =
-        (1 to 8).map { r =>
-          val prev = if (r == 1) seed else s"e${lvl}_${r - 1}"
-          s"""n${lvl}_$r AS MATERIALIZED (
-             SELECT v FROM (SELECT da AS v FROM $prev
-                            UNION ALL SELECT db AS v FROM $prev)
-             GROUP BY v HAVING count(*) >= $k),
-           e${lvl}_$r AS MATERIALIZED (
-             SELECT da, db FROM $prev
-             WHERE da IN (SELECT v FROM n${lvl}_$r)
-               AND db IN (SELECT v FROM n${lvl}_$r))"""
-        }.mkString(",\n           ")
       s"""WITH RECURSIVE
            ${Dedup.pairsCtes("", "0.5", pairsAs = "pairs AS MATERIALIZED", sh = "sh0")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
-           reach AS (
-             SELECT doc_id AS id, doc_id AS r FROM documents
-             UNION
-             SELECT reach.id, e.dst FROM reach JOIN edges e
-               ON reach.r = e.src),
+           ${Dedup.reachCte("edges", "documents")},
            cc AS MATERIALIZED (
              SELECT id AS doc_id, min(r) AS canonical_id FROM reach
              GROUP BY id),
-           ${peelCtes(2, 2, "pairs")},
-           ${peelCtes(3, 3, "e2_8")},
-           r1 AS MATERIALIZED (
-             SELECT DISTINCT v, u FROM (
-               SELECT da AS v, db AS u FROM pairs
-               UNION ALL SELECT db AS v, da AS u FROM pairs)),
-           r2 AS MATERIALIZED (
-             SELECT DISTINCT a.v, b.u FROM r1 a JOIN r1 b ON a.u = b.v
-             WHERE b.u <> a.v
-               AND NOT EXISTS (SELECT 1 FROM r1 x
-                               WHERE x.v = a.v AND x.u = b.u)),
-           r3 AS MATERIALIZED (
-             SELECT DISTINCT a.v, b.u FROM r2 a JOIN r1 b ON a.u = b.v
-             WHERE b.u <> a.v
-               AND NOT EXISTS (SELECT 1 FROM r2 x
-                               WHERE x.v = a.v AND x.u = b.u)
-               AND NOT EXISTS (SELECT 1 FROM r1 y
-                               WHERE y.v = a.v AND y.u = b.u)),
+           ${Dedup.peelCtes(2, 2, "pairs")},
+           ${Dedup.peelCtes(3, 3, "e2_8")},
+           ${Dedup.ShellCtes},
            c1 AS (SELECT v, CAST(count(*) AS BIGINT) AS n1
                   FROM r1 GROUP BY 1),
            c2 AS (SELECT v, CAST(count(*) AS BIGINT) AS n2
@@ -809,10 +764,7 @@ object Curation {
            ${Dedup.pairsCtes("", "0.5", pairsAs = "prs AS")},
            edges AS (SELECT da AS src, db AS dst FROM prs
                      UNION SELECT db AS src, da AS dst FROM prs),
-           reach AS (
-             SELECT doc_id AS id, doc_id AS r FROM documents
-             UNION
-             SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src),
+           ${Dedup.reachCte("edges", "documents")},
            comp AS (
              SELECT id AS doc_id, min(r) AS canonical_id FROM reach
              GROUP BY id),
@@ -842,21 +794,7 @@ object Curation {
                     row_number() OVER (PARTITION BY source
                                        ORDER BY k, doc_id) AS rank
              FROM train),
-           srcs AS (
-             SELECT source, count(*) AS n_src,
-                    row_number() OVER (ORDER BY source) AS source_idx
-             FROM ranked GROUP BY 1),
-           meta AS (
-             SELECT source, source_idx,
-                    min(n_src) OVER () AS mn,
-                    count(*) OVER () AS n_sources
-             FROM srcs)
-         SELECT r.doc_id, r.source, CAST(r.rank AS BIGINT) AS rank,
-                CAST((r.rank - 1) * m.n_sources + m.source_idx - 1
-                     AS BIGINT) AS global_pos
-         FROM ranked r JOIN meta m ON r.source = m.source
-         WHERE r.rank <= m.mn
-         ORDER BY global_pos""",
+           ${DatasetOps.InterleaveSql}""",
     // identical 1e-12 term grid + decimal-pinned sums, one exp/division
     "pipe5_mixture_diversity" ->
       """WITH ls AS (
@@ -959,31 +897,7 @@ object Curation {
          WHERE s.doc_id % 97 <> 0
          GROUP BY 1 ORDER BY 1""",
     "pipe1_corpus_filter" ->
-      """WITH docs AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-           FROM documents),
-         d1 AS (SELECT * FROM docs),
-         toks AS (SELECT doc_id, unnest(t) AS w FROM d1),
-         wc AS (SELECT doc_id, w, count(*) AS c FROM toks GROUP BY 1, 2),
-         tw AS (SELECT doc_id, max(c) AS mx, CAST(sum(c) AS BIGINT) AS n,
-                       CAST(sum(c * length(w)) AS BIGINT) AS chars
-                FROM wc GROUP BY 1),
-         tg AS (SELECT doc_id,
-                       CAST(greatest(len(t) - 2, 0) AS BIGINT) AS ntri,
-                       CAST(CASE WHEN len(t) >= 3 THEN
-                         len(list_distinct(list_transform(
-                           generate_series(1, len(t) - 2),
-                           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])))
-                         ELSE 0 END AS BIGINT) AS ndis
-                FROM d1),
-         sig AS (
-           SELECT doc_id, n,
-                  CAST(chars AS DOUBLE) / n AS mean_len,
-                  CAST(mx AS DOUBLE) / n AS top_frac,
-                  CASE WHEN ntri > 0
-                       THEN 1.0 - CAST(ndis AS DOUBLE) / ntri
-                       ELSE 0.0 END AS dup_frac
-           FROM tw JOIN tg USING (doc_id))
+      s"""WITH $FilterSignalCtes
          SELECT doc_id, n AS n_tokens, mean_len, top_frac, dup_frac,
                 CASE WHEN n < 10 THEN 'too_short'
                      WHEN mean_len < 3.0 OR mean_len > 10.0 THEN 'word_length'
@@ -992,31 +906,7 @@ object Curation {
                      ELSE 'kept' END AS verdict
          FROM sig ORDER BY doc_id""",
     "pipe1_filter_funnel" ->
-      """WITH docs AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-           FROM documents),
-         d1 AS (SELECT * FROM docs),
-         toks AS (SELECT doc_id, unnest(t) AS w FROM d1),
-         wc AS (SELECT doc_id, w, count(*) AS c FROM toks GROUP BY 1, 2),
-         tw AS (SELECT doc_id, max(c) AS mx, CAST(sum(c) AS BIGINT) AS n,
-                       CAST(sum(c * length(w)) AS BIGINT) AS chars
-                FROM wc GROUP BY 1),
-         tg AS (SELECT doc_id,
-                       CAST(greatest(len(t) - 2, 0) AS BIGINT) AS ntri,
-                       CAST(CASE WHEN len(t) >= 3 THEN
-                         len(list_distinct(list_transform(
-                           generate_series(1, len(t) - 2),
-                           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])))
-                         ELSE 0 END AS BIGINT) AS ndis
-                FROM d1),
-         sig AS (
-           SELECT doc_id, n,
-                  CAST(chars AS DOUBLE) / n AS mean_len,
-                  CAST(mx AS DOUBLE) / n AS top_frac,
-                  CASE WHEN ntri > 0
-                       THEN 1.0 - CAST(ndis AS DOUBLE) / ntri
-                       ELSE 0.0 END AS dup_frac
-           FROM tw JOIN tg USING (doc_id)),
+      s"""WITH $FilterSignalCtes,
          verdicts AS (
            SELECT CASE WHEN n < 10 THEN 'too_short'
                        WHEN mean_len < 3.0 OR mean_len > 10.0 THEN 'word_length'

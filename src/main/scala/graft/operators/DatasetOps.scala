@@ -33,6 +33,86 @@ object DatasetOps {
     when(substring(md5(key.cast("string")), 1, 1) < "d", "train")
       .otherwise("val")
 
+  /** DS17's exact stratum rank, shared with PIPE6's split: for each
+    * row of `base` (doc_id, lang, source, seeded md5 key `k` and its
+    * 2-hex-digit `bucket`) the rows of its (lang, source) stratum in
+    * lower buckets `below`, its row number by (k, doc_id) within the
+    * bucket `wrn`, and the stratum size `n`; below + wrn is its exact
+    * rank in the stratum's md5 permutation. The bucket window runs on
+    * ≤256 rows per stratum, so no stratum ranks on one partition. */
+  private[operators] def stratumRanks(base: DataFrame): DataFrame = {
+    val bcnt = base.groupBy("lang", "source", "bucket")
+      .agg(count(lit(1)).as("c"))
+      .withColumn("below", coalesce(sum(col("c")).over(
+        Window.partitionBy("lang", "source").orderBy("bucket")
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    val n = bcnt.groupBy("lang", "source").agg(sum(col("c")).as("n"))
+    base
+      .withColumn("wrn", row_number().over(
+        Window.partitionBy("lang", "source", "bucket")
+          .orderBy("k", "doc_id")).cast("long"))
+      .join(bcnt.select(col("lang"), col("source"), col("bucket"),
+        col("below")), Seq("lang", "source", "bucket"))
+      .join(n, Seq("lang", "source"))
+  }
+
+  /** DS19's per-source permutation rank, shared with PIPE6: each row
+    * of `base` (source, doc_id, md5 key `k`, its 2-hex-digit `shard`)
+    * gets its 1-based `rank` by (k, doc_id) within its source, as the
+    * (source, shard) histogram's prefix `before` plus a row_number
+    * within (source, shard) — no per-source global window. */
+  private[operators] def sourceRanks(base: DataFrame): DataFrame = {
+    val hist = base.groupBy("source", "shard").agg(count(lit(1)).as("c"))
+      .withColumn("before", coalesce(sum(col("c")).over(
+        Window.partitionBy("source").orderBy("shard")
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .select(col("source"), col("shard"), col("before"))
+    base.join(broadcast(hist), Seq("source", "shard"))
+      .withColumn("rank", col("before") + row_number().over(
+        Window.partitionBy("source", "shard")
+          .orderBy(col("k"), col("doc_id"))))
+  }
+
+  /** DS19's strict round-robin source interleave, shared with PIPE6:
+    * from each doc's 1-based `rank` within its source, the first `mn`
+    * (the smallest source's size) of every source, position
+    * (rank − 1)·S + source_idx − 1 of the global stream. The source
+    * frame is ≤|sources| rows and broadcasts. */
+  private[operators] def interleave(ranked: DataFrame): DataFrame = {
+    val srcs = ranked.groupBy("source").agg(count(lit(1)).as("n_src"))
+      .withColumn("source_idx",
+        row_number().over(Window.orderBy("source")).cast("long"))
+      .withColumn("mn", min(col("n_src")).over(Window.partitionBy()))
+      .withColumn("n_sources",
+        count(lit(1)).over(Window.partitionBy()))
+      .select(col("source"), col("source_idx"), col("mn"),
+        col("n_sources"))
+    ranked.join(broadcast(srcs), Seq("source"))
+      .filter(col("rank") <= col("mn"))
+      .select(col("doc_id"), col("source"), col("rank"),
+        ((col("rank") - 1) * col("n_sources") + col("source_idx") - 1)
+          .as("global_pos"))
+      .orderBy("global_pos")
+  }
+
+  /** Oracle twin of `interleave` over the CTE `ranked`. */
+  private[operators] val InterleaveSql =
+    """srcs AS (
+           SELECT source, count(*) AS n_src,
+                  row_number() OVER (ORDER BY source) AS source_idx
+           FROM ranked GROUP BY 1),
+         meta AS (
+           SELECT source, source_idx,
+                  min(n_src) OVER () AS mn,
+                  count(*) OVER () AS n_sources
+           FROM srcs)
+         SELECT r.doc_id, r.source, CAST(r.rank AS BIGINT) AS rank,
+                CAST((r.rank - 1) * m.n_sources + m.source_idx - 1
+                     AS BIGINT) AS global_pos
+         FROM ranked r JOIN meta m ON r.source = m.source
+         WHERE r.rank <= m.mn
+         ORDER BY global_pos"""
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // DS1: deterministic group-aware train/val split — per-split row
     // and group accounting (the audit a split job emits).
@@ -84,19 +164,7 @@ object DatasetOps {
         .select(col("doc_id"), col("lang"), col("source"), k.as("k"))
         .withColumn("bucket",
           conv(substring(col("k"), 1, 2), 16, 10).cast("long"))
-      val bcnt = base.groupBy("lang", "source", "bucket")
-        .agg(count(lit(1)).as("c"))
-        .withColumn("below", coalesce(sum(col("c")).over(
-          Window.partitionBy("lang", "source").orderBy("bucket")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      val n = bcnt.groupBy("lang", "source").agg(sum(col("c")).as("n"))
-      base
-        .withColumn("wrn", row_number().over(
-          Window.partitionBy("lang", "source", "bucket")
-            .orderBy("k", "doc_id")).cast("long"))
-        .join(bcnt.select(col("lang"), col("source"), col("bucket"),
-          col("below")), Seq("lang", "source", "bucket"))
-        .join(n, Seq("lang", "source"))
+      stratumRanks(base)
         .withColumn("rnk", col("below") + col("wrn"))
         .withColumn("split",
           when(col("rnk") <= expr("div(n * 8, 10)"), "train")
@@ -355,30 +423,7 @@ object DatasetOps {
           md5(concat_ws(":", lit(epoch), col("doc_id"))).as("k"))
         .withColumn("shard",
           conv(substring(col("k"), 1, 2), 16, 10).cast("long"))
-      val wPre = Window.partitionBy("source").orderBy("shard")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val hist = base.groupBy("source", "shard")
-        .agg(count(lit(1)).as("c"))
-        .withColumn("before", coalesce(sum(col("c")).over(wPre), lit(0L)))
-        .select(col("source"), col("shard"), col("before"))
-      val wS = Window.partitionBy("source", "shard")
-        .orderBy(col("k"), col("doc_id"))
-      val ranked = base.join(broadcast(hist), Seq("source", "shard"))
-        .withColumn("rank", col("before") + row_number().over(wS))
-      val srcs = ranked.groupBy("source").agg(count(lit(1)).as("n_src"))
-        .withColumn("source_idx",
-          row_number().over(Window.orderBy("source")).cast("long"))
-        .withColumn("mn", min(col("n_src")).over(Window.partitionBy()))
-        .withColumn("n_sources",
-          count(lit(1)).over(Window.partitionBy()))
-        .select(col("source"), col("source_idx"), col("mn"),
-          col("n_sources"))
-      ranked.join(broadcast(srcs), Seq("source"))
-        .filter(col("rank") <= col("mn"))
-        .select(col("doc_id"), col("source"), col("rank"),
-          ((col("rank") - 1) * col("n_sources") + col("source_idx") - 1)
-            .as("global_pos"))
-        .orderBy("global_pos")
+      interleave(sourceRanks(base))
     }),
 
     // DS20: rolling-origin evaluation splits (expanding-window
@@ -739,11 +784,7 @@ object DatasetOps {
            ${Dedup.pairsCtes("", "0.5")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
-           reach AS (
-             SELECT doc_id AS id, doc_id AS r FROM documents
-             UNION
-             SELECT reach.id, e.dst FROM reach
-             JOIN edges e ON reach.r = e.src),
+           ${Dedup.reachCte("edges", "documents")},
            cc AS (SELECT id AS doc_id, min(r) AS canonical_id
                   FROM reach GROUP BY id),
            cs AS (SELECT canonical_id, count(*) AS cs
@@ -777,7 +818,7 @@ object DatasetOps {
     // the two-level rank (shard histogram prefix + per-shard
     // row_number) replayed literally; pure integer interleave math
     "ds19_interleave" ->
-      """WITH base AS (
+      s"""WITH base AS (
            SELECT source, doc_id,
                   md5('3:' || CAST(doc_id AS VARCHAR)) AS k
            FROM documents),
@@ -799,21 +840,7 @@ object DatasetOps {
                     ORDER BY s.k, s.doc_id) AS rank
            FROM sh s JOIN hist h ON s.source = h.source
                                 AND s.shard = h.shard),
-         srcs AS (
-           SELECT source, count(*) AS n_src,
-                  row_number() OVER (ORDER BY source) AS source_idx
-           FROM ranked GROUP BY 1),
-         meta AS (
-           SELECT source, source_idx,
-                  min(n_src) OVER () AS mn,
-                  count(*) OVER () AS n_sources
-           FROM srcs)
-         SELECT r.doc_id, r.source, CAST(r.rank AS BIGINT) AS rank,
-                CAST((r.rank - 1) * m.n_sources + m.source_idx - 1
-                     AS BIGINT) AS global_pos
-         FROM ranked r JOIN meta m ON r.source = m.source
-         WHERE r.rank <= m.mn
-         ORDER BY global_pos""",
+         $InterleaveSql""",
     // exhaustive corpus 0.5 graph + the ds1 md5 CASE per endpoint,
     // unordered split combination by least/greatest, BIGINT counts
     "ds22_leakage_audit" ->
@@ -969,10 +996,7 @@ object DatasetOps {
            ${Dedup.pairsCtes(" WHERE doc_id < 100", "0.02")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
-           reach AS (
-             SELECT doc_id AS id, doc_id AS r FROM docs
-             UNION
-             SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src),
+           ${Dedup.reachCte("edges", "docs")},
            cc AS (SELECT id AS doc_id, min(r) AS canonical_id
                   FROM reach GROUP BY id)
          SELECT doc_id, canonical_id,
@@ -1084,31 +1108,7 @@ object DatasetOps {
          FROM ranked GROUP BY shard, batch_id
          ORDER BY shard, batch_id""",
     "ds4_shard_write" ->
-      """WITH docs AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-           FROM documents),
-         d1 AS (SELECT * FROM docs),
-         toks AS (SELECT doc_id, unnest(t) AS w FROM d1),
-         wc AS (SELECT doc_id, w, count(*) AS c FROM toks GROUP BY 1, 2),
-         tw AS (SELECT doc_id, max(c) AS mx, CAST(sum(c) AS BIGINT) AS n,
-                       CAST(sum(c * length(w)) AS BIGINT) AS chars
-                FROM wc GROUP BY 1),
-         tg AS (SELECT doc_id,
-                       CAST(greatest(len(t) - 2, 0) AS BIGINT) AS ntri,
-                       CAST(CASE WHEN len(t) >= 3 THEN
-                         len(list_distinct(list_transform(
-                           generate_series(1, len(t) - 2),
-                           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])))
-                         ELSE 0 END AS BIGINT) AS ndis
-                FROM d1),
-         sig AS (
-           SELECT doc_id, n,
-                  CAST(chars AS DOUBLE) / n AS mean_len,
-                  CAST(mx AS DOUBLE) / n AS top_frac,
-                  CASE WHEN ntri > 0
-                       THEN 1.0 - CAST(ndis AS DOUBLE) / ntri
-                       ELSE 0.0 END AS dup_frac
-           FROM tw JOIN tg USING (doc_id)),
+      s"""WITH ${Curation.FilterSignalCtes},
          kept AS (
            SELECT doc_id, n FROM sig
            WHERE NOT (n < 10)

@@ -1358,6 +1358,108 @@ object Dedup {
              JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
              WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= $tau)"""
 
+  /** D12's degree-ordered triangle listing over the `pairs` graph:
+    * CTEs `deg` (v, dg), `e` (each edge oriented low→high degree, ties
+    * by id, with the head's degree ddst), `wed` (wedges from each
+    * source) and `tri` (the wedges a third edge closes: u, v1, w1). */
+  private val TriangleCtes =
+    """deg AS (
+             SELECT v, count(*) AS dg FROM (
+               SELECT da AS v FROM pairs
+               UNION ALL SELECT db AS v FROM pairs)
+             GROUP BY 1),
+           e AS (
+             SELECT CASE WHEN x.dg < y.dg OR (x.dg = y.dg AND da < db)
+                         THEN da ELSE db END AS src,
+                    CASE WHEN x.dg < y.dg OR (x.dg = y.dg AND da < db)
+                         THEN db ELSE da END AS dst,
+                    CASE WHEN x.dg < y.dg OR (x.dg = y.dg AND da < db)
+                         THEN y.dg ELSE x.dg END AS ddst
+             FROM pairs JOIN deg x ON da = x.v JOIN deg y ON db = y.v),
+           wed AS (
+             SELECT a.src AS u, a.dst AS v1, b.dst AS w1
+             FROM e a JOIN e b ON a.src = b.src
+               AND (a.ddst < b.ddst
+                    OR (a.ddst = b.ddst AND a.dst < b.dst))),
+           tri AS (
+             SELECT u, v1, w1 FROM wed
+             JOIN e ON wed.v1 = e.src AND wed.w1 = e.dst)"""
+
+  /** D23's bounded-distance shells over the `pairs` graph, each
+    * MATERIALIZED (every later shell re-reads the earlier ones): `r1`
+    * the (v, u) neighbor pairs, `r2` and `r3` the pairs first reached
+    * at distance 2 and 3. */
+  private[operators] val ShellCtes =
+    """r1 AS MATERIALIZED (
+             SELECT DISTINCT v, u FROM (
+               SELECT da AS v, db AS u FROM pairs
+               UNION ALL SELECT db AS v, da AS u FROM pairs)),
+           r2 AS MATERIALIZED (
+             SELECT DISTINCT a.v, b.u FROM r1 a JOIN r1 b ON a.u = b.v
+             WHERE b.u <> a.v
+               AND NOT EXISTS (SELECT 1 FROM r1 x
+                               WHERE x.v = a.v AND x.u = b.u)),
+           r3 AS MATERIALIZED (
+             SELECT DISTINCT a.v, b.u FROM r2 a JOIN r1 b ON a.u = b.v
+             WHERE b.u <> a.v
+               AND NOT EXISTS (SELECT 1 FROM r2 x
+                               WHERE x.v = a.v AND x.u = b.u)
+               AND NOT EXISTS (SELECT 1 FROM r1 y
+                               WHERE y.v = a.v AND y.u = b.u))"""
+
+  /** The recursive reachability closure over the undirected edge CTE
+    * `edges` (src, dst), seeded with every doc_id of `nodes`: CTE
+    * `reach` (id, r) — each node's component is its min(r). Needs
+    * WITH RECURSIVE. */
+  private[operators] def reachCte(edges: String, nodes: String): String =
+    s"""reach AS (
+             SELECT doc_id AS id, doc_id AS r FROM $nodes
+             UNION
+             SELECT reach.id, e.dst FROM reach JOIN $edges e
+               ON reach.r = e.src)"""
+
+  /** The k-core peel (D21, PIPE7) as 8 synchronous rounds of
+    * chained CTEs from the edge CTE `seed`: `n<lvl>_<r>` keeps the
+    * vertices of degree ≥ k, `e<lvl>_<r>` the edges between them.
+    * Every round is MATERIALIZED: DuckDB inlines CTEs by default, and
+    * each round reads its predecessor 4×. */
+  private[operators] def peelCtes(lvl: Int, k: Int, seed: String): String =
+    (1 to 8).map { r =>
+      val prev = if (r == 1) seed else s"e${lvl}_${r - 1}"
+      s"""n${lvl}_$r AS MATERIALIZED (
+             SELECT v FROM (SELECT da AS v FROM $prev
+                            UNION ALL SELECT db AS v FROM $prev)
+             GROUP BY v HAVING count(*) >= $k),
+           e${lvl}_$r AS MATERIALIZED (
+             SELECT da, db FROM $prev
+             WHERE da IN (SELECT v FROM n${lvl}_$r)
+               AND db IN (SELECT v FROM n${lvl}_$r))"""
+    }.mkString(",\n           ")
+
+  /** D14's 4 synchronous label-propagation rounds unrolled as CTEs
+    * over the `pairs` graph: `edgesAs` heads the undirected edge CTE
+    * (its name, and AS MATERIALIZED where the rounds must not
+    * re-expand it); round i's votes `v<i>`, counts `c<i>` and argmax
+    * labels `l<i>` (count DESC, label ASC) start from `l0`, every doc
+    * its own label. */
+  private def lpaCtes(edgesAs: String): String =
+    s"""$edgesAs (SELECT da AS src, db AS dst FROM pairs
+                     UNION SELECT db AS src, da AS dst FROM pairs),
+           l0 AS (SELECT doc_id, doc_id AS label FROM documents),
+           ${(1 to 4).map(i =>
+             s"""v$i AS (
+             SELECT e.dst AS doc_id, l.label
+             FROM edges e JOIN l${i - 1} l ON e.src = l.doc_id
+             UNION ALL SELECT doc_id, label FROM l${i - 1}),
+           c$i AS (
+             SELECT doc_id, label, count(*) AS n FROM v$i GROUP BY 1, 2),
+           l$i AS (
+             SELECT doc_id, label FROM (
+               SELECT doc_id, label,
+                      row_number() OVER (PARTITION BY doc_id
+                                         ORDER BY n DESC, label) AS rk
+               FROM c$i) WHERE rk = 1)""").mkString(",\n           ")}"""
+
   /** D11's ten damped power-iteration rounds UNROLLED as chained CTEs
     * (the d14b trick, extended to weighted state by the kernel's
     * FIXED-POINT contract): rank is BIGINT micro-units of 1e-15
@@ -1511,11 +1613,7 @@ object Dedup {
       s"""WITH RECURSIVE $d8PairsCtes,
            edges AS (SELECT da AS src, db AS dst FROM prs
                      UNION SELECT db AS src, da AS dst FROM prs),
-           reach AS (
-             SELECT doc_id AS id, doc_id AS r FROM documents
-             UNION
-             SELECT reach.id, e.dst FROM reach
-             JOIN edges e ON reach.r = e.src)
+           ${reachCte("edges", "documents")}
          SELECT id AS doc_id, min(r) AS canonical_id FROM reach
          GROUP BY id ORDER BY doc_id""",
     // D11: the demo-slice pair graph (doc_id < 100, J ≥ 0.02), then
@@ -1559,37 +1657,14 @@ object Dedup {
            ${pairsCtes("", "0.5")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
-           reach AS (
-             SELECT doc_id AS id, doc_id AS r FROM documents
-             UNION
-             SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src)
+           ${reachCte("edges", "documents")}
          SELECT id AS doc_id, min(r) AS canonical_id FROM reach
          GROUP BY id ORDER BY doc_id""",
     // D12b: same exhaustive full-corpus pair graph at 0.5, then the
     // identical degree-ordered orientation + wedge-close arithmetic
     "d12_tri_corpus" ->
       s"""WITH ${pairsCtes("", "0.5")},
-           deg AS (
-             SELECT v, count(*) AS dg FROM (
-               SELECT da AS v FROM pairs
-               UNION ALL SELECT db AS v FROM pairs)
-             GROUP BY 1),
-           e AS (
-             SELECT CASE WHEN x.dg < y.dg OR (x.dg = y.dg AND da < db)
-                         THEN da ELSE db END AS src,
-                    CASE WHEN x.dg < y.dg OR (x.dg = y.dg AND da < db)
-                         THEN db ELSE da END AS dst,
-                    CASE WHEN x.dg < y.dg OR (x.dg = y.dg AND da < db)
-                         THEN y.dg ELSE x.dg END AS ddst
-             FROM pairs JOIN deg x ON da = x.v JOIN deg y ON db = y.v),
-           wed AS (
-             SELECT a.src AS u, a.dst AS v1, b.dst AS w1
-             FROM e a JOIN e b ON a.src = b.src
-               AND (a.ddst < b.ddst
-                    OR (a.ddst = b.ddst AND a.dst < b.dst))),
-           tri AS (
-             SELECT u, v1, w1 FROM wed
-             JOIN e ON wed.v1 = e.src AND wed.w1 = e.dst)
+           $TriangleCtes
          SELECT doc_id, count(*) AS n_tri
          FROM (SELECT unnest([u, v1, w1]) AS doc_id FROM tri)
          GROUP BY 1 ORDER BY doc_id""",
@@ -1604,22 +1679,7 @@ object Dedup {
     // anchor stays as the third leg (DedupSpec).
     "d14_lpa_corpus" ->
       s"""WITH ${pairsCtes("", "0.5")},
-           edges AS (SELECT da AS src, db AS dst FROM pairs
-                     UNION SELECT db AS src, da AS dst FROM pairs),
-           l0 AS (SELECT doc_id, doc_id AS label FROM documents),
-           ${(1 to 4).map(i =>
-             s"""v$i AS (
-             SELECT e.dst AS doc_id, l.label
-             FROM edges e JOIN l${i - 1} l ON e.src = l.doc_id
-             UNION ALL SELECT doc_id, label FROM l${i - 1}),
-           c$i AS (
-             SELECT doc_id, label, count(*) AS n FROM v$i GROUP BY 1, 2),
-           l$i AS (
-             SELECT doc_id, label FROM (
-               SELECT doc_id, label,
-                      row_number() OVER (PARTITION BY doc_id
-                                         ORDER BY n DESC, label) AS rk
-               FROM c$i) WHERE rk = 1)""").mkString(",\n           ")}
+           ${lpaCtes("edges AS")}
          SELECT doc_id, label FROM l4 ORDER BY doc_id""",
     // D24: the exhaustive corpus 0.5 graph, the SAME unrolled 4-round
     // LPA as d14_lpa_corpus, then the per-community modularity
@@ -1628,23 +1688,8 @@ object Dedup {
     // lint class), the q chain phrased operation-for-operation like
     // the engine (two divisions, one self-multiply, one subtraction)
     "d24_modularity" ->
-      s"""WITH ${pairsCtes("", "0.5")},
-           edges AS (SELECT da AS src, db AS dst FROM pairs
-                     UNION SELECT db AS src, da AS dst FROM pairs),
-           l0 AS (SELECT doc_id, doc_id AS label FROM documents),
-           ${(1 to 4).map(i =>
-             s"""v$i AS (
-             SELECT e.dst AS doc_id, l.label
-             FROM edges e JOIN l${i - 1} l ON e.src = l.doc_id
-             UNION ALL SELECT doc_id, label FROM l${i - 1}),
-           c$i AS (
-             SELECT doc_id, label, count(*) AS n FROM v$i GROUP BY 1, 2),
-           l$i AS (
-             SELECT doc_id, label FROM (
-               SELECT doc_id, label,
-                      row_number() OVER (PARTITION BY doc_id
-                                         ORDER BY n DESC, label) AS rk
-               FROM c$i) WHERE rk = 1)""").mkString(",\n           ")},
+      s"""WITH ${pairsCtes("", "0.5", pairsAs = "pairs AS MATERIALIZED")},
+           ${lpaCtes("edges AS MATERIALIZED")},
            deg AS (
              SELECT v AS doc_id, count(*) AS deg FROM (
                SELECT da AS v FROM pairs
@@ -1760,22 +1805,7 @@ object Dedup {
     // component, boolean flags by integer equality — no floats at all
     "d27_eccentricity" ->
       s"""WITH RECURSIVE ${pairsCtes("", "0.5")},
-           r1 AS MATERIALIZED (
-             SELECT DISTINCT v, u FROM (
-               SELECT da AS v, db AS u FROM pairs
-               UNION ALL SELECT db AS v, da AS u FROM pairs)),
-           r2 AS MATERIALIZED (
-             SELECT DISTINCT a.v, b.u FROM r1 a JOIN r1 b ON a.u = b.v
-             WHERE b.u <> a.v
-               AND NOT EXISTS (SELECT 1 FROM r1 x
-                               WHERE x.v = a.v AND x.u = b.u)),
-           r3 AS MATERIALIZED (
-             SELECT DISTINCT a.v, b.u FROM r2 a JOIN r1 b ON a.u = b.v
-             WHERE b.u <> a.v
-               AND NOT EXISTS (SELECT 1 FROM r2 x
-                               WHERE x.v = a.v AND x.u = b.u)
-               AND NOT EXISTS (SELECT 1 FROM r1 y
-                               WHERE y.v = a.v AND y.u = b.u)),
+           $ShellCtes,
            c1 AS (SELECT v, CAST(count(*) AS BIGINT) AS n1
                   FROM r1 GROUP BY 1),
            c2 AS (SELECT v, CAST(count(*) AS BIGINT) AS n2
@@ -1818,19 +1848,7 @@ object Dedup {
     // references its predecessor 4× — unmaterialized, the 16-round
     // chain re-expands the base scan 4¹⁶ times and dies on file
     // handles before it dies on CPU.
-    "d21_kcore" -> {
-      def peelCtes(lvl: Int, k: Int, seed: String): String =
-        (1 to 8).map { r =>
-          val prev = if (r == 1) seed else s"e${lvl}_${r - 1}"
-          s"""n${lvl}_$r AS MATERIALIZED (
-             SELECT v FROM (SELECT da AS v FROM $prev
-                            UNION ALL SELECT db AS v FROM $prev)
-             GROUP BY v HAVING count(*) >= $k),
-           e${lvl}_$r AS MATERIALIZED (
-             SELECT da, db FROM $prev
-             WHERE da IN (SELECT v FROM n${lvl}_$r)
-               AND db IN (SELECT v FROM n${lvl}_$r))"""
-        }.mkString(",\n           ")
+    "d21_kcore" ->
       s"""WITH ${pairsCtes("", "0.5", pairsAs = "pairs AS MATERIALIZED")},
            ${peelCtes(2, 2, "pairs")},
            ${peelCtes(3, 3, "e2_8")},
@@ -1842,28 +1860,12 @@ object Dedup {
                           WHEN d.doc_id IN (SELECT v FROM n2_8) THEN 2
                           WHEN d.doc_id IN (SELECT v FROM c1) THEN 1
                           ELSE 0 END AS BIGINT) AS coreness
-         FROM documents d ORDER BY doc_id"""
-    },
+         FROM documents d ORDER BY doc_id""",
     // D23: exhaustive graph; 3 MATERIALIZED shell CTEs (distinct +
     // tuple NOT IN against nearer shells), the same fixed fold
     "d23_harmonic" ->
       s"""WITH ${pairsCtes("", "0.5", pairsAs = "pairs AS MATERIALIZED")},
-           r1 AS MATERIALIZED (
-             SELECT DISTINCT v, u FROM (
-               SELECT da AS v, db AS u FROM pairs
-               UNION ALL SELECT db AS v, da AS u FROM pairs)),
-           r2 AS MATERIALIZED (
-             SELECT DISTINCT a.v, b.u FROM r1 a JOIN r1 b ON a.u = b.v
-             WHERE b.u <> a.v
-               AND NOT EXISTS (SELECT 1 FROM r1 x
-                               WHERE x.v = a.v AND x.u = b.u)),
-           r3 AS MATERIALIZED (
-             SELECT DISTINCT a.v, b.u FROM r2 a JOIN r1 b ON a.u = b.v
-             WHERE b.u <> a.v
-               AND NOT EXISTS (SELECT 1 FROM r2 x
-                               WHERE x.v = a.v AND x.u = b.u)
-               AND NOT EXISTS (SELECT 1 FROM r1 y
-                               WHERE y.v = a.v AND y.u = b.u)),
+           $ShellCtes,
            c1 AS (SELECT v, CAST(count(*) AS BIGINT) AS n1
                   FROM r1 GROUP BY 1),
            c2 AS (SELECT v, CAST(count(*) AS BIGINT) AS n2
@@ -1912,27 +1914,7 @@ object Dedup {
     // edge before the coefficient arithmetic ran
     "d13_coeff_corpus" ->
       s"""WITH ${pairsCtes("", "0.5")},
-           deg AS (
-             SELECT v, count(*) AS dg FROM (
-               SELECT da AS v FROM pairs
-               UNION ALL SELECT db AS v FROM pairs)
-             GROUP BY 1),
-           e AS (
-             SELECT CASE WHEN x.dg < y.dg OR (x.dg = y.dg AND da < db)
-                         THEN da ELSE db END AS src,
-                    CASE WHEN x.dg < y.dg OR (x.dg = y.dg AND da < db)
-                         THEN db ELSE da END AS dst,
-                    CASE WHEN x.dg < y.dg OR (x.dg = y.dg AND da < db)
-                         THEN y.dg ELSE x.dg END AS ddst
-             FROM pairs JOIN deg x ON da = x.v JOIN deg y ON db = y.v),
-           wed AS (
-             SELECT a.src AS u, a.dst AS v1, b.dst AS w1
-             FROM e a JOIN e b ON a.src = b.src
-               AND (a.ddst < b.ddst
-                    OR (a.ddst = b.ddst AND a.dst < b.dst))),
-           tri AS (
-             SELECT u, v1, w1 FROM wed
-             JOIN e ON wed.v1 = e.src AND wed.w1 = e.dst),
+           $TriangleCtes,
            pt AS (
              SELECT doc_id, count(*) AS n_tri
              FROM (SELECT unnest([u, v1, w1]) AS doc_id FROM tri)
@@ -1947,54 +1929,14 @@ object Dedup {
     // degree-ordered orientation + wedge-close join as the query
     "d12_triangle_count" ->
       s"""WITH ${pairsCtes(" WHERE doc_id < 200", "0.01")},
-           deg AS (
-             SELECT v, count(*) AS dg FROM (
-               SELECT da AS v FROM pairs
-               UNION ALL SELECT db AS v FROM pairs)
-             GROUP BY 1),
-           e AS (
-             SELECT CASE WHEN x.dg < y.dg OR (x.dg = y.dg AND da < db)
-                         THEN da ELSE db END AS src,
-                    CASE WHEN x.dg < y.dg OR (x.dg = y.dg AND da < db)
-                         THEN db ELSE da END AS dst,
-                    CASE WHEN x.dg < y.dg OR (x.dg = y.dg AND da < db)
-                         THEN y.dg ELSE x.dg END AS ddst
-             FROM pairs JOIN deg x ON da = x.v JOIN deg y ON db = y.v),
-           wed AS (
-             SELECT a.src AS u, a.dst AS v1, b.dst AS w1
-             FROM e a JOIN e b ON a.src = b.src
-               AND (a.ddst < b.ddst
-                    OR (a.ddst = b.ddst AND a.dst < b.dst))),
-           tri AS (
-             SELECT u, v1, w1 FROM wed
-             JOIN e ON wed.v1 = e.src AND wed.w1 = e.dst)
+           $TriangleCtes
          SELECT doc_id, count(*) AS n_tri
          FROM (SELECT unnest([u, v1, w1]) AS doc_id FROM tri)
          GROUP BY 1 ORDER BY doc_id""",
     // d12's CTE chain + degree normalization; deg < 2 excluded
     "d13_clustering_coeff" ->
       s"""WITH ${pairsCtes(" WHERE doc_id < 200", "0.01")},
-           deg AS (
-             SELECT v, count(*) AS dg FROM (
-               SELECT da AS v FROM pairs
-               UNION ALL SELECT db AS v FROM pairs)
-             GROUP BY 1),
-           e AS (
-             SELECT CASE WHEN x.dg < y.dg OR (x.dg = y.dg AND da < db)
-                         THEN da ELSE db END AS src,
-                    CASE WHEN x.dg < y.dg OR (x.dg = y.dg AND da < db)
-                         THEN db ELSE da END AS dst,
-                    CASE WHEN x.dg < y.dg OR (x.dg = y.dg AND da < db)
-                         THEN y.dg ELSE x.dg END AS ddst
-             FROM pairs JOIN deg x ON da = x.v JOIN deg y ON db = y.v),
-           wed AS (
-             SELECT a.src AS u, a.dst AS v1, b.dst AS w1
-             FROM e a JOIN e b ON a.src = b.src
-               AND (a.ddst < b.ddst
-                    OR (a.ddst = b.ddst AND a.dst < b.dst))),
-           tri AS (
-             SELECT u, v1, w1 FROM wed
-             JOIN e ON wed.v1 = e.src AND wed.w1 = e.dst),
+           $TriangleCtes,
            pt AS (
              SELECT doc_id, count(*) AS n_tri
              FROM (SELECT unnest([u, v1, w1]) AS doc_id FROM tri)
@@ -2013,10 +1955,7 @@ object Dedup {
            ${pairsCtes(" WHERE doc_id < 100", "0.02")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
-           reach AS (
-             SELECT doc_id AS id, doc_id AS r FROM docs
-             UNION
-             SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src)
+           ${reachCte("edges", "docs")}
          SELECT id AS doc_id, min(r) AS canonical_id FROM reach
          GROUP BY id ORDER BY doc_id""",
     // d10's recursive-CTE components extended with the longest-copy
@@ -2026,10 +1965,7 @@ object Dedup {
            ${pairsCtes(" WHERE doc_id < 100", "0.02")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
-           reach AS (
-             SELECT doc_id AS id, doc_id AS r FROM docs
-             UNION
-             SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src),
+           ${reachCte("edges", "docs")},
            comp AS (
              SELECT id AS doc_id, min(r) AS canonical_id FROM reach
              GROUP BY id),

@@ -1065,10 +1065,7 @@ object Multimodal {
                         substring(b.phash, CAST(i AS INT), 1))) <= 7),
          edges AS (SELECT da AS src, db AS dst FROM pairs
                    UNION SELECT db AS src, da AS dst FROM pairs),
-         reach AS (
-           SELECT doc_id AS id, doc_id AS r FROM ph
-           UNION
-           SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src)
+         ${Dedup.reachCte("edges", "ph")}
          SELECT id AS doc_id, min(r) AS canonical_id FROM reach
          GROUP BY id ORDER BY doc_id""",
     // ascii(char) == byte value under the ASCII guard (single-byte

@@ -2696,10 +2696,7 @@ object Relational {
            ${Dedup.pairsCtes(" WHERE doc_id < 100", "0.02")},
            edges AS (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
-           reach AS (
-             SELECT doc_id AS id, doc_id AS r FROM docs
-             UNION
-             SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src)
+           ${Dedup.reachCte("edges", "docs")}
          SELECT id AS doc_id, min(r) AS canonical_id FROM reach
          GROUP BY id ORDER BY doc_id""",
     // SQL7b: D10b's full-corpus oracle verbatim — exhaustive

@@ -37,6 +37,21 @@ object Similarity {
   private def dot(a: Column, b: Column): Column =
     graft.functions.DotProduct.dot(a, b)
 
+  /** The top-5 tail every ranked retrieval path ends in: `cosine` of
+    * each (q_id, c_id) candidate (by default the exact cosine of the
+    * query and candidate vectors qe/ce over their norms qn/cn), the 5
+    * best per query by (cosine DESC, c_id), rendered at r6. */
+  private def top5(cosine: Column =
+      dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
+      (cands: DataFrame): DataFrame =
+    cands.withColumn("cosine", cosine)
+      .withColumn("rank", row_number().over(Window.partitionBy("q_id")
+        .orderBy(col("cosine").desc, col("c_id"))).cast("long"))
+      .filter(col("rank") <= 5)
+      .select(col("q_id"), col("rank"), col("c_id"),
+        r6(col("cosine")).as("cosine"))
+      .orderBy("q_id", "rank")
+
   /** Per-label centroid arrays, QUANTIZED at 1e-6 as the operator
     * contract (SIM15's lesson, shared verbatim by SIM16): each
     * dimension is a decimal-pinned mean rendered through round(·,6),
@@ -489,17 +504,9 @@ object Similarity {
       val c = emb
         .select(col("vec_id").as("c_id"), col("embedding").as("ce"))
         .withColumn("cn", sqrt(dot(col("ce"), col("ce"))))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cosine").desc, col("c_id"))
       c.crossJoin(broadcast(q))
         .filter(col("q_id") =!= col("c_id"))
-        .withColumn("cosine",
-          dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("q_id"), col("rank"), col("c_id"),
-          r6(col("cosine")).as("cosine"))
-        .orderBy("q_id", "rank")
+        .transform(top5())
     }),
 
     // SIM14: MMR — maximal-marginal-relevance diversified top-k
@@ -877,18 +884,10 @@ object Similarity {
       val c = emb.select(col("vec_id").as("c_id"),
         col("embedding").as("ce"), col("nrm").as("cn"),
         col("band"), col("bkt"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cosine").desc, col("c_id"))
       c.join(broadcast(q), Seq("band", "bkt"))  // bucket-mates, any band
         .filter(col("q_id") =!= col("c_id"))
         .dropDuplicates("q_id", "c_id")         // union of band hits
-        .withColumn("cosine",
-          dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("q_id"), col("rank"), col("c_id"),
-          r6(col("cosine")).as("cosine"))
-        .orderBy("q_id", "rank")
+        .transform(top5())
     }),
 
     // SIM3: IVF-style ANN — the other canonical scale path next to
@@ -918,18 +917,10 @@ object Similarity {
           1, 2)))
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
           col("nrm").as("qn"), col("probe.cid").as("lst"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cosine").desc, col("c_id"))
       c.join(broadcast(q), Seq("lst"))
         .filter(col("q_id") =!= col("c_id"))
         .dropDuplicates("q_id", "c_id")       // union of the 2 probes
-        .withColumn("cosine",
-          dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("q_id"), col("rank"), col("c_id"),
-          r6(col("cosine")).as("cosine"))
-        .orderBy("q_id", "rank")
+        .transform(top5())
     }),
 
     // SIM5a: the JL projection itself, one row per (vector, projected
@@ -974,17 +965,9 @@ object Similarity {
           dot(col("qp"), col("cp")) / (col("qpn") * col("cpn")))
         .withColumn("prank", row_number().over(wp))
         .filter(col("prank") <= 100)
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cosine").desc, col("c_id"))
       shortlist
         .withColumn("cn", sqrt(dot(col("ce"), col("ce"))))
-        .withColumn("cosine",
-          dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("q_id"), col("rank"), col("c_id"),
-          r6(col("cosine")).as("cosine"))
-        .orderBy("q_id", "rank")
+        .transform(top5())
     }),
 
     // SIM8: Matryoshka-prefix shortlist → exact re-rank (Kusupati et
@@ -1019,17 +1002,9 @@ object Similarity {
           dot(col("qm"), col("cm")) / (col("qmn") * col("cmn")))
         .withColumn("mrank", row_number().over(wp))
         .filter(col("mrank") <= 100)
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cosine").desc, col("c_id"))
       shortlist
         .withColumn("cn", sqrt(dot(col("ce"), col("ce"))))
-        .withColumn("cosine",
-          dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("q_id"), col("rank"), col("c_id"),
-          r6(col("cosine")).as("cosine"))
-        .orderBy("q_id", "rank")
+        .transform(top5())
     }),
 
     // SIM6a: the PQ encoding — every vector's 8 sub-codes plus the
@@ -1078,17 +1053,10 @@ object Similarity {
         .withColumn("c_id", col("vec_id"))
         .withColumn("prank", row_number().over(wp))
         .filter(col("prank") <= 100)
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cosine").desc, col("c_id"))
       shortlist
         .withColumn("cn", sqrt(dot(col("embedding"), col("embedding"))))
-        .withColumn("cosine",
-          dot(col("qe"), col("embedding")) / (col("qn") * col("cn")))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("q_id"), col("rank"), col("c_id"),
-          r6(col("cosine")).as("cosine"))
-        .orderBy("q_id", "rank")
+        .transform(top5(
+          dot(col("qe"), col("embedding")) / (col("qn") * col("cn"))))
     }),
 
     // SIM22: IVF-PQ — the production billion-scale composition of
@@ -1132,17 +1100,10 @@ object Similarity {
         .withColumn("pq_cos", col("adot") / (col("qn") * col("xhat_n")))
         .withColumn("prank", row_number().over(wp))
         .filter(col("prank") <= 100)
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cosine").desc, col("c_id"))
       shortlist
         .withColumn("cn", sqrt(dot(col("embedding"), col("embedding"))))
-        .withColumn("cosine",
-          dot(col("qe"), col("embedding")) / (col("qn") * col("cn")))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("q_id"), col("rank"), col("c_id"),
-          r6(col("cosine")).as("cosine"))
-        .orderBy("q_id", "rank")
+        .transform(top5(
+          dot(col("qe"), col("embedding")) / (col("qn") * col("cn"))))
     }),
 
     // SIM4a: the int8 quantization itself, one row per (vector,
@@ -1174,17 +1135,10 @@ object Similarity {
           col("qq").as("qn"))
       val c = qz.select(col("vec_id").as("c_id"), col("q").as("ce"),
         col("qq").as("cn"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cosine").desc, col("c_id"))
       c.crossJoin(broadcast(q))
         .filter(col("q_id") =!= col("c_id"))
-        .withColumn("cosine",
-          dot(col("qe"), col("ce")) / sqrt(col("qn") * col("cn")))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("q_id"), col("rank"), col("c_id"),
-          r6(col("cosine")).as("cosine"))
-        .orderBy("q_id", "rank")
+        .transform(top5(
+          dot(col("qe"), col("ce")) / sqrt(col("qn") * col("cn"))))
     }),
 
     // SIM21: binary (1-bit sign) quantization — the most aggressive
@@ -1412,6 +1366,52 @@ object Similarity {
     * `s(vec_id, embedding, scale)` — interpolated into BOTH sim4
     * oracles so the top-k can never rank a different quantization
     * than the one the quantize oracle defines. */
+  /** Oracle twin of `dot`: the index-ordered product sum of two
+    * equal-length lists (DuckDB `list_sum` folds left to right). */
+  private def dotSql(a: String, b: String): String =
+    s"list_sum(list_transform(generate_series(1, len($a)), " +
+      s"i -> $a[i] * $b[i]))"
+
+  /** ‖a − b‖² as the three index-ordered folds a·a − 2·a·b + b·b. */
+  private def dist2Sql(a: String, b: String): String =
+    s"${dotSql(a, a)} - CAST(2 AS DOUBLE) * ${dotSql(a, b)} + ${dotSql(b, b)}"
+
+  /** Oracle twin of `top5`: the 5 best `pairs` rows per q_id by
+    * (cosine DESC, c_id), cosine rendered at r6. */
+  private def top5Sql(pairs: String): String =
+    s"""SELECT q_id, rank, c_id, round(cosine, 6) AS cosine FROM (
+           SELECT q_id, c_id, cosine,
+                  row_number() OVER (PARTITION BY q_id
+                    ORDER BY cosine DESC, c_id) AS rank
+           FROM $pairs) WHERE rank <= 5
+         ORDER BY q_id, rank"""
+
+  /** The quantized class-centroid CTEs (SIM15–SIM19): `v` (vec_id,
+    * `vCols`, the double vector e), the r6'd pinned per-dim mean over
+    * `keys` in `m`, and `c` (`cKeys`, the centroid list `cent` in dim
+    * order). */
+  private def centroidCtes(vCols: String, keys: String,
+      cKeys: String = ""): String = {
+    val n = keys.split(",").length
+    def groups(k: Int) = (1 to k).mkString(", ")
+    s"""v AS (
+           SELECT vec_id, $vCols,
+                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+           FROM embeddings),
+         px AS (
+           SELECT $keys, unnest(generate_series(1, len(e))) AS dim,
+                  unnest(e) AS x
+           FROM v),
+         m AS (
+           SELECT $keys, dim,
+                  round(CAST(CAST(sum(CAST(x AS DECIMAL(30,12)))
+                        AS VARCHAR) AS DOUBLE) / count(*), 6) AS mean
+           FROM px GROUP BY ${groups(n + 1)}),
+         c AS (SELECT ${if (cKeys.isEmpty) keys else cKeys},
+                      list(mean ORDER BY dim) AS cent
+               FROM m GROUP BY ${groups(n)})"""
+  }
+
   private val sq8Cte =
     """WITH v AS (
          SELECT vec_id, embedding,
@@ -1427,6 +1427,46 @@ object Similarity {
     * reconstructed-norm table. All sums run in index order
     * (`list_sum`), matching the Spark side's left-associated chains —
     * distances are bit-identical, so code choices are too. */
+  /** SIM3's IVF probing over the centroid cosines `cc` (vec_id, cid,
+    * cos): `asg` each vector's nearest list, `probes` the nprobe=2
+    * nearest lists of each query (vec_id < 10), both with the struct-max
+    * tiebreak (cos DESC, cid DESC), and `cand` the (q_id, c_id)
+    * list-mates. */
+  private val IvfProbeCtes =
+    """asg AS (
+           SELECT vec_id AS c_id, lst FROM (
+             SELECT vec_id, cid AS lst,
+                    row_number() OVER (PARTITION BY vec_id
+                      ORDER BY cos DESC, cid DESC) AS rk
+             FROM cc) WHERE rk = 1),
+         probes AS (
+           SELECT vec_id AS q_id, lst FROM (
+             SELECT vec_id, cid AS lst,
+                    row_number() OVER (PARTITION BY vec_id
+                      ORDER BY cos DESC, cid DESC) AS rk
+             FROM cc WHERE vec_id < 10) WHERE rk <= 2),
+         cand AS (
+           SELECT DISTINCT p.q_id, a.c_id
+           FROM probes p JOIN asg a ON a.lst = p.lst
+           WHERE a.c_id <> p.q_id)"""
+
+  /** The PQ query side (SIM6, SIM22): `q` the query vectors and norms,
+    * `lut` each query's per-subspace dot with every codebook entry. */
+  private val PqLutCtes =
+    s"""q AS (
+           SELECT vec_id AS q_id, e AS qe,
+                  sqrt(list_sum(list_transform(generate_series(1, 64),
+                    i -> e[i] * e[i]))) AS qn
+           FROM v WHERE vec_id < 10),
+         lut AS (
+           SELECT q.q_id, j.j, c.c,
+                  list_sum(list_transform(generate_series(1, ${PqD}),
+                    i -> q.qe[(j.j-1)*${PqD} + i] * c.e[(j.j-1)*${PqD} + i]))
+                    AS pd
+           FROM q
+           CROSS JOIN generate_series(1, ${PqM}) AS j(j)
+           CROSS JOIN cents c)"""
+
   private def pqOracleCtes: String =
     s"""WITH v AS (
            SELECT vec_id,
@@ -1493,8 +1533,7 @@ object Similarity {
            WHERE a.vec_id < b.vec_id),
          pairs AS (
            SELECT cand.va, cand.vb,
-                  list_sum(list_transform(generate_series(1, len(qa.e)),
-                    i -> qa.e[i] * qb.e[i])) / (qa.nrm * qb.nrm) AS cosine
+                  ${dotSql("qa.e", "qb.e")} / (qa.nrm * qb.nrm) AS cosine
            FROM cand
            JOIN n qa ON qa.vec_id = cand.va
            JOIN n qb ON qb.vec_id = cand.vb)
@@ -1514,8 +1553,7 @@ object Similarity {
            FROM v),
          ep AS (
            SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-                  list_sum(list_transform(generate_series(1, len(q.e)),
-                    i -> q.e[i] * c.e[i])) / (q.nrm * c.nrm) AS cosine
+                  ${dotSql("q.e", "c.e")} / (q.nrm * c.nrm) AS cosine
            FROM n q JOIN n c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
          exact AS (
            SELECT q_id, c_id, rank FROM (
@@ -1532,8 +1570,7 @@ object Similarity {
            WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id),
          lp AS (
            SELECT lcand.q_id, lcand.c_id,
-                  list_sum(list_transform(generate_series(1, len(qe.e)),
-                    i -> qe.e[i] * ce.e[i])) / (qe.nrm * ce.nrm) AS cosine
+                  ${dotSql("qe.e", "ce.e")} / (qe.nrm * ce.nrm) AS cosine
            FROM lcand
            JOIN n qe ON qe.vec_id = lcand.q_id
            JOIN n ce ON ce.vec_id = lcand.c_id),
@@ -1578,24 +1615,18 @@ object Similarity {
            WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id),
          pairs AS (
            SELECT cand.q_id, cand.c_id,
-                  list_sum(list_transform(generate_series(1, len(qe.e)),
-                    i -> qe.e[i] * ce.e[i])) / (qe.nrm * ce.nrm) AS cosine
+                  ${dotSql("qe.e", "ce.e")} / (qe.nrm * ce.nrm) AS cosine
            FROM cand
            JOIN n qe ON qe.vec_id = cand.q_id
            JOIN n ce ON ce.vec_id = cand.c_id)
-         SELECT q_id, rank, c_id, round(cosine, 6) AS cosine FROM (
-           SELECT q_id, c_id, cosine,
-                  row_number() OVER (PARTITION BY q_id
-                    ORDER BY cosine DESC, c_id) AS rank
-           FROM pairs) WHERE rank <= 5
-         ORDER BY q_id, rank""",
+         ${top5Sql("pairs")}""",
     // SIM3: the full IVF pipeline in SQL — the deterministic
     // quantizer sample (vec_id % 31, first 16), per-vector centroid
     // cosines, nearest-list assignment and nprobe=2 probe ranking
     // both with Spark's struct-max tiebreak (cos DESC, cid DESC),
     // then the sim1 cosine/rank machinery over the list-mates
     "sim3_ivf_ann" ->
-      """WITH v AS (
+      s"""WITH v AS (
            SELECT vec_id,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
            FROM embeddings),
@@ -1608,38 +1639,16 @@ object Similarity {
            WHERE vec_id % 31 = 0 ORDER BY vec_id LIMIT 16),
          cc AS (
            SELECT n.vec_id, c.cid,
-                  list_sum(list_transform(generate_series(1, len(n.e)),
-                    i -> n.e[i] * c.e[i])) / (n.nrm * c.nrm) AS cos
+                  ${dotSql("n.e", "c.e")} / (n.nrm * c.nrm) AS cos
            FROM n, cents c),
-         asg AS (
-           SELECT vec_id AS c_id, lst FROM (
-             SELECT vec_id, cid AS lst,
-                    row_number() OVER (PARTITION BY vec_id
-                      ORDER BY cos DESC, cid DESC) AS rk
-             FROM cc) WHERE rk = 1),
-         probes AS (
-           SELECT vec_id AS q_id, lst FROM (
-             SELECT vec_id, cid AS lst,
-                    row_number() OVER (PARTITION BY vec_id
-                      ORDER BY cos DESC, cid DESC) AS rk
-             FROM cc WHERE vec_id < 10) WHERE rk <= 2),
-         cand AS (
-           SELECT DISTINCT p.q_id, a.c_id
-           FROM probes p JOIN asg a ON a.lst = p.lst
-           WHERE a.c_id <> p.q_id),
+         $IvfProbeCtes,
          pairs AS (
            SELECT cand.q_id, cand.c_id,
-                  list_sum(list_transform(generate_series(1, len(qe.e)),
-                    i -> qe.e[i] * ce.e[i])) / (qe.nrm * ce.nrm) AS cosine
+                  ${dotSql("qe.e", "ce.e")} / (qe.nrm * ce.nrm) AS cosine
            FROM cand
            JOIN n qe ON qe.vec_id = cand.q_id
            JOIN n ce ON ce.vec_id = cand.c_id)
-         SELECT q_id, rank, c_id, round(cosine, 6) AS cosine FROM (
-           SELECT q_id, c_id, cosine,
-                  row_number() OVER (PARTITION BY q_id
-                    ORDER BY cosine DESC, c_id) AS rank
-           FROM pairs) WHERE rank <= 5
-         ORDER BY q_id, rank""",
+         ${top5Sql("pairs")}""",
     // SIM13: both ranking CTE chains are verbatim the sim1/sim4
     // oracles (renamed CTEs), then the same integer overlap count
     "sim13_recall_eval" ->
@@ -1654,8 +1663,7 @@ object Similarity {
            FROM qz),
          qpairs AS (
            SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-                  list_sum(list_transform(generate_series(1, len(q.q)),
-                    i -> q.q[i] * c.q[i])) / sqrt(q.qq * c.qq) AS cosine
+                  ${dotSql("q.q", "c.q")} / sqrt(q.qq * c.qq) AS cosine
            FROM nq q JOIN nq c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
          qtop AS (
            SELECT q_id, c_id FROM (
@@ -1673,8 +1681,7 @@ object Similarity {
            FROM ve),
          epairs AS (
            SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-                  list_sum(list_transform(generate_series(1, len(q.e)),
-                    i -> q.e[i] * c.e[i])) / (q.nrm * c.nrm) AS cosine
+                  ${dotSql("q.e", "c.e")} / (q.nrm * c.nrm) AS cosine
            FROM ne q JOIN ne c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
          etop AS (
            SELECT q_id, c_id FROM (
@@ -1746,19 +1753,7 @@ object Similarity {
          ORDER BY vec_id""",
     "sim6_pq_topk" ->
       s"""$pqOracleCtes,
-         q AS (
-           SELECT vec_id AS q_id, e AS qe,
-                  sqrt(list_sum(list_transform(generate_series(1, 64),
-                    i -> e[i] * e[i]))) AS qn
-           FROM v WHERE vec_id < 10),
-         lut AS (
-           SELECT q.q_id, j.j, c.c,
-                  list_sum(list_transform(generate_series(1, ${PqD}),
-                    i -> q.qe[(j.j-1)*${PqD} + i] * c.e[(j.j-1)*${PqD} + i]))
-                    AS pd
-           FROM q
-           CROSS JOIN generate_series(1, ${PqM}) AS j(j)
-           CROSS JOIN cents c),
+         $PqLutCtes,
          sc AS (
            SELECT l.q_id, enc.vec_id AS c_id,
                   list_sum(list(l.pd ORDER BY enc.j)) AS adot
@@ -1803,38 +1798,10 @@ object Similarity {
            WHERE vec_id % 31 = 0 ORDER BY vec_id LIMIT 16),
          cc AS (
            SELECT n.vec_id, c.cid,
-                  list_sum(list_transform(generate_series(1, len(n.e)),
-                    i -> n.e[i] * c.e[i])) / (n.nrm * c.nrm) AS cos
+                  ${dotSql("n.e", "c.e")} / (n.nrm * c.nrm) AS cos
            FROM nn n, icents c),
-         asg AS (
-           SELECT vec_id AS c_id, lst FROM (
-             SELECT vec_id, cid AS lst,
-                    row_number() OVER (PARTITION BY vec_id
-                      ORDER BY cos DESC, cid DESC) AS rk
-             FROM cc) WHERE rk = 1),
-         probes AS (
-           SELECT vec_id AS q_id, lst FROM (
-             SELECT vec_id, cid AS lst,
-                    row_number() OVER (PARTITION BY vec_id
-                      ORDER BY cos DESC, cid DESC) AS rk
-             FROM cc WHERE vec_id < 10) WHERE rk <= 2),
-         cand AS (
-           SELECT DISTINCT p.q_id, a.c_id
-           FROM probes p JOIN asg a ON a.lst = p.lst
-           WHERE a.c_id <> p.q_id),
-         q AS (
-           SELECT vec_id AS q_id, e AS qe,
-                  sqrt(list_sum(list_transform(generate_series(1, 64),
-                    i -> e[i] * e[i]))) AS qn
-           FROM v WHERE vec_id < 10),
-         lut AS (
-           SELECT q.q_id, j.j, c.c,
-                  list_sum(list_transform(generate_series(1, ${PqD}),
-                    i -> q.qe[(j.j-1)*${PqD} + i] * c.e[(j.j-1)*${PqD} + i]))
-                    AS pd
-           FROM q
-           CROSS JOIN generate_series(1, ${PqM}) AS j(j)
-           CROSS JOIN cents c),
+         $IvfProbeCtes,
+         $PqLutCtes,
          sc AS (
            SELECT l.q_id, enc.vec_id AS c_id,
                   list_sum(list(l.pd ORDER BY enc.j)) AS adot
@@ -1881,8 +1848,7 @@ object Similarity {
            FROM v),
          allc AS (
            SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-                  list_sum(list_transform(generate_series(1, len(q.e)),
-                    i -> q.e[i] * c.e[i])) / (q.nrm * c.nrm) AS simq
+                  ${dotSql("q.e", "c.e")} / (q.nrm * c.nrm) AS simq
            FROM n q JOIN n c ON q.vec_id < 3 AND q.vec_id <> c.vec_id),
          c20 AS (
            SELECT q_id, c_id, simq FROM (
@@ -1892,8 +1858,7 @@ object Similarity {
              FROM allc) WHERE rk <= 20),
          prs AS (
            SELECT a.q_id, a.c_id AS ca, b.c_id AS cb,
-                  list_sum(list_transform(generate_series(1, len(x.e)),
-                    i -> x.e[i] * y.e[i])) / (x.nrm * y.nrm) AS simc
+                  ${dotSql("x.e", "y.e")} / (x.nrm * y.nrm) AS simc
            FROM c20 a JOIN c20 b ON a.q_id = b.q_id AND a.c_id <> b.c_id
            JOIN n x ON x.vec_id = a.c_id
            JOIN n y ON y.vec_id = b.c_id),
@@ -1927,33 +1892,11 @@ object Similarity {
     // render), list(ORDER BY dim) centroids, the identical three
     // index-ordered folds and (dist2, vec_id) argmin
     "sim15_centroid_medoid" ->
-      """WITH v AS (
-           SELECT vec_id, label,
-                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings),
-         px AS (
-           SELECT label, unnest(generate_series(1, len(e))) AS dim,
-                  unnest(e) AS x
-           FROM v),
-         m AS (
-           SELECT label, dim,
-                  round(CAST(CAST(sum(CAST(x AS DECIMAL(30,12)))
-                        AS VARCHAR) AS DOUBLE) / count(*), 6) AS mean
-           FROM px GROUP BY 1, 2),
-         c AS (SELECT label, list(mean ORDER BY dim) AS cent
-               FROM m GROUP BY 1),
+      s"""WITH ${centroidCtes("label", "label")},
          sc AS (
            SELECT v.vec_id, v.label,
-                  list_sum(list_transform(generate_series(1, len(v.e)),
-                    i -> v.e[i] * v.e[i]))
-                  - CAST(2 AS DOUBLE) *
-                    list_sum(list_transform(generate_series(1, len(v.e)),
-                      i -> v.e[i] * c.cent[i]))
-                  + list_sum(list_transform(
-                      generate_series(1, len(c.cent)),
-                      i -> c.cent[i] * c.cent[i])) AS dist2,
-                  list_sum(list_transform(generate_series(1, len(c.cent)),
-                    i -> c.cent[i] * c.cent[i])) AS cnorm2,
+                  ${dist2Sql("v.e", "c.cent")} AS dist2,
+                  ${dotSql("c.cent", "c.cent")} AS cnorm2,
                   count(*) OVER (PARTITION BY v.label) AS nm
            FROM v JOIN c USING (label)),
          r AS (
@@ -1964,74 +1907,32 @@ object Similarity {
                 CAST(nm AS BIGINT) AS n_members,
                 vec_id AS medoid_id, dist2, cnorm2
          FROM r WHERE rk = 1 ORDER BY label""",
-    // sim15's quantized-centroid spine, then the label self-join:
+    // `centroidCtes`, then the label self-join:
     // every fold runs over the 1e-6-quantized means, so cosine and
     // dist2 are raw bit-identical doubles on both engines
     "sim16_centroid_grid" ->
-      """WITH v AS (
-           SELECT vec_id, label,
-                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings),
-         px AS (
-           SELECT label, unnest(generate_series(1, len(e))) AS dim,
-                  unnest(e) AS x
-           FROM v),
-         m AS (
-           SELECT label, dim,
-                  round(CAST(CAST(sum(CAST(x AS DECIMAL(30,12)))
-                        AS VARCHAR) AS DOUBLE) / count(*), 6) AS mean
-           FROM px GROUP BY 1, 2),
-         c AS (SELECT label, list(mean ORDER BY dim) AS cent
-               FROM m GROUP BY 1)
+      s"""WITH ${centroidCtes("label", "label")}
          SELECT CAST(a.label AS BIGINT) AS label_a,
                 CAST(b.label AS BIGINT) AS label_b,
-                list_sum(list_transform(generate_series(1, len(a.cent)),
-                    i -> a.cent[i] * b.cent[i]))
+                ${dotSql("a.cent", "b.cent")}
                   / (sqrt(list_sum(list_transform(
                         generate_series(1, len(a.cent)),
                         i -> a.cent[i] * a.cent[i])))
                      * sqrt(list_sum(list_transform(
                          generate_series(1, len(b.cent)),
                          i -> b.cent[i] * b.cent[i])))) AS cosine,
-                list_sum(list_transform(generate_series(1, len(a.cent)),
-                    i -> a.cent[i] * a.cent[i]))
-                  - CAST(2 AS DOUBLE) *
-                    list_sum(list_transform(generate_series(1, len(a.cent)),
-                      i -> a.cent[i] * b.cent[i]))
-                  + list_sum(list_transform(generate_series(1, len(b.cent)),
-                      i -> b.cent[i] * b.cent[i])) AS dist2
+                ${dist2Sql("a.cent", "b.cent")} AS dist2
          FROM c a JOIN c b ON a.label < b.label
          ORDER BY label_a, label_b""",
-    // sim15's quantized-centroid spine + per-member dist2 fold, r6'd
+    // `centroidCtes` + per-member dist2 fold, r6'd
     // distances into a pinned per-label mean; sim16's grid phrasing
     // for dij; the (ratio DESC, label) argmax on identical doubles
     "sim17_davies_bouldin" ->
-      """WITH v AS (
-           SELECT vec_id, label,
-                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings),
-         px AS (
-           SELECT label, unnest(generate_series(1, len(e))) AS dim,
-                  unnest(e) AS x
-           FROM v),
-         m AS (
-           SELECT label, dim,
-                  round(CAST(CAST(sum(CAST(x AS DECIMAL(30,12)))
-                        AS VARCHAR) AS DOUBLE) / count(*), 6) AS mean
-           FROM px GROUP BY 1, 2),
-         c AS (SELECT label, list(mean ORDER BY dim) AS cent
-               FROM m GROUP BY 1),
+      s"""WITH ${centroidCtes("label", "label")},
          sc AS (
            SELECT v.label,
                   round(sqrt(
-                    list_sum(list_transform(generate_series(1, len(v.e)),
-                      i -> v.e[i] * v.e[i]))
-                    - CAST(2 AS DOUBLE) *
-                      list_sum(list_transform(generate_series(1, len(v.e)),
-                        i -> v.e[i] * c.cent[i]))
-                    + list_sum(list_transform(
-                        generate_series(1, len(c.cent)),
-                        i -> c.cent[i] * c.cent[i]))), 6) AS dst
+                    ${dist2Sql("v.e", "c.cent")}), 6) AS dst
            FROM v JOIN c USING (label)),
          scat AS (
            SELECT CAST(label AS BIGINT) AS label,
@@ -2042,13 +1943,7 @@ object Similarity {
          grid AS (
            SELECT CAST(a.label AS BIGINT) AS li,
                   CAST(b.label AS BIGINT) AS lj,
-                  list_sum(list_transform(generate_series(1, len(a.cent)),
-                      i -> a.cent[i] * a.cent[i]))
-                    - CAST(2 AS DOUBLE) *
-                      list_sum(list_transform(generate_series(1, len(a.cent)),
-                        i -> a.cent[i] * b.cent[i]))
-                    + list_sum(list_transform(generate_series(1, len(b.cent)),
-                        i -> b.cent[i] * b.cent[i])) AS dist2
+                  ${dist2Sql("a.cent", "b.cent")} AS dist2
            FROM c a JOIN c b ON a.label < b.label),
          bidir AS (
            SELECT li, lj, dist2 FROM grid
@@ -2073,67 +1968,28 @@ object Similarity {
     // sim15's per-half quantized-centroid spine; the same
     // index-ordered dist2 fold between the two half-centroids, r6'd
     "sim19_centroid_drift" ->
-      """WITH v AS (
-           SELECT vec_id, CAST(label AS BIGINT) AS label,
-                  vec_id % 2 = 0 AS even,
-                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings),
-         px AS (
-           SELECT label, even, unnest(generate_series(1, len(e))) AS dim,
-                  unnest(e) AS x
-           FROM v),
-         m AS (
-           SELECT label, even, dim,
-                  round(CAST(CAST(sum(CAST(x AS DECIMAL(30,12)))
-                        AS VARCHAR) AS DOUBLE) / count(*), 6) AS mean
-           FROM px GROUP BY 1, 2, 3),
-         c AS (SELECT label, even, list(mean ORDER BY dim) AS cent
-               FROM m GROUP BY 1, 2),
+      s"""WITH ${centroidCtes(
+             "CAST(label AS BIGINT) AS label, vec_id % 2 = 0 AS even",
+             "label, even")},
          n AS (SELECT label, even, CAST(count(*) AS BIGINT) AS n
                FROM v GROUP BY 1, 2)
          SELECT a.label, na.n AS n_even, nb.n AS n_odd,
                 round(sqrt(
-                  list_sum(list_transform(generate_series(1, len(a.cent)),
-                    i -> a.cent[i] * a.cent[i]))
-                  - CAST(2 AS DOUBLE) *
-                    list_sum(list_transform(generate_series(1, len(a.cent)),
-                      i -> a.cent[i] * b.cent[i]))
-                  + list_sum(list_transform(generate_series(1, len(b.cent)),
-                      i -> b.cent[i] * b.cent[i]))), 6) AS drift
+                  ${dist2Sql("a.cent", "b.cent")}), 6) AS drift
          FROM c a
          JOIN c b ON a.label = b.label AND a.even AND NOT b.even
          JOIN n na ON na.label = a.label AND na.even
          JOIN n nb ON nb.label = a.label AND NOT nb.even
          ORDER BY a.label""",
-    // sim17's quantized-centroid spine; per (vec, centroid) r6'd
+    // `centroidCtes`; per (vec, centroid) r6'd
     // distance, per-vec a/b picks, s one IEEE chain, pinned mean
     "sim18_silhouette" ->
-      """WITH v AS (
-           SELECT vec_id, CAST(label AS BIGINT) AS label,
-                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings),
-         px AS (
-           SELECT label, unnest(generate_series(1, len(e))) AS dim,
-                  unnest(e) AS x
-           FROM v),
-         m AS (
-           SELECT label, dim,
-                  round(CAST(CAST(sum(CAST(x AS DECIMAL(30,12)))
-                        AS VARCHAR) AS DOUBLE) / count(*), 6) AS mean
-           FROM px GROUP BY 1, 2),
-         c AS (SELECT label AS cl, list(mean ORDER BY dim) AS cent
-               FROM m GROUP BY 1),
+      s"""WITH ${centroidCtes("CAST(label AS BIGINT) AS label", "label",
+             "label AS cl")},
          dist AS (
            SELECT v.vec_id, v.label, c.cl,
                   round(sqrt(
-                    list_sum(list_transform(generate_series(1, len(v.e)),
-                      i -> v.e[i] * v.e[i]))
-                    - CAST(2 AS DOUBLE) *
-                      list_sum(list_transform(generate_series(1, len(v.e)),
-                        i -> v.e[i] * c.cent[i]))
-                    + list_sum(list_transform(
-                        generate_series(1, len(c.cent)),
-                        i -> c.cent[i] * c.cent[i]))), 6) AS d
+                    ${dist2Sql("v.e", "c.cent")}), 6) AS d
            FROM v CROSS JOIN c),
          ab AS (
            SELECT vec_id, label,
@@ -2183,17 +2039,11 @@ object Similarity {
            WHERE prank <= 100),
          pairs AS (
            SELECT s.q_id, s.c_id,
-                  list_sum(list_transform(generate_series(1, len(a.e)),
-                    i -> a.e[i] * b.e[i])) / (a.nrm * b.nrm) AS cosine
+                  ${dotSql("a.e", "b.e")} / (a.nrm * b.nrm) AS cosine
            FROM short s
            JOIN x a ON a.vec_id = s.q_id
            JOIN x b ON b.vec_id = s.c_id)
-         SELECT q_id, rank, c_id, round(cosine, 6) AS cosine FROM (
-           SELECT q_id, c_id, cosine,
-                  row_number() OVER (PARTITION BY q_id
-                    ORDER BY cosine DESC, c_id) AS rank
-           FROM pairs) WHERE rank <= 5
-         ORDER BY q_id, rank""",
+         ${top5Sql("pairs")}""",
     "sim8_mrl_topk" ->
       s"""WITH v AS (
            SELECT vec_id,
@@ -2217,26 +2067,19 @@ object Similarity {
            WHERE mrank <= 100),
          pairs AS (
            SELECT s.q_id, s.c_id,
-                  list_sum(list_transform(generate_series(1, len(a.e)),
-                    i -> a.e[i] * b.e[i])) / (a.nrm * b.nrm) AS cosine
+                  ${dotSql("a.e", "b.e")} / (a.nrm * b.nrm) AS cosine
            FROM short s
            JOIN n a ON a.vec_id = s.q_id
            JOIN n b ON b.vec_id = s.c_id)
-         SELECT q_id, rank, c_id, round(cosine, 6) AS cosine FROM (
-           SELECT q_id, c_id, cosine,
-                  row_number() OVER (PARTITION BY q_id
-                    ORDER BY cosine DESC, c_id) AS rank
-           FROM pairs) WHERE rank <= 5
-         ORDER BY q_id, rank""",
+         ${top5Sql("pairs")}""",
     "sim7_mips_topk" ->
-      """WITH v AS (
+      s"""WITH v AS (
            SELECT vec_id,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
            FROM embeddings),
          pairs AS (
            SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-                  list_sum(list_transform(generate_series(1, len(q.e)),
-                    i -> q.e[i] * c.e[i])) AS score
+                  ${dotSql("q.e", "c.e")} AS score
            FROM v q JOIN v c ON q.vec_id < 10 AND q.vec_id <> c.vec_id)
          SELECT q_id, rank, c_id, round(score, 6) AS score FROM (
            SELECT q_id, c_id, score,
@@ -2248,7 +2091,7 @@ object Similarity {
     // k-cutoff; the cosine doubles are bit-identical on both engines
     // (index-order folds), so the threshold set matches exactly
     "sim12_range_search" ->
-      """WITH v AS (
+      s"""WITH v AS (
            SELECT vec_id,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
            FROM embeddings),
@@ -2258,8 +2101,7 @@ object Similarity {
            FROM v),
          pairs AS (
            SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-                  list_sum(list_transform(generate_series(1, len(q.e)),
-                    i -> q.e[i] * c.e[i])) / (q.nrm * c.nrm) AS cosine
+                  ${dotSql("q.e", "c.e")} / (q.nrm * c.nrm) AS cosine
            FROM n q JOIN n c ON q.vec_id < 50 AND q.vec_id <> c.vec_id)
          SELECT q_id, rank, c_id, round(cosine, 6) AS cosine FROM (
            SELECT q_id, c_id, cosine,
@@ -2268,7 +2110,7 @@ object Similarity {
            FROM pairs WHERE cosine >= CAST(0.25 AS DOUBLE))
          ORDER BY q_id, rank""",
     "sim1_cosine_topk" ->
-      """WITH v AS (
+      s"""WITH v AS (
            SELECT vec_id,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
            FROM embeddings),
@@ -2278,15 +2120,9 @@ object Similarity {
            FROM v),
          pairs AS (
            SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-                  list_sum(list_transform(generate_series(1, len(q.e)),
-                    i -> q.e[i] * c.e[i])) / (q.nrm * c.nrm) AS cosine
+                  ${dotSql("q.e", "c.e")} / (q.nrm * c.nrm) AS cosine
            FROM n q JOIN n c ON q.vec_id < 10 AND q.vec_id <> c.vec_id)
-         SELECT q_id, rank, c_id, round(cosine, 6) AS cosine FROM (
-           SELECT q_id, c_id, cosine,
-                  row_number() OVER (PARTITION BY q_id
-                    ORDER BY cosine DESC, c_id) AS rank
-           FROM pairs) WHERE rank <= 5
-         ORDER BY q_id, rank""",
+         ${top5Sql("pairs")}""",
     // identical window slicing, ordered ≤8-element list folds, raw
     // IEEE doubles end to end (no rounding — the w24 discipline)
     "sim10_subseq_match" ->
@@ -2331,7 +2167,7 @@ object Similarity {
          FROM dist ORDER BY dist, event_type, win_start LIMIT 5""",
     // sim1's arithmetic gated by the label-equality predicate
     "sim9_filtered_topk" ->
-      """WITH v AS (
+      s"""WITH v AS (
            SELECT vec_id, label,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
            FROM embeddings),
@@ -2341,8 +2177,7 @@ object Similarity {
            FROM v),
          pairs AS (
            SELECT q.vec_id AS q_id, q.label AS label, c.vec_id AS c_id,
-                  list_sum(list_transform(generate_series(1, len(q.e)),
-                    i -> q.e[i] * c.e[i])) / (q.nrm * c.nrm) AS cosine
+                  ${dotSql("q.e", "c.e")} / (q.nrm * c.nrm) AS cosine
            FROM n q JOIN n c ON q.vec_id < 10 AND q.vec_id <> c.vec_id
                             AND q.label = c.label)
          SELECT q_id, label, rank, c_id, round(cosine, 6) AS cosine FROM (
@@ -2392,7 +2227,7 @@ object Similarity {
          SELECT q_id, rank, c_id, hamming
          FROM t WHERE rank <= 5 ORDER BY q_id, rank""",
     "sim21_rerank_topk" ->
-      """WITH codes AS (
+      s"""WITH codes AS (
            SELECT vec_id,
                   CAST(list_sum(list_transform(generate_series(1, 32),
                     i -> CASE WHEN embedding[i] > 0
@@ -2424,8 +2259,7 @@ object Similarity {
              FROM ham) WHERE hrank <= 64),
          rer AS (
            SELECT s.q_id, s.c_id, s.hamming,
-                  list_sum(list_transform(generate_series(1, len(nq.e)),
-                    i -> nq.e[i] * nc.e[i])) / (nq.nrm * nc.nrm) AS cosine
+                  ${dotSql("nq.e", "nc.e")} / (nq.nrm * nc.nrm) AS cosine
            FROM short s
            JOIN n nq ON nq.vec_id = s.q_id
            JOIN n nc ON nc.vec_id = s.c_id)
@@ -2457,17 +2291,11 @@ object Similarity {
            FROM qz),
          pairs AS (
            SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-                  list_sum(list_transform(generate_series(1, len(q.q)),
-                    i -> q.q[i] * c.q[i])) / sqrt(q.qq * c.qq) AS cosine
+                  ${dotSql("q.q", "c.q")} / sqrt(q.qq * c.qq) AS cosine
            FROM n q JOIN n c ON q.vec_id < 10 AND q.vec_id <> c.vec_id)
-         SELECT q_id, rank, c_id, round(cosine, 6) AS cosine FROM (
-           SELECT q_id, c_id, cosine,
-                  row_number() OVER (PARTITION BY q_id
-                    ORDER BY cosine DESC, c_id) AS rank
-           FROM pairs) WHERE rank <= 5
-         ORDER BY q_id, rank""",
+         ${top5Sql("pairs")}""",
     "d5_embedding_neardup" ->
-      """WITH v AS (
+      s"""WITH v AS (
            SELECT vec_id,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
            FROM embeddings WHERE vec_id < 200),
@@ -2476,11 +2304,9 @@ object Similarity {
                   sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
            FROM v)
          SELECT a.vec_id AS va, b.vec_id AS vb,
-                round(list_sum(list_transform(generate_series(1, len(a.e)),
-                  i -> a.e[i] * b.e[i])) / (a.nrm * b.nrm), 6) AS cosine
+                round(${dotSql("a.e", "b.e")} / (a.nrm * b.nrm), 6) AS cosine
          FROM n a JOIN n b ON a.vec_id < b.vec_id
-         WHERE list_sum(list_transform(generate_series(1, len(a.e)),
-                 i -> a.e[i] * b.e[i])) / (a.nrm * b.nrm) >= 0.35
+         WHERE ${dotSql("a.e", "b.e")} / (a.nrm * b.nrm) >= 0.35
          ORDER BY va, vb"""
   )
 }

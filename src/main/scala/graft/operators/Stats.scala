@@ -138,6 +138,63 @@ object Stats {
       .withColumn("alpha",
         (col("sy") - col("beta") * col("sx")) / col("n"))
 
+  /** The pairwise-slope spine of A54/A55/A107: the pinned daily mean
+    * y per (event_type, day) with its day index as a double x, and
+    * every same-type pair of those days as (x1, y1, x2, y2); callers
+    * pick the pair filter. Returns (panel, pairs). */
+  private def slopePairs(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val dly = dailyMean(Tables.events(s, d), "y")
+      .withColumn("x",
+        datediff(col("day"), lit("2024-01-01")).cast("double"))
+      .select(col("event_type"), col("x"), col("y"))
+    val a = dly.select(col("event_type"), col("x").as("x1"),
+      col("y").as("y1"))
+    val b = dly.select(col("event_type"), col("x").as("x2"),
+      col("y").as("y2"))
+    (dly, a.join(b, Seq("event_type")))
+  }
+
+  /** The A71/A115 two-period histogram: 10 fixed-width bins over the
+    * exact global [min, max] (one bin when the range is flat), each
+    * (event_type, bin)'s counts before (ca) and from (cb) 2024-01-16,
+    * the period sizes na/nb and the Laplace-smoothed shares pa/pb.
+    * One map-side-combinable pass over the corpus; everything after
+    * runs on ≤ |types|·10 rows. */
+  private def driftBins(s: SparkSession, d: String): DataFrame = {
+    val ev = Tables.events(s, d)
+      .select(col("event_type"), col("value"), col("ts"))
+    val rng = ev.agg(min(col("value")).as("vmin"),
+      max(col("value")).as("vmax"))
+    val binned = ev.crossJoin(broadcast(rng))
+      // vmax = vmin -> one bin (degenerate-range guard; spec:
+      // StatsDegenerateSpec)
+      .withColumn("bin",
+        when(col("vmax") > col("vmin"),
+          least(floor((col("value") - col("vmin")) /
+            (col("vmax") - col("vmin")) * 10), lit(9L)))
+          .otherwise(lit(0L)))
+      .withColumn("in_a",
+        (col("ts") < lit("2024-01-16 00:00:00").cast("timestamp"))
+          .cast("long"))
+    val counts = binned.groupBy(col("event_type"), col("bin"))
+      .agg(sum(col("in_a")).as("ca"),
+        sum(lit(1L) - col("in_a")).as("cb"))
+    val spine = counts.select(col("event_type")).distinct()
+      .select(col("event_type"),
+        explode(sequence(lit(0L), lit(9L))).as("bin"))
+    val tot = counts.groupBy(col("event_type"))
+      .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
+    spine
+      .join(counts, Seq("event_type", "bin"), "left")
+      .na.fill(0L, Seq("ca", "cb"))
+      .join(tot, Seq("event_type"))
+      .withColumn("pa",
+        (col("ca") + 1).cast("double") / (col("na") + 10))
+      .withColumn("pb",
+        (col("cb") + 1).cast("double") / (col("nb") + 10))
+  }
+
   /** The A87/A108 blocked-rank frame: the pinned (day, type) mean y,
     * the type count k, and per COMPLETE day (all k types present) each
     * type's midrank r = rank + (ties−1)/2 among that day's means — an
@@ -191,6 +248,41 @@ object Stats {
     try_divide(covar_pop(x, y),
       stddev_pop(when(y.isNotNull, x)) * stddev_pop(when(x.isNotNull, y)))
 
+  /** Fold `body` over the `gs` array of per-group structs, summing
+    * left to right in the array's (sorted) order: a fixed term order
+    * over the k-row group frame, never the corpus, so the sum is the
+    * same IEEE chain as the oracle's `list_sum(list(… ORDER BY …))`. */
+  private def fold(body: Column => Column): Column =
+    aggregate(col("gs"), lit(0.0d), (acc, x) => acc + body(x))
+
+  /** The one-way ANOVA sums (A52, A74, A99): per event_type of `df`
+    * the count and the decimal-pinned Σv, Σv² of `v`, then SSB/SSW
+    * from those per-group terms folded in event_type order. Returns
+    * k, n, ssb, ssw (and the intermediate folds). */
+  private def oneWay(df: DataFrame, v: Column): DataFrame =
+    df.groupBy("event_type")
+      .agg(count(lit(1)).as("n_g"), dsum(v).as("s_g"),
+        dsum(v * v).as("q_g"))
+      .agg(count(lit(1)).as("k"), sum(col("n_g")).as("n"),
+        array_sort(collect_list(struct(col("event_type"), col("n_g"),
+          col("s_g"), col("q_g")))).as("gs"))
+      .withColumn("sum_s", fold(_.getField("s_g")))
+      .withColumn("sum_sq_over_n", fold(x =>
+        x.getField("s_g") * x.getField("s_g") /
+          x.getField("n_g").cast("double")))
+      .withColumn("sum_q", fold(_.getField("q_g")))
+      .withColumn("ssb", col("sum_sq_over_n") -
+        col("sum_s") * col("sum_s") / col("n").cast("double"))
+      .withColumn("ssw", col("sum_q") - col("sum_sq_over_n"))
+
+  /** `oneWay`'s F ratio, r6'd. Zero within-group spread (every
+    * observation identical) or one group leaves F undefined: NULL,
+    * never an ANSI /0 (StatsDegenerateSpec). */
+  private def fRatio: Column =
+    when(col("ssw") > 0 && col("k") > 1,
+      r6((col("ssb") / (col("k") - 1).cast("double")) /
+         (col("ssw") / (col("n") - col("k")).cast("double"))))
+
   /** Autocorrelation grid: corr(v_t, v_{t+k}) per (event_type, k). */
   private def grid(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy("event_type").orderBy("day")
@@ -215,15 +307,8 @@ object Stats {
     * the persist overhead is nil. */
   private[graft] val mkBase = graft.MaterializedTable(
       "a55_base_build")((s, d) => {
-    val dly = dailyMean(Tables.events(s, d), "y")
-      .withColumn("x",
-        datediff(col("day"), lit("2024-01-01")).cast("double"))
-      .select(col("event_type"), col("x"), col("y"))
-    val a = dly.select(col("event_type"), col("x").as("x1"),
-      col("y").as("y1"))
-    val b = dly.select(col("event_type"), col("x").as("x2"),
-      col("y").as("y2"))
-    val sSum = a.join(b, Seq("event_type"))
+    val (dly, pairs) = slopePairs(s, d)
+    val sSum = pairs
       .filter(col("x2") > col("x1"))
       .groupBy(col("event_type"))
       .agg(sum(signum(col("y2") - col("y1"))).cast("long").as("s"))
@@ -372,34 +457,11 @@ object Stats {
     // identical IEEE arithmetic on both engines; round6 absorbs the
     // division chain. Fully oracle-checked; the p twin feeds (k−1,
     // N−k) to the F kernel (rows-only, StatsSpec-anchored).
-    "a52_anova" -> ((s, d) => {
-      def dsum(c: Column) = sum(c.cast("decimal(30,12)")).cast("double")
-      val g = Tables.events(s, d).filter(col("value").isNotNull)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_g"), dsum(col("value")).as("s_g"),
-          dsum(col("value") * col("value")).as("q_g"))
-      def fold(body: Column => Column) =
-        aggregate(col("gs"), lit(0.0d), (acc, x) => acc + body(x))
-      g.agg(count(lit(1)).as("k"), sum(col("n_g")).as("n"),
-          array_sort(collect_list(struct(col("event_type"), col("n_g"),
-            col("s_g"), col("q_g")))).as("gs"))
-        .withColumn("sum_s", fold(_.getField("s_g")))
-        .withColumn("sum_sq_over_n", fold(x =>
-          x.getField("s_g") * x.getField("s_g") /
-            x.getField("n_g").cast("double")))
-        .withColumn("sum_q", fold(_.getField("q_g")))
-        .withColumn("ssb", col("sum_sq_over_n") -
-          col("sum_s") * col("sum_s") / col("n").cast("double"))
-        .withColumn("ssw", col("sum_q") - col("sum_sq_over_n"))
+    "a52_anova" -> ((s, d) =>
+      oneWay(Tables.events(s, d).filter(col("value").isNotNull),
+          col("value"))
         .select(col("k"), col("n"), r6(col("ssb")).as("ssb"),
-          r6(col("ssw")).as("ssw"),
-          // zero within-group variance (every observation identical)
-          // -> F undefined -> NULL (ANSI /0 guard; StatsDegenerateSpec)
-          when(col("ssw") > 0 && col("k") > 1,
-            r6((col("ssb") / (col("k") - 1).cast("double")) /
-               (col("ssw") / (col("n") - col("k")).cast("double"))))
-            .as("f_stat"))
-    }),
+          r6(col("ssw")).as("ssw"), fRatio.as("f_stat"))),
 
     // A52 p twin — upper-tail F p at (k−1, N−k) via the pinned
     // incomplete-beta chain (PinnedBeta; flipped from rows-only in
@@ -456,7 +518,7 @@ object Stats {
           .agg(((max(col("z")) - min(col("z"))) /
             sqrt(max(col("s2")))).as("rs"))
           .groupBy("event_type")
-          .agg((sum(col("rs").cast("decimal(30,12)")).cast("double") /
+          .agg((dsum(col("rs")) /
             count(lit(1))).as("mean_rs"),
             count(lit(1)).as("n_blocks"))
           .withColumn("k", lit(k))
@@ -464,12 +526,11 @@ object Stats {
       val pts = perK.reduce(_ unionByName _)
         .withColumn("x", log(col("k").cast("double")))
         .withColumn("y", log(col("mean_rs")))
-      def ds(c: Column) = sum(c.cast("decimal(30,12)")).cast("double")
       pts.groupBy("event_type")
         .agg(count(lit(1)).cast("double").as("m"),
-          ds(col("x")).as("sx"), ds(col("y")).as("sy"),
-          ds(col("x") * col("x")).as("sxx"),
-          ds(col("x") * col("y")).as("sxy"),
+          dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),
+          dsum(col("x") * col("x")).as("sxx"),
+          dsum(col("x") * col("y")).as("sxy"),
           sum(col("n_blocks")).as("n_blocks_total"))
         .select(col("event_type"),
           r6((col("m") * col("sxy") - col("sx") * col("sy")) /
@@ -607,7 +668,6 @@ object Stats {
           get_json_object(col("props"), "$.k").cast("double").as("x1"),
           hour(col("ts")).cast("double").as("x2"))
         .filter(col("y").isNotNull && col("x1").isNotNull)
-      def dsum(c: Column) = sum(c.cast("decimal(30,12)")).cast("double")
       val m = base.groupBy("event_type").agg(
         count(lit(1)).cast("double").as("n"),
         dsum(col("x1")).as("s1"), dsum(col("x2")).as("s2"),
@@ -947,15 +1007,8 @@ object Stats {
     // median via the same interpolating percentile a17 proves;
     // intercept = median(y − slope·x). Fully oracle-checked.
     "a54_theil_sen" -> ((s, d) => {
-      val dly = dailyMean(Tables.events(s, d), "y")
-        .withColumn("x",
-          datediff(col("day"), lit("2024-01-01")).cast("double"))
-        .select(col("event_type"), col("x"), col("y"))
-      val a = dly.select(col("event_type"), col("x").as("x1"),
-        col("y").as("y1"))
-      val b = dly.select(col("event_type"), col("x").as("x2"),
-        col("y").as("y2"))
-      val slope = a.join(b, Seq("event_type"))
+      val (dly, pairs) = slopePairs(s, d)
+      val slope = pairs
         .filter(col("x2") > col("x1"))
         .select(col("event_type"),
           ((col("y2") - col("y1")) / (col("x2") - col("x1"))).as("m"))
@@ -1656,7 +1709,6 @@ object Stats {
     // chain run on the O(types × days) frame.
     "a121_lilliefors" -> ((s, d) => {
       val daily = dailyMean(Tables.events(s, d), "v")
-      def dsum(c: Column) = sum(c.cast("decimal(30,12)")).cast("double")
       val fit = daily.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("v")).as("s1"),
           dsum(col("v") * col("v")).as("s2"))
@@ -1980,37 +2032,7 @@ object Stats {
     // Interpretation bands (industry convention): <0.10 stable,
     // 0.10–0.25 moderate shift, >0.25 action.
     "a71_psi_drift" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-        .select(col("event_type"), col("value"), col("ts"))
-      val rng = ev.agg(min(col("value")).as("vmin"),
-        max(col("value")).as("vmax"))
-      val binned = ev.crossJoin(broadcast(rng))
-        // vmax = vmin -> one bin (degenerate-range guard; spec:
-        // StatsDegenerateSpec)
-        .withColumn("bin",
-          when(col("vmax") > col("vmin"),
-            least(floor((col("value") - col("vmin")) /
-              (col("vmax") - col("vmin")) * 10), lit(9L)))
-            .otherwise(lit(0L)))
-        .withColumn("in_a",
-          (col("ts") < lit("2024-01-16 00:00:00").cast("timestamp"))
-            .cast("long"))
-      val counts = binned.groupBy(col("event_type"), col("bin"))
-        .agg(sum(col("in_a")).as("ca"),
-          sum(lit(1L) - col("in_a")).as("cb"))
-      val spine = counts.select(col("event_type")).distinct()
-        .select(col("event_type"),
-          explode(sequence(lit(0L), lit(9L))).as("bin"))
-      val tot = counts.groupBy(col("event_type"))
-        .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
-      spine
-        .join(counts, Seq("event_type", "bin"), "left")
-        .na.fill(0L, Seq("ca", "cb"))
-        .join(tot, Seq("event_type"))
-        .withColumn("pa",
-          (col("ca") + 1).cast("double") / (col("na") + 10))
-        .withColumn("pb",
-          (col("cb") + 1).cast("double") / (col("nb") + 10))
+      driftBins(s, d)
         .withColumn("term",
           round((col("pb") - col("pa")) * log(col("pb") / col("pa")), 6))
         .groupBy(col("event_type"))
@@ -2089,8 +2111,6 @@ object Stats {
     // StatsSpec-anchored (with a planted-tie sequential recompute).
     "a73_kruskal_wallis" -> ((s, d) => {
       val (g, ties) = kwGroupRanks(s, d)
-      def fold(body: Column => Column) =
-        aggregate(col("gs"), lit(0.0d), (acc, x) => acc + body(x))
       g.agg(count(lit(1)).as("k"), sum(col("n_g")).as("n"),
           array_sort(collect_list(struct(col("event_type"), col("n_g"),
             col("rs2")))).as("gs"))
@@ -2807,7 +2827,7 @@ object Stats {
             .cast("long"))
       val m = daily.groupBy("event_type").agg(
         count(lit(1)).as("n"),
-        sum(col("x").cast("decimal(30,12)")).cast("double").as("sx"),
+        dsum(col("x")).as("sx"),
         sum(col("y")).cast("double").as("sy"),
         sum(col("z")).cast("double").as("sz"),
         sum((col("x") * col("x")).cast("decimal(38,12)")).cast("double")
@@ -2933,7 +2953,7 @@ object Stats {
         .withColumn("yd", col("y").cast("double"))
       val bins = scored.groupBy(col("event_type"), col("bin"))
         .agg(count(lit(1)).as("n"),
-          (sum(col("conf").cast("decimal(30,12)")).cast("double") /
+          (dsum(col("conf")) /
             count(lit(1))).as("avg_conf"),
           sum(when(col("y"), 1L).otherwise(0L)).as("n_pos"),
           sum(((col("conf") - col("yd")) * (col("conf") - col("yd")))
@@ -2997,37 +3017,14 @@ object Stats {
     // form), both map-side-combinable hash aggs; the broadcast mean
     // join never shuffles the corpus. Fully oracle-checked.
     "a74_levene" -> ((s, d) => {
-      def dsum(c: Column) = sum(c.cast("decimal(30,12)")).cast("double")
       val ev = Tables.events(s, d).filter(col("value").isNotNull)
       val means = ev.groupBy("event_type")
         .agg((dsum(col("value")) / count(lit(1))).as("mu"))
-      val g = ev.join(broadcast(means), Seq("event_type"))
-        .select(col("event_type"),
-          abs(col("value") - col("mu")).as("z"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_g"), dsum(col("z")).as("s_g"),
-          dsum(col("z") * col("z")).as("q_g"))
-      def fold(body: Column => Column) =
-        aggregate(col("gs"), lit(0.0d), (acc, x) => acc + body(x))
-      g.agg(count(lit(1)).as("k"), sum(col("n_g")).as("n"),
-          array_sort(collect_list(struct(col("event_type"), col("n_g"),
-            col("s_g"), col("q_g")))).as("gs"))
-        .withColumn("sum_s", fold(_.getField("s_g")))
-        .withColumn("sum_sq_over_n", fold(x =>
-          x.getField("s_g") * x.getField("s_g") /
-            x.getField("n_g").cast("double")))
-        .withColumn("sum_q", fold(_.getField("q_g")))
-        .withColumn("ssb", col("sum_sq_over_n") -
-          col("sum_s") * col("sum_s") / col("n").cast("double"))
-        .withColumn("ssw", col("sum_q") - col("sum_sq_over_n"))
+      oneWay(ev.join(broadcast(means), Seq("event_type"))
+          .select(col("event_type"), abs(col("value") - col("mu")).as("z")),
+          col("z"))
         .select(col("k"), col("n"), r6(col("ssb")).as("ssb_dev"),
-          r6(col("ssw")).as("ssw_dev"),
-          // zero within-group deviation spread (flat corpus) -> W
-          // undefined -> NULL (the a52 ANSI guard; ratchet spec)
-          when(col("ssw") > 0 && col("k") > 1,
-            r6((col("ssb") / (col("k") - 1).cast("double")) /
-               (col("ssw") / (col("n") - col("k")).cast("double"))))
-            .as("w_stat"))
+          r6(col("ssw")).as("ssw_dev"), fRatio.as("w_stat"))
     }),
 
     // A99: Brown–Forsythe — A74's Levene with MEDIAN centers, the
@@ -3040,36 +3037,14 @@ object Stats {
     // renders). One extra tiny agg + broadcast vs A74 — the median
     // needs its own pass where the mean rode the main agg.
     "a99_brown_forsythe" -> ((s, d) => {
-      def dsum(c: Column) = sum(c.cast("decimal(30,12)")).cast("double")
       val ev = Tables.events(s, d).filter(col("value").isNotNull)
       val meds = ev.groupBy("event_type")
         .agg(expr("percentile(value, 0.5)").as("md"))
-      val g = ev.join(broadcast(meds), Seq("event_type"))
-        .select(col("event_type"),
-          abs(col("value") - col("md")).as("z"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_g"), dsum(col("z")).as("s_g"),
-          dsum(col("z") * col("z")).as("q_g"))
-      def fold(body: Column => Column) =
-        aggregate(col("gs"), lit(0.0d), (acc, x) => acc + body(x))
-      g.agg(count(lit(1)).as("k"), sum(col("n_g")).as("n"),
-          array_sort(collect_list(struct(col("event_type"), col("n_g"),
-            col("s_g"), col("q_g")))).as("gs"))
-        .withColumn("sum_s", fold(_.getField("s_g")))
-        .withColumn("sum_sq_over_n", fold(x =>
-          x.getField("s_g") * x.getField("s_g") /
-            x.getField("n_g").cast("double")))
-        .withColumn("sum_q", fold(_.getField("q_g")))
-        .withColumn("ssb", col("sum_sq_over_n") -
-          col("sum_s") * col("sum_s") / col("n").cast("double"))
-        .withColumn("ssw", col("sum_q") - col("sum_sq_over_n"))
+      oneWay(ev.join(broadcast(meds), Seq("event_type"))
+          .select(col("event_type"), abs(col("value") - col("md")).as("z")),
+          col("z"))
         .select(col("k"), col("n"), r6(col("ssb")).as("ssb_dev"),
-          r6(col("ssw")).as("ssw_dev"),
-          // the a74/a52 degenerate guard (ratchet spec)
-          when(col("ssw") > 0 && col("k") > 1,
-            r6((col("ssb") / (col("k") - 1).cast("double")) /
-               (col("ssw") / (col("n") - col("k")).cast("double"))))
-            .as("bf_stat"))
+          r6(col("ssw")).as("ssw_dev"), fRatio.as("bf_stat"))
     }),
 
     // A74 p twin — Levene's W is F-distributed at (k−1, N−k) under
@@ -3247,8 +3222,6 @@ object Stats {
           sum(col("x")).as("r1"),
           sum(col("y")).as("c1"))
         .filter(col("nk") > 1)
-      def fold(body: Column => Column) =
-        aggregate(col("gs"), lit(0.0d), (acc, x) => acc + body(x))
       strata
         .agg(count(lit(1)).as("k"), sum(col("nk")).as("n"),
           sum(col("a")).as("sum_a"),
@@ -3500,15 +3473,7 @@ object Stats {
     // r6 only at emission. Scale: a per-type day-pair join, ≤ days²
     // rows per type (A54's bound), then ≤ days-row medians.
     "a107_siegel_slopes" -> ((s, d) => {
-      val dly = dailyMean(Tables.events(s, d), "y")
-        .withColumn("x",
-          datediff(col("day"), lit("2024-01-01")).cast("double"))
-        .select(col("event_type"), col("x"), col("y"))
-      val a = dly.select(col("event_type"), col("x").as("x1"),
-        col("y").as("y1"))
-      val b = dly.select(col("event_type"), col("x").as("x2"),
-        col("y").as("y2"))
-      val inner = a.join(b, Seq("event_type"))
+      val inner = slopePairs(s, d)._2
         .filter(col("x2") =!= col("x1"))
         .select(col("event_type"), col("x1"), col("y1"),
           ((col("y2") - col("y1")) / (col("x2") - col("x1"))).as("m"))
@@ -3826,8 +3791,8 @@ object Stats {
             r6((col("num2").cast("decimal(19,0)") * col("num2") * col("l"))
               .cast("double") / col("den"))).otherwise(lit(0.0d)))
         .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
-          sum(col("t1").cast("decimal(30,12)")).cast("double").as("s1"),
-          sum(col("t2").cast("decimal(30,12)")).cast("double").as("s2"))
+          dsum(col("t1")).as("s1"),
+          dsum(col("t2")).as("s2"))
         .select(col("n1"), col("n2"),
           // empty group -> NULL (the a112 ANSI guard)
           when(col("n1") > 0 && col("n2") > 0,
@@ -3852,37 +3817,7 @@ object Stats {
     // a hair past 1). Scale: A71's one-pass conditional-count hash
     // agg; everything after runs on ≤|types|·10 rows.
     "a115_hellinger" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-        .select(col("event_type"), col("value"), col("ts"))
-      val rng = ev.agg(min(col("value")).as("vmin"),
-        max(col("value")).as("vmax"))
-      val binned = ev.crossJoin(broadcast(rng))
-        // vmax = vmin -> one bin (degenerate-range guard; spec:
-        // StatsDegenerateSpec)
-        .withColumn("bin",
-          when(col("vmax") > col("vmin"),
-            least(floor((col("value") - col("vmin")) /
-              (col("vmax") - col("vmin")) * 10), lit(9L)))
-            .otherwise(lit(0L)))
-        .withColumn("in_a",
-          (col("ts") < lit("2024-01-16 00:00:00").cast("timestamp"))
-            .cast("long"))
-      val counts = binned.groupBy(col("event_type"), col("bin"))
-        .agg(sum(col("in_a")).as("ca"),
-          sum(lit(1L) - col("in_a")).as("cb"))
-      val spine = counts.select(col("event_type")).distinct()
-        .select(col("event_type"),
-          explode(sequence(lit(0L), lit(9L))).as("bin"))
-      val tot = counts.groupBy(col("event_type"))
-        .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
-      spine
-        .join(counts, Seq("event_type", "bin"), "left")
-        .na.fill(0L, Seq("ca", "cb"))
-        .join(tot, Seq("event_type"))
-        .withColumn("pa",
-          (col("ca") + 1).cast("double") / (col("na") + 10))
-        .withColumn("pb",
-          (col("cb") + 1).cast("double") / (col("nb") + 10))
+      driftBins(s, d)
         .withColumn("term", round(sqrt(col("pa") * col("pb")), 6))
         .groupBy(col("event_type"))
         .agg(max(col("na")).as("n_a"), max(col("nb")).as("n_b"),
@@ -4203,6 +4138,141 @@ object Stats {
     (1 to 9).map(dd => "%.17e".formatLocal(java.util.Locale.ROOT,
       math.log10(1.0 + 1.0 / dd))).mkString("[", ", ", "]")
 
+  /** Oracle twin of `slopePairs`' panel: CTE `dly` with the pinned
+    * daily mean y and the double day index x. */
+  private val SlopePanelCte =
+    """dly AS (
+           SELECT event_type,
+                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
+                       AS DOUBLE) / count(*) AS y,
+                  CAST(datediff('day', DATE '2024-01-01',
+                       date_trunc('day', ts)) AS DOUBLE) AS x
+           FROM events GROUP BY event_type, date_trunc('day', ts))"""
+
+  /** Oracle twin of `trendPanel` + `trendSums`: CTEs `dly`, `xy` (the
+    * panel) and `co` (the per-type OLS co-moments). */
+  private val TrendCtes =
+    """dly AS (
+           SELECT event_type, date_trunc('day', ts) AS day,
+                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
+                       AS DOUBLE) / count(*) AS y
+           FROM events GROUP BY 1, 2),
+         xy AS (
+           SELECT event_type, day, y,
+                  datediff('day', DATE '2024-01-01', day) AS x
+           FROM dly),
+         co AS (
+           SELECT event_type, count(*) AS n,
+                  sum(x) AS sx, sum(x * x) AS sxx,
+                  CAST(CAST(sum(CAST(y AS DECIMAL(24,10))) AS VARCHAR)
+                       AS DOUBLE) AS sy,
+                  CAST(CAST(sum(CAST(x * y AS DECIMAL(28,8))) AS VARCHAR)
+                       AS DOUBLE) AS sxy
+           FROM xy GROUP BY 1)"""
+
+  /** Oracle twin of `kwGroupRanks`: the two-level bucket midranks
+    * (2× integers) `ranks`, per-group `g` (n_g, rs2) and the tie term
+    * `tt` (t3). */
+  private val KwRankCtes =
+    """ev AS (SELECT event_type, value FROM events
+                     WHERE value IS NOT NULL),
+         rng AS (SELECT min(value) AS vmin, max(value) AS vmax FROM ev),
+         vc AS (SELECT value, event_type, count(*) AS c
+                FROM ev GROUP BY 1, 2),
+         vt0 AS (SELECT value, CAST(sum(c) AS BIGINT) AS cnt
+                 FROM vc GROUP BY 1),
+         vt AS (SELECT value, cnt,
+                       least(CAST(floor((value - vmin) / (vmax - vmin)
+                             * 1000) AS BIGINT), 999) AS bucket
+                FROM vt0, rng),
+         bt AS (SELECT bucket, CAST(sum(cnt) AS BIGINT) AS bcnt
+                FROM vt GROUP BY 1),
+         bb AS (SELECT bucket,
+                       coalesce(sum(bcnt) OVER (ORDER BY bucket
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND
+                         1 PRECEDING), 0) AS bbelow
+                FROM bt),
+         ranks AS (
+           SELECT v.value, v.cnt,
+                  2 * (b.bbelow + coalesce(sum(v.cnt) OVER (
+                    PARTITION BY v.bucket ORDER BY v.value
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                    0)) + v.cnt + 1 AS r2
+           FROM vt v JOIN bb b ON v.bucket = b.bucket),
+         g AS (
+           SELECT event_type, CAST(sum(c) AS BIGINT) AS n_g,
+                  CAST(sum(c * r.r2) AS BIGINT) AS rs2
+           FROM vc JOIN ranks r ON vc.value = r.value GROUP BY 1),
+         tt AS (SELECT CAST(sum(cnt * cnt * cnt - cnt) AS BIGINT) AS t3
+                FROM ranks)"""
+
+  /** Oracle twin of `driftBins`: CTE `terms` with each (event_type,
+    * bin)'s Laplace-smoothed period shares pa/pb and the period sizes
+    * na/nb. */
+  private val DriftBinCtes =
+    """rng AS (SELECT min(value) AS vmin, max(value) AS vmax
+                      FROM events),
+         binned AS (
+           SELECT event_type,
+                  least(CAST(floor((value - vmin) / (vmax - vmin) * 10)
+                        AS BIGINT), 9) AS bin,
+                  CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
+                       THEN 1 ELSE 0 END AS in_a
+           FROM events, rng),
+         counts AS (
+           SELECT event_type, bin, sum(in_a) AS ca,
+                  sum(1 - in_a) AS cb
+           FROM binned GROUP BY 1, 2),
+         spine AS (
+           SELECT DISTINCT event_type, g.b AS bin
+           FROM counts, generate_series(0, 9) AS g(b)),
+         tot AS (
+           SELECT event_type, sum(ca) AS na, sum(cb) AS nb
+           FROM counts GROUP BY 1),
+         terms AS (
+           SELECT s.event_type, t.na, t.nb,
+                  CAST(coalesce(c.ca, 0) + 1 AS DOUBLE) /
+                    CAST(t.na + 10 AS DOUBLE) AS pa,
+                  CAST(coalesce(c.cb, 0) + 1 AS DOUBLE) /
+                    CAST(t.nb + 10 AS DOUBLE) AS pb
+           FROM spine s
+           LEFT JOIN counts c
+             ON s.event_type = c.event_type AND s.bin = c.bin
+           JOIN tot t ON s.event_type = t.event_type)"""
+
+  /** Oracle twin of `oneWay`: CTEs `g` (per-group pinned sums of `v`
+    * over `from`), `f` (the ordered list folds) and `c` (ssb, ssw). */
+  private def oneWayCtes(v: String, from: String): String =
+    s"""g AS (
+           SELECT event_type, count(*) AS n_g,
+                  CAST(CAST(sum(CAST($v AS DECIMAL(30,12))) AS VARCHAR)
+                       AS DOUBLE) AS s_g,
+                  CAST(CAST(sum(CAST($v * $v AS DECIMAL(30,12)))
+                       AS VARCHAR) AS DOUBLE) AS q_g
+           FROM $from GROUP BY 1),
+         f AS (
+           SELECT count(*) AS k, CAST(sum(n_g) AS BIGINT) AS n,
+                  list_sum(list(s_g ORDER BY event_type)) AS sum_s,
+                  list_sum(list(s_g * s_g / CAST(n_g AS DOUBLE)
+                           ORDER BY event_type)) AS sum_sq_over_n,
+                  list_sum(list(q_g ORDER BY event_type)) AS sum_q
+           FROM g),
+         c AS (
+           SELECT k, n,
+                  sum_sq_over_n - sum_s * sum_s / CAST(n AS DOUBLE)
+                    AS ssb,
+                  sum_q - sum_sq_over_n AS ssw
+           FROM f)"""
+
+  /** Oracle twin of `fRatio`, the final SELECT over `oneWayCtes`. */
+  private def fRatioSql(ssb: String, ssw: String, stat: String): String =
+    s"""SELECT k, n, round(ssb, 6) AS $ssb, round(ssw, 6) AS $ssw,
+                CASE WHEN ssw > 0 AND k > 1 THEN
+                  round((ssb / CAST(k - 1 AS DOUBLE)) /
+                        (ssw / CAST(n - k AS DOUBLE)), 6)
+                END AS $stat
+         FROM c"""
+
   private val baseOracles: Map[String, String] = Map(
     // A46: the BH step-up replayed from the dumped p-values —
     // ranking, raw = p·m/rank (the identical double chain), the
@@ -4247,16 +4317,7 @@ object Stats {
     // exact-median split (quantile_cont = Spark percentile), integer
     // n1/n2/runs, then the identical fixed-shape IEEE z chain
     "a90_runs_test" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -4295,16 +4356,7 @@ object Stats {
     // integer column/block totals over complete blocks; Q is one
     // deterministic division from integers
     "a91_cochran_q" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -4347,22 +4399,7 @@ object Stats {
     // cells, the event_type-ordered list_sum folds mirroring the
     // engine's ordered aggregate, one fixed final chain
     "a119_cmh" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value,
-                  CAST(json_extract_string(props, '$.k') AS BIGINT) AS qty
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
-         c AS (
-           SELECT event_type, day,
-                  max(CASE WHEN rn = cnt THEN value END) AS close,
-                  CAST(sum(qty) AS BIGINT) AS vol
-           FROM r GROUP BY 1, 2),
+      s"""WITH $CloseVolCtes,
          p AS (
            SELECT event_type, day, close, vol,
                   lag(close) OVER w AS pc, lag(vol) OVER w AS pv
@@ -4398,22 +4435,7 @@ object Stats {
                 CASE WHEN sum_v > 0 THEN g * g / sum_v END AS cmh_chi2
          FROM gg""",
     "a92_mcnemar" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value,
-                  CAST(json_extract_string(props, '$.k') AS BIGINT) AS qty
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
-         c AS (
-           SELECT event_type, day,
-                  max(CASE WHEN rn = cnt THEN value END) AS close,
-                  CAST(sum(qty) AS BIGINT) AS vol
-           FROM r GROUP BY 1, 2),
+      s"""WITH $CloseVolCtes,
          p AS (
            SELECT event_type, day, close, vol,
                   lag(close) OVER w AS pc, lag(vol) OVER w AS pv
@@ -4439,22 +4461,7 @@ object Stats {
     // integer 2×2 cells; OR/RR one division each; the libm columns
     // (ln/exp) render at r6
     "a102_odds_ratio" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value,
-                  CAST(json_extract_string(props, '$.k') AS BIGINT) AS qty
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
-         c AS (
-           SELECT event_type, day,
-                  max(CASE WHEN rn = cnt THEN value END) AS close,
-                  CAST(sum(qty) AS BIGINT) AS vol
-           FROM r GROUP BY 1, 2),
+      s"""WITH $CloseVolCtes,
          p AS (
            SELECT event_type, day, close, vol,
                   lag(close) OVER w AS pc, lag(vol) OVER w AS pv
@@ -4492,16 +4499,7 @@ object Stats {
     // ×2-midrank integers (rank2 = 2·rank + t_eq − 1), per-row tie
     // correction t_eq²−1, then the identical fixed z chain
     "a93_wilcoxon_signed" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -4535,22 +4533,7 @@ object Stats {
     // all day pairs per type (bounded panel dimension), five integer
     // pair counts, one sqrt chain
     "a94_kendall_tau" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value,
-                  CAST(json_extract_string(props, '$.k') AS BIGINT) AS qty
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
-         c AS (
-           SELECT event_type, day,
-                  max(CASE WHEN rn = cnt THEN value END) AS close,
-                  CAST(sum(qty) AS BIGINT) AS vol
-           FROM r GROUP BY 1, 2),
+      s"""WITH $CloseVolCtes,
          p AS (
            SELECT a.event_type,
                   a.close AS xa, a.vol AS ya,
@@ -4579,16 +4562,7 @@ object Stats {
     // integer cells; expected counts and the 2-cell contribution are
     // one fixed IEEE chain per ROW (never a cross-group float sum)
     "a95_mood_median" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -4619,16 +4593,7 @@ object Stats {
     // integer S+/S-; the continuity-corrected z has an INTEGER
     // numerator (2S+ − n − sgn) over one sqrt
     "a96_sign_test" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -4701,22 +4666,7 @@ object Stats {
     // a94's pair frame with γ / D_yx / D_xy — one division each from
     // the same exact integer counts
     "a98_gamma_somers" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value,
-                  CAST(json_extract_string(props, '$.k') AS BIGINT) AS qty
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
-         c AS (
-           SELECT event_type, day,
-                  max(CASE WHEN rn = cnt THEN value END) AS close,
-                  CAST(sum(qty) AS BIGINT) AS vol
-           FROM r GROUP BY 1, 2),
+      s"""WITH $CloseVolCtes,
          p AS (
            SELECT a.event_type,
                   a.close AS xa, a.vol AS ya,
@@ -5124,13 +5074,7 @@ object Stats {
                 round(quantile_cont(m, 0.975), 6) AS ci_hi
          FROM means GROUP BY event_type ORDER BY event_type""",
     "a55_mann_kendall" ->
-      """WITH dly AS (
-           SELECT event_type,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y,
-                  CAST(datediff('day', DATE '2024-01-01',
-                       date_trunc('day', ts)) AS DOUBLE) AS x
-           FROM events GROUP BY event_type, date_trunc('day', ts)),
+      s"""WITH $SlopePanelCte,
          sp AS (
            SELECT a.event_type AS et,
                   CAST(sum(sign(b.y - a.y)) AS BIGINT) AS s
@@ -5157,13 +5101,7 @@ object Stats {
                  JOIN tt ON nn.event_type = tt.event_type
          ORDER BY nn.event_type""",
     "a54_theil_sen" ->
-      """WITH dly AS (
-           SELECT event_type,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y,
-                  CAST(datediff('day', DATE '2024-01-01',
-                       date_trunc('day', ts)) AS DOUBLE) AS x
-           FROM events GROUP BY event_type, date_trunc('day', ts)),
+      s"""WITH $SlopePanelCte,
          sl AS (
            SELECT a.event_type AS et, quantile_cont(
                     (b.y - a.y) / (b.x - a.x), 0.5) AS slope
@@ -5255,32 +5193,8 @@ object Stats {
          FROM agg""",
     "a51_hurst_rs" -> hurstOracleSql,
     "a52_anova" ->
-      """WITH g AS (
-           SELECT event_type, count(*) AS n_g,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(30,12))) AS VARCHAR)
-                       AS DOUBLE) AS s_g,
-                  CAST(CAST(sum(CAST(value * value AS DECIMAL(30,12)))
-                       AS VARCHAR) AS DOUBLE) AS q_g
-           FROM events WHERE value IS NOT NULL GROUP BY 1),
-         f AS (
-           SELECT count(*) AS k, CAST(sum(n_g) AS BIGINT) AS n,
-                  list_sum(list(s_g ORDER BY event_type)) AS sum_s,
-                  list_sum(list(s_g * s_g / CAST(n_g AS DOUBLE)
-                           ORDER BY event_type)) AS sum_sq_over_n,
-                  list_sum(list(q_g ORDER BY event_type)) AS sum_q
-           FROM g),
-         c AS (
-           SELECT k, n,
-                  sum_sq_over_n - sum_s * sum_s / CAST(n AS DOUBLE)
-                    AS ssb,
-                  sum_q - sum_sq_over_n AS ssw
-           FROM f)
-         SELECT k, n, round(ssb, 6) AS ssb, round(ssw, 6) AS ssw,
-                CASE WHEN ssw > 0 AND k > 1 THEN
-                  round((ssb / CAST(k - 1 AS DOUBLE)) /
-                        (ssw / CAST(n - k AS DOUBLE)), 6)
-                END AS f_stat
-         FROM c""",
+      s"""WITH ${oneWayCtes("value", "events WHERE value IS NOT NULL")}
+         ${fRatioSql("ssb", "ssw", "f_stat")}""",
     "a50_kaplan_meier" ->
       """WITH life AS (
            SELECT user_id, min(ts) AS first_ts, max(ts) AS last_ts
@@ -5725,17 +5639,11 @@ object Stats {
                   sqrt(CAST(n * n * (2 * n + 3) - sn23 AS DOUBLE) / 72)
                   AS z
          FROM tot, gsz""",
-    // a54's daily panel and pair join with the i≠j filter, exact
+    // `SlopePanelCte`'s pair join with the i≠j filter, exact
     // interpolated medians (quantile_cont) at both levels, r6 at
     // emission only
     "a107_siegel_slopes" ->
-      """WITH dly AS (
-           SELECT event_type,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y,
-                  CAST(datediff('day', DATE '2024-01-01',
-                       date_trunc('day', ts)) AS DOUBLE) AS x
-           FROM events GROUP BY event_type, date_trunc('day', ts)),
+      s"""WITH $SlopePanelCte,
          inner_med AS (
            SELECT a.event_type, a.x AS x1, a.y AS y1,
                   quantile_cont((b.y - a.y) / (b.x - a.x), 0.5) AS mi
@@ -6033,73 +5941,17 @@ object Stats {
     // identical Laplace smoothing, per-bin terms rounded then
     // decimal-summed (the a48 fold discipline)
     "a71_psi_drift" ->
-      """WITH rng AS (SELECT min(value) AS vmin, max(value) AS vmax
-                      FROM events),
-         binned AS (
-           SELECT event_type,
-                  least(CAST(floor((value - vmin) / (vmax - vmin) * 10)
-                        AS BIGINT), 9) AS bin,
-                  CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-                       THEN 1 ELSE 0 END AS in_a
-           FROM events, rng),
-         counts AS (
-           SELECT event_type, bin, sum(in_a) AS ca,
-                  sum(1 - in_a) AS cb
-           FROM binned GROUP BY 1, 2),
-         spine AS (
-           SELECT DISTINCT event_type, g.b AS bin
-           FROM counts, generate_series(0, 9) AS g(b)),
-         tot AS (
-           SELECT event_type, sum(ca) AS na, sum(cb) AS nb
-           FROM counts GROUP BY 1),
-         terms AS (
-           SELECT s.event_type, t.na, t.nb,
-                  CAST(coalesce(c.ca, 0) + 1 AS DOUBLE) /
-                    CAST(t.na + 10 AS DOUBLE) AS pa,
-                  CAST(coalesce(c.cb, 0) + 1 AS DOUBLE) /
-                    CAST(t.nb + 10 AS DOUBLE) AS pb
-           FROM spine s
-           LEFT JOIN counts c
-             ON s.event_type = c.event_type AND s.bin = c.bin
-           JOIN tot t ON s.event_type = t.event_type)
+      s"""WITH $DriftBinCtes
          SELECT event_type, CAST(max(na) AS BIGINT) AS n_a,
                 CAST(max(nb) AS BIGINT) AS n_b,
                 round(CAST(CAST(sum(CAST(round((pb - pa) * ln(pb / pa), 6)
                       AS DECIMAL(24,10))) AS VARCHAR) AS DOUBLE), 6) AS psi
          FROM terms GROUP BY event_type ORDER BY event_type""",
-    // a71's exact drift spine verbatim; √(pa·pb) terms rounded then
+    // `DriftBinCtes`; √(pa·pb) terms rounded then
     // decimal-summed, BC rendered via the VARCHAR hop, sqrt IEEE-raw,
     // only the libm ln rounded
     "a115_hellinger" ->
-      """WITH rng AS (SELECT min(value) AS vmin, max(value) AS vmax
-                      FROM events),
-         binned AS (
-           SELECT event_type,
-                  least(CAST(floor((value - vmin) / (vmax - vmin) * 10)
-                        AS BIGINT), 9) AS bin,
-                  CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-                       THEN 1 ELSE 0 END AS in_a
-           FROM events, rng),
-         counts AS (
-           SELECT event_type, bin, sum(in_a) AS ca,
-                  sum(1 - in_a) AS cb
-           FROM binned GROUP BY 1, 2),
-         spine AS (
-           SELECT DISTINCT event_type, g.b AS bin
-           FROM counts, generate_series(0, 9) AS g(b)),
-         tot AS (
-           SELECT event_type, sum(ca) AS na, sum(cb) AS nb
-           FROM counts GROUP BY 1),
-         terms AS (
-           SELECT s.event_type, t.na, t.nb,
-                  CAST(coalesce(c.ca, 0) + 1 AS DOUBLE) /
-                    CAST(t.na + 10 AS DOUBLE) AS pa,
-                  CAST(coalesce(c.cb, 0) + 1 AS DOUBLE) /
-                    CAST(t.nb + 10 AS DOUBLE) AS pb
-           FROM spine s
-           LEFT JOIN counts c
-             ON s.event_type = c.event_type AND s.bin = c.bin
-           JOIN tot t ON s.event_type = t.event_type),
+      s"""WITH $DriftBinCtes,
          agg AS (
            SELECT event_type, CAST(max(na) AS BIGINT) AS n_a,
                   CAST(max(nb) AS BIGINT) AS n_b,
@@ -6143,37 +5995,7 @@ object Stats {
     // identical two-level bucket midranks (2× integers), identical
     // event_type-ordered fold and tie correction
     "a73_kruskal_wallis" ->
-      """WITH ev AS (SELECT event_type, value FROM events
-                     WHERE value IS NOT NULL),
-         rng AS (SELECT min(value) AS vmin, max(value) AS vmax FROM ev),
-         vc AS (SELECT value, event_type, count(*) AS c
-                FROM ev GROUP BY 1, 2),
-         vt0 AS (SELECT value, CAST(sum(c) AS BIGINT) AS cnt
-                 FROM vc GROUP BY 1),
-         vt AS (SELECT value, cnt,
-                       least(CAST(floor((value - vmin) / (vmax - vmin)
-                             * 1000) AS BIGINT), 999) AS bucket
-                FROM vt0, rng),
-         bt AS (SELECT bucket, CAST(sum(cnt) AS BIGINT) AS bcnt
-                FROM vt GROUP BY 1),
-         bb AS (SELECT bucket,
-                       coalesce(sum(bcnt) OVER (ORDER BY bucket
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND
-                         1 PRECEDING), 0) AS bbelow
-                FROM bt),
-         ranks AS (
-           SELECT v.value, v.cnt,
-                  2 * (b.bbelow + coalesce(sum(v.cnt) OVER (
-                    PARTITION BY v.bucket ORDER BY v.value
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                    0)) + v.cnt + 1 AS r2
-           FROM vt v JOIN bb b ON v.bucket = b.bucket),
-         g AS (
-           SELECT event_type, CAST(sum(c) AS BIGINT) AS n_g,
-                  CAST(sum(c * r.r2) AS BIGINT) AS rs2
-           FROM vc JOIN ranks r ON vc.value = r.value GROUP BY 1),
-         tt AS (SELECT CAST(sum(cnt * cnt * cnt - cnt) AS BIGINT) AS t3
-                FROM ranks),
+      s"""WITH $KwRankCtes,
          f AS (
            SELECT count(*) AS k, CAST(sum(n_g) AS BIGINT) AS n,
                   list_sum(list(CAST(rs2 AS DOUBLE) * rs2 /
@@ -6190,40 +6012,10 @@ object Stats {
                 CASE WHEN corr_c <> 0 THEN round(h / corr_c, 6)
                 END AS h_tied
          FROM h""",
-    // a73's two-level midrank CTE chain, then the tie-corrected
+    // `KwRankCtes`, then the tie-corrected
     // pairwise z on the k-row group frame — raw doubles
     "a89_dunn_pairs" ->
-      """WITH ev AS (SELECT event_type, value FROM events
-                     WHERE value IS NOT NULL),
-         rng AS (SELECT min(value) AS vmin, max(value) AS vmax FROM ev),
-         vc AS (SELECT value, event_type, count(*) AS c
-                FROM ev GROUP BY 1, 2),
-         vt0 AS (SELECT value, CAST(sum(c) AS BIGINT) AS cnt
-                 FROM vc GROUP BY 1),
-         vt AS (SELECT value, cnt,
-                       least(CAST(floor((value - vmin) / (vmax - vmin)
-                             * 1000) AS BIGINT), 999) AS bucket
-                FROM vt0, rng),
-         bt AS (SELECT bucket, CAST(sum(cnt) AS BIGINT) AS bcnt
-                FROM vt GROUP BY 1),
-         bb AS (SELECT bucket,
-                       coalesce(sum(bcnt) OVER (ORDER BY bucket
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND
-                         1 PRECEDING), 0) AS bbelow
-                FROM bt),
-         ranks AS (
-           SELECT v.value, v.cnt,
-                  2 * (b.bbelow + coalesce(sum(v.cnt) OVER (
-                    PARTITION BY v.bucket ORDER BY v.value
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                    0)) + v.cnt + 1 AS r2
-           FROM vt v JOIN bb b ON v.bucket = b.bucket),
-         g AS (
-           SELECT event_type, CAST(sum(c) AS BIGINT) AS n_g,
-                  CAST(sum(c * r.r2) AS BIGINT) AS rs2
-           FROM vc JOIN ranks r ON vc.value = r.value GROUP BY 1),
-         tt AS (SELECT CAST(sum(cnt * cnt * cnt - cnt) AS BIGINT) AS t3
-                FROM ranks),
+      s"""WITH $KwRankCtes,
          gm AS (
            SELECT event_type, n_g,
                   CAST(rs2 AS DOUBLE) /
@@ -6318,23 +6110,7 @@ object Stats {
     // renders), then the slope/intercept/residual/DW chain replays the
     // identical fixed-order IEEE arithmetic — raw doubles throughout
     "a81_durbin_watson" ->
-      """WITH dly AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
-         xy AS (
-           SELECT event_type, day, y,
-                  datediff('day', DATE '2024-01-01', day) AS x
-           FROM dly),
-         co AS (
-           SELECT event_type, count(*) AS n,
-                  sum(x) AS sx, sum(x * x) AS sxx,
-                  CAST(CAST(sum(CAST(y AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) AS sy,
-                  CAST(CAST(sum(CAST(x * y AS DECIMAL(28,8))) AS VARCHAR)
-                       AS DOUBLE) AS sxy
-           FROM xy GROUP BY 1),
+      s"""WITH $TrendCtes,
          ab AS (
            SELECT event_type, n, sx, sy,
                   (n * sxy - sx * sy) /
@@ -6801,23 +6577,7 @@ object Stats {
          FROM ssrp p JOIN segw s ON p.event_type = s.event_type
          ORDER BY p.event_type""",
     "a85_cooks_distance" ->
-      """WITH dly AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
-         xy AS (
-           SELECT event_type, day, y,
-                  datediff('day', DATE '2024-01-01', day) AS x
-           FROM dly),
-         co AS (
-           SELECT event_type, count(*) AS n,
-                  sum(x) AS sx, sum(x * x) AS sxx,
-                  CAST(CAST(sum(CAST(y AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) AS sy,
-                  CAST(CAST(sum(CAST(x * y AS DECIMAL(28,8))) AS VARCHAR)
-                       AS DOUBLE) AS sxy
-           FROM xy GROUP BY 1),
+      s"""WITH $TrendCtes,
          ab AS (
            SELECT event_type, n,
                   (n * sxy - sx * sy) /
@@ -6858,23 +6618,7 @@ object Stats {
     // the auxiliary e²-on-x regression's centered moments replayed
     // with the identical pins; LM chain raw, threshold a shared literal
     "a86_breusch_pagan" ->
-      """WITH dly AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
-         xy AS (
-           SELECT event_type, day, y,
-                  datediff('day', DATE '2024-01-01', day) AS x
-           FROM dly),
-         co AS (
-           SELECT event_type, count(*) AS n,
-                  sum(x) AS sx, sum(x * x) AS sxx,
-                  CAST(CAST(sum(CAST(y AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) AS sy,
-                  CAST(CAST(sum(CAST(x * y AS DECIMAL(28,8))) AS VARCHAR)
-                       AS DOUBLE) AS sxy
-           FROM xy GROUP BY 1),
+      s"""WITH $TrendCtes,
          ab AS (
            SELECT event_type, n, sx, sxx,
                   (n * sxy - sx * sy) /
@@ -6985,10 +6729,10 @@ object Stats {
            FROM m)
          SELECT event_type, day, v, ph, ph > CAST(5.0 AS DOUBLE) AS alarm
          FROM p ORDER BY event_type, day""",
-    // identical decimal-pinned group means, |dev| re-ANOVA with the
-    // a52 ordered-list fold
+    // identical decimal-pinned group means, |dev| re-ANOVA through
+    // `oneWayCtes`
     "a74_levene" ->
-      """WITH m AS (
+      s"""WITH m AS (
            SELECT event_type,
                   CAST(CAST(sum(CAST(value AS DECIMAL(30,12))) AS VARCHAR)
                        AS DOUBLE) / count(*) AS mu
@@ -6997,68 +6741,20 @@ object Stats {
            SELECT e.event_type, abs(e.value - m.mu) AS z
            FROM events e JOIN m ON e.event_type = m.event_type
            WHERE e.value IS NOT NULL),
-         g AS (
-           SELECT event_type, count(*) AS n_g,
-                  CAST(CAST(sum(CAST(z AS DECIMAL(30,12))) AS VARCHAR)
-                       AS DOUBLE) AS s_g,
-                  CAST(CAST(sum(CAST(z * z AS DECIMAL(30,12)))
-                       AS VARCHAR) AS DOUBLE) AS q_g
-           FROM z GROUP BY 1),
-         f AS (
-           SELECT count(*) AS k, CAST(sum(n_g) AS BIGINT) AS n,
-                  list_sum(list(s_g ORDER BY event_type)) AS sum_s,
-                  list_sum(list(s_g * s_g / CAST(n_g AS DOUBLE)
-                           ORDER BY event_type)) AS sum_sq_over_n,
-                  list_sum(list(q_g ORDER BY event_type)) AS sum_q
-           FROM g),
-         c AS (
-           SELECT k, n,
-                  sum_sq_over_n - sum_s * sum_s / CAST(n AS DOUBLE)
-                    AS ssb,
-                  sum_q - sum_sq_over_n AS ssw
-           FROM f)
-         SELECT k, n, round(ssb, 6) AS ssb_dev, round(ssw, 6) AS ssw_dev,
-                CASE WHEN ssw > 0 AND k > 1 THEN
-                  round((ssb / CAST(k - 1 AS DOUBLE)) /
-                        (ssw / CAST(n - k AS DOUBLE)), 6)
-                END AS w_stat
-         FROM c""",
+         ${oneWayCtes("z", "z")}
+         ${fRatioSql("ssb_dev", "ssw_dev", "w_stat")}""",
     // A74's chain with MEDIAN centers (quantile_cont = Spark
     // percentile), same ordered folds and renders
     "a99_brown_forsythe" ->
-      """WITH m AS (
+      s"""WITH m AS (
            SELECT event_type, quantile_cont(value, 0.5) AS md
            FROM events WHERE value IS NOT NULL GROUP BY 1),
          z AS (
            SELECT e.event_type, abs(e.value - m.md) AS z
            FROM events e JOIN m ON e.event_type = m.event_type
            WHERE e.value IS NOT NULL),
-         g AS (
-           SELECT event_type, count(*) AS n_g,
-                  CAST(CAST(sum(CAST(z AS DECIMAL(30,12))) AS VARCHAR)
-                       AS DOUBLE) AS s_g,
-                  CAST(CAST(sum(CAST(z * z AS DECIMAL(30,12)))
-                       AS VARCHAR) AS DOUBLE) AS q_g
-           FROM z GROUP BY 1),
-         f AS (
-           SELECT count(*) AS k, CAST(sum(n_g) AS BIGINT) AS n,
-                  list_sum(list(s_g ORDER BY event_type)) AS sum_s,
-                  list_sum(list(s_g * s_g / CAST(n_g AS DOUBLE)
-                           ORDER BY event_type)) AS sum_sq_over_n,
-                  list_sum(list(q_g ORDER BY event_type)) AS sum_q
-           FROM g),
-         c AS (
-           SELECT k, n,
-                  sum_sq_over_n - sum_s * sum_s / CAST(n AS DOUBLE)
-                    AS ssb,
-                  sum_q - sum_sq_over_n AS ssw
-           FROM f)
-         SELECT k, n, round(ssb, 6) AS ssb_dev, round(ssw, 6) AS ssw_dev,
-                CASE WHEN ssw > 0 AND k > 1 THEN
-                  round((ssb / CAST(k - 1 AS DOUBLE)) /
-                        (ssw / CAST(n - k AS DOUBLE)), 6)
-                END AS bf_stat
-         FROM c""",
+         ${oneWayCtes("z", "z")}
+         ${fRatioSql("ssb_dev", "ssw_dev", "bf_stat")}""",
     "a42_weekly_seasonality" ->
       """WITH daily AS (
            SELECT date_trunc('day', ts) AS day,

@@ -1010,7 +1010,6 @@ object TextAnalysis {
         .groupBy("w").agg(count(lit(1)).as("n"))
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= 100)
-      def dsum(c: Column) = sum(c.cast("decimal(30,12)")).cast("double")
       val x = log(col("rank").cast("double"))
       val y = log(col("n").cast("double"))
       ranked

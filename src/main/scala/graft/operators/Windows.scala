@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import graft.Tables
 
 /** Window-function suite: leads/lags (forward returns), running max,
@@ -31,48 +31,148 @@ object Windows {
   private def wUser = Window.partitionBy("user_id")
     .orderBy(col("ts"), col("event_id"))
 
-  /** W12's truncation depth and weights — shared by the query and the
-    * GENERATED oracle SQL so both engines run the identical literal
-    * arithmetic (span 20 → α = 2/21, decay q = 19/21). */
+  /** The truncated-EWMA cascade, one definition for every smoothed
+    * series here (W12, W20, W41, W43, W45, W46, W49) and their
+    * generated oracles: pandas `ewm(span, adjust=True)` weights q^j
+    * with decay q = (span−1)/(span+1), truncated at EwmaK lags (the
+    * truncation IS the definition, on both engines); a missing lag
+    * adds 0.0 to both sums and each sum is left-associated in lag
+    * order, so both engines run the identical literal arithmetic and
+    * raw doubles hash-match with no rounding grid. */
   private val EwmaK = 24
-  private def ewmaWeight(j: Int): Double = math.pow(19.0 / 21.0, j)
-
-  /** W20's truncation depth and span-parametrized weights (decay
-    * q = (span−1)/(span+1), i.e. pandas `ewm(span=…, adjust=True)`),
-    * shared by the query and the generated oracle like W12's. */
-  private val MacdK = 24
-  private def macdWeight(span: Int, j: Int): Double =
+  private def ewmaWeight(span: Int, j: Int): Double =
     math.pow((span - 1.0) / (span + 1.0), j)
 
-  /** W12 oracle, generated from the same constants. Weights are
-    * emitted in 17-significant-digit EXPONENT form: e-notation
-    * literals parse as DOUBLE in DuckDB (plain decimals parse as
-    * DECIMAL and their cast to double can be off by an ulp), and 17
-    * digits round-trips the exact Scala double. */
-  private def ewmaOracleSql: String = {
-    val lags = (1 until EwmaK).map(j =>
-      s"lag(value, $j) OVER (PARTITION BY user_id ORDER BY ts, event_id)" +
-        s" AS l$j").mkString(",\n           ")
-    def w(j: Int): String = "%.17e".formatLocal(java.util.Locale.ROOT,
-      ewmaWeight(j))
-    def term(j: Int, body: Int => String): String = {
-      val c = if (j == 0) "value" else s"l$j"
-      s"CASE WHEN $c IS NOT NULL THEN ${body(j)} ELSE 0.0 END"
+  /** `df` plus the lags `p1 … p23` of `src` over `w`: pure map work
+    * after one window exchange, which every later cascade pass over
+    * the same partitioning reuses. */
+  private def ewmaLags(df: DataFrame, w: WindowSpec, src: String,
+      p: String): DataFrame =
+    (1 until EwmaK).foldLeft(df)((acc, j) =>
+      acc.withColumn(s"$p$j", lag(col(src), j).over(w)))
+
+  /** The span-`span` EWMA of `src` over its `ewmaLags` columns. */
+  private def ewma(span: Int, src: String, p: String): Column = {
+    val terms = (0 until EwmaK).map { j =>
+      val c = if (j == 0) col(src) else col(s"$p$j")
+      val wj = lit(ewmaWeight(span, j))
+      (when(c.isNotNull, wj * c).otherwise(lit(0.0)),
+       when(c.isNotNull, wj).otherwise(lit(0.0)))
     }
-    val num = (0 until EwmaK).map(j => term(j,
-      k => s"${w(k)} * ${if (k == 0) "value" else s"l$k"}")).mkString(" + ")
-    val den = (0 until EwmaK).map(j => term(j, k => w(k))).mkString(" + ")
-    s"""WITH lagged AS (
-           SELECT user_id, event_id, value,
-           $lags
-           FROM events)
-         SELECT user_id, event_id, value,
-                ($num) / ($den) AS ewma
-         FROM lagged
-         ORDER BY user_id, event_id"""
+    terms.map(_._1).reduce(_ + _) / terms.map(_._2).reduce(_ + _)
   }
 
-  /** The per-type daily price series shared by the W19/W20 oracles —
+  /** One cascade pass: `src` smoothed into `out`, selecting
+    * `keep :+ out`. */
+  private def ewmaOf(df: DataFrame, w: WindowSpec, src: String, p: String,
+      span: Int, out: String, keep: Seq[String]): DataFrame =
+    ewmaLags(df, w, src, p).withColumn(out, ewma(span, src, p))
+      .select((keep :+ out).map(col): _*)
+
+  /** The RSI chain's frame (W19, W42): the per-type daily px, its
+    * delta split into gain and loss, and each one's 14-row sum pinned
+    * through DECIMAL (order-free), full frames only. */
+  private def rsiFrame(s: SparkSession, d: String): DataFrame = {
+    val wT = Window.partitionBy("event_type").orderBy("day")
+    val frame = wT.rowsBetween(-13, 0)
+    def s14(c: Column) = sum(c.cast("decimal(30,12)")).over(frame)
+      .cast("double")
+    dailyMean(Tables.events(s, d), "px")
+      .withColumn("delta", col("px") - lag(col("px"), 1).over(wT))
+      .withColumn("gain",
+        when(col("delta") > 0, col("delta")).otherwise(lit(0.0)))
+      .withColumn("loss",
+        when(col("delta") < 0, -col("delta")).otherwise(lit(0.0)))
+      .withColumn("n", count(col("delta")).over(frame))
+      .withColumn("sg", s14(col("gain")))
+      .withColumn("sl", s14(col("loss")))
+      .filter(col("n") === 14)
+  }
+
+  /** Cutler's RS→RSI map over `rsiFrame`'s sums: elementwise IEEE. */
+  private def rsi: Column =
+    when(col("sl") === 0, lit(100.0))
+      .otherwise(lit(100.0) - lit(100.0) /
+        (lit(1.0) + (col("sg") / col("n")) / (col("sl") / col("n"))))
+
+  /** W25's true range and 5-day ATR over the daily candles (W25,
+    * W53): `tr` = max(high − low, |high − prev close|, |low − prev
+    * close|) from each type's second day, `atr` its decimal-pinned
+    * 5-row sum ÷ 5 and `n_win` the frame's row count (5 = full). */
+  private def atr5(s: SparkSession, d: String): DataFrame = {
+    val wd = Window.partitionBy("event_type").orderBy("day")
+    val w5 = wd.rowsBetween(-4, 0)
+    candles(s, d)
+      .withColumn("prev_close", lag(col("close"), 1).over(wd))
+      .filter(col("prev_close").isNotNull)
+      .withColumn("tr", greatest(col("high") - col("low"),
+        abs(col("high") - col("prev_close")),
+        abs(col("low") - col("prev_close"))))
+      .withColumn("n_win", count(lit(1)).over(w5))
+      .withColumn("atr",
+        sum(col("tr").cast("decimal(24,10)")).over(w5).cast("double") / 5)
+  }
+
+  /** The as-of join sides of J4/J8/J12: the (user_id, day) spine of
+    * every active user-day, and each user-day's last purchase value
+    * (by ts, event_id) as `day_val` with its day as `src_day`. */
+  private def asofSides(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val ev = Tables.events(s, d)
+    val spine = ev.select(col("user_id"),
+      date_trunc("day", col("ts")).as("day")).distinct()
+    val wLast = Window.partitionBy("user_id", "day")
+      .orderBy(col("ts").desc, col("event_id").desc)
+    val pDaily = ev.filter(col("event_type") === "purchase")
+      .withColumn("day", date_trunc("day", col("ts")))
+      .withColumn("rn", row_number().over(wLast))
+      .filter(col("rn") === 1)
+      .select(col("user_id"), col("day"), col("value").as("day_val"),
+        col("day").as("src_day"))
+    (spine, pDaily)
+  }
+
+  /** Oracle twin of `ewma`. Weights are emitted in
+    * 17-significant-digit EXPONENT form: e-notation literals parse as
+    * DOUBLE in DuckDB (plain decimals parse as DECIMAL and their cast
+    * to double can be off by an ulp), and 17 digits round-trips the
+    * exact Scala double. */
+  private def ewmaSql(span: Int, src: String, p: String): String = {
+    def w(j: Int) = "%.17e".formatLocal(java.util.Locale.ROOT,
+      ewmaWeight(span, j))
+    def cn(j: Int) = if (j == 0) src else s"$p$j"
+    def term(j: Int, body: String) =
+      s"CASE WHEN ${cn(j)} IS NOT NULL THEN $body ELSE 0.0 END"
+    val num = (0 until EwmaK).map(j => term(j, s"${w(j)} * ${cn(j)}"))
+    val den = (0 until EwmaK).map(j => term(j, w(j)))
+    s"((${num.mkString(" + ")}) / (${den.mkString(" + ")}))"
+  }
+
+  /** Oracle twin of `ewmaLags`: CTE `name` selecting `keep` (which
+    * lists `src`) and the lags of `src` from `from` over `window`. */
+  private def ewmaLagsCte(name: String, from: String, window: String,
+      src: String, p: String, keep: String): String = {
+    val lags = (1 until EwmaK).map(j => s"lag($src, $j) OVER wt AS $p$j")
+    s"""$name AS (
+           SELECT $keep,
+                  ${lags.mkString(",\n                  ")}
+           FROM $from
+           WINDOW wt AS ($window))"""
+  }
+
+  private val ByTypeDay = "PARTITION BY event_type ORDER BY day"
+
+  /** W12 oracle. */
+  private def ewmaOracleSql: String =
+    s"""WITH ${ewmaLagsCte("lagged", "events",
+             "PARTITION BY user_id ORDER BY ts, event_id", "value", "l",
+             "user_id, event_id, value")}
+         SELECT user_id, event_id, value,
+                ${ewmaSql(20, "value", "l")} AS ewma
+         FROM lagged
+         ORDER BY user_id, event_id"""
+
+  /** The per-type daily price series shared by the indicator oracles —
     * the VARCHAR round-trip pins the decimal→double conversion to the
     * correctly-rounded value (see the verify notes). */
   private val DailyPxCte =
@@ -82,9 +182,10 @@ object Windows {
                        AS DOUBLE) / count(*) AS px
            FROM events GROUP BY 1, 2)"""
 
-  /** W19 oracle — same decimal sliding sums, same RS→RSI map. */
-  private def rsiOracleSql: String =
-    s"""WITH $DailyPxCte,
+  /** The RSI chain's frame, `rsiFrame`'s oracle twin: daily px, the
+    * delta/gain/loss split and the decimal-pinned 14-row sums. */
+  private val RsiCtes =
+    s"""$DailyPxCte,
          d AS (
            SELECT event_type, day, px,
                   px - lag(px, 1) OVER (PARTITION BY event_type
@@ -104,138 +205,74 @@ object Windows {
                        AS VARCHAR) AS DOUBLE) AS sl
            FROM g
            WINDOW f AS (PARTITION BY event_type ORDER BY day
-                        ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
-       SELECT event_type, day, round(px, 6) AS px,
-              round(CASE WHEN sl = 0 THEN 100.0
+                        ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))"""
+
+  /** Oracle twin of `rsi`. */
+  private val RsiSql =
+    """CASE WHEN sl = 0 THEN 100.0
                          ELSE 100.0 - 100.0 /
-                              (1.0 + (sg / n) / (sl / n)) END, 6) AS rsi
+                              (1.0 + (sg / n) / (sl / n)) END"""
+
+  /** W19 oracle — same decimal sliding sums, same RS→RSI map. */
+  private def rsiOracleSql: String =
+    s"""WITH $RsiCtes
+       SELECT event_type, day, round(px, 6) AS px,
+              round($RsiSql, 6) AS rsi
        FROM r WHERE n = 14 ORDER BY event_type, day"""
 
-  /** W20 oracle, generated from the same span constants and MacdK as
-    * the query (same 17-digit literal weights, same left-associated
-    * sums — see ewmaOracleSql for the emission rules). */
-  private def macdOracleSql: String = {
-    def w(span: Int, j: Int): String = "%.17e".formatLocal(
-      java.util.Locale.ROOT, macdWeight(span, j))
-    def ewma(span: Int, c0: String, p: String): String = {
-      def cn(j: Int) = if (j == 0) c0 else s"$p$j"
-      def term(j: Int, body: String): String =
-        s"CASE WHEN ${cn(j)} IS NOT NULL THEN $body ELSE 0.0 END"
-      val num = (0 until MacdK).map(j =>
-        term(j, s"${w(span, j)} * ${cn(j)}")).mkString(" + ")
-      val den = (0 until MacdK).map(j =>
-        term(j, w(span, j))).mkString(" + ")
-      s"(($num) / ($den))"
-    }
-    val pxLags = (1 until MacdK).map(j =>
-      s"lag(px, $j) OVER wt AS l$j").mkString(",\n                  ")
-    val mLags = (1 until MacdK).map(j =>
-      s"lag(macd, $j) OVER wt AS m$j").mkString(",\n                  ")
+  /** W20 oracle: EMA12 − EMA26 of px, then the EMA9 signal. */
+  private def macdOracleSql: String =
     s"""WITH $DailyPxCte,
-         lagged AS (
-           SELECT event_type, day, px,
-                  $pxLags
-           FROM daily
-           WINDOW wt AS (PARTITION BY event_type ORDER BY day)),
+         ${ewmaLagsCte("lagged", "daily", ByTypeDay, "px", "l",
+             "event_type, day, px")},
          m AS (
            SELECT event_type, day,
-                  ${ewma(12, "px", "l")} - ${ewma(26, "px", "l")} AS macd
+                  ${ewmaSql(12, "px", "l")} - ${ewmaSql(26, "px", "l")} AS macd
            FROM lagged),
-         lagged2 AS (
-           SELECT event_type, day, macd,
-                  $mLags
-           FROM m
-           WINDOW wt AS (PARTITION BY event_type ORDER BY day)),
+         ${ewmaLagsCte("lagged2", "m", ByTypeDay, "macd", "m",
+             "event_type, day, macd")},
          sig AS (
            SELECT event_type, day, macd,
-                  ${ewma(9, "macd", "m")} AS signal
+                  ${ewmaSql(9, "macd", "m")} AS signal
            FROM lagged2)
        SELECT event_type, day, macd, signal, macd - signal AS hist
        FROM sig ORDER BY event_type, day"""
-  }
 
-  /** W41 oracle — macdOracleSql's generated cascade with the
-    * percentage normalization (same weights, same emission rules). */
-  private def ppoOracleSql: String = {
-    def w(span: Int, j: Int): String = "%.17e".formatLocal(
-      java.util.Locale.ROOT, macdWeight(span, j))
-    def ewma(span: Int, c0: String, p: String): String = {
-      def cn(j: Int) = if (j == 0) c0 else s"$p$j"
-      def term(j: Int, body: String): String =
-        s"CASE WHEN ${cn(j)} IS NOT NULL THEN $body ELSE 0.0 END"
-      val num = (0 until MacdK).map(j =>
-        term(j, s"${w(span, j)} * ${cn(j)}")).mkString(" + ")
-      val den = (0 until MacdK).map(j =>
-        term(j, w(span, j))).mkString(" + ")
-      s"(($num) / ($den))"
-    }
-    val pxLags = (1 until MacdK).map(j =>
-      s"lag(px, $j) OVER wt AS l$j").mkString(",\n                  ")
-    val pLags = (1 until MacdK).map(j =>
-      s"lag(ppo, $j) OVER wt AS p$j").mkString(",\n                  ")
+  /** W41 oracle — W20's EMA12/EMA26 `ewmaSql` spread, normalized. */
+  private def ppoOracleSql: String =
     s"""WITH $DailyPxCte,
-         lagged AS (
-           SELECT event_type, day, px,
-                  $pxLags
-           FROM daily
-           WINDOW wt AS (PARTITION BY event_type ORDER BY day)),
+         ${ewmaLagsCte("lagged", "daily", ByTypeDay, "px", "l",
+             "event_type, day, px")},
          m AS (
            SELECT event_type, day,
                   CAST(100 AS DOUBLE) *
-                    (${ewma(12, "px", "l")} - ${ewma(26, "px", "l")}) /
-                    ${ewma(26, "px", "l")} AS ppo
+                    (${ewmaSql(12, "px", "l")} - ${ewmaSql(26, "px", "l")}) /
+                    ${ewmaSql(26, "px", "l")} AS ppo
            FROM lagged),
-         lagged2 AS (
-           SELECT event_type, day, ppo,
-                  $pLags
-           FROM m
-           WINDOW wt AS (PARTITION BY event_type ORDER BY day)),
+         ${ewmaLagsCte("lagged2", "m", ByTypeDay, "ppo", "p",
+             "event_type, day, ppo")},
          sig AS (
            SELECT event_type, day, ppo,
-                  ${ewma(9, "ppo", "p")} AS signal
+                  ${ewmaSql(9, "ppo", "p")} AS signal
            FROM lagged2)
        SELECT event_type, day, ppo, signal, ppo - signal AS hist
        FROM sig ORDER BY event_type, day"""
-  }
 
-  /** W43 oracle — three generated span-15 cascades (same weights and
-    * emission rules as macdOracleSql), then the Δ/prev ratio. */
-  private def trixOracleSql: String = {
-    def w(j: Int): String = "%.17e".formatLocal(
-      java.util.Locale.ROOT, macdWeight(15, j))
-    def ewma(c0: String, p: String): String = {
-      def cn(j: Int) = if (j == 0) c0 else s"$p$j"
-      def term(j: Int, body: String): String =
-        s"CASE WHEN ${cn(j)} IS NOT NULL THEN $body ELSE 0.0 END"
-      val num = (0 until MacdK).map(j =>
-        term(j, s"${w(j)} * ${cn(j)}")).mkString(" + ")
-      val den = (0 until MacdK).map(j => term(j, w(j))).mkString(" + ")
-      s"(($num) / ($den))"
-    }
-    def lags(src: String, p: String): String = (1 until MacdK).map(j =>
-      s"lag($src, $j) OVER wt AS $p$j").mkString(",\n                  ")
+  /** W43 oracle — three span-15 cascades, then the Δ/prev ratio. */
+  private def trixOracleSql: String =
     s"""WITH $DailyPxCte,
-         l1 AS (
-           SELECT event_type, day, px,
-                  ${lags("px", "a")}
-           FROM daily
-           WINDOW wt AS (PARTITION BY event_type ORDER BY day)),
+         ${ewmaLagsCte("l1", "daily", ByTypeDay, "px", "a",
+             "event_type, day, px")},
          s1 AS (
-           SELECT event_type, day, ${ewma("px", "a")} AS t1 FROM l1),
-         l2 AS (
-           SELECT event_type, day, t1,
-                  ${lags("t1", "b")}
-           FROM s1
-           WINDOW wt AS (PARTITION BY event_type ORDER BY day)),
+           SELECT event_type, day, ${ewmaSql(15, "px", "a")} AS t1 FROM l1),
+         ${ewmaLagsCte("l2", "s1", ByTypeDay, "t1", "b",
+             "event_type, day, t1")},
          s2 AS (
-           SELECT event_type, day, ${ewma("t1", "b")} AS t2 FROM l2),
-         l3 AS (
-           SELECT event_type, day, t2,
-                  ${lags("t2", "c")}
-           FROM s2
-           WINDOW wt AS (PARTITION BY event_type ORDER BY day)),
+           SELECT event_type, day, ${ewmaSql(15, "t1", "b")} AS t2 FROM l2),
+         ${ewmaLagsCte("l3", "s2", ByTypeDay, "t2", "c",
+             "event_type, day, t2")},
          s3 AS (
-           SELECT event_type, day, ${ewma("t2", "c")} AS t3 FROM l3),
+           SELECT event_type, day, ${ewmaSql(15, "t2", "c")} AS t3 FROM l3),
          f AS (
            SELECT event_type, day, t3,
                   lag(t3, 1) OVER (PARTITION BY event_type
@@ -244,87 +281,44 @@ object Windows {
        SELECT event_type, day, t3,
               CAST(100 AS DOUBLE) * (t3 - prev) / prev AS trix
        FROM f WHERE prev IS NOT NULL ORDER BY event_type, day"""
-  }
 
-  /** W45 oracle — three generated span-10 cascades (trixOracleSql's
-    * machinery), then the fixed DEMA/TEMA combination chains. */
-  private def demaTemaOracleSql: String = {
-    def w(j: Int): String = "%.17e".formatLocal(
-      java.util.Locale.ROOT, macdWeight(10, j))
-    def ewma(c0: String, p: String): String = {
-      def cn(j: Int) = if (j == 0) c0 else s"$p$j"
-      def term(j: Int, body: String): String =
-        s"CASE WHEN ${cn(j)} IS NOT NULL THEN $body ELSE 0.0 END"
-      val num = (0 until MacdK).map(j =>
-        term(j, s"${w(j)} * ${cn(j)}")).mkString(" + ")
-      val den = (0 until MacdK).map(j => term(j, w(j))).mkString(" + ")
-      s"(($num) / ($den))"
-    }
-    def lags(src: String, p: String): String = (1 until MacdK).map(j =>
-      s"lag($src, $j) OVER wt AS $p$j").mkString(",\n                  ")
+  /** W45 oracle — three span-10 cascades, then the fixed DEMA/TEMA
+    * combination chains. */
+  private def demaTemaOracleSql: String =
     s"""WITH $DailyPxCte,
-         l1 AS (
-           SELECT event_type, day, px,
-                  ${lags("px", "a")}
-           FROM daily
-           WINDOW wt AS (PARTITION BY event_type ORDER BY day)),
+         ${ewmaLagsCte("l1", "daily", ByTypeDay, "px", "a",
+             "event_type, day, px")},
          s1 AS (
-           SELECT event_type, day, ${ewma("px", "a")} AS e1 FROM l1),
-         l2 AS (
-           SELECT event_type, day, e1,
-                  ${lags("e1", "b")}
-           FROM s1
-           WINDOW wt AS (PARTITION BY event_type ORDER BY day)),
+           SELECT event_type, day, ${ewmaSql(10, "px", "a")} AS e1 FROM l1),
+         ${ewmaLagsCte("l2", "s1", ByTypeDay, "e1", "b",
+             "event_type, day, e1")},
          s2 AS (
-           SELECT event_type, day, e1, ${ewma("e1", "b")} AS e2 FROM l2),
-         l3 AS (
-           SELECT event_type, day, e1, e2,
-                  ${lags("e2", "c")}
-           FROM s2
-           WINDOW wt AS (PARTITION BY event_type ORDER BY day)),
+           SELECT event_type, day, e1, ${ewmaSql(10, "e1", "b")} AS e2 FROM l2),
+         ${ewmaLagsCte("l3", "s2", ByTypeDay, "e2", "c",
+             "event_type, day, e1, e2")},
          s3 AS (
            SELECT event_type, day, e1, e2,
-                  ${ewma("e2", "c")} AS e3 FROM l3)
+                  ${ewmaSql(10, "e2", "c")} AS e3 FROM l3)
        SELECT event_type, day, e1,
               CAST(2 AS DOUBLE) * e1 - e2 AS dema,
               CAST(3 AS DOUBLE) * e1 - CAST(3 AS DOUBLE) * e2 + e3 AS tema
        FROM s3 ORDER BY event_type, day"""
-  }
 
-  /** W46 oracle — two generated span-9 cascades over the candle
-    * range, r6'd ratios, then the decimal-pinned 10-day frame sum. */
-  private def massIndexOracleSql: String = {
-    def w(j: Int): String = "%.17e".formatLocal(
-      java.util.Locale.ROOT, macdWeight(9, j))
-    def ewma(c0: String, p: String): String = {
-      def cn(j: Int) = if (j == 0) c0 else s"$p$j"
-      def term(j: Int, body: String): String =
-        s"CASE WHEN ${cn(j)} IS NOT NULL THEN $body ELSE 0.0 END"
-      val num = (0 until MacdK).map(j =>
-        term(j, s"${w(j)} * ${cn(j)}")).mkString(" + ")
-      val den = (0 until MacdK).map(j => term(j, w(j))).mkString(" + ")
-      s"(($num) / ($den))"
-    }
-    def lags(src: String, p: String): String = (1 until MacdK).map(j =>
-      s"lag($src, $j) OVER wt AS $p$j").mkString(",\n                  ")
+  /** W46 oracle — two span-9 cascades over the candle range, r6'd
+    * ratios, then the decimal-pinned 10-day frame sum. */
+  private def massIndexOracleSql: String =
     s"""WITH candles AS (
            SELECT event_type, date_trunc('day', ts) AS day,
                   max(value) - min(value) AS rng
            FROM events GROUP BY 1, 2),
-         l1 AS (
-           SELECT event_type, day, rng,
-                  ${lags("rng", "a")}
-           FROM candles
-           WINDOW wt AS (PARTITION BY event_type ORDER BY day)),
+         ${ewmaLagsCte("l1", "candles", ByTypeDay, "rng", "a",
+             "event_type, day, rng")},
          s1 AS (
-           SELECT event_type, day, ${ewma("rng", "a")} AS e1 FROM l1),
-         l2 AS (
-           SELECT event_type, day, e1,
-                  ${lags("e1", "b")}
-           FROM s1
-           WINDOW wt AS (PARTITION BY event_type ORDER BY day)),
+           SELECT event_type, day, ${ewmaSql(9, "rng", "a")} AS e1 FROM l1),
+         ${ewmaLagsCte("l2", "s1", ByTypeDay, "e1", "b",
+             "event_type, day, e1")},
          s2 AS (
-           SELECT event_type, day, e1, ${ewma("e1", "b")} AS e2 FROM l2),
+           SELECT event_type, day, e1, ${ewmaSql(9, "e1", "b")} AS e2 FROM l2),
          rr AS (
            SELECT event_type, day,
                   CASE WHEN e2 <> 0 THEN round(e1 / e2, 6) END AS ratio
@@ -339,73 +333,32 @@ object Windows {
                         ROWS BETWEEN 9 PRECEDING AND CURRENT ROW))
        SELECT event_type, day, ratio, mass
        FROM mm WHERE n = 10 ORDER BY event_type, day"""
-  }
 
-  /** W49 oracle — one generated span-13 cascade beside the exact
-    * candle extremes, then two exact subtractions. */
-  private def elderRayOracleSql: String = {
-    def w(j: Int): String = "%.17e".formatLocal(
-      java.util.Locale.ROOT, macdWeight(13, j))
-    def ewma(c0: String, p: String): String = {
-      def cn(j: Int) = if (j == 0) c0 else s"$p$j"
-      def term(j: Int, body: String): String =
-        s"CASE WHEN ${cn(j)} IS NOT NULL THEN $body ELSE 0.0 END"
-      val num = (0 until MacdK).map(j =>
-        term(j, s"${w(j)} * ${cn(j)}")).mkString(" + ")
-      val den = (0 until MacdK).map(j => term(j, w(j))).mkString(" + ")
-      s"(($num) / ($den))"
-    }
-    val lags = (1 until MacdK).map(j =>
-      s"lag(px, $j) OVER wt AS a$j").mkString(",\n                  ")
+  /** W49 oracle — one span-13 cascade beside the exact candle
+    * extremes, then two exact subtractions. */
+  private def elderRayOracleSql: String =
     s"""WITH daily AS (
            SELECT event_type, date_trunc('day', ts) AS day,
                   max(value) AS high, min(value) AS low,
                   CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
                        AS DOUBLE) / count(*) AS px
            FROM events GROUP BY 1, 2),
-         l AS (
-           SELECT event_type, day, high, low, px,
-                  $lags
-           FROM daily
-           WINDOW wt AS (PARTITION BY event_type ORDER BY day)),
+         ${ewmaLagsCte("l", "daily", ByTypeDay, "px", "a",
+             "event_type, day, high, low, px")},
          e AS (
            SELECT event_type, day, high, low,
-                  ${ewma("px", "a")} AS ema
+                  ${ewmaSql(13, "px", "a")} AS ema
            FROM l)
        SELECT event_type, day, ema,
               high - ema AS bull_power, low - ema AS bear_power
        FROM e ORDER BY event_type, day"""
-  }
 
-  /** W42 oracle — W19's RSI chain verbatim, then the %K fold over
-    * the RSI series itself. */
+  /** W42 oracle — W19's RSI chain, then the %K fold over the RSI
+    * series itself. */
   private def stochRsiOracleSql: String =
-    s"""WITH $DailyPxCte,
-         d AS (
-           SELECT event_type, day, px,
-                  px - lag(px, 1) OVER (PARTITION BY event_type
-                                        ORDER BY day) AS delta
-           FROM daily),
-         g AS (
-           SELECT event_type, day, px, delta,
-                  CASE WHEN delta > 0 THEN delta ELSE 0.0 END AS gain,
-                  CASE WHEN delta < 0 THEN -delta ELSE 0.0 END AS loss
-           FROM d),
-         r AS (
-           SELECT event_type, day,
-                  count(delta) OVER f AS n,
-                  CAST(CAST(sum(CAST(gain AS DECIMAL(30,12))) OVER f
-                       AS VARCHAR) AS DOUBLE) AS sg,
-                  CAST(CAST(sum(CAST(loss AS DECIMAL(30,12))) OVER f
-                       AS VARCHAR) AS DOUBLE) AS sl
-           FROM g
-           WINDOW f AS (PARTITION BY event_type ORDER BY day
-                        ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)),
+    s"""WITH $RsiCtes,
          rs AS (
-           SELECT event_type, day,
-                  CASE WHEN sl = 0 THEN 100.0
-                       ELSE 100.0 - 100.0 /
-                            (1.0 + (sg / n) / (sl / n)) END AS rsi
+           SELECT event_type, day, $RsiSql AS rsi
            FROM r WHERE n = 14),
          k AS (
            SELECT event_type, day, rsi,
@@ -633,30 +586,11 @@ object Windows {
     // need a sequential fold (T7's machinery) and can't oracle-check.
     // Scale: hash agg to O(types×days), then per-type incremental
     // frames — nothing touches the raw fact table twice.
-    "w19_rsi" -> ((s, d) => {
-      val daily = dailyMean(Tables.events(s, d), "px")
-      val wT = Window.partitionBy("event_type").orderBy("day")
-      val frame = wT.rowsBetween(-13, 0)
-      val withDelta = daily
-        .withColumn("delta", col("px") - lag(col("px"), 1).over(wT))
-        .withColumn("gain",
-          when(col("delta") > 0, col("delta")).otherwise(lit(0.0)))
-        .withColumn("loss",
-          when(col("delta") < 0, -col("delta")).otherwise(lit(0.0)))
-      def s14(c: Column) = sum(c.cast("decimal(30,12)")).over(frame)
-        .cast("double")
-      withDelta
-        .withColumn("n", count(col("delta")).over(frame))
-        .withColumn("sg", s14(col("gain")))
-        .withColumn("sl", s14(col("loss")))
-        .filter(col("n") === 14)
+    "w19_rsi" -> ((s, d) =>
+      rsiFrame(s, d)
         .select(col("event_type"), col("day"), r6(col("px")).as("px"),
-          r6(when(col("sl") === 0, lit(100.0))
-            .otherwise(lit(100.0) - lit(100.0) /
-              (lit(1.0) + (col("sg") / col("n")) / (col("sl") / col("n")))))
-            .as("rsi"))
-        .orderBy("event_type", "day")
-    }),
+          r6(rsi).as("rsi"))
+        .orderBy("event_type", "day")),
 
     // W20: MACD (12/26 EWMA spread + 9-span signal line + histogram)
     // — the trend-following indicator beside W19's oscillator, and
@@ -672,28 +606,13 @@ object Windows {
     // left-associated summation, raw-double outputs hash-match with
     // no rounding grid.
     "w20_macd" -> ((s, d) => {
-      val daily = dailyMean(Tables.events(s, d), "px")
       val wT = Window.partitionBy("event_type").orderBy("day")
-      def ewma(span: Int, cn: Int => Column): Column = {
-        val terms = (0 until MacdK).map { j =>
-          val c = cn(j)
-          (when(c.isNotNull, lit(macdWeight(span, j)) * c)
-             .otherwise(lit(0.0)),
-           when(c.isNotNull, lit(macdWeight(span, j))).otherwise(lit(0.0)))
-        }
-        terms.map(_._1).reduce(_ + _) / terms.map(_._2).reduce(_ + _)
-      }
-      val lagged = (1 until MacdK).foldLeft(daily)((df, j) =>
-        df.withColumn(s"l$j", lag(col("px"), j).over(wT)))
-      def lcol(j: Int) = if (j == 0) col("px") else col(s"l$j")
-      val withMacd = lagged
-        .withColumn("macd", ewma(12, lcol) - ewma(26, lcol))
-        .select(col("event_type"), col("day"), col("macd"))
-      val lagged2 = (1 until MacdK).foldLeft(withMacd)((df, j) =>
-        df.withColumn(s"m$j", lag(col("macd"), j).over(wT)))
-      def mcol(j: Int) = if (j == 0) col("macd") else col(s"m$j")
-      lagged2
-        .withColumn("signal", ewma(9, mcol))
+      val withMacd =
+        ewmaLags(dailyMean(Tables.events(s, d), "px"), wT, "px", "l")
+          .withColumn("macd", ewma(12, "px", "l") - ewma(26, "px", "l"))
+          .select(col("event_type"), col("day"), col("macd"))
+      ewmaOf(withMacd, wT, "macd", "m", 9, "signal",
+          Seq("event_type", "day", "macd"))
         .select(col("event_type"), col("day"), col("macd"),
           col("signal"), (col("macd") - col("signal")).as("hist"))
         .orderBy("event_type", "day")
@@ -724,35 +643,19 @@ object Windows {
     // W41: percentage price oscillator — W20's MACD normalized by the
     // slow EMA (ppo = 100·(EMA₁₂−EMA₂₆)/EMA₂₆, signal = 9-EMA of
     // ppo, hist = ppo−signal), the scale-free form that compares
-    // across differently-priced series. Reuses W20's truncated-EWMA
-    // cascade verbatim (same MacdK depth, same 17-digit literal
-    // weights, same left-associated sums, ONE hash exchange for both
-    // window passes) — only the final arithmetic differs, and it is
-    // a fixed IEEE chain on identical doubles.
+    // across differently-priced series. The same `ewma` cascade as
+    // W20 (ONE hash exchange for both window passes) — only the final
+    // arithmetic differs, and it is a fixed IEEE chain on identical
+    // doubles.
     "w41_ppo" -> ((s, d) => {
-      val daily = dailyMean(Tables.events(s, d), "px")
       val wT = Window.partitionBy("event_type").orderBy("day")
-      def ewma(span: Int, cn: Int => Column): Column = {
-        val terms = (0 until MacdK).map { j =>
-          val c = cn(j)
-          (when(c.isNotNull, lit(macdWeight(span, j)) * c)
-             .otherwise(lit(0.0)),
-           when(c.isNotNull, lit(macdWeight(span, j))).otherwise(lit(0.0)))
-        }
-        terms.map(_._1).reduce(_ + _) / terms.map(_._2).reduce(_ + _)
-      }
-      val lagged = (1 until MacdK).foldLeft(daily)((df, j) =>
-        df.withColumn(s"l$j", lag(col("px"), j).over(wT)))
-      def lcol(j: Int) = if (j == 0) col("px") else col(s"l$j")
-      val withPpo = lagged
-        .withColumn("ppo",
-          lit(100.0) * (ewma(12, lcol) - ewma(26, lcol)) / ewma(26, lcol))
-        .select(col("event_type"), col("day"), col("ppo"))
-      val lagged2 = (1 until MacdK).foldLeft(withPpo)((df, j) =>
-        df.withColumn(s"p$j", lag(col("ppo"), j).over(wT)))
-      def pcol(j: Int) = if (j == 0) col("ppo") else col(s"p$j")
-      lagged2
-        .withColumn("signal", ewma(9, pcol))
+      val withPpo =
+        ewmaLags(dailyMean(Tables.events(s, d), "px"), wT, "px", "l")
+          .withColumn("ppo", lit(100.0) *
+            (ewma(12, "px", "l") - ewma(26, "px", "l")) / ewma(26, "px", "l"))
+          .select(col("event_type"), col("day"), col("ppo"))
+      ewmaOf(withPpo, wT, "ppo", "p", 9, "signal",
+          Seq("event_type", "day", "ppo"))
         .select(col("event_type"), col("day"), col("ppo"),
           col("signal"), (col("ppo") - col("signal")).as("hist"))
         .orderBy("event_type", "day")
@@ -762,32 +665,17 @@ object Windows {
     // EMA (span 15): three cascaded truncated-EWMA passes (the W12/
     // W20 design, identical literal weights and left-associated
     // sums) kill noise a single EMA keeps, then trix = 100·Δt3/t3.
-    // The compositional DEPTH test of the cascade machinery: every
+    // The compositional DEPTH test of `ewmaOf`: every
     // pass re-lags the PREVIOUS pass's output, three hash-exchange-
     // sharing window cascades in one plan; the final ratio is one
     // fixed IEEE chain on bit-identical doubles.
     "w43_trix" -> ((s, d) => {
-      val daily = dailyMean(Tables.events(s, d), "px")
       val wT = Window.partitionBy("event_type").orderBy("day")
-      def ewmaOf(df: org.apache.spark.sql.DataFrame, src: String,
-          out: String, pref: String): org.apache.spark.sql.DataFrame = {
-        val lagged = (1 until MacdK).foldLeft(df)((acc, j) =>
-          acc.withColumn(s"$pref$j", lag(col(src), j).over(wT)))
-        def cc(j: Int) = if (j == 0) col(src) else col(s"$pref$j")
-        val terms = (0 until MacdK).map { j =>
-          val c = cc(j)
-          (when(c.isNotNull, lit(macdWeight(15, j)) * c)
-             .otherwise(lit(0.0)),
-           when(c.isNotNull, lit(macdWeight(15, j))).otherwise(lit(0.0)))
-        }
-        lagged
-          .withColumn(out,
-            terms.map(_._1).reduce(_ + _) / terms.map(_._2).reduce(_ + _))
-          .select(col("event_type"), col("day"), col(out))
-      }
-      val t1 = ewmaOf(daily, "px", "t1", "a")
-      val t2 = ewmaOf(t1, "t1", "t2", "b")
-      val t3 = ewmaOf(t2, "t2", "t3", "c")
+      val key = Seq("event_type", "day")
+      val t1 = ewmaOf(dailyMean(Tables.events(s, d), "px"), wT, "px", "a",
+        15, "t1", key)
+      val t2 = ewmaOf(t1, wT, "t1", "b", 15, "t2", key)
+      val t3 = ewmaOf(t2, wT, "t2", "c", 15, "t3", key)
       t3.withColumn("prev", lag(col("t3"), 1).over(wT))
         .filter(col("prev").isNotNull)
         .select(col("event_type"), col("day"), col("t3"),
@@ -839,7 +727,7 @@ object Windows {
     }),
 
     // W45: DEMA + TEMA (Mulloy 1994) — the lag-reduced EMA family
-    // from the SAME truncated-cascade machinery W43 stress-tested:
+    // from the same `ewmaOf` cascade W43 stress-tests:
     // dema = 2·e1 − e2 and tema = 3·e1 − 3·e2 + e3 where e2/e3
     // re-smooth the previous pass's output (span 10 on the 30-day
     // panel; the classic 20+ spans never exit warm-up here — W29's
@@ -850,28 +738,12 @@ object Windows {
     // outside the proven cascade, nothing to pin. Three hash-
     // exchange-sharing window cascades in one plan (W43's shape).
     "w45_dema_tema" -> ((s, d) => {
-      val daily = dailyMean(Tables.events(s, d), "px")
       val wT = Window.partitionBy("event_type").orderBy("day")
-      def ewmaOf(df: org.apache.spark.sql.DataFrame, src: String,
-          out: String, pref: String,
-          keep: Seq[String]): org.apache.spark.sql.DataFrame = {
-        val lagged = (1 until MacdK).foldLeft(df)((acc, j) =>
-          acc.withColumn(s"$pref$j", lag(col(src), j).over(wT)))
-        def cc(j: Int) = if (j == 0) col(src) else col(s"$pref$j")
-        val terms = (0 until MacdK).map { j =>
-          val c = cc(j)
-          (when(c.isNotNull, lit(macdWeight(10, j)) * c)
-             .otherwise(lit(0.0)),
-           when(c.isNotNull, lit(macdWeight(10, j))).otherwise(lit(0.0)))
-        }
-        lagged
-          .withColumn(out,
-            terms.map(_._1).reduce(_ + _) / terms.map(_._2).reduce(_ + _))
-          .select((Seq("event_type", "day") ++ keep :+ out).map(col): _*)
-      }
-      val e1 = ewmaOf(daily, "px", "e1", "a", Nil)
-      val e2 = ewmaOf(e1, "e1", "e2", "b", Seq("e1"))
-      val e3 = ewmaOf(e2, "e2", "e3", "c", Seq("e1", "e2"))
+      val key = Seq("event_type", "day")
+      val e1 = ewmaOf(dailyMean(Tables.events(s, d), "px"), wT, "px", "a",
+        10, "e1", key)
+      val e2 = ewmaOf(e1, wT, "e1", "b", 10, "e2", key :+ "e1")
+      val e3 = ewmaOf(e2, wT, "e2", "c", 10, "e3", key ++ Seq("e1", "e2"))
       e3
         .select(col("event_type"), col("day"), col("e1"),
           (lit(2.0) * col("e1") - col("e2")).as("dema"),
@@ -897,25 +769,9 @@ object Windows {
         .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
         .agg((max(col("value")) - min(col("value"))).as("rng"))
       val wT = Window.partitionBy("event_type").orderBy("day")
-      def ewmaOf(df: org.apache.spark.sql.DataFrame, src: String,
-          out: String, pref: String,
-          keep: Seq[String]): org.apache.spark.sql.DataFrame = {
-        val lagged = (1 until MacdK).foldLeft(df)((acc, j) =>
-          acc.withColumn(s"$pref$j", lag(col(src), j).over(wT)))
-        def cc(j: Int) = if (j == 0) col(src) else col(s"$pref$j")
-        val terms = (0 until MacdK).map { j =>
-          val c = cc(j)
-          (when(c.isNotNull, lit(macdWeight(9, j)) * c)
-             .otherwise(lit(0.0)),
-           when(c.isNotNull, lit(macdWeight(9, j))).otherwise(lit(0.0)))
-        }
-        lagged
-          .withColumn(out,
-            terms.map(_._1).reduce(_ + _) / terms.map(_._2).reduce(_ + _))
-          .select((Seq("event_type", "day") ++ keep :+ out).map(col): _*)
-      }
-      val e1 = ewmaOf(candles, "rng", "e1", "a", Nil)
-      val e2 = ewmaOf(e1, "e1", "e2", "b", Seq("e1"))
+      val key = Seq("event_type", "day")
+      val e1 = ewmaOf(candles, wT, "rng", "a", 9, "e1", key)
+      val e2 = ewmaOf(e1, wT, "e1", "b", 9, "e2", key :+ "e1")
       val frame = wT.rowsBetween(-9, 0)
       // a zero-range regime (flat candles) zeroes BOTH EMAs — the
       // ratio is undefined there, NULL, never a /0 (ANSI throws on
@@ -1019,18 +875,7 @@ object Windows {
         .agg(max(col("value")).as("high"), min(col("value")).as("low"),
           pinnedMean(col("value")).as("px"))
       val wT = Window.partitionBy("event_type").orderBy("day")
-      val lagged = (1 until MacdK).foldLeft(daily)((acc, j) =>
-        acc.withColumn(s"a$j", lag(col("px"), j).over(wT)))
-      def cc(j: Int) = if (j == 0) col("px") else col(s"a$j")
-      val terms = (0 until MacdK).map { j =>
-        val c = cc(j)
-        (when(c.isNotNull, lit(macdWeight(13, j)) * c)
-           .otherwise(lit(0.0)),
-         when(c.isNotNull, lit(macdWeight(13, j))).otherwise(lit(0.0)))
-      }
-      lagged
-        .withColumn("ema",
-          terms.map(_._1).reduce(_ + _) / terms.map(_._2).reduce(_ + _))
+      ewmaLags(daily, wT, "px", "a").withColumn("ema", ewma(13, "px", "a"))
         .select(col("event_type"), col("day"), col("ema"),
           (col("high") - col("ema")).as("bull_power"),
           (col("low") - col("ema")).as("bear_power"))
@@ -1185,34 +1030,15 @@ object Windows {
     // instead of price ((rsi − min₁₄rsi)/(max₁₄rsi − min₁₄rsi)): how
     // overbought is the oscillator RELATIVE TO ITS OWN RANGE, the
     // faster-turning second derivative traders layer on RSI. The RSI
-    // chain is W19's verbatim (decimal-pinned gain/loss frame sums,
+    // chain is W19's `rsiFrame` (decimal-pinned gain/loss frame sums,
     // one render each); min/max fold with NO summation over those
     // bit-identical doubles, one division; flat windows (max = min)
     // are excluded by an exact double comparison. Two chained frames
     // over one per-type shuffle.
     "w42_stochrsi" -> ((s, d) => {
-      val daily = dailyMean(Tables.events(s, d), "px")
-      val wT = Window.partitionBy("event_type").orderBy("day")
-      val frame = wT.rowsBetween(-13, 0)
-      def s14(c: Column) = sum(c.cast("decimal(30,12)")).over(frame)
-        .cast("double")
-      val rsi = daily
-        .withColumn("delta", col("px") - lag(col("px"), 1).over(wT))
-        .withColumn("gain",
-          when(col("delta") > 0, col("delta")).otherwise(lit(0.0)))
-        .withColumn("loss",
-          when(col("delta") < 0, -col("delta")).otherwise(lit(0.0)))
-        .withColumn("n", count(col("delta")).over(frame))
-        .withColumn("sg", s14(col("gain")))
-        .withColumn("sl", s14(col("loss")))
-        .filter(col("n") === 14)
-        .select(col("event_type"), col("day"),
-          when(col("sl") === 0, lit(100.0))
-            .otherwise(lit(100.0) - lit(100.0) /
-              (lit(1.0) + (col("sg") / col("n")) / (col("sl") / col("n"))))
-            .as("rsi"))
-      val frame2 = wT.rowsBetween(-13, 0)
-      rsi
+      val frame2 = Window.partitionBy("event_type").orderBy("day")
+        .rowsBetween(-13, 0)
+      rsiFrame(s, d).select(col("event_type"), col("day"), rsi.as("rsi"))
         .withColumn("n2", count(lit(1)).over(frame2))
         .withColumn("mn", min(col("rsi")).over(frame2))
         .withColumn("mx", max(col("rsi")).over(frame2))
@@ -1396,18 +1222,7 @@ object Windows {
     // division → raw, the W24 discipline), full windows only. One
     // (type, day) candle shuffle + one per-type series window.
     "w25_atr" -> ((s, d) => {
-      val wd = Window.partitionBy("event_type").orderBy("day")
-      val w5 = wd.rowsBetween(-4, 0)
-      candles(s, d)
-        .withColumn("prev_close", lag(col("close"), 1).over(wd))
-        .filter(col("prev_close").isNotNull)
-        .withColumn("tr", greatest(col("high") - col("low"),
-          abs(col("high") - col("prev_close")),
-          abs(col("low") - col("prev_close"))))
-        .withColumn("n_win", count(lit(1)).over(w5))
-        .withColumn("atr",
-          sum(col("tr").cast("decimal(24,10)")).over(w5).cast("double") /
-            5)
+      atr5(s, d)
         .filter(col("n_win") === 5)
         .select(col("event_type"), col("day"), col("tr"), col("atr"))
         .orderBy("event_type", "day")
@@ -1425,18 +1240,9 @@ object Windows {
     // raw doubles, fully hash-checked. Same single per-type series
     // window shape as W23/W25 (bounded frames, no global sort).
     "w53_chandelier" -> ((s, d) => {
-      val wd = Window.partitionBy("event_type").orderBy("day")
-      val w5 = wd.rowsBetween(-4, 0)
-      candles(s, d)
-        .withColumn("prev_close", lag(col("close"), 1).over(wd))
-        .filter(col("prev_close").isNotNull)
-        .withColumn("tr", greatest(col("high") - col("low"),
-          abs(col("high") - col("prev_close")),
-          abs(col("low") - col("prev_close"))))
-        .withColumn("n_win", count(lit(1)).over(w5))
-        .withColumn("atr",
-          sum(col("tr").cast("decimal(24,10)")).over(w5).cast("double") /
-            5)
+      val w5 = Window.partitionBy("event_type").orderBy("day")
+        .rowsBetween(-4, 0)
+      atr5(s, d)
         .withColumn("hh", max(col("high")).over(w5))
         .withColumn("ll", min(col("low")).over(w5))
         .filter(col("n_win") === 5)
@@ -2072,18 +1878,8 @@ object Windows {
     "w12_ewma" -> ((s, d) => {
       val base = Tables.events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-      val lagged = (1 until EwmaK).foldLeft(base)((df, j) =>
-        df.withColumn(s"l$j", lag(col("value"), j).over(wUser)))
-      val terms = (0 until EwmaK).map { j =>
-        val c = if (j == 0) col("value") else col(s"l$j")
-        val wj = lit(ewmaWeight(j))
-        (when(c.isNotNull, wj * c).otherwise(lit(0.0)),
-         when(c.isNotNull, wj).otherwise(lit(0.0)))
-      }
-      val num = terms.map(_._1).reduce(_ + _)
-      val den = terms.map(_._2).reduce(_ + _)
-      lagged.withColumn("ewma", num / den)
-        .select(col("user_id"), col("event_id"), col("value"), col("ewma"))
+      ewmaOf(base, wUser, "value", "l", 20, "ewma",
+          Seq("user_id", "event_id", "value"))
         .orderBy("user_id", "event_id")
     }),
 
@@ -2159,16 +1955,8 @@ object Windows {
     // spine, then last(..., ignoreNulls) forward-fill — O(n log n) per
     // key, no inequality join.
     "j4_asof_join" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val spine = ev.select(col("user_id"),
-        date_trunc("day", col("ts")).as("day")).distinct()
-      val wLast = Window.partitionBy("user_id", "day")
-        .orderBy(col("ts").desc, col("event_id").desc)
-      val pDaily = ev.filter(col("event_type") === "purchase")
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(wLast))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("day"), col("value").as("day_val"))
+      val (spine, sides) = asofSides(s, d)
+      val pDaily = sides.drop("src_day")
       val wFill = Window.partitionBy("user_id").orderBy("day")
         .rowsBetween(Window.unboundedPreceding, 0)
       spine.join(pDaily, Seq("user_id", "day"), "left")
@@ -2186,17 +1974,7 @@ object Windows {
     // projection — no extra joins, no inequality join anywhere.
     // Oracle: DuckDB's native ASOF JOIN + the same staleness CASE.
     "j8_asof_tolerance" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val spine = ev.select(col("user_id"),
-        date_trunc("day", col("ts")).as("day")).distinct()
-      val wLast = Window.partitionBy("user_id", "day")
-        .orderBy(col("ts").desc, col("event_id").desc)
-      val pDaily = ev.filter(col("event_type") === "purchase")
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(wLast))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("day"), col("value").as("day_val"),
-          col("day").as("src_day"))
+      val (spine, pDaily) = asofSides(s, d)
       val wFill = Window.partitionBy("user_id").orderBy("day")
         .rowsBetween(Window.unboundedPreceding, 0)
       spine.join(pDaily, Seq("user_id", "day"), "left")
@@ -2224,17 +2002,7 @@ object Windows {
     // exchange. Exact integer distances and exact value picks →
     // fully oracle-checked (DuckDB replays the identical frames).
     "j12_asof_nearest" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val spine = ev.select(col("user_id"),
-        date_trunc("day", col("ts")).as("day")).distinct()
-      val wLast = Window.partitionBy("user_id", "day")
-        .orderBy(col("ts").desc, col("event_id").desc)
-      val pDaily = ev.filter(col("event_type") === "purchase")
-        .withColumn("day", date_trunc("day", col("ts")))
-        .withColumn("rn", row_number().over(wLast))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("day"), col("value").as("day_val"),
-          col("day").as("src_day"))
+      val (spine, pDaily) = asofSides(s, d)
       val wB = Window.partitionBy("user_id").orderBy("day")
         .rowsBetween(Window.unboundedPreceding, 0)
       val wF = Window.partitionBy("user_id").orderBy("day")
@@ -2264,16 +2032,7 @@ object Windows {
     // per-key recursive CTE (all types advance together, one candle
     // per step) — pure +,÷ by 2/4, bit-identical raw doubles
     "w54_heikin_ashi" ->
-      """WITH RECURSIVE e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH RECURSIVE ${tickCtes()},
          c AS (
            SELECT event_type, day,
                   max(CASE WHEN rn = 1 THEN value END) AS o,
@@ -2441,16 +2200,7 @@ object Windows {
     // w30 float-risk-free class), raw doubles end to end; chikou's
     // trailing nulls agree on both engines' frame edges
     "w44_ichimoku" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day, max(value) AS high, min(value) AS low,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -2574,16 +2324,7 @@ object Windows {
     // w16's candle CTE, W25's true-range picks, six decimal frame
     // sums (VARCHAR-hop renders), one fixed UO chain
     "w51_ultimate_osc" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day, max(value) AS high, min(value) AS low,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -2821,16 +2562,7 @@ object Windows {
          WHERE variance > 0 AND abs((value - mean) / sqrt(variance)) > 2.5
          ORDER BY user_id, event_id""",
     "w16_ohlc_candles" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e)
+      s"""WITH ${tickCtes()}
          SELECT event_type, day,
                 max(CASE WHEN rn = 1 THEN value END) AS open,
                 max(value) AS high, min(value) AS low,
@@ -2840,16 +2572,7 @@ object Windows {
     // w16's candle CTE, then raw-IEEE true range and a decimal-pinned
     // 5-day sliding mean (one division, no rounding)
     "w25_atr" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day, max(value) AS high, min(value) AS low,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -2876,16 +2599,7 @@ object Windows {
     // w25's candle/TR/pinned-ATR chain + exact HH/LL extreme picks;
     // stops one fixed chain each, verdict an exact comparison
     "w53_chandelier" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day, max(value) AS high, min(value) AS low,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -2917,16 +2631,7 @@ object Windows {
     // w16's candle CTE, 5-day envelope %K (raw division chain) and
     // decimal-pinned 3-day %D over full %K windows
     "w26_stochastic" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day, max(value) AS high, min(value) AS low,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -2956,16 +2661,7 @@ object Windows {
     // w16's candle CTE; every level is the same fixed-order IEEE
     // chain over the lagged picks — raw doubles
     "w30_pivot_points" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day, max(value) AS high, min(value) AS low,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -2988,16 +2684,7 @@ object Windows {
     // sums replayed via list() OVER + list_sum in index order = the
     // engine's left-fold aggregate HOF — raw doubles, no pins
     "w31_cci" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day, max(value) AS high, min(value) AS low,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -3055,16 +2742,7 @@ object Windows {
          FROM a ORDER BY event_type, day""",
     // w16's candle CTE; exact envelope extremes, one raw division
     "w33_williams_r" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day, max(value) AS high, min(value) AS low,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -3085,16 +2763,7 @@ object Windows {
     // w16's candle CTE; decimal-pinned SMA sums (VARCHAR-hop render),
     // one division each, band adds on the rendered doubles
     "w34_keltner" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day, max(value) AS high, min(value) AS low,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -3115,16 +2784,7 @@ object Windows {
     // close-only candle; exact trailing max, raw dd chain, pinned dd²
     // frame mean, sqrt of the single division
     "w35_ulcer" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -3148,16 +2808,7 @@ object Windows {
     // w25's TR plus the two crossing movements, three pinned frame
     // sums, one division per VI
     "w36_vortex" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day, max(value) AS high, min(value) AS low,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -3196,17 +2847,7 @@ object Windows {
     // w24's JSON volume, raw mfm/mfv chain, decimal(28,4)-pinned mfv
     // sums (frame + running), exact integer volume denominator
     "w37_cmf" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value,
-                  CAST(json_extract_string(props, '$.k') AS BIGINT) AS qty
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes(qty = true)},
          c AS (
            SELECT event_type, day, max(value) AS high, min(value) AS low,
                   max(CASE WHEN rn = cnt THEN value END) AS close,
@@ -3241,16 +2882,7 @@ object Windows {
     // close-only candle; raw IEEE deltas, pinned frame sums rendered
     // once, one fixed 3-flop CMO chain
     "w38_cmo" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -3286,22 +2918,7 @@ object Windows {
     // w24's JSON volume; raw delta·vol product, decimal(28,4)-pinned
     // frame sum rendered once
     "w39_force_index" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value,
-                  CAST(json_extract_string(props, '$.k') AS BIGINT) AS qty
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
-         c AS (
-           SELECT event_type, day,
-                  max(CASE WHEN rn = cnt THEN value END) AS close,
-                  CAST(sum(qty) AS BIGINT) AS vol
-           FROM r GROUP BY 1, 2),
+      s"""WITH $CloseVolCtes,
          f AS (
            SELECT event_type, day,
                   (close - lag(close) OVER (PARTITION BY event_type
@@ -3320,16 +2937,7 @@ object Windows {
          FROM w WHERE n = 13 ORDER BY event_type, day""",
     // w16's candle CTE; exact extreme picks and comparisons only
     "w29_donchian" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes()},
          c AS (
            SELECT event_type, day, max(value) AS high, min(value) AS low,
                   max(CASE WHEN rn = cnt THEN value END) AS close
@@ -3357,22 +2965,7 @@ object Windows {
     // HUGEINT (the a57/f12 class), so both the daily vol and the
     // running obv pin back through CAST(... AS BIGINT)
     "w27_obv" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value,
-                  CAST(json_extract_string(props, '$.k') AS BIGINT) AS qty
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
-         c AS (
-           SELECT event_type, day,
-                  max(CASE WHEN rn = cnt THEN value END) AS close,
-                  CAST(sum(qty) AS BIGINT) AS vol
-           FROM r GROUP BY 1, 2),
+      s"""WITH $CloseVolCtes,
          pc AS (
            SELECT *, lag(close) OVER (PARTITION BY event_type
                                       ORDER BY day) AS prev_close
@@ -3391,17 +2984,7 @@ object Windows {
     // w16's candles + F5 JSON volume; tp and tp*vol raw IEEE,
     // windowed pos/neg sums decimal-pinned, final chain raw
     "w28_mfi" ->
-      """WITH e AS (
-           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
-                  value,
-                  CAST(json_extract_string(props, '$.k') AS BIGINT) AS qty
-           FROM events),
-         r AS (
-           SELECT *,
-                  row_number() OVER (PARTITION BY event_type, day
-                                     ORDER BY ts, event_id) AS rn,
-                  count(*) OVER (PARTITION BY event_type, day) AS cnt
-           FROM e),
+      s"""WITH ${tickCtes(qty = true)},
          c AS (
            SELECT event_type, day, max(value) AS high, min(value) AS low,
                   max(CASE WHEN rn = cnt THEN value END) AS close,

@@ -13,6 +13,11 @@ package object operators {
   /** The house render grid: round half-up to 6 decimals. */
   private[operators] def r6(c: Column): Column = round(c, 6)
 
+  /** Sum of `c` pinned through DECIMAL(30,12): exact, so order-free,
+    * then one conversion to the correctly-rounded double. */
+  private[operators] def dsum(c: Column): Column =
+    sum(c.cast("decimal(30,12)")).cast("double")
+
   /** Mean of `c` with the sum pinned through DECIMAL(24,10): exact, so
     * the sum is order-free and renders to the same double in every
     * plan and in DuckDB; then one division by the row count. */
@@ -26,6 +31,36 @@ package object operators {
   private[operators] def dailyMean(ev: DataFrame, name: String): DataFrame =
     ev.groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
       .agg(pinnedMean(col("value")).as(name))
+
+  /** Oracle twin of `candles`' tick spine: CTE `e` (each event with
+    * its day, ts, event_id, value, and with `qty` the props-JSON
+    * quantity `k`) and `r` (its `rn` in (ts, event_id) order within
+    * the (event_type, day) and that day's tick count `cnt`). */
+  private[operators] def tickCtes(qty: Boolean = false): String = {
+    val q = if (!qty) "" else ",\n                  " +
+      "CAST(json_extract_string(props, '$.k') AS BIGINT) AS qty"
+    s"""e AS (
+           SELECT event_type, date_trunc('day', ts) AS day, ts, event_id,
+                  value$q
+           FROM events),
+         r AS (
+           SELECT *,
+                  row_number() OVER (PARTITION BY event_type, day
+                                     ORDER BY ts, event_id) AS rn,
+                  count(*) OVER (PARTITION BY event_type, day) AS cnt
+           FROM e)"""
+  }
+
+  /** `tickCtes` with qty, then `c`: each (event_type, day)'s close
+    * and integer volume, the oracle panel of the close/volume
+    * indicators. */
+  private[operators] val CloseVolCtes: String =
+    s"""${tickCtes(qty = true)},
+         c AS (
+           SELECT event_type, day,
+                  max(CASE WHEN rn = cnt THEN value END) AS close,
+                  CAST(sum(qty) AS BIGINT) AS vol
+           FROM r GROUP BY 1, 2)"""
 
   /** Daily candles per (event_type, day), W16's OHLC shape: open and
     * close are the values of the day's first and last event by

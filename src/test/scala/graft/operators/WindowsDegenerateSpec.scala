@@ -97,6 +97,68 @@ class WindowsDegenerateSpec extends AnyFunSuite {
     vols.foreach { case (k, v) => assert(v == expected(k)._6, k) }
   }
 
+  test("the truncated-EWMA cascade equals a sequential loop bit for bit") {
+    val d = graft.SparkTestSession.Sf0001
+    val dayMs = 86400000L
+    def weight(span: Int, j: Int) = math.pow((span - 1.0) / (span + 1.0), j)
+    // pandas ewm(span, adjust=True) truncated at 24 lags: a missing lag
+    // adds 0.0 to both sums, and each sum runs left to right from lag 0
+    def ewma(span: Int, xs: IndexedSeq[Option[Double]]): IndexedSeq[Double] =
+      xs.indices.map { t =>
+        val terms = (0 until 24).map { j =>
+          xs.lift(t - j).flatten.fold((0.0, 0.0))(x =>
+            (weight(span, j) * x, weight(span, j)))
+        }
+        terms.map(_._1).reduceLeft(_ + _) / terms.map(_._2).reduceLeft(_ + _)
+      }
+    val ev = graft.Tables.events(spark, d).collect().toSeq.map(r =>
+      (r.getAs[Long]("user_id"), r.getAs[java.sql.Timestamp]("ts").getTime,
+        r.getAs[Long]("event_id"), r.getAs[String]("event_type"),
+        Option(r.getAs[java.lang.Double]("value")).map(_.doubleValue)))
+
+    // W12: span 20 over each user's values in (ts, event_id) order
+    val w12 = ev.groupBy(_._1).values.flatMap { rs =>
+      val ordered = rs.sortBy(r => (r._2, r._3)).toIndexedSeq
+      ordered.map(r => Seq[Any](r._1, r._3))
+        .zip(ewma(20, ordered.map(_._5)).map(Seq(_)))
+    }.toMap
+    // W20: the per-type daily mean px (decimal-pinned sum over the
+    // day's row count), EMA12 − EMA26 on px, then EMA9 on that macd
+    val w20 = ev.groupBy(r => (r._4, Math.floorDiv(r._2, dayMs))).toSeq
+      .map { case ((t, day), rs) =>
+        val sum = rs.flatMap(_._5).map(v => BigDecimal(v)
+          .setScale(10, BigDecimal.RoundingMode.HALF_UP)).sum
+        (t, day, sum.toDouble / rs.size)
+      }
+      .groupBy(_._1).values.flatMap { days =>
+        val ordered = days.sortBy(_._2).toIndexedSeq
+        val px = ordered.map(r => Option(r._3))
+        val macd = ewma(12, px).zip(ewma(26, px)).map { case (a, b) => a - b }
+        val signal = ewma(9, macd.map(Option(_)))
+        ordered.indices.map(i => Seq[Any](ordered(i)._1, ordered(i)._2) ->
+          Seq(macd(i), signal(i), macd(i) - signal(i)))
+      }.toMap
+
+    val table = Seq(
+      ("w12_ewma", Seq("user_id", "event_id"), Seq("ewma"), w12),
+      ("w20_macd", Seq("event_type", "day"), Seq("macd", "signal", "hist"),
+        w20))
+    table.foreach { case (name, keys, outs, expected) =>
+      val got = Windows.queries(name)(spark, d).collect().map { r =>
+        keys.map(k => r.getAs[Any](k) match {
+          case ts: java.sql.Timestamp => Math.floorDiv(ts.getTime, dayMs)
+          case v => v
+        }) -> outs.map(r.getAs[Double])
+      }.toMap
+      assert(got.size == expected.size && got.keySet == expected.keySet, name)
+      got.foreach { case (k, v) =>
+        assert(v.map(java.lang.Double.doubleToLongBits) ==
+          expected(k).map(java.lang.Double.doubleToLongBits),
+          s"$name $k: $v vs ${expected(k)}")
+      }
+    }
+  }
+
   test("every W-family query survives a flat market without an ANSI throw") {
     val wQueries = Windows.queries.keys.toSeq.sorted
     assert(wQueries.nonEmpty)
