@@ -301,10 +301,14 @@ object Backtest {
     *  - Max-drawdown period (scripts/07_backtest.py:333-338): the
     *    trough is the least drawdown, NULLs last, earliest day first;
     *    the peak is the first day that reached the running peak at the
-    *    trough (idxmax semantics); the duration is in days. A window
-    *    over the whole partition hands every row the trough, so the
-    *    aggregate keeps scalar buffers: a struct buffer plans a
-    *    SortAggregate, outside whole-stage codegen.
+    *    trough (idxmax semantics); the duration is in days. A running
+    *    minimum, in the streaks' growing frame, hands each row the
+    *    trough so far. Its day and its peak day never decrease down the
+    *    rows (a new trough is a later row, and the running peak's first
+    *    day only moves forward), so the aggregate's max of each is the
+    *    final trough's, and the aggregate keeps scalar buffers: a
+    *    struct buffer plans a SortAggregate, outside whole-stage
+    *    codegen.
     *
     * No trades: `n_trades` 0, every other trade metric and both
     * streaks NULL. No equity rows: no result row. */
@@ -336,8 +340,7 @@ object Backtest {
           .otherwise(max(when(win, col("rn"))).over(upTo)), lit(0)))
         .cast("long").as("streak"),
         min(struct(col("dd").isNull, col("dd"), col("day"), col("peak_day")))
-          .over(w.rowsBetween(Window.unboundedPreceding,
-            Window.unboundedFollowing)).as("trough"))
+          .over(upTo).as("trough"))
     def exitCount(reason: String): Column =
       sum(trades(when(col("exitReason") === reason, 1L).otherwise(0L)))
     val annReturn = pow(lit(1.0) + col("mu"), 252.0) - 1

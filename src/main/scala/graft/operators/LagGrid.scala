@@ -18,65 +18,91 @@ import graft.functions.StudentT
   * grid is ONE plan (SURVEY §4 calls this the single biggest perf win
   * of the port):
   *
+  *  - events are scanned once into hourly (key, hour) sums, shuffled
+  *    by key once; that one exchange feeds both the daily spine and
+  *    the interval join (a reused exchange), so the lead window, the
+  *    join and the grid aggregate all ride one partitioning;
   *  - the 5 lookbacks enter as a broadcast dimension crossed onto the
   *    (key, day) spine BEFORE the interval join, so the join runs once
   *    with an equi key on user_id and a per-row range residual — a
   *    shuffled hash join whose output is ≤5× the single-lookback one,
   *    never a re-scan;
-  *  - the 4 leads are window-function leads on the daily aggregate
-  *    that IS the spine; they ride through the join and enter as a
-  *    `stack` unpivot after the (key, day, lookback) aggregate
-  *    (O(days×keys×5) rows), so the fact table is never widened and
-  *    the daily aggregate is built once;
+  *  - the 4 leads come from ONE following-rows window frame over the
+  *    daily aggregate that IS the spine; they ride through the join and
+  *    enter as a `stack` unpivot after the (key, day, lookback)
+  *    aggregate (O(days×keys×5) rows), so the fact table is never
+  *    widened and the daily aggregate is built once;
   *  - corr/count are map-side-combinable hash aggregates over the
   *    (key, lookback, lead) grid — 20 cells per key.
   *
-  * At 100 TB: events are scanned twice (daily and hourly aggregates)
-  * and shuffle once by user_id for the interval join; the grid agg
-  * runs on O(days × keys × 20) rows. Nothing rescans.
+  * At 100 TB: events are scanned once and shuffled twice, first by
+  * (user_id, hour) for the hourly sums, then those sums by user_id; the
+  * hourly side meets the spine in a shuffled hash join on that second
+  * partitioning rather than a broadcast, and the grid agg runs on
+  * O(days × keys × 20) rows. Nothing rescans.
   */
 object LagGrid {
 
   private val Lookbacks = Seq(12, 24, 48, 72, 168)
   private val Leads = Seq(1, 2, 3, 5)
 
-  /** (key, day, close, l1, l2, l3, l5): the daily close per key (avg
-    * event value — the price-series proxy) and its lead_days-ahead
-    * closes. One row per (key, day): the spine of the interval join,
-    * and the forward-return side it carries through that join. */
-  private def dailyLeads(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("day")
+  /** (key, hour, sv, cv): the value sum and non-null count per
+    * (key, hour), repartitioned by key. Both `gridPlan` branches read
+    * this one exchange. Every lookback window is HOUR-ALIGNED
+    * ([day − lb h, day) with day date-truncated and lb integral hours),
+    * so an event lands in a window iff its hour bucket does, and a day
+    * is a union of its hours: Σ sv / Σ cv over the buckets is the same
+    * mean as avg(value) over raw rows (float summation order differs,
+    * which the grid's r6/rounded-argmax discipline already absorbs
+    * between engines). A NULL-ts event is dropped here: it lies in no
+    * window, and its NULL day sorts first, so no other day leads to it. */
+  private[operators] def hourly(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
+      .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("ts"))
+      .agg(sum(col("value")).as("sv"), count(col("value")).as("cv"))
+      // the join infers this filter on its hourly side; stated here, it
+      // is on both branches, which then plan one (reused) exchange
+      .filter(col("ts").isNotNull)
+      .repartition(col("user_id"))
+
+  /** (key, day, close, l1, l2, l3, l5) from the [[hourly]] sums `hv`:
+    * the daily close per key (avg event value — the price-series proxy)
+    * and its lead_days-ahead closes. One row per (key, day): the spine
+    * of the interval join, and the forward-return side it carries
+    * through that join. The
+    * leads read one frame of the next `Leads.max` rows; the close is
+    * wrapped in a struct so a NULL close keeps its position in the
+    * frame (`collect_list` skips NULL elements, not NULL fields), and a
+    * key's last days read NULL past the end of the list. */
+  private[operators] def dailyLeads(hv: DataFrame): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("day")
+    hv
       .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .agg(avg(col("value")).as("close"))
+      // NULL when the day has no non-null value (what avg(value) gives)
+      .agg((sum(col("sv")) / nullif(sum(col("cv")), lit(0L))).as("close"))
+      .withColumn("nx", collect_list(struct(col("close")))
+        .over(w.rowsBetween(1, Leads.max)))
       .select(Seq(col("user_id"), col("day"), col("close")) ++
-        Leads.map(k => lead(col("close"), k).over(w).as(s"l$k")): _*)
+        Leads.map(k =>
+          get(col("nx"), lit(k - 1)).getField("close").as(s"l$k")): _*)
   }
 
   /** The full 20-cell grid: corr + n per (key, lookback, lead) — the
     * raw plan (PlanShapeSpec asserts join shapes on this form). ONE
     * interval join over the crossed lookback dimension: win_start is
     * per (day, lb) row, so the range residual varies by row while the
-    * equi key on user_id keeps the join keyed. Its spine is the daily
-    * aggregate with its leads, carried to the (key, day, lb) senti
-    * rows and unpivoted there: events are scanned twice (daily and
-    * hourly), and no second join meets the forward returns. */
+    * equi key on user_id keeps the join keyed. Both sides are the
+    * hourly sums: the spine is their daily aggregate with its leads,
+    * carried to the (key, day, lb) senti rows and unpivoted there, so
+    * events are scanned once and no second join meets the forward
+    * returns. */
   def gridPlan(s: SparkSession, d: String): DataFrame = {
     // Hourly pre-aggregation before the interval join (round 15,
-    // guide §2.3 — shuffle/join fewer rows): every lookback window is
-    // HOUR-ALIGNED ([day − lb h, day) with day date-truncated and lb
-    // integral hours), so an event lands in a window iff its hour
-    // bucket does — bucketing is EXACT, and senti = Σ sv / Σ cv over
-    // the bucketed sums is the same mean as avg(value) over raw rows
-    // (float summation order differs, which the grid's r6/rounded-
-    // argmax discipline already absorbs between engines). The join's
-    // big side shrinks from |events| to |user-hours|.
-    val ev = Tables.events(s, d)
-      .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("ts"))
-      .agg(sum(col("value")).as("sv"), count(col("value")).as("cv"))
-      .alias("ev")
+    // guide §2.3 — shuffle/join fewer rows): the join's big side
+    // shrinks from |events| to |user-hours|.
+    val hv = hourly(s, d)
     val lbs = s.createDataFrame(Lookbacks.map(Tuple1(_))).toDF("lookback_h")
-    val spine = dailyLeads(s, d)
+    val spine = dailyLeads(hv)
       .crossJoin(broadcast(lbs))
       .withColumn("win_start",
         col("day") - expr("make_dt_interval(0, lookback_h, 0, 0)"))
@@ -86,7 +112,9 @@ object LagGrid {
     val keys = Seq("user_id", "day", "lookback_h", "close") ++
       Leads.map(k => s"l$k")
     val stackExpr = Leads.map(k => s"$k, l$k").mkString(", ")
-    spine.join(ev,
+    // a shuffled hash join on the user_id partitioning both sides
+    // already have, not a broadcast that re-reads the reused exchange
+    spine.join(hv.alias("ev").hint("shuffle_hash"),
         col("sp.user_id") === col("ev.user_id") &&
         col("ev.ts") >= col("sp.win_start") &&
         col("ev.ts") <  col("sp.day"))

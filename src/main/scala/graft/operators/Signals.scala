@@ -43,7 +43,10 @@ object Signals {
       .groupBy(col("event_type"))
       .agg(Stats.corrSafe(col("value"), col("k")).as("r"))
 
-  /** The P5+P8+J5 pipeline under a given threshold config. */
+  /** The P5+P8+J5 pipeline under a given threshold config, unordered:
+    * the chain and the dashboard re-run consume it as a set, so the
+    * presentation sort (its range-sample job and range exchange) is
+    * applied by the named queries only. */
   def pipeline(s: SparkSession, d: String,
                cfg: SignalConfig = SignalConfig.Default): DataFrame = {
     val ev = Tables.events(s, d)
@@ -67,7 +70,6 @@ object Signals {
         (r6(col("sent")) + 0.0).as("sent"),
         col("n"), signal.as("signal"),
         when(inverse, "inverse").otherwise("direct").as("signal_type"))
-      .orderBy("event_type", "day")
   }
 
   /** PIPE11 — the dashboard's slider sweep as ONE plan. The reference
@@ -202,10 +204,12 @@ object Signals {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p8_signal_pipeline" -> ((s, d) => pipeline(s, d)),
+    "p8_signal_pipeline" -> ((s, d) =>
+      pipeline(s, d).orderBy("event_type", "day")),
     // The parameterized re-run (both threshold sliders moved), fully
     // oracle-checked like the default — thresholds are SQL constants.
-    "p8_signal_strict" -> ((s, d) => pipeline(s, d, SignalConfig.Strict)),
+    "p8_signal_strict" -> ((s, d) =>
+      pipeline(s, d, SignalConfig.Strict).orderBy("event_type", "day")),
     "pipe11_strategy_sweep" -> ((s, d) => strategySweep(s, d)),
     "pipe12_sweep_outcomes" -> ((s, d) => strategyOutcomes(s, d))
   )

@@ -1296,42 +1296,9 @@ object EventStream {
   )
 
   val oracles: Map[String, String] = Map(
-    // T26: the streamed monitor table must equal batch A77 — the
-    // identical pinned daily means and PH window chain (a77's oracle
-    // verbatim; `day` is the daily window start = date_trunc day)
-    "t26_drift_monitor" ->
-      """WITH daily AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS v
-           FROM events GROUP BY 1, 2),
-         t AS (
-           SELECT event_type, day, v,
-                  row_number() OVER w AS rn,
-                  CAST(CAST(sum(CAST(v AS DECIMAL(30,12))) OVER wc
-                       AS VARCHAR) AS DOUBLE) AS runsum
-           FROM daily
-           WINDOW w AS (PARTITION BY event_type ORDER BY day),
-                  wc AS (PARTITION BY event_type ORDER BY day
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND
-                         CURRENT ROW)),
-         m AS (
-           SELECT event_type, day, v,
-                  CAST(CAST(sum(CAST(v - runsum / rn -
-                       CAST(0.05 AS DOUBLE) AS DECIMAL(30,12))) OVER wc
-                       AS VARCHAR) AS DOUBLE) AS m
-           FROM t
-           WINDOW wc AS (PARTITION BY event_type ORDER BY day
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND
-                         CURRENT ROW)),
-         p AS (
-           SELECT event_type, day, v,
-                  m - min(m) OVER (PARTITION BY event_type ORDER BY day
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS ph
-           FROM m)
-         SELECT event_type, day, v, ph, ph > CAST(5.0 AS DOUBLE) AS alarm
-         FROM p ORDER BY event_type, day""",
+    // T26: the streamed monitor table must equal batch A77 — a77's
+    // oracle itself (`day` is the daily window start = date_trunc day)
+    "t26_drift_monitor" -> graft.operators.Stats.oracles("a77_page_hinkley"),
     // same island reconstruction as T5's batch session oracle — the
     // streamed, state-merged sessions must land on the identical set.
     "t16_session_stream" ->

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Edge cases of [[Backtest.fullMetricsOf]], the 34-metric summary
   * block: no trades, a one-day curve, a monotone curve, a re-touched
-  * peak, a zero-equity day, the same-day exit + force-close tie and an
-  * empty input. Each case pins the schema and the whole output row,
+  * peak, a zero-equity day, troughs before and after a new peak, the
+  * same-day exit + force-close tie and an empty input. Each case pins the schema and the whole output row,
   * rendered column by column. The expected rows were taken from an
   * independent plan of the block (one subtree per metric group,
   * cross-joined), so they hold any plan to the same answers.
@@ -114,6 +114,24 @@ class FullMetricsSpec extends AnyFunSuite {
       expected("3|2|1|0.666667|4.5|-3.0|5.0|-3.0|3.0|2.0|6.0|1.333333|3|" +
         "1|1|0|1|1|1|2|101.0|0.01|0.01|0.0|11.274002|0.0|null|null|" +
         "0.0|0.01|0.01|2024-01-01|2024-01-01|0"))
+  }
+
+  test("the deepest drawdown is the trough, before or after a new peak") {
+    // deep first, then a new peak and a shallower dip: the trough and
+    // its peak stay on the first drawdown
+    assert(metrics(equity(1, 100.0), equity(2, 50.0), equity(3, 120.0),
+        equity(4, 110.0), equity(5, 115.0),
+        trade(2, 1, -2.0, 1, "stop_loss"),
+        trade(4, 2, 3.0, 2, "take_profit")) ==
+      expected("2|1|1|0.5|3.0|-2.0|3.0|-2.0|1.5|0.5|1.0|1.5|2|1|1|0|0|1|1|" +
+        "5|115.0|0.15|0.21553|0.712951|2.2960384E21|11.317748|" +
+        "2.028706E20|6.9425676E20|-0.5|1.4|-0.5|2024-01-01|2024-01-02|1"))
+    // shallow first, then a new peak and a deeper dip: both move on
+    assert(metrics(equity(1, 100.0), equity(2, 90.0), equity(3, 120.0),
+        equity(4, 100.0), equity(5, 130.0)) ==
+      expected(noTrades + "|5|130.0|0.3|0.091667|0.226538|3.96910413E9|" +
+        "3.596179|1.10370061E9|7.5009019E9|-0.166667|0.333333|-0.166667|" +
+        "2024-01-03|2024-01-04|1"))
   }
 
   test("no equity rows: zero rows, with or without trades") {

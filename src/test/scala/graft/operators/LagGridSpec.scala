@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, lead}
 import graft.SparkTestSession
 
 /** Cross-anchors for the one rows-only lag-grid query:
@@ -92,5 +94,51 @@ class LagGridSpec extends AnyFunSuite {
       // shape sanity: parseable-looking JSON document
       assert(art.startsWith("{\"best_config\":{") && art.endsWith("}}"))
     }
+  }
+
+  test("one-frame leads equal lead(close, k) row for row") {
+    // key 1: eight days, day 2 all-NULL values (a NULL close that must
+    // keep its place in the following-rows frame) and day 4 a zero
+    // close; key 2: three days, so every day has fewer than 5
+    // following days. Three events per day in distinct hours.
+    import spark.implicits._
+    val dir = SparkTestSession.fixtureDir("lag-leads")
+    val t0 = 1704067200000L
+    val rows = for {
+      (key, nDays) <- Seq(1L -> 8, 2L -> 3)
+      day <- 0 until nDays
+      h <- Seq(1, 5, 13)
+    } yield {
+      val v: Option[Double] =
+        if (key == 1L && day == 2) None
+        else if (key == 1L && day == 4) Some(0.0)
+        else Some(100.0 + key * 10 + day * 3 + h)
+      (key * 1000 + day * 10 + h,
+        new java.sql.Timestamp(t0 + day * 86400000L + h * 3600000L),
+        key, "click", v, "{}")
+    }
+    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val leads = LagGrid.dailyLeads(LagGrid.hourly(spark, dir))
+    val w = Window.partitionBy("user_id").orderBy("day")
+    val ks = Seq(1, 2, 3, 5)
+    def opt(r: org.apache.spark.sql.Row, i: Int): Option[Double] =
+      if (r.isNullAt(i)) None else Some(r.getDouble(i))
+    def byDay(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
+      df.select((Seq("user_id", "day", "close") ++ cols).map(col): _*)
+        .collect().map(r => (r.getLong(0), r.getTimestamp(1)) ->
+          (2 until r.length).map(opt(r, _))).toMap
+    val got = byDay(leads, ks.map(k => s"l$k"))
+    val want = byDay(leads.select(Seq(col("user_id"), col("day"),
+      col("close")) ++ ks.map(k => lead(col("close"), k).over(w).as(s"w$k")): _*),
+      ks.map(k => s"w$k"))
+    assert(got.size == 11 && got.keySet == want.keySet)
+    got.foreach { case (key, vs) => assert(vs == want(key), s"$key") }
+    val closes = got.values.map(_.head).toSeq
+    assert(closes.contains(None) && closes.contains(Some(0.0)), closes)
+    // the NULL close leads key 1's day 1 at k = 1, with a real close
+    // behind it at k = 2
+    val day1 = got((1L, new java.sql.Timestamp(t0 + 86400000L)))
+    assert(day1(1).isEmpty && day1(2).isDefined, day1)
   }
 }

@@ -2,11 +2,15 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec,
   SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec,
-  CartesianProductExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
+  ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+  BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import graft.SparkTestSession
 
 /** Scale guarantees as plan assertions: the designated 100 TB paths
@@ -269,14 +273,27 @@ class PlanShapeSpec extends AnyFunSuite {
     new AdaptiveSparkPlanHelper {}
       .collect(df.queryExecution.executedPlan) { case p => p }
 
-  test("lag grid: one daily aggregate feeds spine and leads, two scans") {
-    // the window's output (day + leads) is the spine, so events are
-    // scanned once for the daily aggregate and once for the hourly
-    // buckets, and no join meets a second copy of the daily side
+  test("lag grid: one scan and one reused exchange feed spine and join") {
+    // events are scanned once into hourly sums repartitioned by key;
+    // the daily spine (its window output is the leads) and the
+    // interval join's hourly side read that one exchange, so the final
+    // plan shows one scan, the reuse, one window for all four leads,
+    // and a shuffled hash join, not a broadcast of the hourly side.
+    // Exchange reuse happens as adaptive execution creates its stages,
+    // so the plan is inspected after a run.
     LagGrid.grid.invalidate(spark, sf)
-    val nodes = nodesOf(LagGrid.gridPlan(spark, sf))
-    assert(nodes.count(_.isInstanceOf[FileSourceScanExec]) == 2,
-      nodes.map(_.nodeName))
+    val df = LagGrid.gridPlan(spark, sf)
+    df.collect()
+    val nodes = nodesOf(df)
+    val names = nodes.map(_.nodeName)
+    assert(nodes.count(_.isInstanceOf[FileSourceScanExec]) == 1, names)
+    assert(nodes.count(_.isInstanceOf[ReusedExchangeExec]) == 1, names)
+    // the four leads read one following-rows frame: one window
+    // expression, where four lead offsets would plan four
+    assert(nodes.collect { case w: WindowExec => w.windowExpression.size } ==
+      Seq(1), names)
+    assert(!nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]), names)
+    assert(nodes.count(_.isInstanceOf[ShuffledHashJoinExec]) == 1, names)
   }
 
   test("34-metric block over the live fold runs the fold once") {
@@ -294,6 +311,24 @@ class PlanShapeSpec extends AnyFunSuite {
     val plan = planOf(Signals.queries, "p8_signal_pipeline")
     assert(!plan.contains("CartesianProduct") &&
            !plan.contains("BroadcastNestedLoopJoin"), plan.take(1500))
+  }
+
+  test("signal pipeline has no range exchange; the p8 queries sort") {
+    // the chain and the dashboard re-run consume `pipeline` unordered:
+    // its presentation sort (a range-sample job and a range exchange)
+    // belongs to the named queries only
+    def rangeExchanges(df: org.apache.spark.sql.DataFrame): Int =
+      nodesOf(df).count {
+        case e: ShuffleExchangeExec =>
+          e.outputPartitioning.isInstanceOf[RangePartitioning]
+        case _ => false
+      }
+    assert(rangeExchanges(Signals.pipeline(spark, sf)) == 0)
+    assert(rangeExchanges(
+      Signals.pipeline(spark, sf, SignalConfig.Strict)) == 0)
+    Seq("p8_signal_pipeline", "p8_signal_strict").foreach { q =>
+      assert(rangeExchanges(Signals.queries(q)(spark, sf)) == 1, q)
+    }
   }
 
   test("pipe11 sweep broadcasts the grid; one fact scan feeds the surface") {
