@@ -7,8 +7,8 @@ Compares every `<query>.txt` plan in A with the one of the same name in
 B after masking what changes from run to run of the same plan:
 expression ids (`#12`, `#12L`), `plan_id=`, `codegen id :`, a bare
 `Arguments: <n>` line, `$Lambda` class names, `@<hex>` object hashes,
-`/tmp/graft-…` / `/tmp/graft_…` scratch names, the `-<n>` suffix a
-streaming run dir gets, RDD ids and the `File.scala:<line>` call sites
+`/tmp/graft-…` / `/tmp/graft_…` scratch names with the `<tag>-<n>` dir
+a JVM's scratch root holds (`graft.Fs.scratch`), RDD ids and the `File.scala:<line>` call sites
 of checkpointed RDDs, the checkout's `spark-warehouse` path, and the
 JVM-wide counter in lambda variable names (`lambda x_49` -> `lambda x_`:
 it counts every lambda built before, so it moves with construction
@@ -43,7 +43,7 @@ PLAN_MASKS = [
     (re.compile(r"\$Lambda[\w$/.@]*"), "$Lambda"),
     (re.compile(r"@[0-9a-f]+\b"), "@"),
     (re.compile(r"/tmp/graft[-_][\w.-]*"), "/tmp/graft"),
-    (re.compile(r"(/tmp/graft/[A-Za-z]\w*)-\d+"), r"\1-"),
+    (re.compile(r"(/tmp/graft)/[A-Za-z]\w*-\d+"), r"\1"),
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
     (re.compile(r"\.scala:\d+"), ".scala:"),
     (re.compile(r"file:\S*/spark-warehouse/"), "file:spark-warehouse/"),

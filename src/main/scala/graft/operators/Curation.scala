@@ -931,39 +931,16 @@ object Curation {
          FROM scored, thr WHERE score >= p10 ORDER BY doc_id""",
     // the standalone stages' oracle CTEs composed into the funnel
     "pipe3_assembly_funnel" ->
-      """WITH docs AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-           FROM documents),
+      s"""WITH $FilterSignalCtes,
          hashed AS (
            SELECT doc_id,
-                  md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS h
+                  md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS h
            FROM documents),
          canon AS (
            SELECT doc_id,
                   row_number() OVER (PARTITION BY h ORDER BY doc_id) = 1
                     AS is_canonical
            FROM hashed),
-         toks AS (SELECT doc_id, unnest(t) AS w FROM docs),
-         wc AS (SELECT doc_id, w, count(*) AS c FROM toks GROUP BY 1, 2),
-         tw AS (SELECT doc_id, max(c) AS mx, CAST(sum(c) AS BIGINT) AS n,
-                       CAST(sum(c * length(w)) AS BIGINT) AS chars
-                FROM wc GROUP BY 1),
-         tg AS (SELECT doc_id,
-                       CAST(greatest(len(t) - 2, 0) AS BIGINT) AS ntri,
-                       CAST(CASE WHEN len(t) >= 3 THEN
-                         len(list_distinct(list_transform(
-                           generate_series(1, len(t) - 2),
-                           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])))
-                         ELSE 0 END AS BIGINT) AS ndis
-                FROM docs),
-         sig AS (
-           SELECT doc_id, n,
-                  CAST(chars AS DOUBLE) / n AS mean_len,
-                  CAST(mx AS DOUBLE) / n AS top_frac,
-                  CASE WHEN ntri > 0
-                       THEN 1.0 - CAST(ndis AS DOUBLE) / ntri
-                       ELSE 0.0 END AS dup_frac
-           FROM tw JOIN tg USING (doc_id)),
          verd AS (
            SELECT doc_id,
                   (CASE WHEN n < 10 THEN 'too_short'

@@ -741,8 +741,7 @@ object DatasetOps {
   private val ds4Dirs = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), String]
   private def ds4Dir(s: SparkSession, d: String): String =
-    ds4Dirs.getOrElseUpdate((s, d),
-      java.nio.file.Files.createTempDirectory("graft_ds4").toString)
+    ds4Dirs.getOrElseUpdate((s, d), graft.Fs.scratch("ds4"))
 
   /** DS4 body with an explicit output dir and file bound so the spec
     * can inspect the produced layout (the query wraps it with the

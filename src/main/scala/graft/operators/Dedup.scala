@@ -547,6 +547,24 @@ object Dedup {
           half * half).as("q_contrib"))
   }
 
+  /** The D25/D26 edge frame over an undirected (da, db) pair table:
+    * the pairs (checkpointed), each vertex's degree (v, deg), and every
+    * (da, db, z) with z a common neighbor of both endpoints. */
+  private def commonNeighbors(pairTable: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val p = pairTable.localCheckpoint()
+    val edges = p.select(col("da").as("src"), col("db").as("dst"))
+      .unionAll(p.select(col("db").as("src"), col("da").as("dst")))
+    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .select(col("src").as("v"), col("deg"))
+    val wedges = p.select(col("da"), col("db"))
+      .join(edges.select(col("src").as("da"), col("dst").as("z")),
+        Seq("da"))
+      .join(edges.select(col("src").as("db"), col("dst").as("z")),
+        Seq("db", "z"))
+    (p, deg, wedges)
+  }
+
   /** D25's kernel: per-EDGE strength scores over an undirected
     * (da, db) pair table — common-neighbor count and Adamic–Adar
     * (Adamic & Adar 2003) AA = Σ_{z∈N(a)∩N(b)} 1/ln(deg z). Every
@@ -560,16 +578,8 @@ object Dedup {
     * dropping. Factored out so the spec can drive it on a planted
     * two-triangle bridge where every cell is hand-countable. */
   private[graft] def edgeStrength(pairTable: DataFrame): DataFrame = {
-    val p = pairTable.localCheckpoint()
-    val edges = p.select(col("da").as("src"), col("db").as("dst"))
-      .unionAll(p.select(col("db").as("src"), col("da").as("dst")))
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .select(col("src").as("v"), col("deg"))
-    val cn = p.select(col("da"), col("db"))
-      .join(edges.select(col("src").as("da"), col("dst").as("z")),
-        Seq("da"))
-      .join(edges.select(col("src").as("db"), col("dst").as("z")),
-        Seq("db", "z"))
+    val (p, deg, wedges) = commonNeighbors(pairTable)
+    val cn = wedges
       .join(deg.select(col("v").as("z"), col("deg")), Seq("z"))
       .groupBy("da", "db")
       .agg(count(lit(1)).as("common_cnt"),
@@ -592,16 +602,8 @@ object Dedup {
     * Factored out so the spec can drive it on a planted two-triangle
     * bridge where every cell is hand-countable. */
   private[graft] def edgeJaccard(pairTable: DataFrame): DataFrame = {
-    val p = pairTable.localCheckpoint()
-    val edges = p.select(col("da").as("src"), col("db").as("dst"))
-      .unionAll(p.select(col("db").as("src"), col("da").as("dst")))
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .select(col("src").as("v"), col("deg"))
-    val cn = p.select(col("da"), col("db"))
-      .join(edges.select(col("src").as("da"), col("dst").as("z")),
-        Seq("da"))
-      .join(edges.select(col("src").as("db"), col("dst").as("z")),
-        Seq("db", "z"))
+    val (p, deg, wedges) = commonNeighbors(pairTable)
+    val cn = wedges
       .groupBy("da", "db").agg(count(lit(1)).as("common_cnt"))
     val uni = col("deg_a") + col("deg_b") - 2 - col("common_cnt")
     p.join(cn, Seq("da", "db"), "left")
@@ -1441,11 +1443,11 @@ object Dedup {
     * (its name, and AS MATERIALIZED where the rounds must not
     * re-expand it); round i's votes `v<i>`, counts `c<i>` and argmax
     * labels `l<i>` (count DESC, label ASC) start from `l0`, every doc
-    * its own label. */
-  private def lpaCtes(edgesAs: String): String =
+    * (of the `documents` that `docFilter` keeps) its own label. */
+  private def lpaCtes(edgesAs: String, docFilter: String = ""): String =
     s"""$edgesAs (SELECT da AS src, db AS dst FROM pairs
                      UNION SELECT db AS src, da AS dst FROM pairs),
-           l0 AS (SELECT doc_id, doc_id AS label FROM documents),
+           l0 AS (SELECT doc_id, doc_id AS label FROM documents$docFilter),
            ${(1 to 4).map(i =>
              s"""v$i AS (
              SELECT e.dst AS doc_id, l.label
@@ -1459,6 +1461,23 @@ object Dedup {
                       row_number() OVER (PARTITION BY doc_id
                                          ORDER BY n DESC, label) AS rk
                FROM c$i) WHERE rk = 1)""").mkString(",\n           ")}"""
+
+  /** D13/D13b oracle: the `pairsCtes(docFilter, tau)` graph's
+    * triangles ([[TriangleCtes]]) per vertex and its local clustering
+    * coefficient, for vertices of degree 2 or more. */
+  private def clusteringSql(docFilter: String, tau: String): String =
+    s"""WITH ${pairsCtes(docFilter, tau)},
+           $TriangleCtes,
+           pt AS (
+             SELECT doc_id, count(*) AS n_tri
+             FROM (SELECT unnest([u, v1, w1]) AS doc_id FROM tri)
+             GROUP BY 1)
+         SELECT deg.v AS doc_id, CAST(deg.dg AS BIGINT) AS deg,
+                CAST(coalesce(pt.n_tri, 0) AS BIGINT) AS n_tri,
+                round(CAST(2 AS DOUBLE) * coalesce(pt.n_tri, 0) /
+                      (deg.dg * (deg.dg - 1)), 6) AS cc
+         FROM deg LEFT JOIN pt ON deg.v = pt.doc_id
+         WHERE deg.dg >= 2 ORDER BY doc_id"""
 
   /** D11's ten damped power-iteration rounds UNROLLED as chained CTEs
     * (the d14b trick, extended to weighted state by the kernel's
@@ -1630,23 +1649,7 @@ object Dedup {
     // scoped to the slice)
     "d14_label_prop" ->
       s"""WITH ${pairsCtes(" WHERE doc_id < 100", "0.02")},
-           edges AS (SELECT da AS src, db AS dst FROM pairs
-                     UNION SELECT db AS src, da AS dst FROM pairs),
-           l0 AS (SELECT doc_id, doc_id AS label FROM documents
-                  WHERE doc_id < 100),
-           ${(1 to 4).map(i =>
-             s"""v$i AS (
-             SELECT e.dst AS doc_id, l.label
-             FROM edges e JOIN l${i - 1} l ON e.src = l.doc_id
-             UNION ALL SELECT doc_id, label FROM l${i - 1}),
-           c$i AS (
-             SELECT doc_id, label, count(*) AS n FROM v$i GROUP BY 1, 2),
-           l$i AS (
-             SELECT doc_id, label FROM (
-               SELECT doc_id, label,
-                      row_number() OVER (PARTITION BY doc_id
-                                         ORDER BY n DESC, label) AS rk
-               FROM c$i) WHERE rk = 1)""").mkString(",\n           ")}
+           ${lpaCtes("edges AS", " WHERE doc_id < 100")}
          SELECT doc_id, label FROM l4 ORDER BY doc_id""",
     // D10b: exhaustive exact-Jaccard pairs over the FULL corpus at
     // the same 0.5 threshold, closed by recursive min-propagation —
@@ -1913,18 +1916,7 @@ object Dedup {
     // again proves the banded LSH graph recalled every exhaustive
     // edge before the coefficient arithmetic ran
     "d13_coeff_corpus" ->
-      s"""WITH ${pairsCtes("", "0.5")},
-           $TriangleCtes,
-           pt AS (
-             SELECT doc_id, count(*) AS n_tri
-             FROM (SELECT unnest([u, v1, w1]) AS doc_id FROM tri)
-             GROUP BY 1)
-         SELECT deg.v AS doc_id, CAST(deg.dg AS BIGINT) AS deg,
-                CAST(coalesce(pt.n_tri, 0) AS BIGINT) AS n_tri,
-                round(CAST(2 AS DOUBLE) * coalesce(pt.n_tri, 0) /
-                      (deg.dg * (deg.dg - 1)), 6) AS cc
-         FROM deg LEFT JOIN pt ON deg.v = pt.doc_id
-         WHERE deg.dg >= 2 ORDER BY doc_id""",
+      clusteringSql("", "0.5"),
     // same pair SQL (maxId 200, threshold 0.01), then the identical
     // degree-ordered orientation + wedge-close join as the query
     "d12_triangle_count" ->
@@ -1935,18 +1927,7 @@ object Dedup {
          GROUP BY 1 ORDER BY doc_id""",
     // d12's CTE chain + degree normalization; deg < 2 excluded
     "d13_clustering_coeff" ->
-      s"""WITH ${pairsCtes(" WHERE doc_id < 200", "0.01")},
-           $TriangleCtes,
-           pt AS (
-             SELECT doc_id, count(*) AS n_tri
-             FROM (SELECT unnest([u, v1, w1]) AS doc_id FROM tri)
-             GROUP BY 1)
-         SELECT deg.v AS doc_id, CAST(deg.dg AS BIGINT) AS deg,
-                CAST(coalesce(pt.n_tri, 0) AS BIGINT) AS n_tri,
-                round(CAST(2 AS DOUBLE) * coalesce(pt.n_tri, 0) /
-                      (deg.dg * (deg.dg - 1)), 6) AS cc
-         FROM deg LEFT JOIN pt ON deg.v = pt.doc_id
-         WHERE deg.dg >= 2 ORDER BY doc_id""",
+      clusteringSql(" WHERE doc_id < 200", "0.01"),
     // same pair SQL as d2 (threshold 0.02), components via recursive
     // transitive closure: reach(id, r) = every doc reachable from id,
     // canonical = min reachable

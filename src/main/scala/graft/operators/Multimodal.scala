@@ -683,6 +683,37 @@ object Multimodal {
                            '' ORDER BY k) AS phash
          FROM blocks GROUP BY doc_id)"""
 
+  /** Oracle CTE `corpus`: the documents plus, for each hashable
+    * (ASCII, 64+ chars) doc with id divisible by 17, a rotated copy
+    * under id + 100000000 — the planted near-duplicates of MM5c/MM9. */
+  private val PlantedCorpusCte =
+    """corpus AS (
+           SELECT doc_id, text FROM documents
+           UNION ALL
+           SELECT doc_id + 100000000 AS doc_id,
+                  concat(substr(text, length(text), 1),
+                         substr(text, 2, length(text) - 2),
+                         substr(text, 1, 1)) AS text
+           FROM documents
+           WHERE octet_length(encode(text)) >= 64
+             AND octet_length(encode(text)) = length(text)
+             AND doc_id % 17 = 0)"""
+
+  /** MM5/MM5c oracle tail over `corpus`: the phash CTEs, then every
+    * pair of docs within Hamming distance `radius`. */
+  private def phashPairsSql(corpus: String, radius: Int): String =
+    s"""${phashBody(corpus)},
+         pairs AS (
+           SELECT a.doc_id AS da, b.doc_id AS db,
+                  CAST(len(list_filter(generate_series(1, 64),
+                    i -> substring(a.phash, CAST(i AS INT), 1) <>
+                         substring(b.phash, CAST(i AS INT), 1)))
+                    AS BIGINT) AS hamming
+           FROM ph a JOIN ph b ON a.doc_id < b.doc_id)
+         SELECT da, db, hamming FROM pairs
+         WHERE hamming <= $radius
+         ORDER BY da, db"""
+
   val oracles: Map[String, String] = Map(
     // same tiling arithmetic, DuckDB's range() standing in for the
     // exploded grid; the 8 strided slices concat in fixed order
@@ -1006,56 +1037,15 @@ object Multimodal {
       s"""WITH ${phashBody("documents")}
          SELECT doc_id, phash FROM ph ORDER BY doc_id""",
     "mm5_phash_pairs" ->
-      s"""WITH ${phashBody("documents")},
-         pairs AS (
-           SELECT a.doc_id AS da, b.doc_id AS db,
-                  CAST(len(list_filter(generate_series(1, 64),
-                    i -> substring(a.phash, CAST(i AS INT), 1) <>
-                         substring(b.phash, CAST(i AS INT), 1)))
-                    AS BIGINT) AS hamming
-           FROM ph a JOIN ph b ON a.doc_id < b.doc_id)
-         SELECT da, db, hamming FROM pairs
-         WHERE hamming <= 11
-         ORDER BY da, db""",
+      s"""WITH ${phashPairsSql("documents", 11)}""",
     // same hash CTE over the PLANTED corpus; exhaustive pair scan at
     // the production radius verifies the 8×8-band Spark path exactly.
     "mm5_phash_pairs_tight" ->
-      s"""WITH corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 100000000 AS doc_id,
-                  concat(substr(text, length(text), 1),
-                         substr(text, 2, length(text) - 2),
-                         substr(text, 1, 1)) AS text
-           FROM documents
-           WHERE octet_length(encode(text)) >= 64
-             AND octet_length(encode(text)) = length(text)
-             AND doc_id % 17 = 0),
-         ${phashBody("corpus")},
-         pairs AS (
-           SELECT a.doc_id AS da, b.doc_id AS db,
-                  CAST(len(list_filter(generate_series(1, 64),
-                    i -> substring(a.phash, CAST(i AS INT), 1) <>
-                         substring(b.phash, CAST(i AS INT), 1)))
-                    AS BIGINT) AS hamming
-           FROM ph a JOIN ph b ON a.doc_id < b.doc_id)
-         SELECT da, db, hamming FROM pairs
-         WHERE hamming <= 7
-         ORDER BY da, db""",
+      s"""WITH $PlantedCorpusCte, ${phashPairsSql("corpus", 7)}""",
     // the MM5c pair scan extended with the d10-style recursive
     // closure: min-reachable-id per hashable planted-corpus doc
     "mm9_image_clusters" ->
-      s"""WITH RECURSIVE corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 100000000 AS doc_id,
-                  concat(substr(text, length(text), 1),
-                         substr(text, 2, length(text) - 2),
-                         substr(text, 1, 1)) AS text
-           FROM documents
-           WHERE octet_length(encode(text)) >= 64
-             AND octet_length(encode(text)) = length(text)
-             AND doc_id % 17 = 0),
+      s"""WITH RECURSIVE $PlantedCorpusCte,
          ${phashBody("corpus")},
          pairs AS (
            SELECT a.doc_id AS da, b.doc_id AS db

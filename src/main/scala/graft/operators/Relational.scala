@@ -2302,6 +2302,36 @@ object Relational {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB",
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")(body)
 
+  /** A19/SQL10 oracle: count and pinned mean per (event_type, day)
+    * string, grouped by `groupBy` over the two keys, '(all)' marking a
+    * rolled-up key. */
+  private def dayTypeGroupingSql(groupBy: String): String =
+    s"""WITH e AS (
+           SELECT event_type,
+                  strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
+                  value
+           FROM events)
+         SELECT CASE WHEN GROUPING(event_type) = 1 THEN '(all)'
+                     ELSE event_type END AS event_type,
+                CASE WHEN GROUPING(day) = 1 THEN '(all)'
+                     ELSE day END AS day,
+                count(*) AS n,
+                round(CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR) AS DOUBLE)
+                      / count(*), 6) AS avg_value
+         FROM e GROUP BY $groupBy
+         ORDER BY event_type, day"""
+
+  /** Per-user event counts by type, one column each: A20's DataFrame
+    * pivot and SQL16's SQL PIVOT. */
+  private val PivotSql =
+    """SELECT user_id,
+                count(*) FILTER (event_type = 'click') AS n_click,
+                count(*) FILTER (event_type = 'error') AS n_error,
+                count(*) FILTER (event_type = 'purchase') AS n_purchase,
+                count(*) FILTER (event_type = 'signup') AS n_signup,
+                count(*) FILTER (event_type = 'view') AS n_view
+         FROM events GROUP BY 1 ORDER BY user_id"""
+
   val oracles: Map[String, String] = Map(
     "j7_aqe_skew_join" ->
       """SELECT event_id, user_id, c_mktsegment, value
@@ -2588,21 +2618,7 @@ object Relational {
       """SELECT user_id, event_type, count(*) AS n
          FROM events GROUP BY 1, 2
          ORDER BY user_id, event_type""",
-    "a19_rollup" ->
-      """WITH e AS (
-           SELECT event_type,
-                  strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-                  value
-           FROM events)
-         SELECT CASE WHEN GROUPING(event_type) = 1 THEN '(all)'
-                     ELSE event_type END AS event_type,
-                CASE WHEN GROUPING(day) = 1 THEN '(all)'
-                     ELSE day END AS day,
-                count(*) AS n,
-                round(CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR) AS DOUBLE)
-                      / count(*), 6) AS avg_value
-         FROM e GROUP BY ROLLUP (event_type, day)
-         ORDER BY event_type, day""",
+    "a19_rollup" -> dayTypeGroupingSql("ROLLUP (event_type, day)"),
     "a23_cube" ->
       """WITH e AS (
            SELECT event_type,
@@ -2691,27 +2707,13 @@ object Relational {
     // D10's oracle verbatim: same edge slice, same recursive closure —
     // DuckDB recomputes the pairs in SQL, Spark's rCTE runs over the
     // oracle-checked d2-equivalent pair DataFrame
-    "sql7_recursive_closure" ->
-      s"""WITH RECURSIVE
-           ${Dedup.pairsCtes(" WHERE doc_id < 100", "0.02")},
-           edges AS (SELECT da AS src, db AS dst FROM pairs
-                     UNION SELECT db AS src, da AS dst FROM pairs),
-           ${Dedup.reachCte("edges", "docs")}
-         SELECT id AS doc_id, min(r) AS canonical_id FROM reach
-         GROUP BY id ORDER BY doc_id""",
+    "sql7_recursive_closure" -> Dedup.oracles("d10_dup_clusters"),
     // SQL7b: D10b's full-corpus oracle verbatim — exhaustive
     // exact-Jaccard 0.5 graph + recursive min-propagation closure;
     // the rCTE runs over the engine's banded-LSH verified pair table,
     // so the hash match proves banded recall through the SQL surface
     "sql7_closure_corpus" -> Dedup.oracles("d10_cc_corpus"),
-    "a20_pivot" ->
-      """SELECT user_id,
-                count(*) FILTER (event_type = 'click') AS n_click,
-                count(*) FILTER (event_type = 'error') AS n_error,
-                count(*) FILTER (event_type = 'purchase') AS n_purchase,
-                count(*) FILTER (event_type = 'signup') AS n_signup,
-                count(*) FILTER (event_type = 'view') AS n_view
-         FROM events GROUP BY 1 ORDER BY user_id""",
+    "a20_pivot" -> PivotSql,
     "a1_grouped_avg" ->
       """SELECT event_type, date_trunc('day', ts) AS day,
                 round(avg(value), 6) AS avg_value, count(*) AS n
@@ -2882,21 +2884,8 @@ object Relational {
          FROM durs WHERE dur_sec IS NOT NULL
          GROUP BY transition ORDER BY transition""",
     "sql10_grouping_sets" ->
-      """WITH e AS (
-           SELECT event_type,
-                  strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-                  value
-           FROM events)
-         SELECT CASE WHEN GROUPING(event_type) = 1 THEN '(all)'
-                     ELSE event_type END AS event_type,
-                CASE WHEN GROUPING(day) = 1 THEN '(all)'
-                     ELSE day END AS day,
-                count(*) AS n,
-                round(CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR) AS DOUBLE)
-                      / count(*), 6) AS avg_value
-         FROM e
-         GROUP BY GROUPING SETS ((event_type, day), (event_type), (day))
-         ORDER BY event_type, day""",
+      dayTypeGroupingSql(
+        "GROUPING SETS ((event_type, day), (event_type), (day))"),
     "p9_day_slice" ->
       """SELECT event_type, count(*) AS n,
                 round(CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR) AS DOUBLE)
@@ -2916,14 +2905,7 @@ object Relational {
          FROM orders JOIN tiers
            ON o_totalprice >= lo AND (hi IS NULL OR o_totalprice < hi)
          GROUP BY tier ORDER BY tier""",
-    "sql16_pivot" ->
-      """SELECT user_id,
-                count(*) FILTER (event_type = 'click') AS n_click,
-                count(*) FILTER (event_type = 'error') AS n_error,
-                count(*) FILTER (event_type = 'purchase') AS n_purchase,
-                count(*) FILTER (event_type = 'signup') AS n_signup,
-                count(*) FILTER (event_type = 'view') AS n_view
-         FROM events GROUP BY 1 ORDER BY user_id""",
+    "sql16_pivot" -> PivotSql,
     "sql18_tpch_q21" ->
       """SELECT s_name, count(*) AS numwait
          FROM supplier

@@ -402,6 +402,21 @@ object Similarity {
           col("bb.bkt").as("bkt"))
     }
 
+  /** Each of the 10 query codes (q_id, qh1, qh2) beside every other
+    * vector's codes (c_id, h1, h2), with their exact Hamming distance. */
+  private def hammingPairs(s: SparkSession, d: String): DataFrame = {
+    val codes = binaryCodes(Tables.embeddings(s, d))
+    val q = codes.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("h1").as("qh1"),
+        col("h2").as("qh2"))
+    codes.select(col("vec_id").as("c_id"), col("h1"), col("h2"))
+      .crossJoin(broadcast(q))
+      .filter(col("q_id") =!= col("c_id"))
+      .withColumn("hamming",
+        (bit_count(col("qh1").bitwiseXOR(col("h1"))) +
+          bit_count(col("qh2").bitwiseXOR(col("h2")))).cast("long"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // SIM11: per-dimension feature statistics — the normalization
     // constants every embedding pipeline precomputes before indexing
@@ -1165,18 +1180,9 @@ object Similarity {
     // hash-checked. Recall vs the exact SIM1 top-5 is asserted in
     // SimilaritySpec.
     "sim21_hamming_topk" -> ((s, d) => {
-      val codes = binaryCodes(Tables.embeddings(s, d))
-      val q = codes.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("h1").as("qh1"),
-          col("h2").as("qh2"))
-      val c = codes.select(col("vec_id").as("c_id"), col("h1"), col("h2"))
       val w = Window.partitionBy("q_id")
         .orderBy(col("hamming").asc, col("c_id"))
-      c.crossJoin(broadcast(q))
-        .filter(col("q_id") =!= col("c_id"))
-        .withColumn("hamming",
-          (bit_count(col("qh1").bitwiseXOR(col("h1"))) +
-            bit_count(col("qh2").bitwiseXOR(col("h2")))).cast("long"))
+      hammingPairs(s, d)
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= 5)
         .select(col("q_id"), col("rank"), col("c_id"), col("hamming"))
@@ -1197,18 +1203,9 @@ object Similarity {
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"))
         .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
-      val codes = binaryCodes(Tables.embeddings(s, d))
-      val q = codes.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("h1").as("qh1"),
-          col("h2").as("qh2"))
-      val c = codes.select(col("vec_id").as("c_id"), col("h1"), col("h2"))
       val wH = Window.partitionBy("q_id")
         .orderBy(col("hamming").asc, col("c_id"))
-      val short = c.crossJoin(broadcast(q))
-        .filter(col("q_id") =!= col("c_id"))
-        .withColumn("hamming",
-          (bit_count(col("qh1").bitwiseXOR(col("h1"))) +
-            bit_count(col("qh2").bitwiseXOR(col("h2")))).cast("long"))
+      val short = hammingPairs(s, d)
         .withColumn("hrank", row_number().over(wH))
         .filter(col("hrank") <= Shortlist)
         .select(col("q_id"), col("c_id"), col("hamming"))
@@ -1511,21 +1508,88 @@ object Similarity {
            FROM enc JOIN cn2 ON enc.j = cn2.j AND enc.code = cn2.c
            GROUP BY enc.vec_id)"""
 
-  val oracles: Map[String, String] = Map(
-    // D9: bucket-mate candidates from the dumped band table, then the
-    // exact index-order cosine with the τ = 0.35 verify — the whole
-    // banded-LSH verified pair search replayed from the dump
-    "d9_embedding_neardup_lsh" ->
-      s"""WITH bands AS (
-           SELECT vec_id, band, bkt FROM '${Dumps.oraclePath("sim2_bands")}/*.parquet'),
-         v AS (
+  /** SIM21 oracle CTE `codes`: each vector's two 32-bit sign codes
+    * h1, h2 ([[binaryCodes]]'s twin). */
+  private val CodesCte =
+    """codes AS (
+           SELECT vec_id,
+                  CAST(list_sum(list_transform(generate_series(1, 32),
+                    i -> CASE WHEN embedding[i] > 0
+                         THEN (1::BIGINT << (i - 1))
+                         ELSE 0::BIGINT END)) AS BIGINT) AS h1,
+                  CAST(list_sum(list_transform(generate_series(1, 32),
+                    i -> CASE WHEN embedding[i + 32] > 0
+                         THEN (1::BIGINT << (i - 1))
+                         ELSE 0::BIGINT END)) AS BIGINT) AS h2
+           FROM embeddings)"""
+
+  /** `CodesCte`, the 10 query codes `q` and `r`, the Hamming distance
+    * of each query to every other vector ([[hammingPairs]]' twin). */
+  private val HammingCtes =
+    s"""$CodesCte,
+         q AS (SELECT vec_id AS q_id, h1 AS qh1, h2 AS qh2
+               FROM codes WHERE vec_id < 10),
+         r AS (
+           SELECT q.q_id, c.vec_id AS c_id,
+                  CAST(bit_count(xor(q.qh1, c.h1)) +
+                       bit_count(xor(q.qh2, c.h2)) AS BIGINT) AS hamming
+           FROM codes c CROSS JOIN q
+           WHERE q.q_id <> c.vec_id)"""
+
+  /** SIM6/SIM22 oracle tail over the ADC scores `sc` (q_id, c_id,
+    * adot): each query's 100 best other vectors by approximate cosine,
+    * re-ranked by exact cosine into its top 5. */
+  private val PqRerankSql =
+    """shortlist AS (
+           SELECT q_id, c_id FROM (
+             SELECT s.q_id, s.c_id,
+                    row_number() OVER (PARTITION BY s.q_id
+                      ORDER BY s.adot / (q.qn * sqrt(xh.xn2)) DESC, s.c_id)
+                      AS prank
+             FROM sc s JOIN q USING (q_id) JOIN xh ON s.c_id = xh.vec_id
+             WHERE s.q_id <> s.c_id)
+           WHERE prank <= 100),
+         exact AS (
+           SELECT sl.q_id, sl.c_id,
+                  list_sum(list_transform(generate_series(1, 64),
+                    i -> q.qe[i] * v.e[i])) /
+                  (q.qn * sqrt(list_sum(list_transform(
+                     generate_series(1, 64), i -> v.e[i] * v.e[i]))))
+                    AS cosine
+           FROM shortlist sl JOIN q USING (q_id)
+           JOIN v ON v.vec_id = sl.c_id)
+         SELECT q_id, rank, c_id, round(cosine, 6) AS cosine
+         FROM (SELECT q_id, c_id, cosine,
+                      CAST(row_number() OVER (PARTITION BY q_id
+                        ORDER BY cosine DESC, c_id) AS BIGINT) AS rank
+               FROM exact)
+         WHERE rank <= 5 ORDER BY q_id, rank"""
+
+  /** Oracle CTEs `v` (each embedding as a DOUBLE list e) and `n` (e
+    * with its L2 norm nrm), the input of every exact-cosine oracle. */
+  private val NormCtes =
+    """v AS (
            SELECT vec_id,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
            FROM embeddings),
          n AS (
            SELECT vec_id, e,
                   sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-           FROM v),
+           FROM v)"""
+
+  /** Oracle CTE `bands`: SIM2's dumped LSH band table (vec_id, band,
+    * bkt). */
+  private val BandsCte =
+    s"""bands AS (
+           SELECT vec_id, band, bkt FROM '${Dumps.oraclePath("sim2_bands")}/*.parquet')"""
+
+  val oracles: Map[String, String] = Map(
+    // D9: bucket-mate candidates from the dumped band table, then the
+    // exact index-order cosine with the τ = 0.35 verify — the whole
+    // banded-LSH verified pair search replayed from the dump
+    "d9_embedding_neardup_lsh" ->
+      s"""WITH $BandsCte,
+         $NormCtes,
          cand AS (
            SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb
            FROM bands a JOIN bands b
@@ -1543,14 +1607,7 @@ object Similarity {
     // SIM20: the sim1 exact ranking + the sim2 dump ranking, then the
     // exploded per-k intersection counts
     "sim20_recall_curve" ->
-      s"""WITH v AS (
-           SELECT vec_id,
-                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings),
-         n AS (
-           SELECT vec_id, e,
-                  sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-           FROM v),
+      s"""WITH $NormCtes,
          ep AS (
            SELECT q.vec_id AS q_id, c.vec_id AS c_id,
                   ${dotSql("q.e", "c.e")} / (q.nrm * c.nrm) AS cosine
@@ -1561,8 +1618,7 @@ object Similarity {
                     row_number() OVER (PARTITION BY q_id
                       ORDER BY cosine DESC, c_id) AS rank
              FROM ep) WHERE rank <= 5),
-         bands AS (
-           SELECT vec_id, band, bkt FROM '${Dumps.oraclePath("sim2_bands")}/*.parquet'),
+         $BandsCte,
          lcand AS (
            SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS c_id
            FROM bands q JOIN bands c
@@ -1598,16 +1654,8 @@ object Similarity {
     // SIM2: candidates from the dumped bucket table, then the exact
     // sim1 cosine/rank machinery over the candidate pairs
     "sim2_lsh_ann" ->
-      s"""WITH bands AS (
-           SELECT vec_id, band, bkt FROM '${Dumps.oraclePath("sim2_bands")}/*.parquet'),
-         v AS (
-           SELECT vec_id,
-                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings),
-         n AS (
-           SELECT vec_id, e,
-                  sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-           FROM v),
+      s"""WITH $BandsCte,
+         $NormCtes,
          cand AS (
            SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS c_id
            FROM bands q JOIN bands c
@@ -1626,14 +1674,7 @@ object Similarity {
     // both with Spark's struct-max tiebreak (cos DESC, cid DESC),
     // then the sim1 cosine/rank machinery over the list-mates
     "sim3_ivf_ann" ->
-      s"""WITH v AS (
-           SELECT vec_id,
-                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings),
-         n AS (
-           SELECT vec_id, e,
-                  sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-           FROM v),
+      s"""WITH $NormCtes,
          cents AS (
            SELECT vec_id AS cid, e, nrm FROM n
            WHERE vec_id % 31 = 0 ORDER BY vec_id LIMIT 16),
@@ -1759,30 +1800,7 @@ object Similarity {
                   list_sum(list(l.pd ORDER BY enc.j)) AS adot
            FROM enc JOIN lut l ON enc.j = l.j AND enc.code = l.c
            GROUP BY 1, 2),
-         shortlist AS (
-           SELECT q_id, c_id FROM (
-             SELECT s.q_id, s.c_id,
-                    row_number() OVER (PARTITION BY s.q_id
-                      ORDER BY s.adot / (q.qn * sqrt(xh.xn2)) DESC, s.c_id)
-                      AS prank
-             FROM sc s JOIN q USING (q_id) JOIN xh ON s.c_id = xh.vec_id
-             WHERE s.q_id <> s.c_id)
-           WHERE prank <= 100),
-         exact AS (
-           SELECT sl.q_id, sl.c_id,
-                  list_sum(list_transform(generate_series(1, 64),
-                    i -> q.qe[i] * v.e[i])) /
-                  (q.qn * sqrt(list_sum(list_transform(
-                     generate_series(1, 64), i -> v.e[i] * v.e[i]))))
-                    AS cosine
-           FROM shortlist sl JOIN q USING (q_id)
-           JOIN v ON v.vec_id = sl.c_id)
-         SELECT q_id, rank, c_id, round(cosine, 6) AS cosine
-         FROM (SELECT q_id, c_id, cosine,
-                      CAST(row_number() OVER (PARTITION BY q_id
-                        ORDER BY cosine DESC, c_id) AS BIGINT) AS rank
-               FROM exact)
-         WHERE rank <= 5 ORDER BY q_id, rank""",
+         $PqRerankSql""",
     // SIM22: the sim3 routing CTEs (vec_id-keyed centroids,
     // assignment/probe argmax with the cid DESC tiebreak) composed
     // with the sim6 PQ CTEs (codebook, enc, LUT), the ADC scan
@@ -1808,29 +1826,7 @@ object Similarity {
            FROM enc JOIN lut l ON enc.j = l.j AND enc.code = l.c
            JOIN cand ON cand.q_id = l.q_id AND cand.c_id = enc.vec_id
            GROUP BY 1, 2),
-         shortlist AS (
-           SELECT q_id, c_id FROM (
-             SELECT s.q_id, s.c_id,
-                    row_number() OVER (PARTITION BY s.q_id
-                      ORDER BY s.adot / (q.qn * sqrt(xh.xn2)) DESC, s.c_id)
-                      AS prank
-             FROM sc s JOIN q USING (q_id) JOIN xh ON s.c_id = xh.vec_id)
-           WHERE prank <= 100),
-         exact AS (
-           SELECT sl.q_id, sl.c_id,
-                  list_sum(list_transform(generate_series(1, 64),
-                    i -> q.qe[i] * v.e[i])) /
-                  (q.qn * sqrt(list_sum(list_transform(
-                     generate_series(1, 64), i -> v.e[i] * v.e[i]))))
-                    AS cosine
-           FROM shortlist sl JOIN q USING (q_id)
-           JOIN v ON v.vec_id = sl.c_id)
-         SELECT q_id, rank, c_id, round(cosine, 6) AS cosine
-         FROM (SELECT q_id, c_id, cosine,
-                      CAST(row_number() OVER (PARTITION BY q_id
-                        ORDER BY cosine DESC, c_id) AS BIGINT) AS rank
-               FROM exact)
-         WHERE rank <= 5 ORDER BY q_id, rank""",
+         $PqRerankSql""",
     // SIM14: the identical index-ordered dot sims over the same
     // top-20 frame, then the FIVE greedy MMR steps unrolled as
     // chained CTEs over a seed empty selection u0 — penalty via a
@@ -1838,14 +1834,7 @@ object Similarity {
     // remainder, the same (score DESC, c_id) tiebreak (the d11/d14
     // unrolling applied to a greedy selection)
     "sim14_mmr_topk" ->
-      s"""WITH v AS (
-           SELECT vec_id,
-                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings),
-         n AS (
-           SELECT vec_id, e,
-                  sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-           FROM v),
+      s"""WITH $NormCtes,
          allc AS (
            SELECT q.vec_id AS q_id, c.vec_id AS c_id,
                   ${dotSql("q.e", "c.e")} / (q.nrm * c.nrm) AS simq
@@ -2091,14 +2080,7 @@ object Similarity {
     // k-cutoff; the cosine doubles are bit-identical on both engines
     // (index-order folds), so the threshold set matches exactly
     "sim12_range_search" ->
-      s"""WITH v AS (
-           SELECT vec_id,
-                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings),
-         n AS (
-           SELECT vec_id, e,
-                  sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-           FROM v),
+      s"""WITH $NormCtes,
          pairs AS (
            SELECT q.vec_id AS q_id, c.vec_id AS c_id,
                   ${dotSql("q.e", "c.e")} / (q.nrm * c.nrm) AS cosine
@@ -2110,14 +2092,7 @@ object Similarity {
            FROM pairs WHERE cosine >= CAST(0.25 AS DOUBLE))
          ORDER BY q_id, rank""",
     "sim1_cosine_topk" ->
-      s"""WITH v AS (
-           SELECT vec_id,
-                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings),
-         n AS (
-           SELECT vec_id, e,
-                  sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-           FROM v),
+      s"""WITH $NormCtes,
          pairs AS (
            SELECT q.vec_id AS q_id, c.vec_id AS c_id,
                   ${dotSql("q.e", "c.e")} / (q.nrm * c.nrm) AS cosine
@@ -2126,11 +2101,7 @@ object Similarity {
     // identical window slicing, ordered ≤8-element list folds, raw
     // IEEE doubles end to end (no rounding — the w24 discipline)
     "sim10_subseq_match" ->
-      """WITH dly AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS px
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("dly", "px")},
          ser AS (
            SELECT event_type, list(px ORDER BY day) AS v
            FROM dly GROUP BY 1),
@@ -2187,38 +2158,10 @@ object Similarity {
            FROM pairs) WHERE rank <= 5
          ORDER BY q_id, rank""",
     "sim21_binary_codes" ->
-      """WITH codes AS (
-           SELECT vec_id,
-                  CAST(list_sum(list_transform(generate_series(1, 32),
-                    i -> CASE WHEN embedding[i] > 0
-                         THEN (1::BIGINT << (i - 1))
-                         ELSE 0::BIGINT END)) AS BIGINT) AS h1,
-                  CAST(list_sum(list_transform(generate_series(1, 32),
-                    i -> CASE WHEN embedding[i + 32] > 0
-                         THEN (1::BIGINT << (i - 1))
-                         ELSE 0::BIGINT END)) AS BIGINT) AS h2
-           FROM embeddings)
+      s"""WITH $CodesCte
          SELECT vec_id, h1, h2 FROM codes ORDER BY vec_id""",
     "sim21_hamming_topk" ->
-      """WITH codes AS (
-           SELECT vec_id,
-                  CAST(list_sum(list_transform(generate_series(1, 32),
-                    i -> CASE WHEN embedding[i] > 0
-                         THEN (1::BIGINT << (i - 1))
-                         ELSE 0::BIGINT END)) AS BIGINT) AS h1,
-                  CAST(list_sum(list_transform(generate_series(1, 32),
-                    i -> CASE WHEN embedding[i + 32] > 0
-                         THEN (1::BIGINT << (i - 1))
-                         ELSE 0::BIGINT END)) AS BIGINT) AS h2
-           FROM embeddings),
-         q AS (SELECT vec_id AS q_id, h1 AS qh1, h2 AS qh2
-               FROM codes WHERE vec_id < 10),
-         r AS (
-           SELECT q.q_id, c.vec_id AS c_id,
-                  CAST(bit_count(xor(q.qh1, c.h1)) +
-                       bit_count(xor(q.qh2, c.h2)) AS BIGINT) AS hamming
-           FROM codes c CROSS JOIN q
-           WHERE q.q_id <> c.vec_id),
+      s"""WITH $HammingCtes,
          t AS (
            SELECT q_id, c_id, hamming,
                   CAST(row_number() OVER (PARTITION BY q_id
@@ -2227,36 +2170,18 @@ object Similarity {
          SELECT q_id, rank, c_id, hamming
          FROM t WHERE rank <= 5 ORDER BY q_id, rank""",
     "sim21_rerank_topk" ->
-      s"""WITH codes AS (
-           SELECT vec_id,
-                  CAST(list_sum(list_transform(generate_series(1, 32),
-                    i -> CASE WHEN embedding[i] > 0
-                         THEN (1::BIGINT << (i - 1))
-                         ELSE 0::BIGINT END)) AS BIGINT) AS h1,
-                  CAST(list_sum(list_transform(generate_series(1, 32),
-                    i -> CASE WHEN embedding[i + 32] > 0
-                         THEN (1::BIGINT << (i - 1))
-                         ELSE 0::BIGINT END)) AS BIGINT) AS h2
-           FROM embeddings),
+      s"""WITH $HammingCtes,
          n AS (
            SELECT vec_id, embedding AS e,
                   sqrt(list_sum(list_transform(embedding, x -> x * x)))
                     AS nrm
            FROM embeddings),
-         q AS (SELECT vec_id AS q_id, h1 AS qh1, h2 AS qh2
-               FROM codes WHERE vec_id < 10),
-         ham AS (
-           SELECT q.q_id, c.vec_id AS c_id,
-                  CAST(bit_count(xor(q.qh1, c.h1)) +
-                       bit_count(xor(q.qh2, c.h2)) AS BIGINT) AS hamming
-           FROM codes c CROSS JOIN q
-           WHERE q.q_id <> c.vec_id),
          short AS (
            SELECT q_id, c_id, hamming FROM (
              SELECT q_id, c_id, hamming,
                     row_number() OVER (PARTITION BY q_id
                       ORDER BY hamming, c_id) AS hrank
-             FROM ham) WHERE hrank <= 64),
+             FROM r) WHERE hrank <= 64),
          rer AS (
            SELECT s.q_id, s.c_id, s.hamming,
                   ${dotSql("nq.e", "nc.e")} / (nq.nrm * nc.nrm) AS cosine

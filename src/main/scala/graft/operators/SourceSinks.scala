@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{Fs, Tables}
 
 /** Sources & sinks beyond the base parquet scan: parquet write (S2),
   * partitioned write (S3), CSV write+scan (S4/S5), JSON write+read
@@ -29,7 +29,7 @@ object SourceSinks {
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private[operators] def fragmentedDir(s: SparkSession, d: String): String =
     synchronized { fragCache.getOrElseUpdate((s, d), {
-      val out = tmp("s19frag")
+      val out = Fs.scratch("s19frag")
       Tables.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"))
         .repartition(64)
@@ -78,7 +78,7 @@ object SourceSinks {
     * `s22_layout_build`. */
   val zorderDir = graft.MaterializedTable.of("s22_layout_build") {
     (s, d) =>
-      val out = tmp("s22z")
+      val out = Fs.scratch("s22z")
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"))
@@ -97,28 +97,12 @@ object SourceSinks {
           col("value"))
         .write.mode("overwrite").parquet(out)
       out
-  }((_, p) => graft.Fs.deleteRecursively(new java.io.File(p)))
-
-  /** Staged dirs removed at JVM exit. File.deleteOnExit is useless
-    * here (it only removes EMPTY dirs, and these fill with part
-    * files), so a single shutdown hook recursively deletes everything
-    * this object staged. */
-  private val staged = new java.util.concurrent.ConcurrentLinkedQueue[String]
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      staged.forEach(p => graft.Fs.deleteRecursively(new java.io.File(p)))))
-  }
-
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_$name")
-    staged.add(d.toString)
-    d.toString
-  }
+  }((_, p) => Fs.deleteRecursively(new java.io.File(p)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S2: parquet write + read back.
     "s2_parquet_roundtrip" -> ((s, d) => {
-      val out = tmp("s2")
+      val out = Fs.scratch("s2")
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
         .write.mode("overwrite").parquet(out)
@@ -128,7 +112,7 @@ object SourceSinks {
     // S3: partitioned write (partition column round-trips through the
     // directory layout; read back restores it — cast to original type).
     "s3_partitioned_write" -> ((s, d) => {
-      val out = tmp("s3")
+      val out = Fs.scratch("s3")
       Tables.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"))
         .write.mode("overwrite").partitionBy("event_type").parquet(out)
@@ -164,7 +148,7 @@ object SourceSinks {
     // listing → binary read) is lossless end to end. Fully
     // oracle-checked.
     "s26_binary_files" -> ((s, d) => {
-      val out = tmp("s26")
+      val out = Fs.scratch("s26")
       Tables.documents(s, d).filter(col("doc_id") < 100)
         .select(col("doc_id"), col("text"))
         .write.mode("overwrite").partitionBy("doc_id").text(out)
@@ -176,7 +160,7 @@ object SourceSinks {
     }),
 
     "s25_file_provenance" -> ((s, d) => {
-      val out = tmp("s25")
+      val out = Fs.scratch("s25")
       Tables.events(s, d)
         .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
         .select(col("event_id"), col("day"), col("value"))
@@ -199,7 +183,7 @@ object SourceSinks {
     // S4+S5: CSV write then schema'd scan (header, explicit schema —
     // timestamps serialize ISO and parse back exactly).
     "s4_csv_roundtrip" -> ((s, d) => {
-      val out = tmp("s4")
+      val out = Fs.scratch("s4")
       Tables.customer(s, d)
         .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
         .write.mode("overwrite").option("header", "true").csv(out)
@@ -223,7 +207,7 @@ object SourceSinks {
     // through both codecs (doubles survive via the shortest-repr
     // text render, the S4 contract).
     "s27_compressed_roundtrip" -> ((s, d) => {
-      val outGz = tmp("s27gz"); val outBz = tmp("s27bz")
+      val outGz = Fs.scratch("s27gz"); val outBz = Fs.scratch("s27bz")
       // the single-parquet-file source arrives as ONE partition, so
       // both codec writes ran as one task — the whole gzip+bzip2 CPU
       // serialized on one core (guide §2.5: input skew from one
@@ -254,7 +238,7 @@ object SourceSinks {
 
     // S6+S7: JSON write then schema'd read.
     "s6_json_roundtrip" -> ((s, d) => {
-      val out = tmp("s6")
+      val out = Fs.scratch("s6")
       Tables.supplier(s, d)
         .select(col("s_suppkey"), col("s_name"), col("s_acctbal"))
         .write.mode("overwrite").json(out)
@@ -270,7 +254,7 @@ object SourceSinks {
     // same as parquet); completes the format matrix next to
     // parquet/CSV/JSON.
     "s16_orc_roundtrip" -> ((s, d) => {
-      val out = tmp("s16")
+      val out = Fs.scratch("s16")
       Tables.part(s, d)
         .select(col("p_partkey"), col("p_name"), col("p_retailprice"))
         .write.mode("overwrite").orc(out)
@@ -285,7 +269,7 @@ object SourceSinks {
     // read-side contract (NULL fill, no rewrite of old data) is what
     // the oracle checks.
     "s17_schema_evolution" -> ((s, d) => {
-      val out = tmp("s17")
+      val out = Fs.scratch("s17")
       val ev = Tables.events(s, d)
       ev.filter(col("event_id") % 2 === 0)
         .select(col("event_id"), col("value"))
@@ -308,7 +292,7 @@ object SourceSinks {
     // clicks carry the reprocessed (doubled) values, every other
     // partition the original load.
     "s18_dynamic_overwrite" -> ((s, d) => {
-      val out = tmp("s18")
+      val out = Fs.scratch("s18")
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"))
       ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
@@ -331,7 +315,7 @@ object SourceSinks {
     // content identity; SourceSinksSpec asserts the file-count
     // collapse (the part the content compare can't see).
     "s19_compaction" -> ((s, d) => {
-      val out = tmp("s19c")
+      val out = Fs.scratch("s19c")
       compact(s, fragmentedDir(s, d), out)
       s.read.parquet(out)
         .select(col("event_id"), col("event_type"), col("value"))
@@ -349,7 +333,7 @@ object SourceSinks {
     // the join side of MERGE is co-located. Oracle checks the merged
     // read-back against the same FULL JOIN in SQL.
     "s21_merge_upsert" -> ((s, d) => {
-      val out = tmp("s21")
+      val out = Fs.scratch("s21")
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"))
       ev.filter(col("event_id") % 4 =!= 0)
@@ -444,7 +428,7 @@ object SourceSinks {
       Tables.events(s, d)
         .select(col("user_id"), col("event_type"), col("value"))
         .write.mode("overwrite")
-        .option("path", tmp("s15"))  // external location: keep data
+        .option("path", Fs.scratch("s15"))  // external location: keep data
         .bucketBy(8, "user_id")      // out of ./spark-warehouse
         .sortBy("user_id")
         .format("parquet")
@@ -474,6 +458,11 @@ object SourceSinks {
       .select(col("user_id"), col("n_events"), col("total_value"),
         coalesce(col("n_high"), lit(0L)).as("n_high"))
   }
+
+  /** Every event's (event_id, event_type, value): the oracle of each
+    * write that must read back the events unchanged (S3, S19). */
+  private val EventRowsSql =
+    """SELECT event_id, event_type, value FROM events ORDER BY event_id"""
 
   val oracles: Map[String, String] = Map(
     "s24_snapshot_diff" ->
@@ -517,9 +506,7 @@ object SourceSinks {
     "s16_orc_roundtrip" ->
       """SELECT p_partkey, p_name, p_retailprice FROM part
          ORDER BY p_partkey""",
-    "s19_compaction" ->
-      """SELECT event_id, event_type, value FROM events
-         ORDER BY event_id""",
+    "s19_compaction" -> EventRowsSql,
     "s18_dynamic_overwrite" ->
       """SELECT event_id, event_type,
                 CASE WHEN event_type = 'click' THEN value * 2
@@ -532,8 +519,7 @@ object SourceSinks {
     "s2_parquet_roundtrip" ->
       """SELECT o_orderkey, o_totalprice, o_orderdate FROM orders
          ORDER BY o_orderkey""",
-    "s3_partitioned_write" ->
-      """SELECT event_id, event_type, value FROM events ORDER BY event_id""",
+    "s3_partitioned_write" -> EventRowsSql,
     // provenance accounting re-derived from the DATA: lineage and
     // content must agree; n_files = 1 is the repartition invariant
     "s25_file_provenance" ->

@@ -55,6 +55,52 @@ object Stats {
       bounds)
   }
 
+  /** Oracle twin of [[twoSample]]: CTEs `s` (value, g1) and `n` (the
+    * group sizes n1, n2). */
+  private val TwoSampleCtes =
+    """s AS (
+           SELECT value, event_type = 'click' AS g1
+           FROM events WHERE event_type IN ('click', 'purchase')),
+         n AS (
+           SELECT CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+                  CAST(sum(CASE WHEN NOT g1 THEN 1 ELSE 0 END) AS BIGINT)
+                    AS n2
+           FROM s)"""
+
+  /** Oracle twin of [[midrankSpine]] (one global window): `TwoSampleCtes`
+    * plus `perv` (value, k1, k) and `r` (k1, k and the pooled count
+    * strictly below the value, cbef). */
+  private val MidrankCtes =
+    s"""$TwoSampleCtes,
+         perv AS (
+           SELECT value,
+                  CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS k1,
+                  CAST(count(*) AS BIGINT) AS k
+           FROM s GROUP BY value),
+         r AS (
+           SELECT k1, k,
+                  coalesce(sum(k) OVER (ORDER BY value
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                    AS cbef
+           FROM perv)"""
+
+  /** Oracle twin of [[cvmSpine]] (one global window): `TwoSampleCtes`
+    * plus `perv` (value, k1, k2) and `r` (k1, k2 and the inclusive
+    * cumulatives c1, c2). */
+  private val CdfCtes =
+    s"""$TwoSampleCtes,
+         perv AS (
+           SELECT value,
+                  CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS k1,
+                  CAST(sum(CASE WHEN NOT g1 THEN 1 ELSE 0 END) AS BIGINT)
+                    AS k2
+           FROM s GROUP BY value),
+         r AS (
+           SELECT k1, k2,
+                  sum(k1) OVER w AS c1, sum(k2) OVER w AS c2
+           FROM perv
+           WINDOW w AS (ORDER BY value ROWS UNBOUNDED PRECEDING))"""
+
   /** Shared A33/A112/A113 spine: per distinct click/purchase value, the
     * group tallies (k1, k2), the INCLUSIVE combined cumulatives
     * (c1, c2) via the bucketed two-level decomposition (no global
@@ -162,27 +208,7 @@ object Stats {
     * One map-side-combinable pass over the corpus; everything after
     * runs on ≤ |types|·10 rows. */
   private def driftBins(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-      .select(col("event_type"), col("value"), col("ts"))
-    val rng = ev.agg(min(col("value")).as("vmin"),
-      max(col("value")).as("vmax"))
-    val binned = ev.crossJoin(broadcast(rng))
-      // vmax = vmin -> one bin (degenerate-range guard; spec:
-      // StatsDegenerateSpec)
-      .withColumn("bin",
-        when(col("vmax") > col("vmin"),
-          least(floor((col("value") - col("vmin")) /
-            (col("vmax") - col("vmin")) * 10), lit(9L)))
-          .otherwise(lit(0L)))
-      .withColumn("in_a",
-        (col("ts") < lit("2024-01-16 00:00:00").cast("timestamp"))
-          .cast("long"))
-    val counts = binned.groupBy(col("event_type"), col("bin"))
-      .agg(sum(col("in_a")).as("ca"),
-        sum(lit(1L) - col("in_a")).as("cb"))
-    val spine = counts.select(col("event_type")).distinct()
-      .select(col("event_type"),
-        explode(sequence(lit(0L), lit(9L))).as("bin"))
+    val (counts, spine, _) = periodBins(s, d, 10)
     val tot = counts.groupBy(col("event_type"))
       .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
     spine
@@ -214,6 +240,119 @@ object Stats {
         Window.partitionBy("day", "y")))
       .withColumn("r", col("rnk") +
         (col("ct") - 1).cast("double") / 2)
+  }
+
+  /** The A28/A65 one-pass conditional aggregate: count, mean and
+    * sample variance of the click (`_a`) and purchase (`_b`) values. */
+  private def clickPurchaseMoments(s: SparkSession, d: String): DataFrame = {
+    val a = when(col("event_type") === "click", col("value"))
+    val b = when(col("event_type") === "purchase", col("value"))
+    Tables.events(s, d)
+      .agg(count(a).as("n_a"), avg(a).as("mean_a"),
+        var_samp(a).as("var_a"),
+        count(b).as("n_b"), avg(b).as("mean_b"),
+        var_samp(b).as("var_b"))
+  }
+
+  /** The A67/A120 shape frame: per type the count n (and as a double,
+    * nd), the raw moments mu, r2..r4 from decimal-pinned sums, and the
+    * sample skewness and kurtosis under the caller's names. */
+  private def shapeMoments(s: SparkSession, d: String, skew: String,
+                           kurt: String): DataFrame = {
+    val x = col("value")
+    val agg = Tables.events(s, d)
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(x.cast("decimal(24,10)")).as("s1"),
+        sum((x * x).cast("decimal(28,8)")).as("s2"),
+        sum((x * x * x).cast("decimal(32,6)")).as("s3"),
+        sum((x * x * x * x).cast("decimal(36,4)")).as("s4"))
+      .select(col("event_type"), col("n"),
+        col("n").cast("double").as("nd"),
+        (col("s1").cast("double") / col("n")).as("mu"),
+        (col("s2").cast("double") / col("n")).as("r2"),
+        (col("s3").cast("double") / col("n")).as("r3"),
+        (col("s4").cast("double") / col("n")).as("r4"))
+    val m2 = col("r2") - col("mu") * col("mu")
+    val m3 = col("r3") - lit(3.0d) * col("mu") * col("r2") +
+      lit(2.0d) * col("mu") * col("mu") * col("mu")
+    val m4 = col("r4") - lit(4.0d) * col("mu") * col("r3") +
+      lit(6.0d) * col("mu") * col("mu") * col("r2") -
+      lit(3.0d) * col("mu") * col("mu") * col("mu") * col("mu")
+    agg
+      // zero variance -> moments undefined -> NULL (ANSI /0 guard;
+      // ratchet spec)
+      .withColumn(skew, when(m2 > 0, m3 / pow(m2, 1.5d)))
+      .withColumn(kurt, when(m2 > 0, m4 / (m2 * m2)))
+  }
+
+  /** `ev` with `bin`, its value's equal-width bin among `bins` over the
+    * exact global [vmin, vmax], and that range frame. */
+  private def valueBins(ev: DataFrame, bins: Int): (DataFrame, DataFrame) = {
+    val rng = ev.agg(min(col("value")).as("vmin"),
+      max(col("value")).as("vmax"))
+    (ev.crossJoin(broadcast(rng))
+      // vmax = vmin -> one bin (degenerate-range guard; spec:
+      // StatsDegenerateSpec)
+      .withColumn("bin",
+        when(col("vmax") > col("vmin"),
+          least(floor((col("value") - col("vmin")) /
+            (col("vmax") - col("vmin")) * bins), lit(bins - 1L)))
+          .otherwise(lit(0L))), rng)
+  }
+
+  /** The A79/drift period histogram over `bins` value bins: each
+    * (event_type, bin)'s counts before (ca) and from (cb) 2024-01-16,
+    * the full (event_type, bin) spine and the range frame. */
+  private def periodBins(s: SparkSession, d: String, bins: Int)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val (binned, rng) = valueBins(Tables.events(s, d)
+      .select(col("event_type"), col("value"), col("ts")), bins)
+    val counts = binned
+      .withColumn("in_a",
+        (col("ts") < lit("2024-01-16 00:00:00").cast("timestamp"))
+          .cast("long"))
+      .groupBy(col("event_type"), col("bin"))
+      .agg(sum(col("in_a")).as("ca"),
+        sum(lit(1L) - col("in_a")).as("cb"))
+    val spine = counts.select(col("event_type")).distinct()
+      .select(col("event_type"),
+        explode(sequence(lit(0L), lit(bins - 1L))).as("bin"))
+    (counts, spine, rng)
+  }
+
+  /** The A92/A102/A119 panel: the daily candles of every day with a
+    * previous day, flagged up-price x and up-volume y (0/1 longs). */
+  private def upDown(s: SparkSession, d: String): DataFrame = {
+    val wd = Window.partitionBy("event_type").orderBy("day")
+    candles(s, d)
+      .withColumn("pc", lag(col("close"), 1).over(wd))
+      .withColumn("pv", lag(col("vol"), 1).over(wd))
+      .filter(col("pc").isNotNull)
+      .withColumn("x", (col("close") > col("pc")).cast("long"))
+      .withColumn("y", (col("vol") > col("pv")).cast("long"))
+  }
+
+  /** The A94/A98 pair counts: over every two days of a type (an
+    * equi-join on the type key), the pair count n0, the concordant and
+    * discordant (close, vol) orderings and the close and volume ties. */
+  private def dayPairCounts(s: SparkSession, d: String): DataFrame = {
+    val c = candles(s, d)
+    val a = c.select(col("event_type"), col("day").as("da"),
+      col("close").as("xa"), col("vol").as("ya"))
+    val b = c.select(col("event_type"), col("day").as("db"),
+      col("close").as("xb"), col("vol").as("yb"))
+    a.join(b, Seq("event_type")).filter(col("da") < col("db"))
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n0"),
+        sum(when((col("xa") < col("xb") && col("ya") < col("yb")) ||
+                 (col("xa") > col("xb") && col("ya") > col("yb")), 1L)
+          .otherwise(0L)).as("conc"),
+        sum(when((col("xa") < col("xb") && col("ya") > col("yb")) ||
+                 (col("xa") > col("xb") && col("ya") < col("yb")), 1L)
+          .otherwise(0L)).as("disc"),
+        sum(when(col("xa") === col("xb"), 1L).otherwise(0L)).as("tx"),
+        sum(when(col("ya") === col("yb"), 1L).otherwise(0L)).as("ty"))
   }
 
   /** Daily avg value per event_type — the shared grid input. */
@@ -819,13 +958,7 @@ object Stats {
     // oracle-checked (avg/var_samp definitional, r6 absorbs moment
     // merge order — the a2 contract).
     "a65_cohens_d" -> ((s, d) => {
-      val a = when(col("event_type") === "click", col("value"))
-      val b = when(col("event_type") === "purchase", col("value"))
-      Tables.events(s, d)
-        .agg(count(a).as("n_a"), avg(a).as("mean_a"),
-          var_samp(a).as("var_a"),
-          count(b).as("n_b"), avg(b).as("mean_b"),
-          var_samp(b).as("var_b"))
+      clickPurchaseMoments(s, d)
         .withColumn("sp", sqrt(
           ((col("n_a") - 1) * col("var_a") + (col("n_b") - 1) * col("var_b"))
             / (col("n_a") + col("n_b") - 2)))
@@ -852,13 +985,7 @@ object Stats {
     // aggregate; fully oracle-checkable (avg/var_samp exist in DuckDB,
     // round6 absorbs partial-aggregation-order ulps, the a2 pattern).
     "a28_welch_ttest" -> ((s, d) => {
-      val a = when(col("event_type") === "click", col("value"))
-      val b = when(col("event_type") === "purchase", col("value"))
-      Tables.events(s, d)
-        .agg(count(a).as("n_a"), avg(a).as("mean_a"),
-          var_samp(a).as("var_a"),
-          count(b).as("n_b"), avg(b).as("mean_b"),
-          var_samp(b).as("var_b"))
+      clickPurchaseMoments(s, d)
         // zero variance in BOTH groups (or an empty/singleton group)
         // makes t/df undefined -> NULL (ANSI /0 guard;
         // StatsDegenerateSpec ratchet)
@@ -1562,30 +1689,7 @@ object Stats {
     // CLOSED FORM exp(−x/2), so the whole test — p included — is
     // fully oracle-checked, no quadrature kernel needed.
     "a67_jarque_bera" -> ((s, d) => {
-      val x = col("value")
-      val agg = Tables.events(s, d)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(x.cast("decimal(24,10)")).as("s1"),
-          sum((x * x).cast("decimal(28,8)")).as("s2"),
-          sum((x * x * x).cast("decimal(32,6)")).as("s3"),
-          sum((x * x * x * x).cast("decimal(36,4)")).as("s4"))
-        .select(col("event_type"), col("n"),
-          (col("s1").cast("double") / col("n")).as("mu"),
-          (col("s2").cast("double") / col("n")).as("r2"),
-          (col("s3").cast("double") / col("n")).as("r3"),
-          (col("s4").cast("double") / col("n")).as("r4"))
-      val m2 = col("r2") - col("mu") * col("mu")
-      val m3 = col("r3") - lit(3.0d) * col("mu") * col("r2") +
-        lit(2.0d) * col("mu") * col("mu") * col("mu")
-      val m4 = col("r4") - lit(4.0d) * col("mu") * col("r3") +
-        lit(6.0d) * col("mu") * col("mu") * col("r2") -
-        lit(3.0d) * col("mu") * col("mu") * col("mu") * col("mu")
-      agg
-        // zero variance -> moments undefined -> NULL (ANSI /0 guard;
-        // ratchet spec)
-        .withColumn("skew", when(m2 > 0, m3 / pow(m2, 1.5d)))
-        .withColumn("kurt", when(m2 > 0, m4 / (m2 * m2)))
+      shapeMoments(s, d, "skew", "kurt")
         .withColumn("jb",
           col("n").cast("double") / 6.0d *
             (col("skew") * col("skew") +
@@ -1612,30 +1716,8 @@ object Stats {
     // (the kurtosis transform's 1 + x·√(2/(A−4)) denominator) is
     // guarded ⇒ NULL, mirrored in the oracle.
     "a120_dagostino_k2" -> ((s, d) => {
-      val x = col("value")
-      val agg = Tables.events(s, d)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(x.cast("decimal(24,10)")).as("s1"),
-          sum((x * x).cast("decimal(28,8)")).as("s2"),
-          sum((x * x * x).cast("decimal(32,6)")).as("s3"),
-          sum((x * x * x * x).cast("decimal(36,4)")).as("s4"))
-        .select(col("event_type"), col("n"),
-          col("n").cast("double").as("nd"),
-          (col("s1").cast("double") / col("n")).as("mu"),
-          (col("s2").cast("double") / col("n")).as("r2"),
-          (col("s3").cast("double") / col("n")).as("r3"),
-          (col("s4").cast("double") / col("n")).as("r4"))
-      val m2 = col("r2") - col("mu") * col("mu")
-      val m3 = col("r3") - lit(3.0d) * col("mu") * col("r2") +
-        lit(2.0d) * col("mu") * col("mu") * col("mu")
-      val m4 = col("r4") - lit(4.0d) * col("mu") * col("r3") +
-        lit(6.0d) * col("mu") * col("mu") * col("r2") -
-        lit(3.0d) * col("mu") * col("mu") * col("mu") * col("mu")
       val nd = col("nd")
-      val withMoments = agg
-        .withColumn("g1", when(m2 > 0, m3 / pow(m2, 1.5d)))
-        .withColumn("b2", when(m2 > 0, m4 / (m2 * m2)))
+      val withMoments = shapeMoments(s, d, "g1", "b2")
         // D'Agostino skewness transform. The z chain is gated on
         // n >= 8 (scipy normaltest's documented minimum): n = 7 makes
         // beta2 = 3 exactly so both sqrt(2/(w2-1)) and 1/sqrt(ln√w2)
@@ -2064,16 +2146,7 @@ object Stats {
         .select(col("event_type"), col("value"),
           (get_json_object(col("props"), "$.k").cast("long") >= 50)
             .as("pos"))
-      val rng = ev.agg(min(col("value")).as("vmin"),
-        max(col("value")).as("vmax"))
-      val counts = ev.crossJoin(broadcast(rng))
-        // vmax = vmin -> one bin (degenerate-range guard; spec:
-        // StatsDegenerateSpec)
-        .withColumn("bin",
-          when(col("vmax") > col("vmin"),
-            least(floor((col("value") - col("vmin")) /
-              (col("vmax") - col("vmin")) * 1000), lit(999L)))
-            .otherwise(lit(0L)))
+      val counts = valueBins(ev, 1000)._1
         .groupBy(col("event_type"), col("bin"))
         .agg(sum(when(col("pos"), 1L).otherwise(0L)).as("p"),
           sum(when(col("pos"), 0L).otherwise(1L)).as("n"))
@@ -2217,27 +2290,7 @@ object Stats {
     // One corpus pass into a conditional (type, bin) hash agg.
     // Fully oracle-checked.
     "a79_wasserstein" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-        .select(col("event_type"), col("value"), col("ts"))
-      val rng = ev.agg(min(col("value")).as("vmin"),
-        max(col("value")).as("vmax"))
-      val counts = ev.crossJoin(broadcast(rng))
-        // vmax = vmin -> one bin (degenerate-range guard; spec:
-        // StatsDegenerateSpec)
-        .withColumn("bin",
-          when(col("vmax") > col("vmin"),
-            least(floor((col("value") - col("vmin")) /
-              (col("vmax") - col("vmin")) * 200), lit(199L)))
-            .otherwise(lit(0L)))
-        .withColumn("in_a",
-          (col("ts") < lit("2024-01-16 00:00:00").cast("timestamp"))
-            .cast("long"))
-        .groupBy(col("event_type"), col("bin"))
-        .agg(sum(col("in_a")).as("ca"),
-          sum(lit(1L) - col("in_a")).as("cb"))
-      val spine = counts.select(col("event_type")).distinct()
-        .select(col("event_type"),
-          explode(sequence(lit(0L), lit(199L))).as("bin"))
+      val (counts, spine, rng) = periodBins(s, d, 200)
       val wc = Window.partitionBy("event_type").orderBy("bin")
         .rowsBetween(Window.unboundedPreceding, 0)
       val wt = Window.partitionBy("event_type")
@@ -3170,13 +3223,7 @@ object Stats {
     // nothing to pin. Types with b+c = 0 are excluded (the statistic
     // is 0/0). One candle shuffle + per-type lag + one hash agg.
     "a92_mcnemar" -> ((s, d) => {
-      val wd = Window.partitionBy("event_type").orderBy("day")
-      candles(s, d)
-        .withColumn("pc", lag(col("close"), 1).over(wd))
-        .withColumn("pv", lag(col("vol"), 1).over(wd))
-        .filter(col("pc").isNotNull)
-        .withColumn("x", (col("close") > col("pc")).cast("long"))
-        .withColumn("y", (col("vol") > col("pv")).cast("long"))
+      upDown(s, d)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_pairs"),
           sum(when(col("x") === 1 && col("y") === 0, 1L).otherwise(0L))
@@ -3209,13 +3256,7 @@ object Stats {
     // raw doubles, fully hash-checked. Single-day strata drop (V
     // undefined at n = 1); ΣV = 0 → NULL (the ANSI guard).
     "a119_cmh" -> ((s, d) => {
-      val wd = Window.partitionBy("event_type").orderBy("day")
-      val strata = candles(s, d)
-        .withColumn("pc", lag(col("close"), 1).over(wd))
-        .withColumn("pv", lag(col("vol"), 1).over(wd))
-        .filter(col("pc").isNotNull)
-        .withColumn("x", (col("close") > col("pc")).cast("long"))
-        .withColumn("y", (col("vol") > col("pv")).cast("long"))
+      val strata = upDown(s, d)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("nk"),
           sum(col("x") * col("y")).as("a"),
@@ -3254,13 +3295,7 @@ object Stats {
     // while or/rr stay raw. Types with any empty cell are excluded
     // (the statistic is undefined, and ANSI division would throw).
     "a102_odds_ratio" -> ((s, d) => {
-      val wd = Window.partitionBy("event_type").orderBy("day")
-      candles(s, d)
-        .withColumn("pc", lag(col("close"), 1).over(wd))
-        .withColumn("pv", lag(col("vol"), 1).over(wd))
-        .filter(col("pc").isNotNull)
-        .withColumn("x", (col("close") > col("pc")).cast("long"))
-        .withColumn("y", (col("vol") > col("pv")).cast("long"))
+      upDown(s, d)
         .groupBy("event_type")
         .agg(sum(when(col("x") === 1 && col("y") === 1, 1L).otherwise(0L))
             .as("a"),
@@ -3883,22 +3918,7 @@ object Stats {
     // count C/D; tx/ty count ALL x-ties / y-ties (both-tied pairs
     // land in both, per the τ-b definition).
     "a94_kendall_tau" -> ((s, d) => {
-      val c = candles(s, d)
-      val a = c.select(col("event_type"), col("day").as("da"),
-        col("close").as("xa"), col("vol").as("ya"))
-      val b = c.select(col("event_type"), col("day").as("db"),
-        col("close").as("xb"), col("vol").as("yb"))
-      a.join(b, Seq("event_type")).filter(col("da") < col("db"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n0"),
-          sum(when((col("xa") < col("xb") && col("ya") < col("yb")) ||
-                   (col("xa") > col("xb") && col("ya") > col("yb")), 1L)
-            .otherwise(0L)).as("conc"),
-          sum(when((col("xa") < col("xb") && col("ya") > col("yb")) ||
-                   (col("xa") > col("xb") && col("ya") < col("yb")), 1L)
-            .otherwise(0L)).as("disc"),
-          sum(when(col("xa") === col("xb"), 1L).otherwise(0L)).as("tx"),
-          sum(when(col("ya") === col("yb"), 1L).otherwise(0L)).as("ty"))
+      dayPairCounts(s, d)
         .filter(col("n0") > col("tx") && col("n0") > col("ty"))
         .select(col("event_type"), col("n0"), col("conc"), col("disc"),
           col("tx"), col("ty"),
@@ -4005,22 +4025,7 @@ object Stats {
     // (x the predictor); D_xy the transpose. Each is ONE division
     // from exact integers — the τ-b lens family completed.
     "a98_gamma_somers" -> ((s, d) => {
-      val c = candles(s, d)
-      val a = c.select(col("event_type"), col("day").as("da"),
-        col("close").as("xa"), col("vol").as("ya"))
-      val b = c.select(col("event_type"), col("day").as("db"),
-        col("close").as("xb"), col("vol").as("yb"))
-      a.join(b, Seq("event_type")).filter(col("da") < col("db"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n0"),
-          sum(when((col("xa") < col("xb") && col("ya") < col("yb")) ||
-                   (col("xa") > col("xb") && col("ya") > col("yb")), 1L)
-            .otherwise(0L)).as("conc"),
-          sum(when((col("xa") < col("xb") && col("ya") > col("yb")) ||
-                   (col("xa") > col("xb") && col("ya") < col("yb")), 1L)
-            .otherwise(0L)).as("disc"),
-          sum(when(col("xa") === col("xb"), 1L).otherwise(0L)).as("tx"),
-          sum(when(col("ya") === col("yb"), 1L).otherwise(0L)).as("ty"))
+      dayPairCounts(s, d)
         .filter(col("conc") + col("disc") > 0 &&
           col("n0") > col("tx") && col("n0") > col("ty"))
         .select(col("event_type"), col("n0"), col("conc"), col("disc"),
@@ -4034,6 +4039,47 @@ object Stats {
         .orderBy("event_type")
     })
   )
+
+  /** A92/A102/A119 oracle CTEs: `CloseVolCtes`, then `p` (each day's
+    * close and volume beside the previous day's, pc/pv) and `f` (the
+    * up-price x and up-volume y flags of every day with a previous
+    * day). */
+  private val UpDownCtes: String =
+    s"""$CloseVolCtes,
+         p AS (
+           SELECT event_type, day, close, vol,
+                  lag(close) OVER w AS pc, lag(vol) OVER w AS pv
+           FROM c WINDOW w AS (PARTITION BY event_type ORDER BY day)),
+         f AS (
+           SELECT event_type,
+                  CAST(close > pc AS BIGINT) AS x,
+                  CAST(vol > pv AS BIGINT) AS y
+           FROM p WHERE pc IS NOT NULL)"""
+
+  /** A94/A98 oracle CTEs, twin of [[dayPairCounts]]: `CloseVolCtes`,
+    * the (close, vol) pairs of every two days of a type `p`, and `agg`
+    * with their exact counts n0, conc, disc, tx, ty per type. */
+  private val DayPairCtes: String =
+    s"""$CloseVolCtes,
+         p AS (
+           SELECT a.event_type,
+                  a.close AS xa, a.vol AS ya,
+                  b.close AS xb, b.vol AS yb
+           FROM c a JOIN c b ON a.event_type = b.event_type
+                            AND a.day < b.day),
+         agg AS (
+           SELECT event_type, count(*) AS n0,
+                  CAST(sum(CASE WHEN (xa < xb AND ya < yb)
+                                  OR (xa > xb AND ya > yb)
+                                THEN 1 ELSE 0 END) AS BIGINT) AS conc,
+                  CAST(sum(CASE WHEN (xa < xb AND ya > yb)
+                                  OR (xa > xb AND ya < yb)
+                                THEN 1 ELSE 0 END) AS BIGINT) AS disc,
+                  CAST(sum(CASE WHEN xa = xb THEN 1 ELSE 0 END)
+                       AS BIGINT) AS tx,
+                  CAST(sum(CASE WHEN ya = yb THEN 1 ELSE 0 END)
+                       AS BIGINT) AS ty
+           FROM p GROUP BY 1)"""
 
   /** A87/A101/A108 oracle CTEs `cell → kk → full_days → ranked`: the
     * pinned (day, type) means and, on complete days only, each type's
@@ -4055,6 +4101,129 @@ object Stats {
                          AS DOUBLE) / 2 AS r
            FROM cell c JOIN full_days f ON c.day = f.day
            CROSS JOIN kk)"""
+
+  /** A87/A101 oracle CTEs: `friedmanCtes`, then `per_type` (each
+    * type's rank sums over the complete days) and `tot` (Friedman's Q
+    * numerator num and denominator den, beside each type's row). */
+  private val FriedmanQCtes: String =
+    s"""$friedmanCtes,
+         per_type AS (
+           SELECT event_type, count(*) AS n_days, sum(r) AS rank_sum,
+                  sum(r * r) AS rsq_sum, max(k) AS k
+           FROM ranked GROUP BY 1),
+         withn AS (
+           SELECT event_type, n_days, k, rank_sum, rsq_sum,
+                  max(n_days) OVER () AS n
+           FROM per_type),
+         tot AS (
+           SELECT event_type, n_days, k, rank_sum,
+                  sum((rank_sum - n * CAST(k + 1 AS DOUBLE) / 2) *
+                      (rank_sum - n * CAST(k + 1 AS DOUBLE) / 2))
+                    OVER () AS num,
+                  sum(rsq_sum) OVER () -
+                    n * k * CAST(k + 1 AS DOUBLE) * (k + 1) / 4 AS den
+           FROM withn)"""
+
+  /** A3/A4 oracle CTEs: the daily mean `daily`, its next three days
+    * `leads`, and `grid` (corr and count of each lead k = 1..3 per
+    * type). */
+  private val CorrGridCtes: String =
+    """daily AS (
+           SELECT event_type, date_trunc('day', ts) AS day, avg(value) AS v
+           FROM events GROUP BY 1, 2),
+         leads AS (
+           SELECT event_type, day, v,
+                  lead(v, 1) OVER (PARTITION BY event_type ORDER BY day) AS l1,
+                  lead(v, 2) OVER (PARTITION BY event_type ORDER BY day) AS l2,
+                  lead(v, 3) OVER (PARTITION BY event_type ORDER BY day) AS l3
+           FROM daily),
+         grid AS (
+           SELECT event_type, k, corr(v, fwd) AS c, count(fwd) AS n FROM (
+             SELECT event_type, v, 1 AS k, l1 AS fwd FROM leads
+             UNION ALL
+             SELECT event_type, v, 2 AS k, l2 AS fwd FROM leads
+             UNION ALL
+             SELECT event_type, v, 3 AS k, l3 AS fwd FROM leads)
+           GROUP BY 1, 2)"""
+
+  /** A41/A44 oracle CTEs: the (event_type, weekday) contingency
+    * `obs`, its margins `rt`/`ct`/`tot`, and `grid` (every cell's
+    * count n, 0 where empty, and its expected count). */
+  private val ChiGridCtes: String =
+    """base AS (
+           SELECT event_type, dayofweek(ts) + 1 AS dow FROM events),
+         obs AS (
+           SELECT event_type, dow, count(*) AS n FROM base GROUP BY 1, 2),
+         rt AS (SELECT event_type, sum(n) AS rt FROM obs GROUP BY 1),
+         ct AS (SELECT dow, sum(n) AS ct FROM obs GROUP BY 1),
+         tot AS (SELECT sum(n) AS t FROM obs),
+         grid AS (
+           SELECT r.event_type, c.dow, coalesce(o.n, 0) AS n,
+                  CAST(r.rt AS DOUBLE) * c.ct / tot.t AS expected
+           FROM rt r CROSS JOIN ct c
+                LEFT JOIN obs o ON o.event_type = r.event_type
+                              AND o.dow = c.dow, tot)"""
+
+  /** A46/A63 oracle CTEs: the dumped A3 p-values `pv` and `r` (their
+    * count m and ascending rank rnk). */
+  private val PRankCtes: String =
+    s"""pv AS (SELECT * FROM '${Dumps.oraclePath("a3_pvalues")}/*.parquet'),
+         r AS (
+           SELECT *, count(*) OVER () AS m,
+                  row_number() OVER (ORDER BY p_value, event_type, k)
+                    AS rnk
+           FROM pv)"""
+
+  /** A45/A70 oracle CTE `agg`: the click and purchase counts n1/n2
+    * and their counts above 50, x1/x2. */
+  private val TwoPropCte: String =
+    """agg AS (
+           SELECT sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
+                    AS n1,
+                  sum(CASE WHEN event_type = 'click' AND value > 50
+                           THEN 1 ELSE 0 END) AS x1,
+                  sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+                    AS n2,
+                  sum(CASE WHEN event_type = 'purchase' AND value > 50
+                           THEN 1 ELSE 0 END) AS x2
+           FROM events WHERE event_type IN ('click', 'purchase'))"""
+
+  /** A10/A11/A12/A14 oracle CTEs: the daily order revenue `day` and
+    * `rets` (each day's revenue and its return on the day before). */
+  private val OrderRetCtes: String =
+    """day AS (
+           SELECT date_trunc('day', o_orderdate) AS day, sum(o_totalprice) AS rev
+           FROM orders GROUP BY 1),
+         rets AS (
+           SELECT day, rev, rev / prev - 1 AS r FROM (
+             SELECT day, rev, lag(rev, 1) OVER (ORDER BY day) AS prev FROM day)
+           WHERE prev IS NOT NULL)"""
+
+  /** A67/A120 oracle CTEs: per type the count n (and as a double, nd)
+    * and the decimal-pinned raw moments `agg`, then the central
+    * moments m2..m4 `m`. */
+  private val MomentCtes: String =
+    """agg AS (
+           SELECT event_type, count(*) AS n,
+                  CAST(count(*) AS DOUBLE) AS nd,
+                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
+                       AS DOUBLE) / count(*) AS mu,
+                  CAST(CAST(sum(CAST(value * value AS DECIMAL(28,8)))
+                       AS VARCHAR) AS DOUBLE) / count(*) AS r2,
+                  CAST(CAST(sum(CAST(value * value * value
+                       AS DECIMAL(32,6))) AS VARCHAR) AS DOUBLE)
+                    / count(*) AS r3,
+                  CAST(CAST(sum(CAST(value * value * value * value
+                       AS DECIMAL(36,4))) AS VARCHAR) AS DOUBLE)
+                    / count(*) AS r4
+           FROM events GROUP BY 1),
+         m AS (
+           SELECT event_type, n, nd,
+                  r2 - mu * mu AS m2,
+                  r3 - 3.0 * mu * r2 + 2.0 * mu * mu * mu AS m3,
+                  r4 - 4.0 * mu * r3 + 6.0 * mu * mu * r2
+                     - 3.0 * mu * mu * mu * mu AS m4
+           FROM agg)"""
 
   /** A51 oracle, GENERATED per block size so both engines run the
     * identical decimal-pinned window arithmetic (the W12/W20 emission
@@ -4097,11 +4266,7 @@ object Stats {
            FROM rs$k GROUP BY 1)"""
     val union = ks.map(k => s"SELECT * FROM mk$k").mkString(
       "\n           UNION ALL ")
-    s"""WITH daily AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS v
-           FROM events GROUP BY 1, 2),
+    s"""WITH ${dailyMeanCte("daily", "v")},
          r AS (
            SELECT event_type, v,
                   row_number() OVER (PARTITION BY event_type
@@ -4152,11 +4317,7 @@ object Stats {
   /** Oracle twin of `trendPanel` + `trendSums`: CTEs `dly`, `xy` (the
     * panel) and `co` (the per-type OLS co-moments). */
   private val TrendCtes =
-    """dly AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
+    s"""${dailyMeanCte("dly", "y")},
          xy AS (
            SELECT event_type, day, y,
                   datediff('day', DATE '2024-01-01', day) AS x
@@ -4279,12 +4440,7 @@ object Stats {
     // suffix-min monotone enforcement, the clamp, and the UNROUNDED
     // 0.05 verdict (the rounded p_adj is output-only)
     "a46_bh_fdr" ->
-      s"""WITH pv AS (SELECT * FROM '${Dumps.oraclePath("a3_pvalues")}/*.parquet'),
-         r AS (
-           SELECT *, count(*) OVER () AS m,
-                  row_number() OVER (ORDER BY p_value, event_type, k)
-                    AS rnk
-           FROM pv),
+      s"""WITH $PRankCtes,
          adj AS (
            SELECT *, least(CAST(1.0 AS DOUBLE),
                   min(p_value * m / rnk) OVER (
@@ -4298,12 +4454,7 @@ object Stats {
     // A63: the Holm step-down from the same dump — prefix MAX where
     // BH's is a suffix min
     "a63_holm" ->
-      s"""WITH pv AS (SELECT * FROM '${Dumps.oraclePath("a3_pvalues")}/*.parquet'),
-         r AS (
-           SELECT *, count(*) OVER () AS m,
-                  row_number() OVER (ORDER BY p_value, event_type, k)
-                    AS rnk
-           FROM pv),
+      s"""WITH $PRankCtes,
          adj AS (
            SELECT *, least(CAST(1.0 AS DOUBLE),
                   max(p_value * (m - rnk + 1)) OVER (
@@ -4317,11 +4468,7 @@ object Stats {
     // exact-median split (quantile_cont = Spark percentile), integer
     // n1/n2/runs, then the identical fixed-shape IEEE z chain
     "a90_runs_test" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
+      s"""WITH $CloseCtes,
          md AS (
            SELECT event_type, quantile_cont(close, 0.5) AS med
            FROM c GROUP BY 1),
@@ -4356,11 +4503,7 @@ object Stats {
     // integer column/block totals over complete blocks; Q is one
     // deterministic division from integers
     "a91_cochran_q" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
+      s"""WITH $CloseCtes,
          f AS (
            SELECT event_type, day, close,
                   lag(close) OVER (PARTITION BY event_type
@@ -4399,16 +4542,8 @@ object Stats {
     // cells, the event_type-ordered list_sum folds mirroring the
     // engine's ordered aggregate, one fixed final chain
     "a119_cmh" ->
-      s"""WITH $CloseVolCtes,
-         p AS (
-           SELECT event_type, day, close, vol,
-                  lag(close) OVER w AS pc, lag(vol) OVER w AS pv
-           FROM c WINDOW w AS (PARTITION BY event_type ORDER BY day)),
-         f AS (
-           SELECT event_type,
-                  CAST(close > pc AS BIGINT) AS x,
-                  CAST(vol > pv AS BIGINT) AS y
-           FROM p WHERE pc IS NOT NULL),
+      s"""WITH $UpDownCtes,
+         
          st AS (
            SELECT event_type, CAST(count(*) AS BIGINT) AS nk,
                   CAST(sum(x * y) AS BIGINT) AS a,
@@ -4435,16 +4570,8 @@ object Stats {
                 CASE WHEN sum_v > 0 THEN g * g / sum_v END AS cmh_chi2
          FROM gg""",
     "a92_mcnemar" ->
-      s"""WITH $CloseVolCtes,
-         p AS (
-           SELECT event_type, day, close, vol,
-                  lag(close) OVER w AS pc, lag(vol) OVER w AS pv
-           FROM c WINDOW w AS (PARTITION BY event_type ORDER BY day)),
-         f AS (
-           SELECT event_type,
-                  CAST(close > pc AS BIGINT) AS x,
-                  CAST(vol > pv AS BIGINT) AS y
-           FROM p WHERE pc IS NOT NULL),
+      s"""WITH $UpDownCtes,
+         
          agg AS (
            SELECT event_type, count(*) AS n_pairs,
                   CAST(sum(CASE WHEN x = 1 AND y = 0 THEN 1 ELSE 0 END)
@@ -4461,16 +4588,8 @@ object Stats {
     // integer 2×2 cells; OR/RR one division each; the libm columns
     // (ln/exp) render at r6
     "a102_odds_ratio" ->
-      s"""WITH $CloseVolCtes,
-         p AS (
-           SELECT event_type, day, close, vol,
-                  lag(close) OVER w AS pc, lag(vol) OVER w AS pv
-           FROM c WINDOW w AS (PARTITION BY event_type ORDER BY day)),
-         f AS (
-           SELECT event_type,
-                  CAST(close > pc AS BIGINT) AS x,
-                  CAST(vol > pv AS BIGINT) AS y
-           FROM p WHERE pc IS NOT NULL),
+      s"""WITH $UpDownCtes,
+         
          cells AS (
            SELECT event_type,
                   CAST(sum(CASE WHEN x = 1 AND y = 1 THEN 1 ELSE 0 END)
@@ -4499,11 +4618,7 @@ object Stats {
     // ×2-midrank integers (rank2 = 2·rank + t_eq − 1), per-row tie
     // correction t_eq²−1, then the identical fixed z chain
     "a93_wilcoxon_signed" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
+      s"""WITH $CloseCtes,
          dl AS (
            SELECT event_type, day,
                   close - lag(close) OVER (PARTITION BY event_type
@@ -4533,26 +4648,8 @@ object Stats {
     // all day pairs per type (bounded panel dimension), five integer
     // pair counts, one sqrt chain
     "a94_kendall_tau" ->
-      s"""WITH $CloseVolCtes,
-         p AS (
-           SELECT a.event_type,
-                  a.close AS xa, a.vol AS ya,
-                  b.close AS xb, b.vol AS yb
-           FROM c a JOIN c b ON a.event_type = b.event_type
-                            AND a.day < b.day),
-         agg AS (
-           SELECT event_type, count(*) AS n0,
-                  CAST(sum(CASE WHEN (xa < xb AND ya < yb)
-                                  OR (xa > xb AND ya > yb)
-                                THEN 1 ELSE 0 END) AS BIGINT) AS conc,
-                  CAST(sum(CASE WHEN (xa < xb AND ya > yb)
-                                  OR (xa > xb AND ya < yb)
-                                THEN 1 ELSE 0 END) AS BIGINT) AS disc,
-                  CAST(sum(CASE WHEN xa = xb THEN 1 ELSE 0 END)
-                       AS BIGINT) AS tx,
-                  CAST(sum(CASE WHEN ya = yb THEN 1 ELSE 0 END)
-                       AS BIGINT) AS ty
-           FROM p GROUP BY 1)
+      s"""WITH $DayPairCtes
+         
          SELECT event_type, CAST(n0 AS BIGINT) AS n0, conc, disc, tx, ty,
                 CAST(conc - disc AS DOUBLE) /
                   sqrt(CAST(n0 - tx AS DOUBLE) *
@@ -4562,11 +4659,7 @@ object Stats {
     // integer cells; expected counts and the 2-cell contribution are
     // one fixed IEEE chain per ROW (never a cross-group float sum)
     "a95_mood_median" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
+      s"""WITH $CloseCtes,
          md AS (SELECT quantile_cont(close, 0.5) AS med FROM c),
          cc AS (
            SELECT event_type,
@@ -4593,11 +4686,7 @@ object Stats {
     // integer S+/S-; the continuity-corrected z has an INTEGER
     // numerator (2S+ − n − sgn) over one sqrt
     "a96_sign_test" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
+      s"""WITH $CloseCtes,
          dl AS (
            SELECT event_type,
                   close - lag(close) OVER (PARTITION BY event_type
@@ -4626,27 +4715,7 @@ object Stats {
     // scale concern, not the oracle's); numerator exact BIGINT,
     // magnitude label decided by integer cross-multiplication
     "a97_cliffs_delta" ->
-      """WITH s AS (
-           SELECT value, event_type = 'click' AS g1
-           FROM events WHERE event_type IN ('click', 'purchase')),
-         n AS (
-           SELECT CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS n1,
-                  CAST(sum(CASE WHEN NOT g1 THEN 1 ELSE 0 END)
-                       AS BIGINT) AS n2
-           FROM s),
-         perv AS (
-           SELECT value,
-                  CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS k1,
-                  CAST(count(*) AS BIGINT) AS k
-           FROM s GROUP BY value),
-         r AS (
-           SELECT k1, k,
-                  coalesce(sum(k) OVER (ORDER BY value
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                    AS cbef
-           FROM perv),
+      s"""WITH $MidrankCtes,
          a AS (
            SELECT CAST(sum(k1 * (2 * cbef + k + 1)) AS BIGINT) AS r1x2
            FROM r),
@@ -4666,26 +4735,8 @@ object Stats {
     // a94's pair frame with γ / D_yx / D_xy — one division each from
     // the same exact integer counts
     "a98_gamma_somers" ->
-      s"""WITH $CloseVolCtes,
-         p AS (
-           SELECT a.event_type,
-                  a.close AS xa, a.vol AS ya,
-                  b.close AS xb, b.vol AS yb
-           FROM c a JOIN c b ON a.event_type = b.event_type
-                            AND a.day < b.day),
-         agg AS (
-           SELECT event_type, count(*) AS n0,
-                  CAST(sum(CASE WHEN (xa < xb AND ya < yb)
-                                  OR (xa > xb AND ya > yb)
-                                THEN 1 ELSE 0 END) AS BIGINT) AS conc,
-                  CAST(sum(CASE WHEN (xa < xb AND ya > yb)
-                                  OR (xa > xb AND ya < yb)
-                                THEN 1 ELSE 0 END) AS BIGINT) AS disc,
-                  CAST(sum(CASE WHEN xa = xb THEN 1 ELSE 0 END)
-                       AS BIGINT) AS tx,
-                  CAST(sum(CASE WHEN ya = yb THEN 1 ELSE 0 END)
-                       AS BIGINT) AS ty
-           FROM p GROUP BY 1)
+      s"""WITH $DayPairCtes
+         
          SELECT event_type, CAST(n0 AS BIGINT) AS n0, conc, disc, tx, ty,
                 CAST(conc - disc AS DOUBLE) /
                   CAST(conc + disc AS DOUBLE) AS gamma,
@@ -4700,25 +4751,7 @@ object Stats {
     // side's scale concern, not the oracle's); every rank quantity is
     // an exact half-integer so the sums are order-insensitive
     "a35_mannwhitney" ->
-      """WITH s AS (
-           SELECT value, event_type = 'click' AS g1
-           FROM events WHERE event_type IN ('click', 'purchase')),
-         n AS (
-           SELECT CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-                  CAST(sum(CASE WHEN NOT g1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS n2
-           FROM s),
-         perv AS (
-           SELECT value,
-                  CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS k1,
-                  CAST(count(*) AS BIGINT) AS k
-           FROM s GROUP BY value),
-         r AS (
-           SELECT k1, k,
-                  coalesce(sum(k) OVER (ORDER BY value
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                    AS cbef
-           FROM perv),
+      s"""WITH $MidrankCtes,
          a AS (
            SELECT sum(CAST(k1 AS DOUBLE) *
                       (CAST(cbef AS DOUBLE) + CAST(k + 1 AS DOUBLE) / 2))
@@ -4741,11 +4774,7 @@ object Stats {
                 END AS z
          FROM a, n""",
     "a34_ols_trend" ->
-      """WITH dly AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("dly", "y")},
          xy AS (
            SELECT event_type, y,
                   CAST(datediff('day', DATE '2024-01-01', day) AS DOUBLE)
@@ -4760,11 +4789,7 @@ object Stats {
     // 0=Sun..6) but both PARTITION the days identically, and dow is
     // an internal join key, never an output column
     "a58_seasonal_decomp" ->
-      """WITH dly AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("dly", "y")},
          tr AS (
            SELECT event_type, day, y,
                   CASE WHEN count(*) OVER w7 = 7 THEN
@@ -4838,11 +4863,7 @@ object Stats {
         val w = 2.0 * (1.0 - j.toDouble / (L + 1))
         f"$acc + CAST($w%.17e AS DOUBLE) * (g$j / n)"
       }
-      s"""WITH dly AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("dly", "y")},
          mu AS (
            SELECT event_type,
                   CAST(CAST(sum(CAST(y AS DECIMAL(24,10))) AS VARCHAR)
@@ -4909,11 +4930,7 @@ object Stats {
                 round((t_post - t_pre) - (c_post - c_pre), 6) AS did
          FROM c""",
     "a61_var_cvar" ->
-      """WITH dly AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("dly", "y")},
          rets AS (
            SELECT event_type, day, y, lag(y) OVER w AS prev
            FROM dly
@@ -5118,24 +5135,7 @@ object Stats {
     // two-level form — result identity is what's checked); the p
     // series is the same 10-term left-assoc chain
     "a33_ks_test" ->
-      """WITH s AS (
-           SELECT value, event_type = 'click' AS g1
-           FROM events WHERE event_type IN ('click', 'purchase')),
-         n AS (
-           SELECT CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-                  CAST(sum(CASE WHEN NOT g1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS n2
-           FROM s),
-         perv AS (
-           SELECT value,
-                  CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS k1,
-                  CAST(sum(CASE WHEN NOT g1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS k2
-           FROM s GROUP BY value),
-         r AS (
-           SELECT sum(k1) OVER w AS c1, sum(k2) OVER w AS c2
-           FROM perv
-           WINDOW w AS (ORDER BY value ROWS UNBOUNDED PRECEDING)),
+      s"""WITH $CdfCtes,
          dmax AS (
            SELECT max(abs(CAST(c1 AS DOUBLE) / n1 -
                           CAST(c2 AS DOUBLE) / n2)) AS ks_d
@@ -5226,11 +5226,7 @@ object Stats {
                       AND CURRENT ROW)), 6) AS survival
          FROM r ORDER BY dur_days""",
     "a49_cusum_drift" ->
-      """WITH daily AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS v
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("daily", "v")},
          t AS (
            SELECT event_type,
                   CAST(CAST(sum(CAST(v AS DECIMAL(30,12))) AS VARCHAR)
@@ -5326,11 +5322,7 @@ object Stats {
     // totals themselves pinned sums, Σᵢσ²ᵢ a decimal fold of the
     // r6'd variances, α one fixed chain on identical doubles
     "a104_cronbach_alpha" ->
-      """WITH daily AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS v
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("daily", "v")},
          ivr AS (
            SELECT round((s2 - s1 * s1 / n) / (n - 1), 6) AS ivar
            FROM (SELECT event_type, count(*) AS n,
@@ -5367,32 +5359,12 @@ object Stats {
     // the ×2 edge-distance scores as exact BIGINTs, the even/odd
     // null-moment chains phrased operation-for-operation
     "a111_ansari_bradley" ->
-      """WITH s AS (
-           SELECT value, event_type = 'click' AS g1
-           FROM events WHERE event_type IN ('click', 'purchase')),
-         nn AS (
-           SELECT CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS n1,
-                  CAST(sum(CASE WHEN NOT g1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS n2
-           FROM s),
-         perv AS (
-           SELECT value,
-                  CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS k1,
-                  CAST(count(*) AS BIGINT) AS k
-           FROM s GROUP BY value),
-         r AS (
-           SELECT k1, k,
-                  coalesce(sum(k) OVER (ORDER BY value
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                    AS cbef
-           FROM perv),
+      s"""WITH $MidrankCtes,
          a AS (
            SELECT CAST(sum(k1 * least(2 * cbef + k + 1,
-                    2 * (nn.n1 + nn.n2 + 1) - (2 * cbef + k + 1)))
+                    2 * (n.n1 + n.n2 + 1) - (2 * cbef + k + 1)))
                   AS BIGINT) AS ab2
-           FROM r, nn),
+           FROM r, n),
          m AS (
            SELECT n1, n2, n1 + n2 AS n, CAST(ab2 AS DOUBLE) / 2 AS ab,
                   CASE WHEN (n1 + n2) % 2 = 0
@@ -5409,7 +5381,7 @@ object Stats {
                             CAST(3 + (n1 + n2) * (n1 + n2) AS DOUBLE)
                             / CAST(48 * (n1 + n2) * (n1 + n2) AS DOUBLE)
                   END AS variance
-           FROM a, nn)
+           FROM a, n)
          SELECT n1, n2, ab, (ab - mean) / sqrt(variance) AS z
          FROM m""",
     // the exact-integer gap grid d = n2·c1 − n1·c2 per distinct
@@ -5418,25 +5390,7 @@ object Stats {
     // BIGINT at sf0.1), lands on double via the VARCHAR hop, and T
     // is one division by the pinned (n1·n2)·N² product
     "a112_cramer_von_mises" ->
-      """WITH s AS (
-           SELECT value, event_type = 'click' AS g1
-           FROM events WHERE event_type IN ('click', 'purchase')),
-         n AS (
-           SELECT CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-                  CAST(sum(CASE WHEN NOT g1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS n2
-           FROM s),
-         perv AS (
-           SELECT value,
-                  CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS k1,
-                  CAST(sum(CASE WHEN NOT g1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS k2
-           FROM s GROUP BY value),
-         r AS (
-           SELECT k1, k2,
-                  sum(k1) OVER w AS c1, sum(k2) OVER w AS c2
-           FROM perv
-           WINDOW w AS (ORDER BY value ROWS UNBOUNDED PRECEDING)),
+      s"""WITH $CdfCtes,
          a AS (
            SELECT sum(CAST(n2 * c1 - n1 * c2 AS HUGEINT) *
                       (n2 * c1 - n1 * c2) * (k1 + k2)) AS num
@@ -5450,24 +5404,7 @@ object Stats {
     // the same gap grid; D± are exact BIGINT extreme picks (0-clamped
     // at the before-first-jump baseline), one division each
     "a113_kuiper" ->
-      """WITH s AS (
-           SELECT value, event_type = 'click' AS g1
-           FROM events WHERE event_type IN ('click', 'purchase')),
-         n AS (
-           SELECT CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-                  CAST(sum(CASE WHEN NOT g1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS n2
-           FROM s),
-         perv AS (
-           SELECT value,
-                  CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS k1,
-                  CAST(sum(CASE WHEN NOT g1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS k2
-           FROM s GROUP BY value),
-         r AS (
-           SELECT sum(k1) OVER w AS c1, sum(k2) OVER w AS c2
-           FROM perv
-           WINDOW w AS (ORDER BY value ROWS UNBOUNDED PRECEDING)),
+      s"""WITH $CdfCtes,
          a AS (
            SELECT greatest(max(n2 * c1 - n1 * c2), 0) AS dmax,
                   -least(min(n2 * c1 - n1 * c2), 0) AS dmin
@@ -5486,25 +5423,7 @@ object Stats {
     // denominators, r6'd terms into decimal-pinned order-free sums,
     // one fixed final chain
     "a114_anderson_darling" ->
-      """WITH s AS (
-           SELECT value, event_type = 'click' AS g1
-           FROM events WHERE event_type IN ('click', 'purchase')),
-         n AS (
-           SELECT CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-                  CAST(sum(CASE WHEN NOT g1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS n2
-           FROM s),
-         perv AS (
-           SELECT value,
-                  CAST(sum(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS k1,
-                  CAST(sum(CASE WHEN NOT g1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS k2
-           FROM s GROUP BY value),
-         r AS (
-           SELECT k1, k2,
-                  sum(k1) OVER w AS c1, sum(k2) OVER w AS c2
-           FROM perv
-           WINDOW w AS (ORDER BY value ROWS UNBOUNDED PRECEDING)),
+      s"""WITH $CdfCtes,
          g AS (
            SELECT k1, k2, c1, c2, n1, n2, n1 + n2 AS nn, k1 + k2 AS l,
                   2 * (c1 + c2) - (k1 + k2) AS b2
@@ -5542,11 +5461,7 @@ object Stats {
     // the pinned daily panel, exact up-day cells, alphabetical j,
     // then the fixed T/z chain on BIGINT-cast sums (HUGEINT class)
     "a110_cochran_armitage" ->
-      """WITH daily AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS px
-           FROM events GROUP BY 1, 2),
+      s"""WITH $DailyPxCte,
          dl AS (
            SELECT event_type,
                   px - lag(px, 1) OVER (PARTITION BY event_type
@@ -5685,11 +5600,7 @@ object Stats {
     // two-way SS/MS/ICC chains phrased operation-for-operation like
     // the engine; r6 only at emission
     "a105_icc" ->
-      """WITH daily AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS v
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("daily", "v")},
          g AS (
            SELECT count(*) AS nk,
                   CAST(CAST(sum(CAST(v AS DECIMAL(24,10))) AS VARCHAR)
@@ -5843,19 +5754,7 @@ object Stats {
                       (syy - sy*sy / n) END, 6) AS r2
          FROM b ORDER BY event_type""",
     "a44_cramers_v" ->
-      """WITH base AS (
-           SELECT event_type, dayofweek(ts) + 1 AS dow FROM events),
-         obs AS (
-           SELECT event_type, dow, count(*) AS n FROM base GROUP BY 1, 2),
-         rt AS (SELECT event_type, sum(n) AS rt FROM obs GROUP BY 1),
-         ct AS (SELECT dow, sum(n) AS ct FROM obs GROUP BY 1),
-         tot AS (SELECT sum(n) AS t FROM obs),
-         grid AS (
-           SELECT r.event_type, c.dow, coalesce(o.n, 0) AS n,
-                  CAST(r.rt AS DOUBLE) * c.ct / tot.t AS expected
-           FROM rt r CROSS JOIN ct c
-                LEFT JOIN obs o ON o.event_type = r.event_type
-                              AND o.dow = c.dow, tot),
+      s"""WITH $ChiGridCtes,
          terms AS (
            SELECT n,
                   round((CAST(n AS DOUBLE) - expected) *
@@ -5874,16 +5773,7 @@ object Stats {
                   AS cramers_v
          FROM agg""",
     "a45_two_proportion_z" ->
-      """WITH agg AS (
-           SELECT sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                    AS n1,
-                  sum(CASE WHEN event_type = 'click' AND value > 50
-                           THEN 1 ELSE 0 END) AS x1,
-                  sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                    AS n2,
-                  sum(CASE WHEN event_type = 'purchase' AND value > 50
-                           THEN 1 ELSE 0 END) AS x2
-           FROM events WHERE event_type IN ('click', 'purchase')),
+      s"""WITH $TwoPropCte,
          p AS (
            SELECT n1, x1, n2, x2,
                   CASE WHEN n1 > 0 THEN CAST(x1 AS DOUBLE) / n1 END AS p1,
@@ -5903,16 +5793,7 @@ object Stats {
     // double expression is deterministic (the ratio sits far from
     // integer boundaries on real proportions)
     "a70_power_analysis" ->
-      """WITH agg AS (
-           SELECT sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                    AS n1,
-                  sum(CASE WHEN event_type = 'click' AND value > 50
-                           THEN 1 ELSE 0 END) AS x1,
-                  sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                    AS n2,
-                  sum(CASE WHEN event_type = 'purchase' AND value > 50
-                           THEN 1 ELSE 0 END) AS x2
-           FROM events WHERE event_type IN ('click', 'purchase')),
+      s"""WITH $TwoPropCte,
          p AS (
            SELECT n1, n2,
                   CASE WHEN n1 > 0 THEN CAST(x1 AS DOUBLE) / n1 END AS p1,
@@ -6083,11 +5964,7 @@ object Stats {
          FROM g, rng ORDER BY event_type""",
     // identical daily means, shared lag window, decimal-pinned MAEs
     "a80_mase" ->
-      """WITH daily AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS v
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("daily", "v")},
          l AS (
            SELECT event_type, v,
                   lag(v, 7) OVER w AS l7, lag(v, 1) OVER w AS l1
@@ -6144,11 +6021,7 @@ object Stats {
     // same total-pinning discipline on the lagged-level regression;
     // the DF critical values are shared literals
     "a82_dickey_fuller" ->
-      """WITH dly AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("dly", "y")},
          l AS (
            SELECT event_type, day, y,
                   lag(y) OVER (PARTITION BY event_type ORDER BY day) AS xl
@@ -6199,11 +6072,7 @@ object Stats {
          FROM g ORDER BY event_type""",
     // a54's pairwise-percentile shape on Walsh averages (i <= j)
     "a83_hodges_lehmann" ->
-      """WITH dly AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("dly", "y")},
          walsh AS (
            SELECT a.event_type AS et, count(*) AS n_walsh,
                   round(quantile_cont((a.y + b.y) / 2, 0.5), 6) AS hl
@@ -6221,11 +6090,7 @@ object Stats {
     // level/cell sums VARCHAR-hop rendered, SS terms r6'd then
     // decimal-summed, the identical fixed F chains
     "a117_two_way_anova" ->
-      """WITH dly AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("dly", "y")},
          d0 AS (SELECT min(day) AS d0 FROM dly),
          panel AS (
            SELECT event_type,
@@ -6294,11 +6159,7 @@ object Stats {
     // deterministic row_numbers, one IEEE division each, the same
     // published 0.260 critical constant
     "a116_dixon_q" ->
-      """WITH dly AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("dly", "y")},
          r AS (
            SELECT event_type, day, y,
                   row_number() OVER (PARTITION BY event_type
@@ -6324,11 +6185,7 @@ object Stats {
                 END AS high_outlier
          FROM a WHERE xn > x1 ORDER BY event_type""",
     "a84_grubbs" ->
-      """WITH dly AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("dly", "y")},
          mo AS (
            SELECT event_type, count(*) AS n_days,
                   CAST(CAST(sum(CAST(y AS DECIMAL(24,10))) AS VARCHAR)
@@ -6390,23 +6247,7 @@ object Stats {
     // identical midranks (rank + (ties−1)/2 on the ≤k-row day
     // windows), exact 0.25-grid sums, one raw Q chain
     "a87_friedman" ->
-      s"""WITH $friedmanCtes,
-         per_type AS (
-           SELECT event_type, count(*) AS n_days, sum(r) AS rank_sum,
-                  sum(r * r) AS rsq_sum, max(k) AS k
-           FROM ranked GROUP BY 1),
-         withn AS (
-           SELECT event_type, n_days, k, rank_sum, rsq_sum,
-                  max(n_days) OVER () AS n
-           FROM per_type),
-         tot AS (
-           SELECT event_type, n_days, k, rank_sum,
-                  sum((rank_sum - n * CAST(k + 1 AS DOUBLE) / 2) *
-                      (rank_sum - n * CAST(k + 1 AS DOUBLE) / 2))
-                    OVER () AS num,
-                  sum(rsq_sum) OVER () -
-                    n * k * CAST(k + 1 AS DOUBLE) * (k + 1) / 4 AS den
-           FROM withn)
+      s"""WITH $FriedmanQCtes
          SELECT event_type, n_days, CAST(k AS BIGINT) AS k, rank_sum,
                 rank_sum / n_days AS mean_rank,
                 CASE WHEN den <> 0 THEN
@@ -6414,23 +6255,7 @@ object Stats {
          FROM tot ORDER BY event_type""",
     // A101: a87's chain reduced to one row, W = Q/(m(k−1))
     "a101_kendalls_w" ->
-      s"""WITH $friedmanCtes,
-         per_type AS (
-           SELECT event_type, count(*) AS n_days, sum(r) AS rank_sum,
-                  sum(r * r) AS rsq_sum, max(k) AS k
-           FROM ranked GROUP BY 1),
-         withn AS (
-           SELECT event_type, n_days, k, rank_sum, rsq_sum,
-                  max(n_days) OVER () AS n
-           FROM per_type),
-         tot AS (
-           SELECT event_type, n_days, k, rank_sum,
-                  sum((rank_sum - n * CAST(k + 1 AS DOUBLE) / 2) *
-                      (rank_sum - n * CAST(k + 1 AS DOUBLE) / 2))
-                    OVER () AS num,
-                  sum(rsq_sum) OVER () -
-                    n * k * CAST(k + 1 AS DOUBLE) * (k + 1) / 4 AS den
-           FROM withn),
+      s"""WITH $FriedmanQCtes,
          q AS (
            SELECT n_days, k,
                   CASE WHEN den <> 0 THEN
@@ -6505,11 +6330,7 @@ object Stats {
     // identical fixed Syy_c − Sxy_c²/Sxx_c chain, F one fixed chain,
     // degenerate guards mirrored as CASE WHEN
     "a118_chow" ->
-      """WITH dly AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("dly", "y")},
          xy AS (
            SELECT event_type, y,
                   CAST(datediff('day', DATE '2024-01-01', day) AS BIGINT)
@@ -6697,11 +6518,7 @@ object Stats {
          FROM w ORDER BY event_type, bin""",
     // identical decimal-pinned prefix sums, raw-double PH chain
     "a77_page_hinkley" ->
-      """WITH daily AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS v
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("daily", "v")},
          t AS (
            SELECT event_type, day, v,
                   row_number() OVER w AS rn,
@@ -6812,26 +6629,7 @@ object Stats {
                   AS trimmed_mean
          FROM kept GROUP BY event_type ORDER BY event_type""",
     "a67_jarque_bera" ->
-      """WITH agg AS (
-           SELECT event_type, count(*) AS n,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS mu,
-                  CAST(CAST(sum(CAST(value * value AS DECIMAL(28,8)))
-                       AS VARCHAR) AS DOUBLE) / count(*) AS r2,
-                  CAST(CAST(sum(CAST(value * value * value
-                       AS DECIMAL(32,6))) AS VARCHAR) AS DOUBLE)
-                    / count(*) AS r3,
-                  CAST(CAST(sum(CAST(value * value * value * value
-                       AS DECIMAL(36,4))) AS VARCHAR) AS DOUBLE)
-                    / count(*) AS r4
-           FROM events GROUP BY 1),
-         m AS (
-           SELECT event_type, n,
-                  r2 - mu * mu AS m2,
-                  r3 - 3.0 * mu * r2 + 2.0 * mu * mu * mu AS m3,
-                  r4 - 4.0 * mu * r3 + 6.0 * mu * mu * r2
-                     - 3.0 * mu * mu * mu * mu AS m4
-           FROM agg),
+      s"""WITH $MomentCtes,
          sk AS (
            SELECT event_type, n,
                   CASE WHEN m2 > 0 THEN
@@ -6854,27 +6652,7 @@ object Stats {
     // (each intermediate its own column, the kurtosis-denominator
     // guard mirrored as CASE WHEN)
     "a120_dagostino_k2" ->
-      """WITH agg AS (
-           SELECT event_type, count(*) AS n,
-                  CAST(count(*) AS DOUBLE) AS nd,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS mu,
-                  CAST(CAST(sum(CAST(value * value AS DECIMAL(28,8)))
-                       AS VARCHAR) AS DOUBLE) / count(*) AS r2,
-                  CAST(CAST(sum(CAST(value * value * value
-                       AS DECIMAL(32,6))) AS VARCHAR) AS DOUBLE)
-                    / count(*) AS r3,
-                  CAST(CAST(sum(CAST(value * value * value * value
-                       AS DECIMAL(36,4))) AS VARCHAR) AS DOUBLE)
-                    / count(*) AS r4
-           FROM events GROUP BY 1),
-         m AS (
-           SELECT event_type, n, nd,
-                  r2 - mu * mu AS m2,
-                  r3 - 3.0 * mu * r2 + 2.0 * mu * mu * mu AS m3,
-                  r4 - 4.0 * mu * r3 + 6.0 * mu * mu * r2
-                     - 3.0 * mu * mu * mu * mu AS m4
-           FROM agg),
+      s"""WITH $MomentCtes,
          g AS (
            SELECT event_type, n, nd,
                   CASE WHEN m2 > 0 THEN
@@ -6934,11 +6712,7 @@ object Stats {
                 round(exp(-k2 / 2.0), 6) AS p_value
          FROM k2t ORDER BY event_type""",
     "a68_ljung_box" ->
-      """WITH daily AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS px
-           FROM events GROUP BY 1, 2),
+      s"""WITH $DailyPxCte,
          lagged AS (
            SELECT event_type, px,
                   lag(px, 1) OVER wt AS l1, lag(px, 2) OVER wt AS l2,
@@ -6974,11 +6748,7 @@ object Stats {
                 round(exp(-q / 2.0) * (1.0 + q / 2.0), 6) AS p_value
          FROM q ORDER BY event_type""",
     "a40_acf" ->
-      """WITH daily AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS px
-           FROM events GROUP BY 1, 2),
+      s"""WITH $DailyPxCte,
          lagged AS (
            SELECT event_type, px,
                   lag(px, 1) OVER wt AS l1, lag(px, 2) OVER wt AS l2,
@@ -7001,19 +6771,7 @@ object Stats {
          FROM s WHERE prev IS NOT NULL
          GROUP BY 1, 2 ORDER BY event_type, lag_k""",
     "a41_chi2_independence" ->
-      """WITH base AS (
-           SELECT event_type, dayofweek(ts) + 1 AS dow FROM events),
-         obs AS (
-           SELECT event_type, dow, count(*) AS n FROM base GROUP BY 1, 2),
-         rt AS (SELECT event_type, sum(n) AS rt FROM obs GROUP BY 1),
-         ct AS (SELECT dow, sum(n) AS ct FROM obs GROUP BY 1),
-         tot AS (SELECT sum(n) AS t FROM obs),
-         grid AS (
-           SELECT r.event_type, c.dow, coalesce(o.n, 0) AS n,
-                  CAST(r.rt AS DOUBLE) * c.ct / tot.t AS expected
-           FROM rt r CROSS JOIN ct c
-                LEFT JOIN obs o ON o.event_type = r.event_type
-                              AND o.dow = c.dow, tot)
+      s"""WITH $ChiGridCtes
          SELECT event_type, CAST(dow AS INT) AS dow, CAST(n AS BIGINT) AS n,
                 round(expected, 6) AS expected,
                 round((CAST(n AS DOUBLE) - expected) *
@@ -7037,43 +6795,11 @@ object Stats {
            AND json_extract_string(props, '$.k') IS NOT NULL
          GROUP BY 1 ORDER BY event_type""",
     "a3_corr_grid" ->
-      """WITH daily AS (
-           SELECT event_type, date_trunc('day', ts) AS day, avg(value) AS v
-           FROM events GROUP BY 1, 2),
-         leads AS (
-           SELECT event_type, day, v,
-                  lead(v, 1) OVER (PARTITION BY event_type ORDER BY day) AS l1,
-                  lead(v, 2) OVER (PARTITION BY event_type ORDER BY day) AS l2,
-                  lead(v, 3) OVER (PARTITION BY event_type ORDER BY day) AS l3
-           FROM daily),
-         grid AS (
-           SELECT event_type, k, corr(v, fwd) AS c, count(fwd) AS n FROM (
-             SELECT event_type, v, 1 AS k, l1 AS fwd FROM leads
-             UNION ALL
-             SELECT event_type, v, 2 AS k, l2 AS fwd FROM leads
-             UNION ALL
-             SELECT event_type, v, 3 AS k, l3 AS fwd FROM leads)
-           GROUP BY 1, 2)
+      s"""WITH $CorrGridCtes
          SELECT event_type, k, round(c, 6) AS r, n FROM grid
          ORDER BY event_type, k""",
     "a4_best_config" ->
-      """WITH daily AS (
-           SELECT event_type, date_trunc('day', ts) AS day, avg(value) AS v
-           FROM events GROUP BY 1, 2),
-         leads AS (
-           SELECT event_type, day, v,
-                  lead(v, 1) OVER (PARTITION BY event_type ORDER BY day) AS l1,
-                  lead(v, 2) OVER (PARTITION BY event_type ORDER BY day) AS l2,
-                  lead(v, 3) OVER (PARTITION BY event_type ORDER BY day) AS l3
-           FROM daily),
-         grid AS (
-           SELECT event_type, k, corr(v, fwd) AS c, count(fwd) AS n FROM (
-             SELECT event_type, v, 1 AS k, l1 AS fwd FROM leads
-             UNION ALL
-             SELECT event_type, v, 2 AS k, l2 AS fwd FROM leads
-             UNION ALL
-             SELECT event_type, v, 3 AS k, l3 AS fwd FROM leads)
-           GROUP BY 1, 2)
+      s"""WITH $CorrGridCtes
          SELECT event_type, k AS best_k, round(c, 6) AS r, n FROM (
            SELECT *, row_number() OVER (PARTITION BY event_type
                        ORDER BY abs(c) DESC, k ASC) AS rn
@@ -7100,13 +6826,7 @@ object Stats {
     // saturation (threshold = the float-max/inf midpoint) so both
     // engines emit inf and the hash still matches
     "a10_risk_metrics" ->
-      """WITH day AS (
-           SELECT date_trunc('day', o_orderdate) AS day, sum(o_totalprice) AS rev
-           FROM orders GROUP BY 1),
-         rets AS (
-           SELECT day, rev, rev / prev - 1 AS r FROM (
-             SELECT day, rev, lag(rev, 1) OVER (ORDER BY day) AS prev FROM day)
-           WHERE prev IS NOT NULL),
+      s"""WITH $OrderRetCtes,
          dd AS (
            SELECT day, r, rev / peak - 1 AS dd FROM (
              SELECT day, r, rev,
@@ -7152,25 +6872,13 @@ object Stats {
                 CAST(round(max_dd, 6) AS REAL) AS max_dd
          FROM m""",
     "a11_monthly_returns" ->
-      """WITH day AS (
-           SELECT date_trunc('day', o_orderdate) AS day, sum(o_totalprice) AS rev
-           FROM orders GROUP BY 1),
-         rets AS (
-           SELECT day, rev / prev - 1 AS r FROM (
-             SELECT day, rev, lag(rev, 1) OVER (ORDER BY day) AS prev FROM day)
-           WHERE prev IS NOT NULL)
+      s"""WITH $OrderRetCtes
          SELECT date_trunc('month', day) AS month,
                 round(exp(sum(ln(1.0 + r))) - 1, 6) AS ret,
                 count(*) AS n_days
          FROM rets GROUP BY 1 ORDER BY month""",
     "a12_annual_rollup" ->
-      """WITH day AS (
-           SELECT date_trunc('day', o_orderdate) AS day, sum(o_totalprice) AS rev
-           FROM orders GROUP BY 1),
-         rets AS (
-           SELECT day, rev / prev - 1 AS r FROM (
-             SELECT day, rev, lag(rev, 1) OVER (ORDER BY day) AS prev FROM day)
-           WHERE prev IS NOT NULL),
+      s"""WITH $OrderRetCtes,
          monthly AS (
            SELECT date_trunc('month', day) AS month,
                   exp(sum(ln(1.0 + r))) - 1 AS mret
@@ -7188,13 +6896,7 @@ object Stats {
          FROM events CROSS JOIN bounds
          GROUP BY 1, 2 ORDER BY event_type, bin""",
     "a14_heatmap_argmax" ->
-      """WITH day AS (
-           SELECT date_trunc('day', o_orderdate) AS day, sum(o_totalprice) AS rev
-           FROM orders GROUP BY 1),
-         rets AS (
-           SELECT day, rev / prev - 1 AS r FROM (
-             SELECT day, rev, lag(rev, 1) OVER (ORDER BY day) AS prev FROM day)
-           WHERE prev IS NOT NULL),
+      s"""WITH $OrderRetCtes,
          monthly AS (
            SELECT date_trunc('month', day) AS month,
                   exp(sum(ln(1.0 + r))) - 1 AS ret
@@ -7292,11 +6994,7 @@ object Stats {
     "a121_lilliefors" -> {
       val (defs, last) = PinnedSeries.erfcSqlCtes("zr",
         "abs(z) / sqrt(2.0)", "ec", "e14_")
-      s"""WITH daily AS (
-            SELECT event_type, date_trunc('day', ts) AS day,
-                   CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                        AS DOUBLE) / count(*) AS v
-            FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("daily", "v")},
           fit0 AS (
             SELECT event_type, count(*) AS n,
                    CAST(CAST(sum(CAST(v AS DECIMAL(30,12))) AS VARCHAR)

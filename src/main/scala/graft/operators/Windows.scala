@@ -172,15 +172,30 @@ object Windows {
          FROM lagged
          ORDER BY user_id, event_id"""
 
-  /** The per-type daily price series shared by the indicator oracles —
-    * the VARCHAR round-trip pins the decimal→double conversion to the
-    * correctly-rounded value (see the verify notes). */
-  private val DailyPxCte =
-    """daily AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS px
-           FROM events GROUP BY 1, 2)"""
+  /** `tickCtes`, then `c`: each (event_type, day)'s high, low and
+    * close, the oracle twin of the daily candles the range indicators
+    * read. */
+  private val HlcCtes =
+    s"""${tickCtes()},
+         c AS (
+           SELECT event_type, day, max(value) AS high, min(value) AS low,
+                  max(CASE WHEN rn = cnt THEN value END) AS close
+           FROM r GROUP BY 1, 2)"""
+
+  /** `HlcCtes`, the previous close `pc` and `tr`: each day's candle
+    * with its true range (days with a previous close), the oracle twin
+    * of [[atr5]]'s `tr`. */
+  private val TrueRangeCtes =
+    s"""$HlcCtes,
+         pc AS (
+           SELECT *, lag(close) OVER (PARTITION BY event_type
+                                      ORDER BY day) AS prev_close
+           FROM c),
+         tr AS (
+           SELECT event_type, day, high, low, close,
+                  greatest(high - low, abs(high - prev_close),
+                           abs(low - prev_close)) AS tr
+           FROM pc WHERE prev_close IS NOT NULL)"""
 
   /** The RSI chain's frame, `rsiFrame`'s oracle twin: daily px, the
     * delta/gain/loss split and the decimal-pinned 14-row sums. */
@@ -2200,11 +2215,7 @@ object Windows {
     // w30 float-risk-free class), raw doubles end to end; chikou's
     // trailing nulls agree on both engines' frame edges
     "w44_ichimoku" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day, max(value) AS high, min(value) AS low,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
+      s"""WITH $HlcCtes,
          w AS (
            SELECT event_type, day, close,
                   count(*) OVER w20 AS n20,
@@ -2324,11 +2335,7 @@ object Windows {
     // w16's candle CTE, W25's true-range picks, six decimal frame
     // sums (VARCHAR-hop renders), one fixed UO chain
     "w51_ultimate_osc" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day, max(value) AS high, min(value) AS low,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
+      s"""WITH $HlcCtes,
          pc AS (
            SELECT event_type, day, high, low, close,
                   lag(close, 1) OVER (PARTITION BY event_type
@@ -2493,11 +2500,7 @@ object Windows {
          WINDOW w AS (PARTITION BY user_id ORDER BY value, event_id)
          ORDER BY user_id, event_id""",
     "w23_bollinger" ->
-      """WITH dly AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS px
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("dly", "px")},
          win AS (
            SELECT event_type, day, px,
                   count(*) OVER w AS n_win,
@@ -2572,20 +2575,7 @@ object Windows {
     // w16's candle CTE, then raw-IEEE true range and a decimal-pinned
     // 5-day sliding mean (one division, no rounding)
     "w25_atr" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day, max(value) AS high, min(value) AS low,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
-         pc AS (
-           SELECT *, lag(close) OVER (PARTITION BY event_type
-                                      ORDER BY day) AS prev_close
-           FROM c),
-         tr AS (
-           SELECT event_type, day,
-                  greatest(high - low, abs(high - prev_close),
-                           abs(low - prev_close)) AS tr
-           FROM pc WHERE prev_close IS NOT NULL),
+      s"""WITH $TrueRangeCtes,
          w AS (
            SELECT event_type, day, tr,
                   count(*) OVER w5 AS n_win,
@@ -2599,20 +2589,7 @@ object Windows {
     // w25's candle/TR/pinned-ATR chain + exact HH/LL extreme picks;
     // stops one fixed chain each, verdict an exact comparison
     "w53_chandelier" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day, max(value) AS high, min(value) AS low,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
-         pc AS (
-           SELECT *, lag(close) OVER (PARTITION BY event_type
-                                      ORDER BY day) AS prev_close
-           FROM c),
-         tr AS (
-           SELECT event_type, day, high, low, close,
-                  greatest(high - low, abs(high - prev_close),
-                           abs(low - prev_close)) AS tr
-           FROM pc WHERE prev_close IS NOT NULL),
+      s"""WITH $TrueRangeCtes,
          w AS (
            SELECT event_type, day, close,
                   count(*) OVER w5 AS n_win,
@@ -2631,11 +2608,7 @@ object Windows {
     // w16's candle CTE, 5-day envelope %K (raw division chain) and
     // decimal-pinned 3-day %D over full %K windows
     "w26_stochastic" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day, max(value) AS high, min(value) AS low,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
+      s"""WITH $HlcCtes,
          k AS (
            SELECT event_type, day,
                   count(*) OVER w5 AS n_win,
@@ -2661,11 +2634,7 @@ object Windows {
     // w16's candle CTE; every level is the same fixed-order IEEE
     // chain over the lagged picks — raw doubles
     "w30_pivot_points" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day, max(value) AS high, min(value) AS low,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
+      s"""WITH $HlcCtes,
          lagd AS (
            SELECT event_type, day,
                   lag(high) OVER w AS ph, lag(low) OVER w AS pl,
@@ -2684,11 +2653,7 @@ object Windows {
     // sums replayed via list() OVER + list_sum in index order = the
     // engine's left-fold aggregate HOF — raw doubles, no pins
     "w31_cci" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day, max(value) AS high, min(value) AS low,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
+      s"""WITH $HlcCtes,
          t AS (
            SELECT event_type, day, high + low + close AS tp3 FROM c),
          f AS (
@@ -2742,11 +2707,7 @@ object Windows {
          FROM a ORDER BY event_type, day""",
     // w16's candle CTE; exact envelope extremes, one raw division
     "w33_williams_r" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day, max(value) AS high, min(value) AS low,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
+      s"""WITH $HlcCtes,
          w AS (
            SELECT event_type, day, close,
                   count(*) OVER w14 AS n_win,
@@ -2763,11 +2724,7 @@ object Windows {
     // w16's candle CTE; decimal-pinned SMA sums (VARCHAR-hop render),
     // one division each, band adds on the rendered doubles
     "w34_keltner" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day, max(value) AS high, min(value) AS low,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
+      s"""WITH $HlcCtes,
          w AS (
            SELECT event_type, day,
                   count(*) OVER w10 AS n_win,
@@ -2784,11 +2741,7 @@ object Windows {
     // close-only candle; exact trailing max, raw dd chain, pinned dd²
     // frame mean, sqrt of the single division
     "w35_ulcer" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
+      s"""WITH $CloseCtes,
          dd AS (
            SELECT event_type, day,
                   count(*) OVER w14 AS n_win,
@@ -2808,11 +2761,7 @@ object Windows {
     // w25's TR plus the two crossing movements, three pinned frame
     // sums, one division per VI
     "w36_vortex" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day, max(value) AS high, min(value) AS low,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
+      s"""WITH $HlcCtes,
          pc AS (
            SELECT *,
                   lag(close) OVER wt AS prev_close,
@@ -2882,11 +2831,7 @@ object Windows {
     // close-only candle; raw IEEE deltas, pinned frame sums rendered
     // once, one fixed 3-flop CMO chain
     "w38_cmo" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
+      s"""WITH $CloseCtes,
          dl AS (
            SELECT event_type, day,
                   close - lag(close) OVER (PARTITION BY event_type
@@ -2937,11 +2882,7 @@ object Windows {
          FROM w WHERE n = 13 ORDER BY event_type, day""",
     // w16's candle CTE; exact extreme picks and comparisons only
     "w29_donchian" ->
-      s"""WITH ${tickCtes()},
-         c AS (
-           SELECT event_type, day, max(value) AS high, min(value) AS low,
-                  max(CASE WHEN rn = cnt THEN value END) AS close
-           FROM r GROUP BY 1, 2),
+      s"""WITH $HlcCtes,
          w AS (
            SELECT event_type, day, close,
                   count(*) OVER w5 AS n_win,
@@ -3017,11 +2958,7 @@ object Windows {
                           (pos_mf + neg_mf) END AS mfi
          FROM w WHERE n_win = 5 ORDER BY event_type, day""",
     "w15_cum_return" ->
-      """WITH daily AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS v
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("daily", "v")},
          r AS (
            SELECT event_type, day, v,
                   v / lag(v) OVER (PARTITION BY event_type ORDER BY day) - 1
@@ -3034,11 +2971,7 @@ object Windows {
                   AS cum_growth
          FROM r WHERE ret IS NOT NULL ORDER BY event_type, day""",
     "w18_rolling_corr" ->
-      """WITH daily AS (
-           SELECT event_type, date_trunc('day', ts) AS day,
-                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
-                       AS DOUBLE) / count(*) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyMeanCte("daily", "y")},
          market AS (
            SELECT date_trunc('day', ts) AS day,
                   CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)

@@ -51,6 +51,30 @@ package object operators {
            FROM e)"""
   }
 
+  /** Oracle twin of `dailyMean`: CTE `cte` with the pinned daily mean
+    * of `value` per (event_type, day), named `name`. The VARCHAR
+    * round-trip pins the decimal→double conversion to the
+    * correctly-rounded value (see the verify notes). */
+  private[operators] def dailyMeanCte(cte: String, name: String): String =
+    s"""$cte AS (
+           SELECT event_type, date_trunc('day', ts) AS day,
+                  CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR)
+                       AS DOUBLE) / count(*) AS $name
+           FROM events GROUP BY 1, 2)"""
+
+  /** The per-type daily price series `daily` (px) shared by the
+    * indicator and serial-correlation oracles. */
+  private[operators] val DailyPxCte = dailyMeanCte("daily", "px")
+
+  /** `tickCtes`, then `c`: each (event_type, day)'s close, the
+    * oracle panel of the close-only tests and indicators. */
+  private[operators] val CloseCtes: String =
+    s"""${tickCtes()},
+         c AS (
+           SELECT event_type, day,
+                  max(CASE WHEN rn = cnt THEN value END) AS close
+           FROM r GROUP BY 1, 2)"""
+
   /** `tickCtes` with qty, then `c`: each (event_type, day)'s close
     * and integer volume, the oracle panel of the close/volume
     * indicators. */

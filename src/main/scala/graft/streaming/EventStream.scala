@@ -216,19 +216,6 @@ object EventStream {
                           progress: Seq[StreamingQueryProgress],
                           dir: String)
 
-  /** This JVM's scratch root: every staged rig and run dir lives under
-    * one fresh dir in `java.io.tmpdir`, so two JVMs on one machine never
-    * share (or delete) each other's files. Deleted at JVM exit and not
-    * earlier, because a returned result reads its run dir lazily. */
-  private lazy val scratchRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-")
-    sys.addShutdownHook(graft.Fs.deleteRecursively(root.toFile))
-    root
-  }
-
-  private def runDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(scratchRoot, s"$tag-").toString
-
   /** The staged source of one sfDir: the events table as two
     * chronological JSON halves (first / second half by the ts midpoint
     * — the T2 resume protocol's split) and the corpus event-time
@@ -271,7 +258,7 @@ object EventStream {
     * call untimed before a benchmark. */
   def stageRig(s: SparkSession, d: String): Rig = rigs.synchronized {
     rigs.getOrElseUpdate(d, {
-      val dir = runDir("rig")
+      val dir = graft.Fs.scratch("rig")
       val ev = Tables.events(s, d)
       val bounds = ev.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi"))
         .head()
@@ -395,7 +382,7 @@ object EventStream {
       write: (DataFrame, String) => DataStreamWriter[Row])(
       read: String => DataFrame): Replay = {
     val rig = stageRig(s, d)
-    val dir = runDir(tag)
+    val dir = graft.Fs.scratch(tag)
     stage(rig, s"$dir/src")
     val progress = drain(s, s"$dir/ckpt", confs: _*)(
       write(readJsonStream(s, s"$dir/src", maxFilesPerTrigger), dir))
@@ -468,7 +455,7 @@ object EventStream {
     * plant size (input rows beyond the corpus). */
   def runLateDataDrop(s: SparkSession, d: String): Replay = {
     val rig = stageRig(s, d)
-    val dir = runDir("t17"); val src = s"$dir/src"
+    val dir = graft.Fs.scratch("t17"); val src = s"$dir/src"
     deliverHalves(rig, src)
     // the late plant is staged once per sfDir (the stageRig
     // convention): a deterministic render of the immutable corpus, so
@@ -630,7 +617,7 @@ object EventStream {
     * recovery worked — which is exactly what the oracle checks. */
   def runCheckpointResume(s: SparkSession, d: String): Replay = {
     val rig = stageRig(s, d)
-    val dir = runDir("t2"); val src = s"$dir/src"
+    val dir = graft.Fs.scratch("t2"); val src = s"$dir/src"
     def run() = drain(s, s"$dir/ckpt")(
       toMemory(windowAgg(readJsonStream(s, src)), "t2_mem", "complete"))
     deliver(rig.half1, src)
@@ -1295,6 +1282,33 @@ object EventStream {
       runForeachBatchUpsert(s, d).out.orderBy("user_id"))
   )
 
+  /** The batch daily (event_type) count and pinned mean: the oracle of
+    * every streamed windowed aggregate (T1/T2/T12/T13) and of the
+    * state read-backs (T24/T25). */
+  private val WindowAggSql =
+    """SELECT date_trunc('day', ts) AS win_start, event_type,
+                count(*) AS n,
+                round(CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR) AS DOUBLE)
+                      / count(*), 6) AS avg_value
+         FROM events GROUP BY 1, 2 ORDER BY win_start, event_type"""
+
+  /** Per-user tallies: the oracle of both stateful operators (T8's
+    * flatMapGroupsWithState, T15's transformWithState). */
+  private val TallySql =
+    """SELECT user_id, count(*) AS n_events, max(value) AS max_value,
+                min(value) AS min_value, max(event_id) AS last_event_id
+         FROM events GROUP BY 1 ORDER BY user_id"""
+
+  /** The keyed JSON payload of each event: S11's batch encode and T4's
+    * streamed publish. */
+  private val KeyedPayloadSql =
+    """SELECT CAST(event_id AS VARCHAR) AS key,
+                to_json(struct_pack(event_id := event_id,
+                                    event_type := event_type,
+                                    user_id := user_id,
+                                    value := value))::VARCHAR AS value
+         FROM events ORDER BY key"""
+
   val oracles: Map[String, String] = Map(
     // T26: the streamed monitor table must equal batch A77 — a77's
     // oracle itself (`day` is the daily window start = date_trunc day)
@@ -1302,30 +1316,8 @@ object EventStream {
     // same island reconstruction as T5's batch session oracle — the
     // streamed, state-merged sessions must land on the identical set.
     "t16_session_stream" ->
-      """WITH o AS (
-           SELECT user_id, ts, event_id, value,
-                  CASE WHEN ts - lag(ts) OVER w < INTERVAL 2 HOUR
-                       THEN 0 ELSE 1 END AS new_sess
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         s AS (
-           SELECT *, sum(new_sess) OVER (PARTITION BY user_id
-             ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sid
-           FROM o)
-         SELECT user_id, min(ts) AS sess_start,
-                max(ts) + INTERVAL 2 HOUR AS sess_end,
-                count(*) AS n,
-                round(CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR) AS DOUBLE)
-                      / count(*), 6) AS avg_value
-         FROM s GROUP BY user_id, sid
-         ORDER BY user_id, sess_start""",
-    "s11_kafka_payload" ->
-      """SELECT CAST(event_id AS VARCHAR) AS key,
-                to_json(struct_pack(event_id := event_id,
-                                    event_type := event_type,
-                                    user_id := user_id,
-                                    value := value))::VARCHAR AS value
-         FROM events ORDER BY key""",
+      graft.operators.IntervalJoins.oracles("t5_session_window"),
+    "s11_kafka_payload" -> KeyedPayloadSql,
     "t3_stream_dedup_agg" ->
       """WITH dedup AS (
            SELECT * FROM (
@@ -1366,28 +1358,13 @@ object EventStream {
                         ORDER BY n DESC, event_type) AS rnk
                FROM counts)
          WHERE rnk <= 3 ORDER BY win_start, rnk""",
-    "t1_streaming_window_agg" ->
-      """SELECT date_trunc('day', ts) AS win_start, event_type,
-                count(*) AS n,
-                round(CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR) AS DOUBLE)
-                      / count(*), 6) AS avg_value
-         FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""",
+    "t1_streaming_window_agg" -> WindowAggSql,
     // the state store must hold exactly the aggregate's buffers: the
     // read-back reconstruction equals the batch windowed aggregate
-    "t24_state_read" ->
-      """SELECT date_trunc('day', ts) AS win_start, event_type,
-                count(*) AS n,
-                round(CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR) AS DOUBLE)
-                      / count(*), 6) AS avg_value
-         FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""",
+    "t24_state_read" -> WindowAggSql,
     // the change feed's latest-per-key compaction must land on the
     // same batch aggregate — the CDC history is complete
-    "t25_state_changefeed" ->
-      """SELECT date_trunc('day', ts) AS win_start, event_type,
-                count(*) AS n,
-                round(CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR) AS DOUBLE)
-                      / count(*), 6) AS avg_value
-         FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""",
+    "t25_state_changefeed" -> WindowAggSql,
     // epoch-aligned 7-day buckets = Spark's window() origin;
     // 604800000000 µs = 7 days
     "t18_chained_windows" ->
@@ -1400,50 +1377,20 @@ object EventStream {
     // equals the ORIGINAL events exactly — the late plant (fresh
     // negative ids) must leave no trace or rows mismatch
     "t17_late_data_drop" ->
-      """SELECT event_id, event_type, value
-         FROM events ORDER BY event_id""",
-    "t12_rocksdb_state" ->
-      """SELECT date_trunc('day', ts) AS win_start, event_type,
-                count(*) AS n,
-                round(CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR) AS DOUBLE)
-                      / count(*), 6) AS avg_value
-         FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""",
-    "t13_bounded_backfill" ->
-      """SELECT date_trunc('day', ts) AS win_start, event_type,
-                count(*) AS n,
-                round(CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR) AS DOUBLE)
-                      / count(*), 6) AS avg_value
-         FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""",
-    "t2_checkpoint_resume" ->
-      """SELECT date_trunc('day', ts) AS win_start, event_type,
-                count(*) AS n,
-                round(CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR) AS DOUBLE)
-                      / count(*), 6) AS avg_value
-         FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""",
-    "t4_keyed_publish" ->
-      """SELECT CAST(event_id AS VARCHAR) AS key,
-                to_json(struct_pack(event_id := event_id,
-                                    event_type := event_type,
-                                    user_id := user_id,
-                                    value := value))::VARCHAR AS value
-         FROM events ORDER BY key""",
-    "t15_transform_with_state" ->
-      """SELECT user_id, count(*) AS n_events, max(value) AS max_value,
-                min(value) AS min_value, max(event_id) AS last_event_id
-         FROM events GROUP BY 1 ORDER BY user_id""",
+      graft.operators.SourceSinks.oracles("s3_partitioned_write"),
+    "t12_rocksdb_state" -> WindowAggSql,
+    "t13_bounded_backfill" -> WindowAggSql,
+    "t2_checkpoint_resume" -> WindowAggSql,
+    "t4_keyed_publish" -> KeyedPayloadSql,
+    "t15_transform_with_state" -> TallySql,
     "t14_dedup_within_wm" ->
       """SELECT event_type, count(*) AS n,
                 round(CAST(CAST(sum(CAST(value AS DECIMAL(24,10))) AS VARCHAR) AS DOUBLE)
                       / count(*), 6) AS avg_value
          FROM events GROUP BY 1 ORDER BY event_type""",
-    "t8_stateful_tally" ->
-      """SELECT user_id, count(*) AS n_events, max(value) AS max_value,
-                min(value) AS min_value, max(event_id) AS last_event_id
-         FROM events GROUP BY 1 ORDER BY user_id""",
+    "t8_stateful_tally" -> TallySql,
     "t9_stream_static_join" ->
-      """SELECT event_id, user_id, c_mktsegment, value
-         FROM events JOIN customer ON user_id = c_custkey
-         ORDER BY event_id""",
+      graft.operators.Relational.oracles("j6_salted_join"),
     "t11_foreachbatch_upsert" ->
       """SELECT user_id, count(*) AS n_events, max(value) AS max_value
          FROM events GROUP BY 1 ORDER BY user_id""",

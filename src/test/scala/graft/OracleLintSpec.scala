@@ -215,4 +215,28 @@ class OracleLintSpec extends AnyFunSuite {
       s"uncast integer sums in oracles — wrap in CAST(... AS BIGINT):\n  " +
         offenders.mkString("\n  "))
   }
+
+  // Whole-oracle copies: two queries whose oracles are the same text
+  // share one `String` (one query's oracle points at the other's), so a
+  // fix to the oracle cannot reach one copy and miss the other. Texts
+  // are compared with whitespace runs collapsed. Equal string literals
+  // are interned into one object, so `eq` alone cannot see a verbatim
+  // paste: the sources must also spell each shared text out once.
+  test("every oracle text shared by two queries is one String") {
+    import scala.jdk.CollectionConverters._
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(java.nio.file.Files.readString(_)).mkString("\n")
+    val spelled = "\"(\\w+)\" ->\\s*s?\"{3}".r
+      .findAllMatchIn(sources).map(_.group(1)).toSet
+    val pasted = SparkEntry.oracleSql.toSeq
+      .groupBy { case (_, sql) => sql.trim.replaceAll("\\s+", " ") }
+      .values.map(_.sortBy(_._1))
+      .filter(g => g.size > 1 &&
+        (g.exists(_._2 ne g.head._2) || g.count(e => spelled(e._1)) > 1))
+      .map(_.map(_._1).mkString(", ")).toSeq.sorted
+    assert(pasted.isEmpty,
+      s"${pasted.size} oracle texts are pasted copies, not one shared " +
+        s"String:\n  ${pasted.mkString("\n  ")}")
+  }
 }

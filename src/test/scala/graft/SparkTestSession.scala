@@ -28,11 +28,8 @@ object SparkTestSession {
     z ^ (z >>> 31)
   }
 
-  /** Write a tiny fixture table as parquet under a fresh temp dir and
-    * return the dir (usable as the `d` argument of any query). */
-  def fixtureDir(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
-    dir.deleteOnExit()
-    dir.getAbsolutePath
-  }
+  /** A fresh dir for a tiny fixture table, under the JVM's scratch
+    * root ([[Fs.scratch]]) so it is deleted at exit with its files;
+    * usable as the `d` argument of any query. */
+  def fixtureDir(prefix: String): String = Fs.scratch(prefix)
 }

@@ -262,7 +262,7 @@ class StreamingSpec extends AnyFunSuite {
     // The watermarked form (dropDuplicates under a 2-day watermark)
     // through a real streaming execution: drop events as JSON, run
     // dedupWindowAgg via readStream in update-less complete mode.
-    val base = java.nio.file.Files.createTempDirectory("t6-stream").toFile
+    val base = new java.io.File(graft.Fs.scratch("t6-stream"))
     val src = s"$base/src"; val ckpt = s"$base/ckpt"
     Tables.events(spark, sf).coalesce(1).write.mode("overwrite").json(src)
     val q = EventStream.dedupWindowAgg(EventStream.readJsonStream(spark, src))
@@ -309,7 +309,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(dataBatches >= 2,
       s"replay must cross micro-batches to exercise state ($dataBatches)")
     // file-source leg over the same rows
-    val base = java.nio.file.Files.createTempDirectory("srcindep").toFile
+    val base = new java.io.File(graft.Fs.scratch("srcindep"))
     val src = s"$base/src"; val ckpt = s"$base/ckpt"
     Tables.events(spark, sf).coalesce(1).write.mode("overwrite").json(src)
     val fq = EventStream.dedupWindowAgg(EventStream.readJsonStream(spark, src))
@@ -350,7 +350,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("T8: flatMapGroupsWithState tallies survive a checkpoint restart") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("t8-stream").toFile
+    val base = new java.io.File(graft.Fs.scratch("t8-stream"))
     val src = s"$base/src"; val ckpt = s"$base/ckpt"
     val h1 = s"$base/h1"; val h2 = s"$base/h2"
     val ev = Tables.events(spark, sf)
@@ -480,7 +480,7 @@ class StreamingSpec extends AnyFunSuite {
     // NoTimeout control over the same files keeps the state and
     // counts 2 — the pair proves expiry does exactly one thing.
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("t8-ttl").toFile
+    val base = new java.io.File(graft.Fs.scratch("t8-ttl"))
     val src = new java.io.File(base, "src"); src.mkdirs()
     def evJson(id: Long, hour: Int, user: Long): String =
       f"""{"event_id":$id,"ts":"2024-01-01T$hour%02d:00:00.000Z","user_id":$user,"event_type":"x","value":1.0,"props":"{}"}"""
