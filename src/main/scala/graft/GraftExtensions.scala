@@ -1,13 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{DotProduct, PearsonPValue, RollingFingerprint, VaderCompound}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType}
+import graft.functions.{DotProduct, Kernel, PearsonPValue, RollingFingerprint,
+  SqlFunction, VaderCompound}
 
 /** SparkSessionExtensions entry point for the engine's native
-  * functions and optimizer rule — the registration path for custom
-  * Catalyst expressions:
+  * functions and optimizer rule — the registration path for the SQL
+  * names of the native kernels:
   *
   * {{{
   *   SparkSession.builder()
@@ -57,35 +59,28 @@ object GraftExtensions {
       v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
   }
 
+  /** A native function's SQL name, checked for arity here and for
+    * argument types by [[SqlFunction]], which plans as `entry`. */
+  private def sqlName(name: String, signature: String,
+      accepts: (DataType => Boolean)*)(entry: Seq[Column] => Column)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(classOf[SqlFunction].getName, name),
+      (children: Seq[Expression]) => {
+        require(children.size == accepts.size,
+          s"$name expects $signature, got ${children.size} args")
+        SqlFunction(name, signature, accepts, entry, children)
+      })
+
   /** (identifier, info, builder) triples — one per native function. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("pearson_pvalue"),
-      new ExpressionInfo(classOf[PearsonPValue].getName, "pearson_pvalue"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"pearson_pvalue expects (r DOUBLE, n BIGINT), got ${children.size} args")
-        PearsonPValue(children.head, children(1))
-      }),
-    (FunctionIdentifier("vader_compound"),
-      new ExpressionInfo(classOf[VaderCompound].getName, "vader_compound"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1,
-          s"vader_compound expects (text STRING), got ${children.size} args")
-        VaderCompound(children.head)
-      }),
-    (FunctionIdentifier("rolling_fp"),
-      new ExpressionInfo(classOf[RollingFingerprint].getName, "rolling_fp"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1,
-          s"rolling_fp expects (text STRING), got ${children.size} args")
-        RollingFingerprint(children.head)
-      }),
-    (FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"vec_dot expects (a ARRAY, b ARRAY), got ${children.size} args")
-        DotProduct(children.head, children(1))
-      }))
+    sqlName("pearson_pvalue", "(r DOUBLE, n BIGINT)",
+      _ == DoubleType, _ == LongType)(c => PearsonPValue.pValue(c(0), c(1))),
+    sqlName("vader_compound", "(text STRING)",
+      _ == StringType)(c => VaderCompound.compound(c(0))),
+    sqlName("rolling_fp", "(text STRING)",
+      _ == StringType)(c => RollingFingerprint.fps(c(0))),
+    sqlName("vec_dot", "(a ARRAY<FLOAT|DOUBLE>, b ARRAY<FLOAT|DOUBLE>)",
+      Kernel.isVector, Kernel.isVector)(c => DotProduct.dot(c(0), c(1))))
 }

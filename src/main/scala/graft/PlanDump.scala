@@ -6,13 +6,17 @@ import java.nio.file.{Files, Paths}
   * (Exchange count, join strategy, PushedFilters/ReadSchema,
   * WholeStageCodegen spans) can be audited offline and before/after
   * diffs committed under plans/. Builds the Bench session so the
-  * captured plan is the one the bench actually times.
+  * captured plan is the one the bench actually times. Both dirs are
+  * required: without them it prints usage and exits 2.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val outDir = if (args.length > 1) args(1) else "plans/r14/all"
+    if (args.length < 2) {
+      System.err.println(
+        "usage: graft.PlanDump <sf dir> <out dir> [query ...]")
+      sys.exit(2)
+    }
+    val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
     SparkEntry.checkFilter("plandump", only, SparkEntry.queries.keySet)
     val spark = GraftExtensions.session(

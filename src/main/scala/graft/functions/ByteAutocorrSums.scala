@@ -1,18 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** MM14's hot kernel: the five exact lag-1 sums (Σx, Σy, Σx², Σy², Σxy
   * over the L−1 adjacent byte pairs) plus the pair count, in ONE
-  * whole-stage-codegen pass over the string's bytes.
+  * whole-stage-codegen pass over the string's bytes (a native kernel,
+  * [[Kernel]]).
   *
   * Replaces the round-11 HOF formulation (split → transform(ascii) →
   * two slices → zip_with → five interpreted `aggregate` folds): higher-
@@ -29,26 +26,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * (np = numBytes − 1 may be ≤ 0 → all sums 0), mirroring the HOF
   * form's greatest(np, 0) clamp.
   */
-case class ByteAutocorrSums(child: Expression) extends UnaryExpression {
+object ByteAutocorrSums {
+  /** Column-API entry point: struct(np, sx, sy, sxx, syy, sxy) of the
+    * lag-1 byte-pair sums of a string column. */
+  def sums(text: Column): Column =
+    Kernel.call(this, "sums", StructType(
+      Seq("np", "sx", "sy", "sxx", "syy", "sxy")
+        .map(StructField(_, LongType, nullable = false))),
+      nullable = false)(text)
 
-  override def dataType: DataType = StructType(Seq(
-    StructField("np", LongType, nullable = false),
-    StructField("sx", LongType, nullable = false),
-    StructField("sy", LongType, nullable = false),
-    StructField("sxx", LongType, nullable = false),
-    StructField("syy", LongType, nullable = false),
-    StructField("sxy", LongType, nullable = false)))
-
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "byte_autocorr_sums"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects STRING input, got ${child.dataType.sql}")
-
-  override def nullSafeEval(v: Any): Any = {
-    val bytes = v.asInstanceOf[UTF8String].getBytes
+  def sums(text: UTF8String): InternalRow = {
+    val bytes = text.getBytes
     val n = bytes.length
     var sx = 0L; var sy = 0L; var sxx = 0L; var syy = 0L; var sxy = 0L
     var i = 1
@@ -61,47 +49,4 @@ case class ByteAutocorrSums(child: Expression) extends UnaryExpression {
     new GenericInternalRow(Array[Any](
       (n - 1).toLong, sx, sy, sxx, syy, sxy))
   }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val rowCls = classOf[GenericInternalRow].getName
-    nullSafeCodeGen(ctx, ev, str => {
-      val bytes = ctx.freshName("bytes")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val sx = ctx.freshName("sx")
-      val sy = ctx.freshName("sy")
-      val sxx = ctx.freshName("sxx")
-      val syy = ctx.freshName("syy")
-      val sxy = ctx.freshName("sxy")
-      s"""
-         |byte[] $bytes = $str.getBytes();
-         |int $n = $bytes.length;
-         |long $sx = 0L, $sy = 0L, $sxx = 0L, $syy = 0L, $sxy = 0L;
-         |for (int $i = 1; $i < $n; $i++) {
-         |  long $x = (long) ($bytes[$i - 1] & 0xff);
-         |  long $y = (long) ($bytes[$i] & 0xff);
-         |  $sx += $x; $sy += $y;
-         |  $sxx += $x * $x; $syy += $y * $y; $sxy += $x * $y;
-         |}
-         |${ev.value} = new $rowCls(new Object[] {
-         |  java.lang.Long.valueOf((long) ($n - 1)),
-         |  java.lang.Long.valueOf($sx), java.lang.Long.valueOf($sy),
-         |  java.lang.Long.valueOf($sxx), java.lang.Long.valueOf($syy),
-         |  java.lang.Long.valueOf($sxy) });
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): ByteAutocorrSums = copy(child = newChild)
-}
-
-object ByteAutocorrSums {
-  /** Column-API entry point: struct(np, sx, sy, sxx, syy, sxy) of the
-    * lag-1 byte-pair sums of a string column. */
-  def sums(text: Column): Column =
-    ColumnBridge.column(ByteAutocorrSums(ColumnBridge.expression(text)))
 }

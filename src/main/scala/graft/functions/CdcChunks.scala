@@ -2,10 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -36,19 +34,32 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Reference analogue: content-keyed dedup identity
   * (`scripts/02_fetch_news.py:117-120`), refined from whole-doc to
-  * shift-resistant sub-document granularity.
+  * shift-resistant sub-document granularity. A native kernel
+  * ([[Kernel]]): text → array<struct<start int, len int, chash
+  * bigint>> inside whole-stage codegen. NULL text → NULL array.
   */
-object CdcChunkKernel {
-  val K = 8
+object CdcChunks {
+  private val K = 8
   private val B = 257L
   private val M = 1000000007L
   private val Mask = 64L
+
+  private val Type = ArrayType(StructType(Seq(
+    StructField("start", IntegerType, nullable = false),
+    StructField("len", IntegerType, nullable = false),
+    StructField("chash", LongType, nullable = false))),
+    containsNull = false)
+
+  /** Column-API entry point: CDC chunk rows of a text column. */
+  def chunks(text: Column): Column =
+    Kernel.call(this, "chunks", Type, nullable = false)(text)
 
   /** Chunk rows (start, len, chash) over the normalized text; start
     * is a 0-based char offset into the normalized (trimmed) text.
     * Empty normalized text → empty array, never null.
     */
-  def chunksData(text: String): GenericArrayData = {
+  def chunks(utf8: UTF8String): ArrayData = {
+    val text = utf8.toString
     var lo = 0
     var hi = text.length
     while (lo < hi && text.charAt(lo) == ' ') lo += 1
@@ -89,39 +100,4 @@ object CdcChunkKernel {
     }
     new GenericArrayData(rows)
   }
-}
-
-/** Codegen Catalyst expression wrapping [[CdcChunkKernel.chunksData]]:
-  * text → array<struct<start int, len int, chash bigint>> inside
-  * whole-stage codegen. NULL text → NULL array.
-  */
-case class CdcChunks(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("start", IntegerType, nullable = false),
-    StructField("len", IntegerType, nullable = false),
-    StructField("chash", LongType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "cdc_chunks"
-
-  override def nullSafeEval(t: Any): Any =
-    CdcChunkKernel.chunksData(t.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    // Static forwarder, not MODULE$ — janino rejects the Scala-object
-    // form (see the PearsonPValue.doGenCode note).
-    val kernel = CdcChunkKernel.getClass.getName.stripSuffix("$")
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = $kernel.chunksData($t.toString());")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): CdcChunks = copy(child = newChild)
-}
-
-object CdcChunks {
-  /** Column-API entry point: CDC chunk rows of a text column. */
-  def chunks(text: Column): Column =
-    ColumnBridge.column(CdcChunks(ColumnBridge.expression(text)))
 }

@@ -1,64 +1,27 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
-/** Codegen point-query of a serialized Spark CountMinSketch binary
-  * (A53): deserialize + `estimateCount(key)` per probe row. Replaces
-  * the Scala UDF it started as — same driver-pattern cost (the probe
-  * side is a ~20-row watchlist against one broadcast ~1 MB sketch),
-  * but the expression stays inside whole-stage codegen like every
-  * other kernel in the suite (PqCodec/DotProduct precedent) instead
-  * of paying serialized-closure dispatch. NULL sketch or NULL key →
-  * NULL estimate.
+/** Point-query of a serialized Spark CountMinSketch binary (A53) as a
+  * native kernel ([[Kernel]]): deserialize + `estimateCount(key)` per
+  * probe row. Replaces the Scala UDF it started as — same cost (the
+  * probe side is a ~20-row watchlist against one broadcast ~1 MB
+  * sketch), but the call stays inside whole-stage
+  * codegen like every other kernel in the suite instead of paying
+  * serialized-closure dispatch. NULL sketch or NULL key → NULL
+  * estimate.
   *
   * Deliberately NOT cached across rows: 20 deserializations of the
-  * broadcast binary are microseconds, and keeping the expression
-  * stateless preserves the codegen contract.
+  * broadcast binary are microseconds, and keeping the kernel
+  * stateless keeps it a plain static call.
   */
-case class CmsProbe(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "cms_probe"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (BINARY, BIGINT), got " +
-        s"${left.dataType.sql} and ${right.dataType.sql}")
-
-  override def nullSafeEval(bin: Any, key: Any): Any =
-    CmsProbe.probe(bin.asInstanceOf[Array[Byte]],
-      key.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    // static forwarder, not MODULE$ — janino rejects the Scala-object
-    // form (see PearsonPValue.doGenCode)
-    val kernel = CmsProbe.getClass.getName.stripSuffix("$")
-    nullSafeCodeGen(ctx, ev, (b, k) =>
-      s"${ev.value} = $kernel.probe($b, $k);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CmsProbe =
-    copy(left = newLeft, right = newRight)
-}
-
 object CmsProbe {
-  /** Kernel: deserialize the sketch and point-query one key. */
+  /** Column-API entry point. */
+  def probe(sketch: Column, key: Column): Column =
+    Kernel.call(this, "probe", LongType, nullable = false)(sketch, key)
+
   def probe(bin: Array[Byte], key: Long): Long =
     org.apache.spark.util.sketch.CountMinSketch.readFrom(
       new java.io.ByteArrayInputStream(bin)).estimateCount(key)
-
-  /** Column-API entry point. */
-  def probe(sketch: Column, key: Column): Column =
-    ColumnBridge.column(CmsProbe(
-      ColumnBridge.expression(sketch), ColumnBridge.expression(key)))
 }

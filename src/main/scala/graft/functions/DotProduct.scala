@@ -1,100 +1,44 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.DoubleType
 
-/** Codegen dot product of two numeric array columns — the hot kernel
-  * of every similarity operator (SIM1–SIM3 cosines, D5 near-dup, all
-  * vector norms). Replaces the `aggregate(zip_with(a, b, _*_), 0, +)`
-  * higher-order-function formulation, which never enters codegen and
-  * allocates an intermediate array per row; semantics are preserved
-  * exactly — index-order summation of per-element double products, so
-  * results are bit-identical to the HOF fold (and to the DuckDB
-  * oracle that checks SIM1):
-  *  - FLOAT or DOUBLE element types on either side (floats widen);
+/** Dot product of two numeric array columns as a native kernel
+  * ([[Kernel]]) — the hot kernel of every similarity operator
+  * (SIM1–SIM3 cosines, D5 near-dup, all vector norms). Replaces the
+  * `aggregate(zip_with(a, b, _*_), 0, +)` higher-order-function
+  * formulation, which never enters codegen and allocates an
+  * intermediate array per row; semantics are preserved exactly —
+  * index-order summation of per-element double products, so results
+  * are bit-identical to the HOF fold (and to the DuckDB oracle that
+  * checks SIM1):
+  *  - FLOAT or DOUBLE element types on either side (floats widen; the
+  *    element types ride as literal flags);
   *  - length mismatch → NULL (zip_with pads with NULL, which the fold
   *    then propagates);
   *  - NULL element on either side → NULL (same propagation).
+  * SQL name `vec_dot`.
   */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "vec_dot"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(e: Expression) = e.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left) && ok(right)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects ARRAY<FLOAT|DOUBLE> inputs, got " +
-        s"${left.dataType.sql} and ${right.dataType.sql}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (aa, bb) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    val n = aa.numElements()
-    if (n != bb.numElements()) return null
-    val aFloat = elemType(left) == FloatType
-    val bFloat = elemType(right) == FloatType
-    var sum = 0.0
-    var i = 0
-    while (i < n) {
-      if (aa.isNullAt(i) || bb.isNullAt(i)) return null
-      val x = if (aFloat) aa.getFloat(i).toDouble else aa.getDouble(i)
-      val y = if (bFloat) bb.getFloat(i).toDouble else bb.getDouble(i)
-      sum += x * y
-      i += 1
-    }
-    sum
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    def get(arr: String, i: String, e: Expression): String =
-      if (elemType(e) == FloatType) s"(double) $arr.getFloat($i)"
-      else s"$arr.getDouble($i)"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val sum = ctx.freshName("sum")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $sum = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) {
-         |      ${ev.isNull} = true; break;
-         |    }
-         |    $sum += ${get(a, i, left)} * ${get(b, i, right)};
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $sum;
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
 object DotProduct {
   /** Column-API entry point: Σ aᵢ·bᵢ of two vector columns. */
   def dot(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProduct(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Kernel.call(this, "dot", DoubleType, nullable = true)(
+      a, b, Kernel.floatElements(a), Kernel.floatElements(b))
+
+  def dot(a: ArrayData, b: ArrayData, aFloat: Boolean,
+          bFloat: Boolean): java.lang.Double = {
+    val n = a.numElements()
+    if (n != b.numElements()) return null
+    var sum = 0.0
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
+      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      sum += x * y
+      i += 1
+    }
+    java.lang.Double.valueOf(sum)
+  }
 }

@@ -1,12 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** MM10/MM11's hot kernel: per-frame byte sums (or square sums) over a
@@ -31,10 +28,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * BIGINTs (byte ≤ 255, F = 16 ⇒ frame sum < 2¹², square sum < 2²⁰).
   * Totality: fewer than F bytes → empty array (the upstream
   * octet_length filter drops those rows anyway), NULL → NULL.
+  * Element i of the result belongs to frame i·stride. A native kernel
+  * ([[Kernel]]); frameBytes, stride and squared ride as literals.
   */
-object FrameByteSumKernel {
-  def frameSums(bytes: Array[Byte], frameBytes: Int, stride: Int,
-                squared: Boolean): GenericArrayData = {
+object FrameByteSums {
+  /** Column-API entry point: sampled per-frame byte sums of a text
+    * column's UTF-8 bytes (square sums when `squared`). */
+  def sums(text: Column, frameBytes: Int, stride: Int,
+           squared: Boolean): Column = {
+    require(frameBytes > 0 && stride > 0,
+      s"frameBytes/stride must be positive, got $frameBytes/$stride")
+    Kernel.call(this, "sums", ArrayType(LongType, containsNull = false),
+      nullable = false)(text, lit(frameBytes), lit(stride), lit(squared))
+  }
+
+  def sums(text: UTF8String, frameBytes: Int, stride: Int,
+           squared: Boolean): ArrayData = {
+    val bytes = text.getBytes
     val nFrames = bytes.length / frameBytes
     val nSampled = if (nFrames <= 0) 0 else (nFrames + stride - 1) / stride
     val out = new Array[Any](nSampled)
@@ -55,48 +65,4 @@ object FrameByteSumKernel {
     }
     new GenericArrayData(out)
   }
-}
-
-/** Codegen Catalyst expression wrapping
-  * [[FrameByteSumKernel.frameSums]]: text → array<bigint> of sampled
-  * per-frame byte (square) sums; element i belongs to frame i·stride. */
-case class FrameByteSums(child: Expression, frameBytes: Int, stride: Int,
-                         squared: Boolean) extends UnaryExpression {
-
-  require(frameBytes > 0 && stride > 0,
-    s"frameBytes/stride must be positive, got $frameBytes/$stride")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "frame_byte_sums"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects STRING input, got ${child.dataType.sql}")
-
-  override def nullSafeEval(t: Any): Any =
-    FrameByteSumKernel.frameSums(
-      t.asInstanceOf[UTF8String].getBytes, frameBytes, stride, squared)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    // Static forwarder, not MODULE$ — janino rejects the Scala-object
-    // form (see the PearsonPValue.doGenCode note).
-    val kernel = FrameByteSumKernel.getClass.getName.stripSuffix("$")
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = $kernel.frameSums($t.getBytes(), " +
-        s"$frameBytes, $stride, $squared);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): FrameByteSums = copy(child = newChild)
-}
-
-object FrameByteSums {
-  /** Column-API entry point: sampled per-frame byte sums of a text
-    * column's UTF-8 bytes (square sums when `squared`). */
-  def sums(text: Column, frameBytes: Int, stride: Int,
-           squared: Boolean): Column =
-    ColumnBridge.column(FrameByteSums(
-      ColumnBridge.expression(text), frameBytes, stride, squared))
 }

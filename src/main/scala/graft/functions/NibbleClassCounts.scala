@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** MM8/MM13's byte-class histogram kernel: the 16-slot high-nibble
@@ -25,10 +21,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * dense (zero slots included) so MM13's positional fold reads
   * identically and MM8's `filter(x > 0)` reproduces its non-zero
   * list in the same order. Empty input → all-zero array (callers
-  * filter octet_length > 0 first, as before).
+  * filter octet_length > 0 first, as before). A native kernel
+  * ([[Kernel]]).
   */
-object NibbleClassKernel {
-  def classCounts(bytes: Array[Byte]): GenericArrayData = {
+object NibbleClassCounts {
+  /** Column-API entry point: dense 16-slot high-nibble class counts
+    * (index order 0x0..0xF) of a string column's UTF-8 bytes. */
+  def counts(text: Column): Column =
+    Kernel.call(this, "counts", ArrayType(LongType, containsNull = false),
+      nullable = false)(text)
+
+  def counts(text: UTF8String): ArrayData = {
+    val bytes = text.getBytes
     val counts = new Array[Long](16)
     var i = 0
     while (i < bytes.length) {
@@ -37,38 +41,4 @@ object NibbleClassKernel {
     }
     new GenericArrayData(counts)
   }
-}
-
-case class NibbleClassCounts(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "nibble_class_counts"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects STRING input, got ${child.dataType.sql}")
-
-  override def nullSafeEval(t: Any): Any =
-    NibbleClassKernel.classCounts(t.asInstanceOf[UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    // Static forwarder, not MODULE$ — janino rejects the Scala-object
-    // form (see the PearsonPValue.doGenCode note).
-    val kernel = NibbleClassKernel.getClass.getName.stripSuffix("$")
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = $kernel.classCounts($t.getBytes());")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): NibbleClassCounts = copy(child = newChild)
-}
-
-object NibbleClassCounts {
-  /** Column-API entry point: dense 16-slot high-nibble class counts
-    * (index order 0x0..0xF) of a string column's UTF-8 bytes. */
-  def counts(text: Column): Column =
-    ColumnBridge.column(NibbleClassCounts(ColumnBridge.expression(text)))
 }

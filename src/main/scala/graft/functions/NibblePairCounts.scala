@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -30,12 +26,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * order is irrelevant downstream — the consumer hash-aggregates).
   * Total on any input: fewer than 2 bytes → empty array (the explode
   * then drops the row, exactly as the per-byte form produced no
-  * pairs).
+  * pairs). A native kernel ([[Kernel]]).
   */
-object NibblePairKernel {
+object NibblePairCounts {
   private val Hex = "0123456789ABCDEF".toCharArray
 
-  def pairCounts(bytes: Array[Byte]): GenericArrayData = {
+  /** Column-API entry point: non-zero (pair, count) cells of the lag-1
+    * high-nibble pair histogram of a string column. */
+  def counts(text: Column): Column =
+    Kernel.call(this, "counts", ArrayType(StructType(Seq(
+      StructField("pair", StringType, nullable = false),
+      StructField("c", LongType, nullable = false))),
+      containsNull = false), nullable = false)(text)
+
+  def counts(text: UTF8String): ArrayData = {
+    val bytes = text.getBytes
     val counts = new Array[Long](256)
     var i = 1
     while (i < bytes.length) {
@@ -56,40 +61,4 @@ object NibblePairKernel {
     }
     new GenericArrayData(rows.result())
   }
-}
-
-case class NibblePairCounts(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("pair", StringType, nullable = false),
-    StructField("c", LongType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "nibble_pair_counts"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects STRING input, got ${child.dataType.sql}")
-
-  override def nullSafeEval(t: Any): Any =
-    NibblePairKernel.pairCounts(t.asInstanceOf[UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    // Static forwarder, not MODULE$ — janino rejects the Scala-object
-    // form (see the PearsonPValue.doGenCode note).
-    val kernel = NibblePairKernel.getClass.getName.stripSuffix("$")
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = $kernel.pairCounts($t.getBytes());")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): NibblePairCounts = copy(child = newChild)
-}
-
-object NibblePairCounts {
-  /** Column-API entry point: non-zero (pair, count) cells of the lag-1
-    * high-nibble pair histogram of a string column. */
-  def counts(text: Column): Column =
-    ColumnBridge.column(NibblePairCounts(ColumnBridge.expression(text)))
 }

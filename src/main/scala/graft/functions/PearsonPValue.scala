@@ -1,62 +1,26 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
-/** Native Catalyst expression for the Pearson-r p-value: stays inside
-  * whole-stage codegen (the generated code calls the static
-  * [[StudentT.pValue]] kernel directly on primitive doubles), unlike a
-  * Scala UDF which breaks the codegen pipeline with boxing +
-  * serialized-closure dispatch per row. Null-safe: NULL in → NULL out,
-  * and NaN from the kernel (r or n invalid) surfaces as NULL so the
-  * result stays comparable/sortable under SQL semantics.
+/** The Pearson-r p-value as a native kernel ([[Kernel]]): it stays
+  * inside whole-stage codegen (the generated code calls [[pValue]] on
+  * primitive doubles), unlike a Scala UDF which breaks the codegen
+  * pipeline with boxing + serialized-closure dispatch per row.
+  * Null-safe: NULL in → NULL out, and NaN from [[StudentT.pValue]]
+  * (r or n invalid) surfaces as NULL so the result stays
+  * comparable/sortable under SQL semantics.
   *
   * Inputs: r DOUBLE, n BIGINT (as produced by `corr`/`count`).
   */
-case class PearsonPValue(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "pearson_pvalue"
-
-  override def nullSafeEval(r: Any, n: Any): Any = {
-    val p = StudentT.pValue(r.asInstanceOf[Double], n.asInstanceOf[Long])
-    if (p.isNaN) null else p
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    // Call the object's STATIC FORWARDER (graft.functions.StudentT
-    // .pValue) — janino rejects `StudentT.MODULE$` because the
-    // forwarder class has no MODULE$ field, and `StudentT$.MODULE$`
-    // trips on the $ in the class name; the forwarder is plain Java.
-    val kernel = StudentT.getClass.getName.stripSuffix("$")
-    nullSafeCodeGen(ctx, ev, (r, n) => {
-      val p = ctx.freshName("p")
-      s"""
-         |double $p = $kernel.pValue($r, $n);
-         |if (Double.isNaN($p)) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $p;
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PearsonPValue =
-    copy(left = newLeft, right = newRight)
-}
-
 object PearsonPValue {
   /** Column-API entry point: p-value of a correlation column given an
     * observation-count column. */
   def pValue(r: Column, n: Column): Column =
-    ColumnBridge.column(PearsonPValue(
-      ColumnBridge.expression(r), ColumnBridge.expression(n)))
+    Kernel.call(this, "pValue", DoubleType, nullable = true)(r, n)
+
+  def pValue(r: Double, n: Long): java.lang.Double = {
+    val p = StudentT.pValue(r, n)
+    if (p.isNaN) null else java.lang.Double.valueOf(p)
+  }
 }

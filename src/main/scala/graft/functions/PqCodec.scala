@@ -1,20 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, ObjectType}
 
 /** Product-quantization kernels (Jégou, Douze & Schmid 2011, public
   * algorithm) behind SIM6. The encode/LUT arithmetic originally lived
   * as ~270 inlined Column expressions per row — which blew whole-stage
   * codegen past janino's 64 KB method limit and forced interpreted
-  * fallback; as a static compiled kernel behind two thin codegen
-  * expressions (the DotProduct pattern), the generated code is ONE
-  * call per row and the stage stays inside whole-stage codegen.
+  * fallback; as a static compiled kernel ([[Kernel]], the codebook a
+  * literal), the generated code is ONE call per row and the stage
+  * stays inside whole-stage codegen.
   *
   * Float discipline (what makes SIM6 fully oracle-checkable): every
   * sum runs in index order (while-loops ≡ DuckDB's list_sum), the
@@ -26,7 +24,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
 object PqKernel {
 
   /** Immutable codebook: cb(j)(c) = the d-dim code c of subspace j;
-    * ships to executors once per plan as a codegen reference object. */
+    * ships to executors once per plan as an `ObjectType` literal. */
   final class Book(val cb: Array[Array[Array[Double]]]) extends Serializable {
     val m: Int = cb.length
     val k: Int = cb(0).length
@@ -97,8 +95,8 @@ object PqKernel {
     out
   }
 
-  // ArrayData entry points for the generated code: one static call per
-  // row; null element or length mismatch → null result.
+  // The kernels: one static call per row; null element or length
+  // mismatch → null result.
   def encodeArray(b: Book, a: ArrayData, isFloat: Boolean): ArrayData = {
     val x = toDoubles(a, isFloat)
     if (x == null || x.length != b.m * b.d) null
@@ -111,68 +109,19 @@ object PqKernel {
   }
 }
 
-/** Shared shape of the two PQ expressions: vector column in, array
-  * out, kernel referenced as a codegen object. */
-abstract class PqCodecExpression extends UnaryExpression {
-  def book: PqKernel.Book
-  protected def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects ARRAY<FLOAT|DOUBLE>, got ${t.sql}")
-    }
-  protected def kernelMethod: String // encodeArray | lutArray
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val bookRef = ctx.addReferenceObj("pqBook", book,
-      classOf[PqKernel.Book].getName)
-    val kernel = PqKernel.getClass.getName.stripSuffix("$")
-    nullSafeCodeGen(ctx, ev, a => {
-      val r = ctx.freshName("r")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  $kernel.$kernelMethod($bookRef, $a, $isFloat);
-         |if ($r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $r;
-         |}
-       """.stripMargin
-    })
-  }
-}
-
-/** codes(j) ∈ [1, k] per subspace — ARRAY<BIGINT> of length m. */
-case class PqEncode(child: Expression, book: PqKernel.Book)
-    extends PqCodecExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "pq_encode"
-  override protected def kernelMethod: String = "encodeArray"
-  override def nullSafeEval(a: Any): Any =
-    PqKernel.encodeArray(book, a.asInstanceOf[ArrayData], isFloat)
-  override protected def withNewChildInternal(c: Expression): PqEncode =
-    copy(child = c)
-}
-
-/** Flat ADC LUT — ARRAY<DOUBLE> of length m·k, indexed j·k + c. */
-case class PqLuts(child: Expression, book: PqKernel.Book)
-    extends PqCodecExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "pq_luts"
-  override protected def kernelMethod: String = "lutArray"
-  override def nullSafeEval(a: Any): Any =
-    PqKernel.lutArray(book, a.asInstanceOf[ArrayData], isFloat)
-  override protected def withNewChildInternal(c: Expression): PqLuts =
-    copy(child = c)
-}
-
 object PqCodec {
+  private def call(method: String, elem: DataType, book: PqKernel.Book,
+                   v: Column): Column =
+    Kernel.call(PqKernel, method, ArrayType(elem, containsNull = false),
+      nullable = true)(
+      ColumnBridge.column(Literal.fromObject(book,
+        ObjectType(classOf[PqKernel.Book]))),
+      v, Kernel.floatElements(v))
+
+  /** codes(j) ∈ [1, k] per subspace — ARRAY<BIGINT> of length m. */
   def encode(book: PqKernel.Book)(v: Column): Column =
-    ColumnBridge.column(PqEncode(ColumnBridge.expression(v), book))
+    call("encodeArray", LongType, book, v)
+  /** Flat ADC LUT — ARRAY<DOUBLE> of length m·k, indexed j·k + c. */
   def luts(book: PqKernel.Book)(v: Column): Column =
-    ColumnBridge.column(PqLuts(ColumnBridge.expression(v), book))
+    call("lutArray", DoubleType, book, v)
 }

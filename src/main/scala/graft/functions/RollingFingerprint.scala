@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Winnowing document-fingerprint kernel (Schleimer, Wilkerson &
@@ -69,35 +66,16 @@ object RollingFp {
   }
 }
 
-/** Codegen Catalyst expression wrapping [[RollingFp.fps]]: text →
-  * array<bigint> of winnowed fingerprints, inside whole-stage codegen
-  * (the generated code calls the static kernel directly). NULL text →
-  * NULL array; short text → empty array (kernel contract).
+/** Winnowed fingerprints ([[RollingFp.fps]]) as a native kernel
+  * ([[Kernel]]): text → array<bigint> inside whole-stage codegen.
+  * NULL text → NULL array; short text → empty array (kernel contract).
   */
-case class RollingFingerprint(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "rolling_fp"
-
-  override def nullSafeEval(t: Any): Any =
-    new GenericArrayData(RollingFp.fps(t.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    // Static forwarder, not MODULE$ — janino rejects the Scala-object
-    // form (see the PearsonPValue.doGenCode note).
-    val kernel = RollingFp.getClass.getName.stripSuffix("$")
-    nullSafeCodeGen(ctx, ev, t =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  $kernel.fps($t.toString()));""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): RollingFingerprint = copy(child = newChild)
-}
-
 object RollingFingerprint {
   /** Column-API entry point: winnowed fingerprint array of a text column. */
   def fps(text: Column): Column =
-    ColumnBridge.column(RollingFingerprint(ColumnBridge.expression(text)))
+    Kernel.call(this, "fps", ArrayType(LongType, containsNull = false),
+      nullable = false)(text)
+
+  def fps(text: UTF8String): ArrayData =
+    new GenericArrayData(RollingFp.fps(text.toString))
 }

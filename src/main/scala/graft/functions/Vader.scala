@@ -144,13 +144,6 @@ object Vader {
     out.toArray
   }
 
-  /** Codegen bridge: [[tokenScores]] boxed as Catalyst ArrayData (the
-    * generated code assigns it to an ArrayData-typed slot). */
-  def tokenScoresData(text: String):
-      org.apache.spark.sql.catalyst.util.ArrayData =
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(tokenScores(text))
-
   /** Compound score in [-1, 1]; 0.0 for empty/neutral text. The
     * left-to-right sum over [[tokenScores]] is bit-identical to the
     * pre-refactor in-loop accumulator. */

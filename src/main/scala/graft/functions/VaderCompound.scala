@@ -1,79 +1,42 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression for the VADER compound score: stays
-  * inside whole-stage codegen (the generated code calls the static
-  * [[Vader.compound]] kernel directly), unlike the Scala UDF it
+/** The VADER compound score as a native kernel ([[Kernel]]): it stays
+  * inside whole-stage codegen (the generated code calls
+  * [[Vader.compound]] through [[compound]]), unlike the Scala UDF it
   * replaced, which broke the codegen pipeline with serialized-closure
-  * dispatch + Row boxing per document. Null-safe: NULL text → NULL
-  * score (empty text still scores 0.0, matching the kernel).
+  * dispatch + Row boxing per document. NULL text → NULL score (empty
+  * text still scores 0.0, matching the kernel).
   *
   * Reference scorer: `scripts/03_add_sentiment.py:10,28`.
   */
-case class VaderCompound(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "vader_compound"
-
-  override def nullSafeEval(t: Any): Any =
-    Vader.compound(t.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    // Call the object's STATIC FORWARDER (graft.functions.Vader
-    // .compound) — janino rejects the `MODULE$` form (see the
-    // PearsonPValue.doGenCode note); the forwarder is plain Java.
-    val kernel = Vader.getClass.getName.stripSuffix("$")
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = $kernel.compound($t.toString());")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): VaderCompound = copy(child = newChild)
-}
-
 object VaderCompound {
   /** Column-API entry point: VADER compound score of a text column. */
   def compound(text: Column): Column =
-    ColumnBridge.column(VaderCompound(ColumnBridge.expression(text)))
+    Kernel.call(this, "compound", DoubleType, nullable = false)(text)
+
+  def compound(text: UTF8String): Double = Vader.compound(text.toString)
 }
 
-/** Per-token adjusted valences ([[Vader.tokenScores]]) as a codegen
-  * array expression — the materialized-intermediate boundary of the
-  * F7 oracle: the sequential rule state (negation lookback, booster
-  * decay, the "but" pivot) lives inside each entry; everything
-  * downstream of the array is plain SQL a DuckDB twin replays from
-  * the parquet dump. NULL text → NULL array (empty text → empty
-  * array), mirroring [[VaderCompound]]'s null contract.
+/** Per-token adjusted valences ([[Vader.tokenScores]]) as a native
+  * kernel — the materialized-intermediate boundary of the F7 oracle:
+  * the sequential rule state (negation lookback, booster decay, the
+  * "but" pivot) lives inside each entry; everything downstream of the
+  * array is plain SQL a DuckDB twin replays from the parquet dump.
+  * NULL text → NULL array (empty text → empty array), mirroring
+  * [[VaderCompound]]'s null contract.
   */
-case class VaderTokenScores(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "vader_token_scores"
-
-  override def nullSafeEval(t: Any): Any =
-    Vader.tokenScoresData(t.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val kernel = Vader.getClass.getName.stripSuffix("$")
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = $kernel.tokenScoresData($t.toString());")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): VaderTokenScores = copy(child = newChild)
-}
-
 object VaderTokenScores {
   /** Column-API entry point: per-token adjusted VADER valences. */
   def tokenScores(text: Column): Column =
-    ColumnBridge.column(VaderTokenScores(ColumnBridge.expression(text)))
+    Kernel.call(this, "tokenScores",
+      ArrayType(DoubleType, containsNull = false), nullable = false)(text)
+
+  def tokenScores(text: UTF8String): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(Vader.tokenScores(text.toString))
 }

@@ -36,8 +36,6 @@ object Curation {
       sequence(lit(0), size(col("t")) - n),
       i => concat_ws(" ", (1 to n).map(k => element_at(col("t"), i + k)): _*)))
 
-  /** Eval-set membership: every 97th doc stands in for the held-out
-    * benchmark suite a real pipeline decontaminates against. */
   /** The PIPE1 filter signals per doc, shared by the corpus-filter
     * oracles (PIPE1 verdicts and funnel, DS4's shard write): token
     * count `n`, mean word length, top-word share and duplicate-trigram
@@ -69,6 +67,8 @@ object Curation {
                        ELSE 0.0 END AS dup_frac
            FROM tw JOIN tg USING (doc_id))"""
 
+  /** Eval-set membership: every 97th doc stands in for the held-out
+    * benchmark suite a real pipeline decontaminates against. */
   private val EvalMod = 97
 
   /** Per-doc quality signals + the first failing cleaning rule

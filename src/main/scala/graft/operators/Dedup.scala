@@ -307,6 +307,9 @@ object Dedup {
     (result, iter + 1)
   }
 
+  /** Micro-units per unit of total rank mass (the fixed-point grid). */
+  private[graft] val PrUnit = 1000000000000000L
+
   /** D11 iterative kernel: damped PageRank by power iteration over the
     * undirected near-dup graph — the centrality signal a rank-weighted
     * canonical election uses where D10's min-id election is arbitrary.
@@ -343,9 +346,6 @@ object Dedup {
     * drops (each floor discards < 1 unit), keeping total mass ≤ 1 —
     * the same convention production fixed-point graph engines use
     * to make distributed float nondeterminism a non-issue. */
-  /** Micro-units per unit of total rank mass (the fixed-point grid). */
-  private[graft] val PrUnit = 1000000000000000L
-
   private[operators] def pageRank(pairs: DataFrame, vertices: DataFrame,
       iters: Int, damp: Double): DataFrame = {
     import org.apache.spark.storage.StorageLevel
@@ -454,21 +454,6 @@ object Dedup {
     labels
   }
 
-  /** D6/DECON2's exact-verification stage: candidate pairs →
-    * (da, db, est_jaccard, true_jaccard). The candidate table is
-    * materialized once (localCheckpoint) because it feeds four
-    * downstream subtrees — without truncation each would re-run the
-    * whole MinHash pipeline; the 100 TB analogue is persisting the
-    * candidate table before the verify stage. Re-shingles ONLY the
-    * candidate docs (semi-join BEFORE the shingle explode), so exact
-    * verification scales with |candidates| (per-mille of the corpus
-    * after banding), not the corpus. */
-  /** D12 kernel: per-doc triangle counts over an undirected (da, db)
-    * pair graph, via the DEGREE-ORDERED orientation — every edge
-    * points from its (degree, id)-smaller endpoint, so wedges
-    * enumerate only from each triangle's minimum vertex and the wedge
-    * count is bounded by O(m·α) (arboricity), not Σdeg². Both joins
-    * are keyed hash joins (src; then (v, w) pair), never all-pairs. */
   /** D23's shell kernel: exact distance-1/2/3 shell counts + the
     * truncated harmonic fold over an undirected (da, db) pair table.
     * Factored out so the spec can drive the shell logic on planted
@@ -649,6 +634,12 @@ object Dedup {
         (col("ecc") === col("max_ecc")).as("is_periphery"))
   }
 
+  /** D12 kernel: per-doc triangle counts over an undirected (da, db)
+    * pair graph, via the DEGREE-ORDERED orientation — every edge
+    * points from its (degree, id)-smaller endpoint, so wedges
+    * enumerate only from each triangle's minimum vertex and the wedge
+    * count is bounded by O(m·α) (arboricity), not Σdeg². Both joins
+    * are keyed hash joins (src; then (v, w) pair), never all-pairs. */
   private[operators] def triangleCounts(und: DataFrame): DataFrame = {
     val deg = und.select(col("da").as("v"))
       .unionAll(und.select(col("db").as("v")))
@@ -783,6 +774,15 @@ object Dedup {
           .as("coreness"))
   })
 
+  /** D6/DECON2's exact-verification stage: candidate pairs →
+    * (da, db, est_jaccard, true_jaccard). The candidate table is
+    * materialized once (localCheckpoint) because it feeds four
+    * downstream subtrees — without truncation each would re-run the
+    * whole MinHash pipeline; the 100 TB analogue is persisting the
+    * candidate table before the verify stage. Re-shingles ONLY the
+    * candidate docs (semi-join BEFORE the shingle explode), so exact
+    * verification scales with |candidates| (per-mille of the corpus
+    * after banding), not the corpus. */
   private[operators] def verifyPairs(s: SparkSession, d: String,
       candidates: DataFrame): DataFrame = {
     val cand = candidates.localCheckpoint()

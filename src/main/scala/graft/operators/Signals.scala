@@ -5,19 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** Signal generation: threshold predicates (P5), the conditional
-  * BUY/SELL/HOLD CASE expression with inverse-flip on correlation sign
-  * (P8), and the per-key config broadcast join (J5).
-  *
-  * Reference: `scripts/06_strategy_signals.py:88-150` — per-ticker best
-  * lag config is applied to every daily sentiment row; sentiment above
-  * +τ with enough news ⇒ BUY (direct) or SELL (inverse when the
-  * fitted correlation is negative), below −τ the reverse, else HOLD.
-  *
-  * Scale: the config side is a per-key aggregate (|keys| rows) —
-  * explicitly `broadcast()` so the fact side never shuffles for the
-  * join; the daily aggregate before it is map-side combinable.
-  */
 /** Signal thresholds — the reference dashboard's slider parameters
   * (`config/stock_universe.py:26-28`: SENTIMENT_THRESHOLD,
   * MIN_NEWS_COUNT), rewritten into the config source file by
@@ -32,6 +19,19 @@ object SignalConfig {
   val Strict = SignalConfig(0.5, 60)
 }
 
+/** Signal generation: threshold predicates (P5), the conditional
+  * BUY/SELL/HOLD CASE expression with inverse-flip on correlation sign
+  * (P8), and the per-key config broadcast join (J5).
+  *
+  * Reference: `scripts/06_strategy_signals.py:88-150` — per-ticker best
+  * lag config is applied to every daily sentiment row; sentiment above
+  * +τ with enough news ⇒ BUY (direct) or SELL (inverse when the
+  * fitted correlation is negative), below −τ the reverse, else HOLD.
+  *
+  * Scale: the config side is a per-key aggregate (|keys| rows) —
+  * explicitly `broadcast()` so the fact side never shuffles for the
+  * join; the daily aggregate before it is map-side combinable.
+  */
 object Signals {
 
   /** J5 config side: per-key correlation (sign drives the flip) —

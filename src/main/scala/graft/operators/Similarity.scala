@@ -1359,10 +1359,6 @@ object Similarity {
     })
   )
 
-  /** The SQ8 quantization as a DuckDB CTE ending in
-    * `s(vec_id, embedding, scale)` — interpolated into BOTH sim4
-    * oracles so the top-k can never rank a different quantization
-    * than the one the quantize oracle defines. */
   /** Oracle twin of `dot`: the index-ordered product sum of two
     * equal-length lists (DuckDB `list_sum` folds left to right). */
   private def dotSql(a: String, b: String): String =
@@ -1409,6 +1405,10 @@ object Similarity {
                FROM m GROUP BY ${groups(n)})"""
   }
 
+  /** The SQ8 quantization as a DuckDB CTE ending in
+    * `s(vec_id, embedding, scale)` — interpolated into BOTH sim4
+    * oracles so the top-k can never rank a different quantization
+    * than the one the quantize oracle defines. */
   private val sq8Cte =
     """WITH v AS (
          SELECT vec_id, embedding,
@@ -1418,12 +1418,6 @@ object Similarity {
          SELECT vec_id, embedding, CAST(127 AS DOUBLE) / mx AS scale
          FROM v WHERE mx > 0)"""
 
-  /** Shared CTE block for the SIM6 oracles: the identical codebook
-    * (same sampled rows, same subspace slicing), per-(vector, subspace)
-    * code assignment with the same first-min tiebreak, and the
-    * reconstructed-norm table. All sums run in index order
-    * (`list_sum`), matching the Spark side's left-associated chains —
-    * distances are bit-identical, so code choices are too. */
   /** SIM3's IVF probing over the centroid cosines `cc` (vec_id, cid,
     * cos): `asg` each vector's nearest list, `probes` the nprobe=2
     * nearest lists of each query (vec_id < 10), both with the struct-max
@@ -1464,6 +1458,12 @@ object Similarity {
            CROSS JOIN generate_series(1, ${PqM}) AS j(j)
            CROSS JOIN cents c)"""
 
+  /** Shared CTE block for the SIM6 oracles: the identical codebook
+    * (same sampled rows, same subspace slicing), per-(vector, subspace)
+    * code assignment with the same first-min tiebreak, and the
+    * reconstructed-norm table. All sums run in index order
+    * (`list_sum`), matching the Spark side's left-associated chains —
+    * distances are bit-identical, so code choices are too. */
   private def pqOracleCtes: String =
     s"""WITH v AS (
            SELECT vec_id,

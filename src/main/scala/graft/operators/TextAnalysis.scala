@@ -31,8 +31,6 @@ object TextAnalysis {
     * correctness pass and sf0.1 bench can't clobber each other. */
   private[operators] def F7VaderDump(d: String) = Dumps.path("f7_vader", d)
 
-  /** Whitespace tokenization of lowercased text — the one definition
-    * shared by every query here AND by the DuckDB oracles. */
   /** THE corpus tokenizer — whitespace split of lower(trim(text)).
     * Single source of truth shared by every text operator (Dedup
     * shingles, Curation signals, DatasetOps packing): the DuckDB
@@ -56,10 +54,6 @@ object TextAnalysis {
   private def lexiconSqlValues: String =
     lexicon.map { case (w, v) => s"('$w', $v)" }.mkString(", ")
 
-  /** D2's engine, parameterized (shared with D10's cluster builder):
-    * exact n-gram Jaccard pairs over the bounded `doc_id < maxId`
-    * slice via the inverted-index shingle join — intersection counts
-    * from a shingle equi-join, never an all-pairs document compare. */
   /** The two demo-slice exact-Jaccard pair graphs, materialized once
     * per (session, dir) — round 14: the (maxId=100, J≥0.02) graph fed
     * FIVE bench entries (d10_dup_clusters, d20_keep_best via d10,
@@ -74,6 +68,10 @@ object TextAnalysis {
   private[graft] val slicePairs200 = graft.MaterializedTable("slice200_build")(
     (s, d) => ngramJaccardPairs(s, d, maxId = 200, minJ = 0.01))
 
+  /** D2's engine, parameterized (shared with D10's cluster builder):
+    * exact n-gram Jaccard pairs over the bounded `doc_id < maxId`
+    * slice via the inverted-index shingle join — intersection counts
+    * from a shingle equi-join, never an all-pairs document compare. */
   private[operators] def ngramJaccardPairs(s: SparkSession, d: String,
       maxId: Long, minJ: Double): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -201,7 +199,7 @@ object TextAnalysis {
     // comparator-hashable.
     //
     // The fingerprint pass is graft.functions.RollingFingerprint — a
-    // codegen Catalyst expression doing one O(len·K) array pass per
+    // native kernel doing one O(len·K) array pass per
     // document inside whole-stage codegen. (An equivalent
     // transform/aggregate/slice HOF formulation exists in
     // TextAnalysisSpec as the cross-check; HOFs never enter codegen,
@@ -275,7 +273,7 @@ object TextAnalysis {
         .orderBy("doc_id")
     }),
 
-    // SQL17: the custom Catalyst expressions through the SQL
+    // SQL17: the native kernels through the SQL
     // front-end — the point of registering them via
     // SparkSessionExtensions/injectFunction is that ANY session SQL
     // (notebooks, JDBC, views) can call them by name; this drives

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.StringType
 import graft.SparkTestSession
 
@@ -12,14 +13,18 @@ import graft.SparkTestSession
   * interior cut sits on a mod-64 gram boundary, chunk hashes equal an
   * independent polynomial recompute, the boundary set is
   * SHIFT-RESISTANT (the property that justifies CDC over fixed-width
-  * blocks), and the expression stays inside whole-stage codegen.
+  * blocks), and the kernel call stays inside whole-stage codegen.
   */
 class CdcChunksSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
+  /** The entry point's expression evaluated interpreted on a literal. */
+  private def interpret(text: String): Any =
+    ColumnBridge.expression(CdcChunks.chunks(
+      ColumnBridge.column(Literal.create(text, StringType)))).eval(null)
+
   private def chunksOf(text: String): Seq[(Int, Int, Long)] = {
-    val arr = CdcChunks(Literal.create(text, StringType)).eval(null)
-      .asInstanceOf[ArrayData]
+    val arr = interpret(text).asInstanceOf[ArrayData]
     (0 until arr.numElements()).map { i =>
       val r = arr.getStruct(i, 3)
       (r.getInt(0), r.getInt(1), r.getLong(2))
@@ -76,16 +81,17 @@ class CdcChunksSpec extends AnyFunSuite {
     assert(chunksOf("").isEmpty && chunksOf("   ").isEmpty)
     // shorter than one gram: a single chunk covering the whole text
     assert(chunksOf("abc") == Seq((0, 3, poly("abc"))))
-    assert(CdcChunks(Literal.create(null, StringType)).eval(null) == null)
+    assert(interpret(null) == null)
     // non-foldable input: a parquet-scanned column (literals and
     // local relations constant-fold before codegen)
     val df = graft.Tables.documents(spark, SparkTestSession.Sf0001)
       .filter(col("doc_id") === 0)
       .select(col("text"), CdcChunks.chunks(col("text")).as("c"))
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("cdc_chunks") && !plan.contains("ScalaUDF"), plan)
+    val call = "static_invoke(graft.functions.CdcChunks.chunks("
+    assert(plan.contains(call) && !plan.contains("ScalaUDF"), plan)
     val projLine = plan.linesIterator
-      .find(_.contains("cdc_chunks")).getOrElse(fail(plan))
+      .find(_.contains(call)).getOrElse(fail(plan))
     assert(projLine.trim.startsWith("*("), s"not codegen'd: $projLine")
     val row = df.head()
     assert(row.getSeq[org.apache.spark.sql.Row](1).length ==

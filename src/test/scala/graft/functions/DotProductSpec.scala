@@ -8,7 +8,7 @@ import graft.SparkTestSession
   * bit-for-bit with the HOF fold it replaced (the formulation the
   * DuckDB oracle reproduces for SIM1), NULL/length contracts hold,
   * float and double element types widen identically, and the
-  * expression stays inside whole-stage codegen.
+  * kernel call stays inside whole-stage codegen.
   */
 class DotProductSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -62,7 +62,8 @@ class DotProductSpec extends AnyFunSuite {
       .select(DotProduct.dot(col("embedding"), col("embedding")).as("n2"))
       .queryExecution.executedPlan.toString
     val projLine = plan.linesIterator
-      .find(_.contains("vec_dot")).getOrElse(fail(plan))
+      .find(_.contains("static_invoke(graft.functions.DotProduct.dot("))
+      .getOrElse(fail(plan))
     assert(projLine.trim.startsWith("*("), s"not codegen'd: $projLine")
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"),
       plan)

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 
-/** The native p-value expression: agrees with the Scala kernel,
+/** The native p-value kernel: agrees with the Scala StudentT,
   * propagates NULL/NaN correctly, and stays inside whole-stage
   * codegen (the reason it exists instead of a UDF).
   */
@@ -63,7 +63,8 @@ class PearsonPValueSpec extends AnyFunSuite {
     // the `*(n)` prefix marks an operator inside a WholeStageCodegen
     // stage; a codegen fallback would render an unstarred Project
     val projLine = plan.linesIterator
-      .find(_.contains("pearson_pvalue")).getOrElse(fail(plan))
+      .find(_.contains("static_invoke(graft.functions.PearsonPValue.pValue("))
+      .getOrElse(fail(plan))
     assert(projLine.trim.startsWith("*("), s"not codegen'd: $projLine")
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"),
       plan)

@@ -4,11 +4,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.StringType
 import graft.SparkTestSession
 
-/** The winnowing kernel expression: both evaluation paths (interpreted
-  * nullSafeEval and janino codegen) agree with an independent Scala
+/** The winnowing kernel: both evaluation paths (interpreted
+  * reflective eval and janino codegen) agree with an independent Scala
   * recomputation of Schleimer et al.'s scheme, NULL/short inputs follow
   * the documented contract, and the expression stays inside
   * whole-stage codegen (the reason it replaced the HOF formulation).
@@ -33,18 +34,21 @@ class RollingFingerprintSpec extends AnyFunSuite {
     "abcdefghijk",                       // exactly K+W-1 → one window
     "aaaaaaaaaaaaaaaaaaaaaa")            // degenerate: all grams equal
 
-  test("interpreted path (nullSafeEval) matches independent winnow") {
+  /** The entry point's expression evaluated interpreted on a literal. */
+  private def interpret(text: String): Any =
+    ColumnBridge.expression(RollingFingerprint.fps(
+      ColumnBridge.column(Literal.create(text, StringType)))).eval(null)
+
+  test("interpreted path (eval) matches independent winnow") {
     texts.foreach { t =>
-      val got = RollingFingerprint(Literal.create(t, StringType)).eval(null)
-        .asInstanceOf[ArrayData].toLongArray.toSeq
+      val got = interpret(t).asInstanceOf[ArrayData].toLongArray.toSeq
       assert(got == winnow(t), s"text: '$t'")
     }
   }
 
   test("interpreted path: NULL → NULL, short text → empty array") {
-    assert(RollingFingerprint(Literal.create(null, StringType)).eval(null) == null)
-    val short = RollingFingerprint(Literal.create("tiny", StringType)).eval(null)
-      .asInstanceOf[ArrayData]
+    assert(interpret(null) == null)
+    val short = interpret("tiny").asInstanceOf[ArrayData]
     assert(short.numElements() == 0)
   }
 
@@ -75,7 +79,8 @@ class RollingFingerprintSpec extends AnyFunSuite {
       .select(RollingFingerprint.fps(col("text")).as("fps"))
       .queryExecution.executedPlan.toString
     val projLine = plan.linesIterator
-      .find(_.contains("rolling_fp")).getOrElse(fail(plan))
+      .find(_.contains("static_invoke(graft.functions.RollingFingerprint.fps("))
+      .getOrElse(fail(plan))
     assert(projLine.trim.startsWith("*("), s"not codegen'd: $projLine")
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"),
       plan)

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 
-/** The native VADER expression: agrees with the Scala kernel,
+/** The native VADER kernel: agrees with the Scala kernel,
   * propagates NULL, and stays inside whole-stage codegen (the reason
   * it exists instead of the Scala UDF it replaced).
   */
@@ -50,7 +50,8 @@ class VaderCompoundSpec extends AnyFunSuite {
       .select(VaderCompound.compound(col("text")).as("c"))
       .queryExecution.executedPlan.toString
     val projLine = plan.linesIterator
-      .find(_.contains("vader_compound")).getOrElse(fail(plan))
+      .find(_.contains("static_invoke(graft.functions.VaderCompound.compound("))
+      .getOrElse(fail(plan))
     assert(projLine.trim.startsWith("*("), s"not codegen'd: $projLine")
     assert(!plan.contains("ScalaUDF"), plan)
   }
