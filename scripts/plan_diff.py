@@ -1,73 +1,28 @@
 #!/usr/bin/env python3
-"""Diff two `graft.PlanDump` directories, ignoring run noise.
+"""Diff two `graft.PlanDump` plan-shape records and their oracles.
 
 Usage: python3 scripts/plan_diff.py A B
 
-Compares every `<query>.txt` plan in A with the one of the same name in
-B after masking what changes from run to run of the same plan:
-expression ids (`#12`, `#12L`), `plan_id=`, `codegen id :`, a bare
-`Arguments: <n>` line, `$Lambda` class names, `@<hex>` object hashes,
-`/tmp/graft-…` / `/tmp/graft_…` scratch names with the `<tag>-<n>` dir
-a JVM's scratch root holds (`graft.Fs.scratch`), RDD ids and the `File.scala:<line>` call sites
-of checkpointed RDDs, the checkout's `spark-warehouse` path, and the
-JVM-wide counter in lambda variable names (`lambda x_49` -> `lambda x_`:
-it counts every lambda built before, so it moves with construction
-order, not with the plan). A query present on one side only differs.
+A and B are each a `graft.PlanDump` out dir (its `planshape.json`) or a
+record file itself, such as a committed `PLANSHAPE_rNN.json`. Each
+query's record (operators, exchanges, joins, scans, windows, aggregates,
+subqueries, codegen stages, kernel calls; or its failure) is compared
+field by field. A record holds nothing that changes from one run of the
+same plan to the next, so any difference is a re-plan. A query present
+on one side only differs.
 
-A plan with an `Expand` node (cube, rollup, grouping sets, distinct
-aggregates) can list its grouping sets, and the keys and filters that
-follow them, in either order from one run to the next. Such a plan
-that differs only in line-wise token order (same lines, and each
-differing line holds the same multiset of tokens) is printed as
-`order-only` and does not count as a difference.
+If both sides are dirs that also hold an `oracle_sql.json`
+(graft.Verify writes the full map even with a name filter), every
+oracle is compared too, after collapsing whitespace outside
+single-quoted literals and dropping whitespace next to `(`, `)` and `,`.
 
-If both dirs also hold an `oracle_sql.json` (graft.Verify writes the
-full map even with a name filter), every oracle is compared too, after
-collapsing whitespace outside single-quoted literals and dropping
-whitespace next to `(`, `)` and `,`.
-
-Prints each name that differs and exits 1 if any do (order-only plans
-excepted), 0 otherwise.
+Prints each query that differs with the fields that differ, and exits
+1 if any do, 0 if none do and 2 on a usage error.
 """
 import json
 import os
 import re
 import sys
-from collections import Counter
-
-PLAN_MASKS = [
-    (re.compile(r"#\d+L?"), "#"),
-    (re.compile(r"plan_id=\d+"), "plan_id="),
-    (re.compile(r"codegen id : \d+"), "codegen id : "),
-    (re.compile(r"^Arguments: \d+$", re.M), "Arguments: "),
-    (re.compile(r"\$Lambda[\w$/.@]*"), "$Lambda"),
-    (re.compile(r"@[0-9a-f]+\b"), "@"),
-    (re.compile(r"/tmp/graft[-_][\w.-]*"), "/tmp/graft"),
-    (re.compile(r"(/tmp/graft)/[A-Za-z]\w*-\d+"), r"\1"),
-    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
-    (re.compile(r"\.scala:\d+"), ".scala:"),
-    (re.compile(r"file:\S*/spark-warehouse/"), "file:spark-warehouse/"),
-    (re.compile(r"\blambda (\w+?)_\d+\b"), r"lambda \1_"),
-]
-EXPAND = re.compile(r"^\(\d+\) Expand$", re.M)
-TOKEN = re.compile(r"\w+|[^\w\s]")
-
-
-def mask_plan(text):
-    for pat, rep in PLAN_MASKS:
-        text = pat.sub(rep, text)
-    return text
-
-
-def order_only(a, b):
-    """True if masked plans a and b, both with an Expand node, differ
-    only in the order of tokens within lines."""
-    if not (EXPAND.search(a) and EXPAND.search(b)):
-        return False
-    la, lb = a.splitlines(), b.splitlines()
-    return len(la) == len(lb) and all(
-        x == y or Counter(TOKEN.findall(x)) == Counter(TOKEN.findall(y))
-        for x, y in zip(la, lb))
 
 
 def norm_sql(sql):
@@ -97,47 +52,43 @@ def norm_sql(sql):
     return re.sub(r" ?([(),]) ?", r"\1", text)
 
 
-def plans(d):
-    return {f[:-4] for f in os.listdir(d) if f.endswith(".txt")}
-
-
-def read(path):
+def load(path):
     with open(path, encoding="utf-8") as f:
-        return f.read()
+        return json.load(f)
+
+
+def records(side):
+    return load(os.path.join(side, "planshape.json")
+                if os.path.isdir(side) else side)
 
 
 def main(argv):
-    if len(argv) != 3:
+    if len(argv) != 3 or not all(os.path.exists(p) for p in argv[1:]):
         print(__doc__.strip().splitlines()[2], file=sys.stderr)
         return 2
     a, b = argv[1], argv[2]
-    differ, reordered = [], []
-    pa, pb = plans(a), plans(b)
-    for name in sorted(pa | pb):
-        if name not in pa or name not in pb:
-            differ.append(f"plan {name} (only in {a if name in pa else b})")
-            continue
-        ta = mask_plan(read(f"{a}/{name}.txt"))
-        tb = mask_plan(read(f"{b}/{name}.txt"))
-        if ta == tb:
-            continue
-        if order_only(ta, tb):
-            reordered.append(f"plan {name} (order-only)")
-        else:
-            differ.append(f"plan {name}")
-    oa, ob = f"{a}/oracle_sql.json", f"{b}/oracle_sql.json"
-    if os.path.exists(oa) and os.path.exists(ob):
-        ja, jb = json.loads(read(oa)), json.loads(read(ob))
+    differ = []
+    ra, rb = records(a), records(b)
+    for name in sorted(set(ra) | set(rb)):
+        if name not in ra or name not in rb:
+            differ.append(f"plan {name} (only in {a if name in ra else b})")
+        elif ra[name] != rb[name]:
+            fields = sorted(k for k in set(ra[name]) | set(rb[name])
+                            if ra[name].get(k) != rb[name].get(k))
+            differ.append(f"plan {name}: {', '.join(fields)}")
+    oa, ob = os.path.join(a, "oracle_sql.json"), os.path.join(b, "oracle_sql.json")
+    if os.path.isfile(oa) and os.path.isfile(ob):
+        ja, jb = load(oa), load(ob)
         for name in sorted(set(ja) | set(jb)):
             if name not in ja or name not in jb:
                 differ.append(
                     f"oracle {name} (only in {a if name in ja else b})")
             elif norm_sql(ja[name]) != norm_sql(jb[name]):
                 differ.append(f"oracle {name}")
-    for line in reordered + differ:
+    for line in differ:
         print(line)
-    print(f"[plan_diff] {len(differ)} differ, {len(reordered)} order-only "
-          f"({len(pa & pb)} plans compared)", file=sys.stderr)
+    print(f"[plan_diff] {len(differ)} differ "
+          f"({len(set(ra) & set(rb))} plans compared)", file=sys.stderr)
     return 1 if differ else 0
 
 

@@ -1,13 +1,16 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-/** Optimization-round tooling: dump `.explain("formatted")` for every
-  * declared query to a directory (one file per query), so plan shape
-  * (Exchange count, join strategy, PushedFilters/ReadSchema,
-  * WholeStageCodegen spans) can be audited offline and before/after
-  * diffs committed under plans/. Builds the Bench session so the
-  * captured plan is the one the bench actually times. Both dirs are
-  * required: without them it prints usage and exits 2.
+/** Optimization-round tooling: writes `<out dir>/planshape.json`, one
+  * [[PlanShape]] record per declared query (the query's name → its
+  * record, or → `{"failed": "<exception class>: <message>"}` when
+  * building it threw). `scripts/plan_diff.py` compares two such files
+  * and names each query whose record differs; a round commits its
+  * sf0.01 record as `PLANSHAPE_rNN.json`, the next round's baseline.
+  * Builds the Bench session so the recorded plan is the one the bench
+  * times; plans are not run, so an adaptive plan records its initial
+  * shape. Both dirs are required: without them it prints usage and
+  * exits 2.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -22,20 +25,16 @@ object PlanDump {
     val spark = GraftExtensions.session(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     Files.createDirectories(Paths.get(outDir))
-    SparkEntry.queries.toSeq.sortBy(_._1)
+    val shapes = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(outDir, s"$name.txt"), txt)
-        } catch { case e: Throwable =>
-          System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-          Files.writeString(Paths.get(outDir, s"$name.txt"),
-            s"FAILED: ${e.getMessage}\n")
-        }
+      .map { case (name, fn) =>
+        name -> (try PlanShape.of(fn(spark, sfDir)) catch {
+          case e: Throwable =>
+            System.err.println(s"[plandump] $name failed: ${e.getMessage}")
+            Map("failed" -> s"${e.getClass.getName}: ${e.getMessage}")
+        })
       }
+    Json.write(s"$outDir/planshape.json", shapes.toMap)
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare, and
   * failures.json naming every query that threw (name → exception class
@@ -27,34 +26,17 @@ object Verify {
           Some(name -> e)
         }
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Materialized-intermediate dumps are keyed by the sf-dir basename
     // (operators.Dumps) so interleaved sf0.01/sf0.1 driver executions
     // can't clobber each other; the static oracle SQL embeds the
     // placeholder tag, resolved here — after the queries above wrote
     // the matching dumps for THIS sf dir.
     val sfTag = graft.operators.Dumps.tag(sfDir)
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) =>
-        s"${q(k)}: ${q(v.replace(graft.operators.Dumps.SfTag, sfTag))}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val failed = failures.sortBy(_._1).map { case (name, e) =>
-      s"${q(name)}: {${q("class")}: ${q(e.getClass.getName)}, " +
-        s"${q("message")}: ${q(String.valueOf(e.getMessage))}}"
-    }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/failures.json"), failed)
+    Json.write(s"$outDir/oracle_sql.json", SparkEntry.oracleSql.map {
+      case (k, v) => k -> v.replace(graft.operators.Dumps.SfTag, sfTag) })
+    Json.write(s"$outDir/failures.json", failures.map { case (name, e) =>
+      name -> Map("class" -> e.getClass.getName,
+        "message" -> String.valueOf(e.getMessage)) }.toMap)
     println(s"[verify] ${failures.size} queries failed (failures.json)")
     spark.stop()
   }

@@ -424,7 +424,7 @@ object Curation {
       // localCheckpoints measured slower there) every consumer re-ran
       // the whole chain above it — the before-plan carried 24 parquet
       // scans and 124 Exchanges for what is structurally a linear
-      // pipeline (committed in plans/r15/before/pipe6_dedup_mix.txt).
+      // pipeline (`git show e08ff19:plans/r15/before/pipe6_dedup_mix.txt`).
       val base = kept
         .withColumn("k", md5(concat_ws(":", lit("pipe6"), col("doc_id"))))
         .withColumn("bucket",

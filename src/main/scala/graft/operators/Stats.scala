@@ -1977,7 +1977,7 @@ object Stats {
       // integer (all rows sharing this name-value), but both window
       // functions now share one Window operator, so the plan runs 2
       // Exchange+Sort pairs instead of 4 (round 15, guide §2.4;
-      // before/after in plans/r15/).
+      // before/after: `git show e08ff19:plans/r15/`).
       def midrank(name: String) =
         rank().over(Window.partitionBy("event_type").orderBy(col(name)))
           .cast("double") +

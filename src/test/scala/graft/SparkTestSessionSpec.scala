@@ -11,11 +11,9 @@ class SparkTestSessionSpec extends AnyFunSuite {
     val c = spark.sql("SELECT vader_compound('very good day!')")
       .head().getDouble(0)
     assert(c > 0.0)
-    val scan = SparkEntry.queries("p9_day_slice")(spark,
-        SparkTestSession.Sf0001)
-      .queryExecution.executedPlan.toString
-      .linesIterator.find(_.contains("PushedFilters")).get
-    assert(scan.contains("GreaterThanOrEqual(ts") &&
-      scan.contains("LessThan(ts"), scan)
+    val scan = PlanShape.of(SparkEntry.queries("p9_day_slice")(spark,
+        SparkTestSession.Sf0001)).scans.flatMap(_.pushedFilters)
+    assert(scan.exists(_.startsWith("GreaterThanOrEqual(ts,")) &&
+      scan.exists(_.startsWith("LessThan(ts,")), scan)
   }
 }

@@ -17,20 +17,17 @@ class TablesSpec extends AnyFunSuite {
   private val Hi = "2024-01-20 00:00:00"
 
   test("eventsBetween pushes the ts range into the parquet scan") {
-    val plan = Tables.eventsBetween(spark, sf, Lo, Hi)
-      .queryExecution.executedPlan.toString
-    val scan = plan.linesIterator.find(_.contains("PushedFilters"))
-      .getOrElse(fail(s"no FileScan in:\n${plan.take(1500)}"))
-    assert(scan.contains("GreaterThanOrEqual(ts") &&
-           scan.contains("LessThan(ts"),
+    val scan = PlanShape.of(Tables.eventsBetween(spark, sf, Lo, Hi))
+      .scans.flatMap(_.pushedFilters)
+    assert(scan.exists(_.startsWith("GreaterThanOrEqual(ts,")) &&
+           scan.exists(_.startsWith("LessThan(ts,")),
       s"ts bounds not pushed: $scan")
     // an ad-hoc filter on ts must push just as well — pushdown is
     // native to the timestamp[us] layout, not a property of the helper
-    val naive = Tables.events(spark, sf)
-      .filter(col("ts") >= lit(Lo) && col("ts") < lit(Hi))
-      .queryExecution.executedPlan.toString
-    val naiveScan = naive.linesIterator.find(_.contains("PushedFilters")).get
-    assert(naiveScan.contains("GreaterThanOrEqual(ts"),
+    val naiveScan = PlanShape.of(Tables.events(spark, sf)
+      .filter(col("ts") >= lit(Lo) && col("ts") < lit(Hi)))
+      .scans.flatMap(_.pushedFilters)
+    assert(naiveScan.exists(_.startsWith("GreaterThanOrEqual(ts,")),
       s"ad-hoc ts bound not pushed: $naiveScan")
   }
 

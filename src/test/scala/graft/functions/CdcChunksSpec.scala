@@ -87,12 +87,9 @@ class CdcChunksSpec extends AnyFunSuite {
     val df = graft.Tables.documents(spark, SparkTestSession.Sf0001)
       .filter(col("doc_id") === 0)
       .select(col("text"), CdcChunks.chunks(col("text")).as("c"))
-    val plan = df.queryExecution.executedPlan.toString
-    val call = "static_invoke(graft.functions.CdcChunks.chunks("
-    assert(plan.contains(call) && !plan.contains("ScalaUDF"), plan)
-    val projLine = plan.linesIterator
-      .find(_.contains(call)).getOrElse(fail(plan))
-    assert(projLine.trim.startsWith("*("), s"not codegen'd: $projLine")
+    val p = graft.PlanShape.of(df)
+    assert(p.kernels == Seq(graft.PlanShape.Kernel("CdcChunks.chunks",
+      inCodegen = true)), p)
     val row = df.head()
     assert(row.getSeq[org.apache.spark.sql.Row](1).length ==
       chunksOf(row.getString(0)).length)

@@ -58,14 +58,11 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("stays inside WholeStageCodegen (no UDF barrier)") {
-    val plan = graft.Tables.embeddings(spark, SparkTestSession.Sf0001)
-      .select(DotProduct.dot(col("embedding"), col("embedding")).as("n2"))
-      .queryExecution.executedPlan.toString
-    val projLine = plan.linesIterator
-      .find(_.contains("static_invoke(graft.functions.DotProduct.dot("))
-      .getOrElse(fail(plan))
-    assert(projLine.trim.startsWith("*("), s"not codegen'd: $projLine")
-    assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"),
-      plan)
+    val p = graft.PlanShape.of(graft.Tables.embeddings(spark,
+        SparkTestSession.Sf0001)
+      .select(DotProduct.dot(col("embedding"), col("embedding")).as("n2")))
+    assert(p.kernels == Seq(graft.PlanShape.Kernel("DotProduct.dot",
+      inCodegen = true)), p)
+    assert(p.count("BatchEvalPython") == 0, p)
   }
 }

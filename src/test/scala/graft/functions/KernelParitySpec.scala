@@ -78,13 +78,13 @@ class KernelParitySpec extends AnyFunSuite {
   }
 
   /** The rows of `df`, canonicalized and sorted, and whether its
-    * executed (final, after AQE) plan holds a whole-stage codegen
-    * operator (`*(n)`). */
+    * executed (final, after AQE) plan calls every kernel inside a
+    * whole-stage codegen stage. */
   private def run(df: DataFrame): (Seq[String], Boolean) = {
     val rows = df.collect().toSeq.map(r => canon(r).toString).sorted
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("static_invoke(graft.functions."), plan)
-    (rows, plan.contains("*("))
+    val shape = graft.PlanShape.of(df)
+    assert(shape.kernels.nonEmpty, shape)
+    (rows, shape.kernels.forall(_.inCodegen))
   }
 
   cases.foreach { case (name, build) =>

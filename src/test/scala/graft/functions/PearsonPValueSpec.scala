@@ -56,17 +56,13 @@ class PearsonPValueSpec extends AnyFunSuite {
   test("stays inside WholeStageCodegen (no UDF barrier)") {
     // over a parquet scan — a local Seq collapses to LocalTableScan
     // before any codegen stage exists
-    val plan = graft.Tables.events(spark, SparkTestSession.Sf0001)
+    val p = graft.PlanShape.of(graft.Tables.events(spark,
+        SparkTestSession.Sf0001)
       .select(PearsonPValue.pValue(
-        col("value") / lit(1000.0), col("event_id")).as("p"))
-      .queryExecution.executedPlan.toString
-    // the `*(n)` prefix marks an operator inside a WholeStageCodegen
-    // stage; a codegen fallback would render an unstarred Project
-    val projLine = plan.linesIterator
-      .find(_.contains("static_invoke(graft.functions.PearsonPValue.pValue("))
-      .getOrElse(fail(plan))
-    assert(projLine.trim.startsWith("*("), s"not codegen'd: $projLine")
-    assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"),
-      plan)
+        col("value") / lit(1000.0), col("event_id")).as("p")))
+    // a codegen fallback would evaluate the call outside the stage
+    assert(p.kernels == Seq(graft.PlanShape.Kernel("PearsonPValue.pValue",
+      inCodegen = true)), p)
+    assert(p.count("BatchEvalPython") == 0, p)
   }
 }

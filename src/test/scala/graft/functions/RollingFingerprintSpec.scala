@@ -75,14 +75,11 @@ class RollingFingerprintSpec extends AnyFunSuite {
   }
 
   test("stays inside WholeStageCodegen (no UDF barrier)") {
-    val plan = graft.Tables.documents(spark, SparkTestSession.Sf0001)
-      .select(RollingFingerprint.fps(col("text")).as("fps"))
-      .queryExecution.executedPlan.toString
-    val projLine = plan.linesIterator
-      .find(_.contains("static_invoke(graft.functions.RollingFingerprint.fps("))
-      .getOrElse(fail(plan))
-    assert(projLine.trim.startsWith("*("), s"not codegen'd: $projLine")
-    assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"),
-      plan)
+    val p = graft.PlanShape.of(graft.Tables.documents(spark,
+        SparkTestSession.Sf0001)
+      .select(RollingFingerprint.fps(col("text")).as("fps")))
+    assert(p.kernels == Seq(graft.PlanShape.Kernel("RollingFingerprint.fps",
+      inCodegen = true)), p)
+    assert(p.count("BatchEvalPython") == 0, p)
   }
 }

@@ -46,13 +46,10 @@ class VaderCompoundSpec extends AnyFunSuite {
   }
 
   test("stays inside WholeStageCodegen (no UDF barrier)") {
-    val plan = graft.Tables.documents(spark, SparkTestSession.Sf0001)
-      .select(VaderCompound.compound(col("text")).as("c"))
-      .queryExecution.executedPlan.toString
-    val projLine = plan.linesIterator
-      .find(_.contains("static_invoke(graft.functions.VaderCompound.compound("))
-      .getOrElse(fail(plan))
-    assert(projLine.trim.startsWith("*("), s"not codegen'd: $projLine")
-    assert(!plan.contains("ScalaUDF"), plan)
+    val p = graft.PlanShape.of(graft.Tables.documents(spark,
+        SparkTestSession.Sf0001)
+      .select(VaderCompound.compound(col("text")).as("c")))
+    assert(p.kernels == Seq(graft.PlanShape.Kernel("VaderCompound.compound",
+      inCodegen = true)), p)
   }
 }

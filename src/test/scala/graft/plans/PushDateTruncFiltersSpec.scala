@@ -2,7 +2,7 @@ package graft.plans
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.{SparkTestSession, Tables}
+import graft.{PlanShape, SparkTestSession, Tables}
 
 /** The date_trunc-pushdown optimizer rule: a filter on the TRUNCATED
   * ts column must gain pushed raw-ts bounds under the rule (and
@@ -23,6 +23,13 @@ class PushDateTruncFiltersSpec extends AnyFunSuite {
   }
   private val sf = SparkTestSession.Sf0001
 
+  /** The filters the plan's file scans hand their parquet reader. */
+  private def pushed(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val scans = PlanShape.of(df).scans
+    assert(scans.nonEmpty, "no file scan")
+    scans.flatMap(_.pushedFilters)
+  }
+
   private def dayEq(s: org.apache.spark.sql.SparkSession) =
     Tables.events(s, sf)
       .filter(date_trunc("day", col("ts")) === lit("2024-01-10 00:00:00")
@@ -31,16 +38,14 @@ class PushDateTruncFiltersSpec extends AnyFunSuite {
 
   test("day-equality on the truncated column gains pushed raw bounds") {
     val s = ruled
-    val scan = dayEq(s).queryExecution.executedPlan.toString
-      .linesIterator.find(_.contains("PushedFilters")).get
-    assert(scan.contains("GreaterThanOrEqual(ts") &&
-           scan.contains("LessThan(ts"),
+    val scan = pushed(dayEq(s))
+    assert(scan.exists(_.startsWith("GreaterThanOrEqual(ts,")) &&
+           scan.exists(_.startsWith("LessThan(ts,")),
       s"rule did not push the bounds: $scan")
     // the rule-less session must NOT have them (the asymmetry the
     // rule exists to close)
-    val bareScan = dayEq(bare).queryExecution.executedPlan.toString
-      .linesIterator.find(_.contains("PushedFilters")).get
-    assert(!bareScan.contains("GreaterThanOrEqual(ts"), bareScan)
+    val bareScan = pushed(dayEq(bare))
+    assert(!bareScan.exists(_.contains("GreaterThanOrEqual(ts,")), bareScan)
   }
 
   test("rule preserves results exactly across all comparison shapes") {
@@ -76,9 +81,8 @@ class PushDateTruncFiltersSpec extends AnyFunSuite {
       .filter(date_trunc("day", col("ts")) === lit("2024-01-10 10:30:00")
         .cast("timestamp"))
       .select("event_id")
-    val scan = df.queryExecution.executedPlan.toString
-      .linesIterator.find(_.contains("PushedFilters"))
-    scan.foreach(l => assert(!l.contains("GreaterThanOrEqual(ts"), l))
+    val scan = PlanShape.of(df).scans.flatMap(_.pushedFilters)
+    assert(!scan.exists(_.contains("GreaterThanOrEqual(ts,")), scan)
     assert(df.count() == 0)
   }
 
@@ -87,9 +91,8 @@ class PushDateTruncFiltersSpec extends AnyFunSuite {
     val p = (date_trunc("day", col("ts")) === lit("2024-01-10 00:00:00")
       .cast("timestamp")) || col("event_type") === "click"
     val df = Tables.events(s, sf).filter(p).select("event_id")
-    val scan = df.queryExecution.executedPlan.toString
-      .linesIterator.find(_.contains("PushedFilters")).get
-    assert(!scan.contains("GreaterThanOrEqual(ts,"), scan)
+    val scan = pushed(df)
+    assert(!scan.exists(_.contains("GreaterThanOrEqual(ts,")), scan)
     val a = df.collect().map(_.getLong(0)).sorted.toSeq
     val b = Tables.events(bare, sf).filter(p)
       .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
